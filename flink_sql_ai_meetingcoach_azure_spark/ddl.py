@@ -1068,15 +1068,13 @@ class FlinkStatementSession:
             vs_alias = m3.group(1)
             idx_df = self.spark.table(index_table)
             q_df = self.spark.table(q_table)
-            # streaming query side: the SQL top-k path windows over a
-            # monotonically-increasing id, which streams disallow — the
-            # broadcast-GEMM mapInPandas path is the streaming-legal plan
-            # (and the lower-latency one per micro-batch).
-            # round_sim=6 pins the engine's ranking to a 6-dp cosine: the
-            # same determinism pin ddl_ctas_topn adds over the reference's
-            # bare ORDER BY — which rows make the k cut then no longer
-            # depends on float summation order, so the statement chain is
-            # value-reproducible (ddl_reference_pipeline's oracle).
+            # one search body for batch and streaming query sides alike (a
+            # map-only mapInPandas is streaming-legal). round_sim=6 pins
+            # the engine's ranking to a 6-dp cosine: the same determinism
+            # pin ddl_ctas_topn adds over the reference's bare ORDER BY —
+            # which rows make the k cut then no longer depends on float
+            # summation order, so the statement chain is value-reproducible
+            # (ddl_reference_pipeline's oracle).
             out = vector_search(
                 q_df,
                 idx_df,
@@ -1084,7 +1082,6 @@ class FlinkStatementSession:
                 query_col=q_col,
                 index_col=index_col,
                 payload_cols=[c for c in idx_df.columns if c != index_col],
-                method="numpy" if q_df.isStreaming else "sql",
                 round_sim=6,
             )
             view = f"__vs_{q_table}__{index_table}"

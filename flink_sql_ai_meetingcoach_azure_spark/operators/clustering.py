@@ -286,48 +286,41 @@ def assign_nearest_centroid(
     interpreted 3-fold cosine per (row, centroid) pair) and no exchange at
     all (the old min-struct argmax shuffled a row per embedding).
 
-    Exactness: similarity = round(dot/(|e|·|c|), 6) with half-AWAY
-    rounding (SQL ``round``); ``np.argmax`` returns the FIRST maximum over
-    the cid-ASC-ordered centroid axis — the same (sim DESC, cid ASC)
-    tie-break as ``min(struct(-sim, cid))``.
+    Exactness: the shared top-k kernel (``vector_search._topk``) at k=1:
+    similarity = round(dot/(|e|·|c|), 6) with half-AWAY rounding (SQL
+    ``round``) over the cid-ASC-presorted centroid axis — the same
+    (sim DESC, cid ASC) tie-break as ``min(struct(-sim, cid))``.
     """
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
-        _round_half_away,
+        _gemm_topk,
+        _index_matrix,
     )
 
     cent_rows = centroids.select(
         F.col(centroid_id_col).alias("_cid"), F.col(centroid_vec_col).alias("_cvec")
     ).collect()
-    cent_rows.sort(key=lambda r: r["_cid"])
-    cids = np.asarray([r["_cid"] for r in cent_rows], dtype=np.int64)
-    cmat = np.asarray([r["_cvec"] for r in cent_rows], dtype=np.float64)
-    cnorm = np.sqrt(np.einsum("ij,ij->i", cmat, cmat))
-    cnorm[cnorm == 0] = 1.0
+    cmat, pay = _index_matrix(cent_rows, ["_cid"], "_cvec")
+    cids = pay["_cid"].astype(np.int64)
     spark = embeddings.sparkSession
-    bc = spark.sparkContext.broadcast((cids, cmat, cnorm))
+    bc = spark.sparkContext.broadcast((cids, cmat))
     src = embeddings.select(id_col, vec_col)
     id_field = src.schema[id_col]
 
     def _assign(batches):
-        cids_l, cmat_l, cnorm_l = bc.value
+        cids_l, cmat_l = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             x = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            xn = np.sqrt(np.einsum("ij,ij->i", x, x))
-            xn[xn == 0] = 1.0
-            sims = _round_half_away(
-                (x @ cmat_l.T) / (xn[:, None] * cnorm_l[None, :]), 6
-            )
-            best = sims.argmax(axis=1)  # first max = cid-ASC tie-break
+            top, sims = _gemm_topk(x, cmat_l, 1, round_sim=6)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
-                    "cluster_id": cids_l[best],
-                    "sim": sims[np.arange(len(best)), best],
+                    "cluster_id": cids_l[top[:, 0]],
+                    "sim": sims[:, 0],
                 }
             )
 

@@ -550,6 +550,10 @@ def _rp_bits_numpy(
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
+    from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
+        _round_half_away,
+    )
+
     n_tables, n_planes = len(planes), len(planes[0])
     mat = np.asarray(planes, dtype=np.float64).reshape(n_tables * n_planes, -1)
     pow2 = 2 ** np.arange(n_planes, dtype=np.int64)
@@ -560,7 +564,7 @@ def _rp_bits_numpy(
             if not len(pdf):
                 continue
             x = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            bits = (np.round(x @ mat.T, round_to) > 0).reshape(
+            bits = (_round_half_away(x @ mat.T, round_to) > 0).reshape(
                 len(pdf), n_tables, n_planes
             )
             buckets = (bits * pow2).sum(axis=2)

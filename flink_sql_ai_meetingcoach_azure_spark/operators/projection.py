@@ -59,6 +59,10 @@ def random_projection(
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
+    from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
+        _round_half_away,
+    )
+
     # matrix width comes from the data; built lazily per observed dim
     scale = jl_scale(out_dim)
     mat_by_dim: dict[int, object] = {}
@@ -75,7 +79,7 @@ def random_projection(
                 mat_by_dim[d] = np.asarray(
                     projection_matrix(d, out_dim, seed_), dtype=np.float64
                 )
-            y = np.round(x @ mat_by_dim[d].T * scale, round_to)
+            y = _round_half_away(x @ mat_by_dim[d].T * scale, round_to)
             yield pd.DataFrame({id_col: pdf[id_col], out_col: list(y)})
 
     return df.select(id_col, vec_col).mapInPandas(

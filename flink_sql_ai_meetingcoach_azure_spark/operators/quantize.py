@@ -26,6 +26,14 @@ from pyspark.sql import Column, DataFrame, functions as F
 from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (
     MAX_BROADCAST_INDEX_ROWS,
     _collect_index_rows,
+    _flat_hits,
+    _flat_schema,
+    _gemm_topk,
+    _norms,
+    _payload_order,
+    _presorted,
+    _round_half_away,
+    _topk,
 )
 
 
@@ -79,11 +87,10 @@ def vector_search_topk_quantized(
     Arrow batch dequantizes to float64 and GEMMs executor-side. Queries
     stay full-precision. Output shape/tie-break matches
     :func:`~.vector_search.vector_search_topk_flat`: one row per (query,
-    hit), ranked by (similarity desc, first payload col asc) after the
-    ``round_sim`` rounding — deterministic across engines and runs.
+    hit), ranked by (similarity desc, payload asc) after the ``round_sim``
+    rounding through the shared :func:`~.vector_search._topk` kernel —
+    deterministic across engines and runs.
     """
-    import pyspark.sql.types as T  # noqa: PLC0415
-
     payload_cols = payload_cols or [c for c in index_df.columns if c != index_col]
     spark = query_df.sparkSession
 
@@ -91,50 +98,25 @@ def vector_search_topk_quantized(
     idx_rows = _collect_index_rows(
         qz.select(*payload_cols, "__q", "__s"), [*payload_cols, "__q", "__s"], max_index_rows
     )
-    codes = np.asarray([r["__q"] for r in idx_rows], dtype=np.int8)
-    scales = np.asarray([r["__s"] for r in idx_rows], dtype=np.float64)
-    payloads = [{c: r[c] for c in payload_cols} for r in idx_rows]
-    bc = spark.sparkContext.broadcast((codes, scales, payloads))
-
-    out_schema = T.StructType(
-        list(query_df.schema.fields)
-        + [index_df.schema[c] for c in payload_cols]
-        + [
-            T.StructField(sim_col, T.DoubleType()),
-            T.StructField(rank_col, T.IntegerType()),
-        ]
-    )
+    out_schema = _flat_schema(query_df, index_df, payload_cols, sim_col, rank_col)
     if not idx_rows:
         # empty index: the result is empty with the full output schema
         return spark.createDataFrame([], out_schema)
-    first_payload = payload_cols[0]
+    idx_rows, pay = _presorted(idx_rows, payload_cols)
+    codes = np.asarray([r["__q"] for r in idx_rows], dtype=np.int8)
+    scales = np.asarray([r["__s"] for r in idx_rows], dtype=np.float64)
+    bc = spark.sparkContext.broadcast((codes, scales, pay))
 
     def _search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codes_l, scales_l, payloads_l = bc.value
+        codes_l, scales_l, pay_l = bc.value
         # dequantize ONCE per executor/batch-stream, not per batch
         mat = codes_l.astype(np.float64) * scales_l[:, None]
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        mat_n = mat / norms[:, None]
-        pay_keys = np.asarray([p[first_payload] for p in payloads_l])
         for pdf in batches:
             if pdf.empty:
                 continue
             qm = np.asarray(list(pdf[query_col]), dtype=np.float64)
-            qn = np.linalg.norm(qm, axis=1)
-            qn[qn == 0] = 1.0
-            sims = np.round((qm / qn[:, None]) @ mat_n.T, round_sim)
-            kk = min(k, sims.shape[1])
-            out_rows = []
-            for row_i in range(sims.shape[0]):
-                # exact tie-break: (-sim, first payload) like the flat path
-                order = np.lexsort((pay_keys, -sims[row_i]))[:kk]
-                base = pdf.iloc[row_i].to_dict()
-                for rk, j in enumerate(order, start=1):
-                    out_rows.append(
-                        {**base, **payloads_l[j], sim_col: sims[row_i, j], rank_col: rk}
-                    )
-            yield pd.DataFrame(out_rows)
+            top, sims = _gemm_topk(qm, mat, k, round_sim)
+            yield _flat_hits(pdf, top, sims, pay_l, sim_col, rank_col)
 
     return query_df.mapInPandas(_search, schema=out_schema)
 
@@ -257,10 +239,37 @@ def pq_encode(
         for j in range(m):
             xs = x[:, j * dsub : (j + 1) * dsub]
             d2 = ((xs[:, None, :] - cb_l[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = np.round(d2, PQ_D2_ROUND).argmin(axis=1)
+            codes[:, j] = _round_half_away(d2, PQ_D2_ROUND).argmin(axis=1)
         return pd.Series(list(codes))
 
     return df.withColumn(code_col, _enc(F.col(vec_col)))
+
+
+def _pq_luts(cb: np.ndarray, qm: np.ndarray) -> np.ndarray:
+    """Per-query (m × ksub) dot-product LUTs of the unit-normalized
+    queries ``qm``."""
+    m, _, dsub = cb.shape
+    qm = qm / _norms(qm)[:, None]
+    return np.einsum("mkd,qmd->qmk", cb, qm.reshape(len(qm), m, dsub))
+
+
+def _pq_rec_norms(n2_lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Reconstruction norms: the per-subspace ||centroid||² LUT summed via
+    the same gathers as scoring, zero norms guarded."""
+    j_idx = np.arange(codes.shape[1])
+    rec_norm = np.sqrt(n2_lut[j_idx, codes[:, j_idx]].sum(axis=1))
+    rec_norm[rec_norm == 0] = 1.0
+    return rec_norm
+
+
+def _adc_sims(luts: np.ndarray, codes: np.ndarray, rec_norm: np.ndarray) -> np.ndarray:
+    """ADC cosine (queries × index rows): one gather per subspace, summed
+    subspace by subspace so the block stays queries × rows, over the
+    reconstruction norm (queries are unit vectors)."""
+    dots = luts[:, 0, codes[:, 0]]
+    for j in range(1, codes.shape[1]):
+        dots = dots + luts[:, j, codes[:, j]]
+    return dots / rec_norm
 
 
 def vector_search_topk_pq(
@@ -285,14 +294,12 @@ def vector_search_topk_pq(
     LUT against the codebooks; an index row's score is m gathers + the
     PRECOMPUTED reconstruction norm — no O(d) work per (query, row).
     Similarity is cosine(query, reconstruction) — dot and norm are both
-    per-subspace LUT sums — rounded to ``round_sim`` dp with the flat
-    path's (similarity desc, first payload asc) tie-break, so an engine
-    that materializes the reconstruction reproduces the ranking exactly.
+    per-subspace LUT sums — rounded to ``round_sim`` dp and ranked by the
+    shared :func:`~.vector_search._topk` kernel's (similarity desc, payload
+    asc) order, so an engine that materializes the reconstruction
+    reproduces the ranking exactly.
     """
-    import pyspark.sql.types as T  # noqa: PLC0415
-
     cb = _pq_split(codebooks)
-    m, ksub, dsub = cb.shape
     if max_index_rows is None:
         max_index_rows = MAX_BROADCAST_INDEX_ROWS * 16
     payload_cols = payload_cols or [c for c in index_df.columns if c != index_col]
@@ -302,54 +309,28 @@ def vector_search_topk_pq(
     idx_rows = _collect_index_rows(
         enc.select(*payload_cols, "__pq"), [*payload_cols, "__pq"], max_index_rows
     )
-    codes = np.asarray([r["__pq"] for r in idx_rows], dtype=np.int64)  # (n, m)
-    payloads = [{c: r[c] for c in payload_cols} for r in idx_rows]
-    bc = spark.sparkContext.broadcast((codes, payloads, cb))
-
-    out_schema = T.StructType(
-        list(query_df.schema.fields)
-        + [index_df.schema[c] for c in payload_cols]
-        + [
-            T.StructField(sim_col, T.DoubleType()),
-            T.StructField(rank_col, T.IntegerType()),
-        ]
-    )
+    out_schema = _flat_schema(query_df, index_df, payload_cols, sim_col, rank_col)
     if not idx_rows:
         # empty index: the result is empty with the full output schema
         return spark.createDataFrame([], out_schema)
-    first_payload = payload_cols[0]
-    j_idx = np.arange(m)
+    idx_rows, pay = _presorted(idx_rows, payload_cols)
+    codes = np.asarray([r["__pq"] for r in idx_rows], dtype=np.int64)  # (n, m)
+    bc = spark.sparkContext.broadcast((codes, pay, cb))
 
     def _search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codes_l, payloads_l, cb_l = bc.value
-        # reconstruction norms: per-subspace ||centroid||² LUT summed via
-        # the SAME gathers as scoring — query-independent, built once
-        n2_lut = (cb_l**2).sum(axis=2)  # (m, ksub)
-        rec_norm = np.sqrt(n2_lut[j_idx, codes_l[:, j_idx]].sum(axis=1))
-        rec_norm[rec_norm == 0] = 1.0
-        pay_keys = np.asarray([p[first_payload] for p in payloads_l])
+        codes_l, pay_l, cb_l = bc.value
+        # reconstruction norms are query-independent: built once
+        rec_norm = _pq_rec_norms((cb_l**2).sum(axis=2), codes_l)
         for pdf in batches:
             if pdf.empty:
                 continue
             qm = np.asarray(list(pdf[query_col]), dtype=np.float64)
-            qn = np.linalg.norm(qm, axis=1)
-            qn[qn == 0] = 1.0
-            qm = qm / qn[:, None]
-            out_rows = []
-            for row_i in range(qm.shape[0]):
-                q = qm[row_i]
-                # (m, ksub) dot LUT, then one gather per subspace
-                lut = np.einsum("mkd,md->mk", cb_l, q.reshape(m, dsub))
-                dots = lut[j_idx, codes_l[:, j_idx]].sum(axis=1)
-                sims = np.round(dots / rec_norm, round_sim)
-                kk = min(k, sims.shape[0])
-                order = np.lexsort((pay_keys, -sims))[:kk]
-                base = pdf.iloc[row_i].to_dict()
-                for rk, j in enumerate(order, start=1):
-                    out_rows.append(
-                        {**base, **payloads_l[j], sim_col: sims[j], rank_col: rk}
-                    )
-            yield pd.DataFrame(out_rows)
+            luts = _pq_luts(cb_l, qm)
+            top, sims = _topk(
+                lambda lo, hi: _adc_sims(luts[lo:hi], codes_l, rec_norm),
+                len(qm), len(codes_l), k, round_sim,
+            )
+            yield _flat_hits(pdf, top, sims, pay_l, sim_col, rank_col)
 
     return query_df.mapInPandas(_search, schema=out_schema)
 
@@ -503,12 +484,9 @@ def vector_search_ivfpq_parquet(
     q_mat = np.asarray([r[1] for r in q_rows], dtype=np.float64).reshape(
         len(q_ids), m * dsub
     )
-    qn = np.linalg.norm(q_mat, axis=1)
-    qn[qn == 0] = 1.0
-    q_mat = q_mat / qn[:, None]
     # per-query (m × ksub) dot LUTs, built ONCE driver-side and broadcast
     # with the queries: nq × m × ksub doubles — tiny next to the index
-    luts = np.einsum("mkd,qmd->qmk", cb, q_mat.reshape(len(q_ids), m, dsub))
+    luts = _pq_luts(cb, q_mat)
     n2_lut = (cb**2).sum(axis=2)  # (m, ksub)
     bc = spark.sparkContext.broadcast((q_ids, luts, n2_lut))
 
@@ -530,29 +508,25 @@ def vector_search_ivfpq_parquet(
         + [scan.schema[c] for c in payload_cols]
         + [T.StructField(sim_col, T.DoubleType())]
     )
-    j_idx = np.arange(m)
 
     def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids_l, luts_l, n2_l = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            codes = np.asarray(list(pdf[code_col]), dtype=np.int64)  # (b, m)
-            gather = codes[:, j_idx]
-            rec_norm = np.sqrt(n2_l[j_idx, gather].sum(axis=1))
-            rec_norm[rec_norm == 0] = 1.0
-            pay_keys = pdf[first_payload].to_numpy()
-            out = []
-            for qi, qid in enumerate(q_ids_l):
-                dots = luts_l[qi][j_idx, gather].sum(axis=1)
-                sims = np.round(dots / rec_norm, round_sim)
-                kk = min(k, sims.shape[0])
-                order = np.lexsort((pay_keys, -sims))[:kk]
-                for j in order:
-                    row = {query_id_col: qid, sim_col: sims[j]}
-                    for c in payload_cols:
-                        row[c] = pdf.iloc[j][c]
-                    out.append(row)
+            order = _payload_order([pdf[c].to_numpy() for c in payload_cols])
+            codes = np.asarray(list(pdf[code_col]), dtype=np.int64)[order]  # (b, m)
+            rec_norm = _pq_rec_norms(n2_l, codes)
+            top, sims = _topk(
+                lambda lo, hi: _adc_sims(luts_l[lo:hi], codes, rec_norm),
+                len(q_ids_l), len(codes), k, round_sim,
+            )
+            out = {
+                query_id_col: np.repeat(np.asarray(q_ids_l, dtype=object), top.shape[1]),
+                sim_col: sims.ravel(),
+            }
+            for c in payload_cols:
+                out[c] = pdf[c].to_numpy()[order][top.ravel()]
             yield pd.DataFrame(out, columns=[f.name for f in cand_schema.fields])
 
     cands = scan.mapInPandas(_score, schema=cand_schema)

@@ -9,20 +9,22 @@ index: terraform/main.tf:649-669).
 
 Spark-first design (SURVEY.md §4.3.2):
 
-- **Exact** (v0 + correctness oracle): broadcast the index table, cosine via
-  JVM higher-order functions, per-query top-k via ``row_number`` window.
-  Exact search ⊇ ANN for correctness (ANN approximates exact). The
-  broadcast hash join keeps the coaching pipeline shuffle-free except the
-  per-query-key window — and with AQE the window input is already
-  hash-partitioned by query id only once.
-- **Pandas/numpy path** (``method='numpy'``): per-partition matrix multiply
-  against a broadcast (n_index × dim) float32 matrix via ``mapInPandas``;
-  one BLAS GEMM per Arrow batch instead of per-row array folds. This is the
-  throughput path for high dims / large query streams.
+- **One exact top-k kernel** (:func:`_topk`): every GEMM search in the
+  package ranks through it. Per Arrow batch, one float64 GEMM against the
+  broadcast (n_index × dim) matrix, then the ``row_number() OVER (ORDER BY
+  sim DESC, payload ASC)`` cut computed in numpy. The plan is map-only
+  (``mapInPandas``, no shuffle), which also makes it streaming-legal.
+- **Catalyst reference** (:func:`vector_search_topk_flat`): the same
+  ranking as JVM higher-order functions + a ``row_number`` window. Kept as
+  the oracle-shaped form tests compare the kernel against.
 - **IVF** (``nprobe``): k-means-lite centroid assignment as a partition
   column; queries probe only the ``nprobe`` nearest centroid partitions
-  before brute-forcing — the 100-TB scale path where the index no longer
-  broadcasts (SURVEY.md §7.4.8). Operator signature stays identical.
+  before the per-cell kernel — the 100-TB scale path where the index no
+  longer broadcasts (SURVEY.md §7.4.8). Operator signature stays identical.
+
+Payload order is Python code-point order (``str`` comparison), which equals
+UTF-8 byte order and therefore Spark's binary string collation, non-BMP
+characters included (UTF-16 code-unit order would differ there).
 
 At 1000-executor scale: the index table is the small side (a knowledge base,
 not the 100 TB fact stream) so broadcast is the right default; when the index
@@ -32,26 +34,34 @@ itself is huge, IVF-partitioned parquet with partition pruning on
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_sql_ai_meetingcoach_azure_spark.functions.vectors import (
-    cosine_similarity_col,
     dot_col,
     norm_col,
 )
 
 _QID = "__query_id"
 
-#: driver-side index materialization ceiling for the numpy/broadcast paths:
-#: past this, collect+broadcast is the wrong physical strategy (at 256 dims
+#: driver-side index materialization ceiling for the broadcast paths: past
+#: this, collect+broadcast is the wrong physical strategy (at 256 dims
 #: float32 this is ~1 GB of vectors before payloads) — the index belongs on
 #: disk as IVF-partitioned parquet probed via :func:`vector_search_ivf_parquet`
 MAX_BROADCAST_INDEX_ROWS = 1_000_000
+
+#: element budget of one score block: :func:`_topk` scores query rows in
+#: blocks of ``SIMS_BLOCK_ELEMS // n_index`` rows (32 MB of float64 sims)
+#: and :func:`_nearest_centroids` bounds its rows × nlist × dim distance
+#: tensor the same way, so a Python worker's matrix never grows with the
+#: Arrow batch or the IVF cell (a 10k-row batch against a 1M-row index
+#: would otherwise be one 80 GB matrix)
+SIMS_BLOCK_ELEMS = 1 << 22
 
 
 class IndexTooLargeError(ValueError):
@@ -123,9 +133,154 @@ def vector_search_topk_flat(
 def _round_half_away(sims: np.ndarray, ndigits: int) -> np.ndarray:
     """Round half AWAY from zero, matching SQL ``round()`` — ``np.round``
     is half-to-even, which diverges from the oracle on an exact .5 at the
-    last kept decimal (the embed_and_search_numpy exact-mode contract)."""
+    last kept decimal."""
     scale = 10.0 ** ndigits
     return np.sign(sims) * np.floor(np.abs(sims) * scale + 0.5) / scale
+
+
+def _norms(m: np.ndarray) -> np.ndarray:
+    """Row L2 norms with zero norms guarded to 1 (a zero vector scores 0)."""
+    n = np.sqrt(np.einsum("ij,ij->i", m, m))
+    n[n == 0] = 1.0
+    return n
+
+
+def _similarity(
+    qm: np.ndarray, mat: np.ndarray, inorm: np.ndarray | None = None
+) -> np.ndarray:
+    """The kernel's similarity: float64 ``dot / (|q|·|i|)`` — the exact
+    arithmetic of the Catalyst reference's ``dot_col / (qnorm·inorm)``.
+    ``inorm=None`` skips the division: the raw dot of pre-normalized
+    vectors."""
+    dots = qm @ mat.T
+    if inorm is None:
+        return dots
+    return dots / (_norms(qm)[:, None] * inorm[None, :])
+
+
+def _topk(
+    score: Callable[[int, int], np.ndarray],
+    n_rows: int,
+    n_cols: int,
+    k: int,
+    round_sim: int | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """THE exact top-k: each row's ``min(k, n_cols)`` best columns under
+    ``row_number() OVER (ORDER BY sim DESC, column ASC)``.
+
+    ``score(lo, hi)`` returns the (hi-lo, n_cols) similarity block of rows
+    lo:hi; it is called on row blocks of at most :data:`SIMS_BLOCK_ELEMS`
+    elements. Sims are rounded half away from zero to ``round_sim`` decimals
+    first (SQL ``round``), so which rows make the cut is reproducible across
+    engines. Callers presort their columns by the payload tuple ASC
+    (:func:`_payload_order`), so column order IS payload order.
+
+    Per block: ``np.partition`` finds each row's k-th value, every column at
+    or above it is a candidate (ties at the cut included), and one
+    ``np.lexsort((col, -sim, row))`` orders the candidates. Returns (cols,
+    sims), each (n_rows, min(k, n_cols)), rank-ordered per row."""
+    kk = min(k, n_cols)
+    cols = np.empty((n_rows, kk), dtype=np.int64)
+    vals = np.empty((n_rows, kk), dtype=np.float64)
+    if kk == 0:
+        return cols, vals
+    step = max(1, SIMS_BLOCK_ELEMS // n_cols)
+    for lo in range(0, n_rows, step):
+        hi = min(lo + step, n_rows)
+        sims = score(lo, hi)
+        if round_sim is not None:
+            sims = _round_half_away(sims, round_sim)
+        kth = np.partition(sims, n_cols - kk, axis=1)[:, n_cols - kk]
+        r, c = np.nonzero(sims >= kth[:, None])
+        v = sims[r, c]
+        o = np.lexsort((c, -v, r))
+        r, c, v = r[o], c[o], v[o]
+        # r is sorted: searchsorted gives each row's first slot, so the
+        # offset from it is the row_number - 1
+        keep = np.arange(len(r)) - np.searchsorted(r, r) < kk
+        cols[lo:hi] = c[keep].reshape(hi - lo, kk)
+        vals[lo:hi] = v[keep].reshape(hi - lo, kk)
+    return cols, vals
+
+
+def _gemm_topk(
+    qm: np.ndarray,
+    mat: np.ndarray,
+    k: int,
+    round_sim: int | None = None,
+    cosine: bool = True,
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`_topk` over the GEMM similarity of float64 query rows ``qm``
+    against the payload-presorted index matrix ``mat``; ``cosine=False``
+    ranks the raw dot of pre-normalized vectors."""
+    inorm = _norms(mat) if cosine else None
+    return _topk(
+        lambda lo, hi: _similarity(qm[lo:hi], mat, inorm),
+        len(qm), len(mat), k, round_sim,
+    )
+
+
+def _payload_order(columns: list[np.ndarray]) -> np.ndarray:
+    """Permutation sorting rows by the payload tuple ASC (first column most
+    significant): one stable ``np.lexsort``. Python's ``str`` order is
+    code-point order = UTF-8 byte order = Spark's binary collation."""
+    return np.lexsort(columns[::-1])
+
+
+def _presorted(rows: list, payload_cols: list[str]) -> tuple[list, dict]:
+    """Collected index rows in payload-tuple ASC order (the kernel's column
+    order), with {payload col: 1-D object array} in the same order."""
+    pay = {
+        c: np.fromiter((r[c] for r in rows), dtype=object, count=len(rows))
+        for c in payload_cols
+    }
+    perm = _payload_order(list(pay.values()))
+    return [rows[i] for i in perm], {c: v[perm] for c, v in pay.items()}
+
+
+def _index_matrix(rows: list, payload_cols: list[str], index_col: str):
+    """(float64 index matrix, payload arrays), presorted by payload."""
+    rows, pay = _presorted(rows, payload_cols)
+    mat = np.asarray([r[index_col] for r in rows], dtype=np.float64)
+    return mat.reshape(len(rows), -1 if rows else 0), pay
+
+
+def _flat_hits(
+    pdf: pd.DataFrame,
+    top: np.ndarray,
+    sims: np.ndarray,
+    pay: dict,
+    sim_col: str,
+    rank_col: str,
+) -> pd.DataFrame:
+    """One row per (query row, hit) in the flat output schema's column
+    order: the query columns, the hit's payload, its similarity and its
+    1-based rank."""
+    b, kk = top.shape
+    qrep = np.repeat(np.arange(b), kk)
+    flat = top.ravel()
+    out = pdf.iloc[qrep].reset_index(drop=True)
+    for c, vals in pay.items():
+        out[c] = pd.Series(vals[flat])
+    out[sim_col] = sims.ravel()
+    out[rank_col] = np.tile(np.arange(1, kk + 1, dtype=np.int32), b)
+    return out
+
+
+def _results_type(index_df: DataFrame, payload_cols: list[str]):
+    """``ARRAY<STRUCT<payload...>>``: the type of a search-results column."""
+    return T.ArrayType(T.StructType([index_df.schema[c] for c in payload_cols]))
+
+
+def _flat_schema(query_df: DataFrame, index_df: DataFrame, payload_cols, sim_col, rank_col):
+    return T.StructType(
+        list(query_df.schema.fields)
+        + [index_df.schema[c] for c in payload_cols]
+        + [
+            T.StructField(sim_col, T.DoubleType()),
+            T.StructField(rank_col, T.IntegerType()),
+        ]
+    )
 
 
 def vector_search_topk_flat_gemm(
@@ -140,11 +295,10 @@ def vector_search_topk_flat_gemm(
     round_sim: int | None = None,
     max_index_rows: int | None = MAX_BROADCAST_INDEX_ROWS,
 ) -> DataFrame:
-    """GEMM form of :func:`vector_search_topk_flat` — identical rows and
-    ordering (same ``round(dot/(|q|·|i|), round_sim)`` similarity, same
-    (sim DESC, payload ASC) tie-break), but the pair space never
-    materializes as JVM rows: each Arrow batch of queries runs ONE float64
-    GEMM against the broadcast index matrix and emits only the k winners.
+    """Kernel form of :func:`vector_search_topk_flat` — identical rows and
+    ordering, but the pair space never materializes as JVM rows: each Arrow
+    batch of queries runs the :func:`_topk` kernel against the broadcast
+    index matrix and emits only the k winners.
 
     Why: the cross-join form evaluates an interpreted ``zip_with`` +
     ``aggregate`` lambda per PAIR ELEMENT (O(pairs·dim) catalyst lambda
@@ -152,75 +306,27 @@ def vector_search_topk_flat_gemm(
     1k queries × 1k index × 64 dims that is ~10⁸ interpreted evaluations
     for ~10⁷ FLOPs of actual math. Here the plan is map-only (no Exchange
     at all): distribution cost is one broadcast of the index, per-task
-    work is vectorized BLAS (optimization guide §4.2).
-
-    Exactness contract (what lets oracle-verified entries swap freely):
-    float64 GEMM over the same float32-quantized inputs, similarity =
-    dot/(qnorm·inorm) with half-AWAY-from-zero rounding (SQL ``round``),
-    ties broken by the payload tuple ascending via a stable sort over the
-    payload-presorted index — exactly the ``row_number() OVER (ORDER BY
-    sim DESC, payload ASC)`` total order. Same broadcast-ceiling guard as
-    the numpy search (``IndexTooLargeError`` past ``max_index_rows``)."""
-    import pyspark.sql.types as T  # noqa: PLC0415
-
+    work is vectorized BLAS (optimization guide §4.2). Same
+    broadcast-ceiling guard as :func:`vector_search`."""
     payload_cols = payload_cols or [c for c in index_df.columns if c != index_col]
     spark = query_df.sparkSession
     idx_rows = _collect_index_rows(
         index_df, [*payload_cols, index_col], max_index_rows
     )
-    out_schema = T.StructType(
-        list(query_df.schema.fields)
-        + [index_df.schema[c] for c in payload_cols]
-        + [
-            T.StructField(sim_col, T.DoubleType()),
-            T.StructField(rank_col, T.IntegerType()),
-        ]
-    )
+    out_schema = _flat_schema(query_df, index_df, payload_cols, sim_col, rank_col)
     if not idx_rows:
         # empty index: the cross join yields no rows — same here
         return spark.createDataFrame([], out_schema)
-    # presort the index by the payload tuple ASC once driver-side: a stable
-    # descending-sim sort over this order IS the (sim DESC, payload ASC)
-    # row_number ordering, so no per-query tie handling is ever needed
-    perm = sorted(
-        range(len(idx_rows)), key=lambda i: tuple(idx_rows[i][c] for c in payload_cols)
-    )
-    mat = np.asarray([idx_rows[i][index_col] for i in perm], dtype=np.float64)
-    inorm = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-    inorm[inorm == 0] = 1.0
-    payload_vals = {
-        c: np.asarray([idx_rows[i][c] for i in perm], dtype=object)
-        for c in payload_cols
-    }
-    bc = spark.sparkContext.broadcast((mat, inorm, payload_vals))
-    n_idx = len(idx_rows)
-    q_cols = list(query_df.columns)
+    bc = spark.sparkContext.broadcast(_index_matrix(idx_rows, payload_cols, index_col))
 
     def _search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mat_l, inorm_l, pay_l = bc.value
-        kk = min(k, n_idx)
-        ranks = np.arange(1, kk + 1, dtype=np.int32)
+        mat_l, pay_l = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             qm = np.asarray(list(pdf[query_col]), dtype=np.float64)
-            qn = np.sqrt(np.einsum("ij,ij->i", qm, qm))
-            qn[qn == 0] = 1.0
-            sims = (qm @ mat_l.T) / (qn[:, None] * inorm_l[None, :])
-            if round_sim is not None:
-                sims = _round_half_away(sims, round_sim)
-            # stable argsort over the payload-ASC-presorted axis = the
-            # exact (sim DESC, payload ASC) ordering, ties included
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-            b = len(pdf)
-            qrep = np.repeat(np.arange(b), kk)
-            flat = top.ravel()
-            out = pdf.iloc[qrep].reset_index(drop=True)
-            for c in payload_cols:
-                out[c] = pd.Series(pay_l[c][flat])
-            out[sim_col] = sims[qrep, flat]
-            out[rank_col] = np.tile(ranks, b)
-            yield out[q_cols + payload_cols + [sim_col, rank_col]]
+            top, sims = _gemm_topk(qm, mat_l, k, round_sim)
+            yield _flat_hits(pdf, top, sims, pay_l, sim_col, rank_col)
 
     return query_df.mapInPandas(_search, schema=out_schema)
 
@@ -233,32 +339,43 @@ def vector_search(
     index_col: str = "embedding",
     payload_cols: list[str] | None = None,
     output_col: str = "search_results",
-    method: str = "sql",
+    method: str | None = None,
     max_index_rows: int | None = MAX_BROADCAST_INDEX_ROWS,
     fallback_path: str | None = None,
     fallback_nprobe: int = 4,
     round_sim: int | None = None,
 ) -> DataFrame:
     """LATERAL TABLE(VECTOR_SEARCH(...)) equivalent: appends
-    ``output_col ARRAY<STRUCT<payload...>>`` (top-k by cosine) to every query
-    row — the reference's ``search_results`` shape (:379-384).
+    ``output_col ARRAY<STRUCT<payload...>>`` (top-k by cosine, ranked by
+    (sim DESC, payload ASC)) to every query row — the reference's
+    ``search_results`` shape (:379-384). An empty index appends ``[]``.
 
-    ``fallback_path``: an on-disk IVF index (written by
-    :func:`write_ivf_index`) to route to when the index crosses the
-    broadcast ceiling — past ``max_index_rows`` the search transparently
-    becomes a partition-pruned :func:`vector_search_ivf_parquet` probe with
-    ``fallback_nprobe`` cells instead of raising.  With
-    ``fallback_nprobe >= nlist`` the probe is exhaustive, so results are
-    identical to the broadcast path; smaller values trade recall for reads.
+    The index is collected and broadcast once; each Arrow batch of queries
+    runs the :func:`_topk` kernel, so the plan is map-only and
+    streaming-legal. Past ``max_index_rows`` this raises
+    :class:`IndexTooLargeError` naming the on-disk IVF route, unless
+    ``fallback_path`` names one: an IVF index (written by
+    :func:`write_ivf_index`) that the search then transparently becomes, a
+    partition-pruned :func:`vector_search_ivf_parquet` probe with
+    ``fallback_nprobe`` cells. With ``fallback_nprobe >= nlist`` the probe
+    is exhaustive, so results are identical to the broadcast path; smaller
+    values trade recall for reads.
 
     ``round_sim``: round cosine to this many decimals BEFORE ranking (both
-    routes), so the (sim DESC, payload ASC) order — including which rows
-    make the k cut — is reproducible across engines regardless of float
-    summation order. Required for oracle-exact entries that route-flip.
+    routes), so the order — including which rows make the k cut — is
+    reproducible across engines regardless of float summation order.
+    Required for oracle-exact entries that route-flip.
+
+    ``method`` is ignored: there is one search body. It is still accepted
+    so callers written against the former ``'sql'``/``'numpy'`` choice keep
+    running.
     """
     payload_cols = payload_cols or [c for c in index_df.columns if c != index_col]
-
-    def _route_to_ivf() -> DataFrame:
+    try:
+        idx_rows = _collect_index_rows(index_df, [*payload_cols, index_col], max_index_rows)
+    except IndexTooLargeError:
+        if fallback_path is None:
+            raise
         return vector_search_ivf_parquet(
             query_df,
             fallback_path,
@@ -270,115 +387,23 @@ def vector_search(
             output_col=output_col,
             round_sim=round_sim,
         )
-
-    if method == "numpy":
-        try:
-            return _vector_search_numpy(
-                query_df, index_df, k, query_col, index_col, payload_cols, output_col,
-                max_index_rows=max_index_rows, round_sim=round_sim,
-            )
-        except IndexTooLargeError:
-            if fallback_path is None:
-                raise
-            return _route_to_ivf()
-    # the sql path broadcasts JVM-side (no driver collect), so it is only
-    # guarded when a fallback exists to route to — the size check is one
-    # limit-riding count, paid solely by fallback users
-    if fallback_path is not None and max_index_rows is not None:
-        if index_df.limit(max_index_rows + 1).count() > max_index_rows:
-            return _route_to_ivf()
-
-    q = query_df.withColumn(_QID, F.monotonically_increasing_id()).withColumn(
-        "__qnorm", norm_col(query_col)
-    )
-    idx = index_df.select(
-        *payload_cols, F.col(index_col).alias("__index_vec")
-    ).withColumn("__inorm", norm_col("__index_vec"))
-    sim = (
-        dot_col(F.col(query_col), F.col("__index_vec"))
-        / (F.col("__qnorm") * F.col("__inorm"))
-    ).alias("__sim")
-    if round_sim is not None:
-        sim = F.round(sim, round_sim).alias("__sim")
-    joined = q.join(F.broadcast(idx), how="cross").withColumn("__sim", sim)
-    w = Window.partitionBy(_QID).orderBy(F.desc("__sim"), *[F.asc(c) for c in payload_cols])
-    ranked = joined.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") <= k)
-    result_struct = F.struct(*[F.col(c) for c in payload_cols])
-    agg = ranked.groupBy(_QID).agg(
-        *[F.first(c).alias(c) for c in query_df.columns],
-        F.sort_array(F.collect_list(F.struct(F.col("__rk").alias("r"), result_struct.alias("s"))))
-        .alias("__pairs"),
-    )
-    return agg.select(
-        *query_df.columns,
-        F.transform(F.col("__pairs"), lambda p: p["s"]).alias(output_col),
-    )
-
-
-def _vector_search_numpy(
-    query_df: DataFrame,
-    index_df: DataFrame,
-    k: int,
-    query_col: str,
-    index_col: str,
-    payload_cols: list[str],
-    output_col: str,
-    max_index_rows: int | None = MAX_BROADCAST_INDEX_ROWS,
-    round_sim: int | None = None,
-) -> DataFrame:
-    """Broadcast the index as numpy matrices; per-Arrow-batch GEMM top-k.
-
-    No shuffle at all: each partition of the query stream computes its own
-    top-k against the shared read-only index — the plan stays narrow, which
-    is what survives a 1000-executor scale-up for a broadcastable index.
-    """
-    import pyspark.sql.types as T  # noqa: PLC0415
-
-    spark = query_df.sparkSession
-    idx_rows = _collect_index_rows(index_df, [*payload_cols, index_col], max_index_rows)
-    mat = np.asarray([r[index_col] for r in idx_rows], dtype=np.float32)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    mat_n = mat / norms[:, None]
-    payloads = [{c: r[c] for c in payload_cols} for r in idx_rows]
-    bc = spark.sparkContext.broadcast((mat_n, payloads))
-
-    q_fields = query_df.schema.fields
+    mat, pay = _index_matrix(idx_rows, payload_cols, index_col)
+    hits = [dict(zip(pay, vals)) for vals in zip(*pay.values())]
+    bc = query_df.sparkSession.sparkContext.broadcast((mat, hits))
     out_schema = T.StructType(
-        list(q_fields)
-        + [
-            T.StructField(
-                output_col,
-                T.ArrayType(
-                    T.StructType(
-                        [index_df.schema[c] for c in payload_cols]
-                    )
-                ),
-            )
-        ]
+        [*query_df.schema.fields, T.StructField(output_col, _results_type(index_df, payload_cols))]
     )
 
     def _search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mat_n_l, payloads_l = bc.value
+        mat_l, hits_l = bc.value
         for pdf in batches:
             if pdf.empty:
                 yield pdf.assign(**{output_col: []})
                 continue
-            qm = np.asarray(list(pdf[query_col]), dtype=np.float32)
-            qn = np.linalg.norm(qm, axis=1)
-            qn[qn == 0] = 1.0
-            sims = (qm / qn[:, None]) @ mat_n_l.T  # (batch, n_index) GEMM
-            if round_sim is not None:
-                sims = np.round(sims, round_sim)
-            kk = min(k, sims.shape[1])
-            top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            results = []
-            for row_i in range(sims.shape[0]):
-                cand = top[row_i]
-                order = cand[np.argsort(-sims[row_i, cand], kind="stable")]
-                results.append([payloads_l[j] for j in order])
+            qm = np.asarray(list(pdf[query_col]), dtype=np.float64).reshape(len(pdf), -1)
+            top, _ = _gemm_topk(qm, mat_l, k, round_sim)
             pdf = pdf.copy()
-            pdf[output_col] = results
+            pdf[output_col] = [[hits_l[j] for j in row] for row in top.tolist()]
             yield pdf
 
     return query_df.mapInPandas(_search, schema=out_schema)
@@ -400,8 +425,8 @@ def embed_and_search_numpy(
     fallback_nprobe: int = 4,
 ) -> DataFrame:
     """Fused embed + retrieve: ONE ``mapInPandas`` stage computes the
-    embedding (provider batch call) and the GEMM top-k against the broadcast
-    index for each Arrow batch.
+    embedding (provider batch call) and the :func:`_topk` kernel against
+    the broadcast index for each Arrow batch.
 
     ``fallback_path``: like :func:`vector_search`, an on-disk IVF index to
     route to past the broadcast ceiling — the fused stage un-fuses into an
@@ -418,17 +443,12 @@ def embed_and_search_numpy(
     halves the Python-stage count of the coaching pipeline's hot path and
     keeps the plan narrow (no shuffle at all).
 
-    ``exact=True`` makes the ranking engine-reproducible for correctness
-    oracles: vectors are ASSUMED pre-normalized (skipping the float32
-    renormalization), the GEMM runs in float64 over the float32-quantized
-    components, similarities are rounded to 6 dp and ties break
-    lexicographically on the payload tuple — exactly the ordering a SQL
-    oracle computes with ``round(dot, 6) DESC, payload...``. GEMM cost is
-    unchanged at knowledge-base scale (the embed call dominates); the
-    default float32 path remains the raw-throughput mode.
+    The embedding is float32 (the ``embed_col`` type) and the kernel runs
+    over it in float64. By default it ranks by cosine. ``exact=True`` is
+    the SQL-oracle contract: vectors are ASSUMED pre-normalized, so the
+    rank is ``round(dot, 6) DESC, payload ASC`` — the raw dot with no norm
+    division, exactly what an oracle computes with ``list_dot_product``.
     """
-    import pyspark.sql.types as T  # noqa: PLC0415
-
     payload_cols = payload_cols or [c for c in index_df.columns if c != index_col]
     spark = query_df.sparkSession
     try:
@@ -454,69 +474,52 @@ def embed_and_search_numpy(
             payload_cols=payload_cols,
             output_col=output_col,
         )
-    mat = np.asarray([r[index_col] for r in idx_rows], dtype=np.float32)
-    if exact:
-        mat_n = mat.astype(np.float64)
-        payload_keys = [tuple(str(r[c]) for c in payload_cols) for r in idx_rows]
-    else:
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        mat_n = mat / norms[:, None]
-        payload_keys = None
-    payloads = [{c: r[c] for c in payload_cols} for r in idx_rows]
-    bc = spark.sparkContext.broadcast((mat_n, payloads, payload_keys))
+    mat, pay = _index_matrix(idx_rows, payload_cols, index_col)
+    hits = [dict(zip(pay, vals)) for vals in zip(*pay.values())]
+    # float32-quantized like the query side
+    bc = spark.sparkContext.broadcast((mat.astype(np.float32).astype(np.float64), hits))
+    round_sim = 6 if exact else None
 
     out_schema = T.StructType(
-        list(query_df.schema.fields)
-        + [
+        [
+            *query_df.schema.fields,
             T.StructField(embed_col, T.ArrayType(T.FloatType())),
-            T.StructField(
-                output_col,
-                T.ArrayType(T.StructType([index_df.schema[c] for c in payload_cols])),
-            ),
+            T.StructField(output_col, _results_type(index_df, payload_cols)),
         ]
     )
 
     def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mat_n_l, payloads_l, keys_l = bc.value
+        mat_l, hits_l = bc.value
         for pdf in batches:
             if pdf.empty:
                 yield pdf.assign(**{embed_col: [], output_col: []})
                 continue
             qm = np.asarray(provider.embed(pdf[text_col].tolist()), dtype=np.float32)
-            if exact:
-                # round half AWAY from zero, matching SQL round() — np.round
-                # is half-to-even, which diverges from the oracle on an
-                # exact .5 at the 6th decimal
-                raw = qm.astype(np.float64) @ mat_n_l.T
-                sims = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
-            else:
-                qn = np.linalg.norm(qm, axis=1)
-                qn[qn == 0] = 1.0
-                sims = (qm / qn[:, None]) @ mat_n_l.T
-            kk = min(k, sims.shape[1])
-            top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            results = []
-            for row_i in range(sims.shape[0]):
-                cand = top[row_i]
-                if exact:
-                    # rounded sims tie often; pull in EVERY candidate at or
-                    # above the kth value, then order by (-sim, payload) —
-                    # the oracle's row_number ordering
-                    row = sims[row_i]
-                    cand = np.flatnonzero(row >= row[cand].min())
-                    order = sorted(
-                        cand.tolist(), key=lambda j: (-row[j], keys_l[j])
-                    )[:kk]
-                else:
-                    order = cand[np.argsort(-sims[row_i, cand], kind="stable")]
-                results.append([payloads_l[j] for j in order])
+            top, _ = _gemm_topk(qm.astype(np.float64), mat_l, k, round_sim, cosine=not exact)
             pdf = pdf.copy()
             pdf[embed_col] = list(qm)
-            pdf[output_col] = results
+            pdf[output_col] = [[hits_l[j] for j in row] for row in top.tolist()]
             yield pdf
 
     return query_df.mapInPandas(_fused, schema=out_schema)
+
+
+def _nearest_centroids(m: np.ndarray, cent: np.ndarray, nprobe: int | None = None) -> np.ndarray:
+    """Each row's nearest centroid by L2 (``argmin``: first minimum), or
+    with ``nprobe`` its ``nprobe`` nearest (``argsort``) — the one
+    assignment every IVF build, probe and streaming ingest shares. Row
+    blocks keep the rows × nlist × dim difference tensor within
+    :data:`SIMS_BLOCK_ELEMS`; the per-row arithmetic is unchanged by
+    blocking."""
+    shape = (len(m),) if nprobe is None else (len(m), min(nprobe, len(cent)))
+    out = np.empty(shape, dtype=np.int64)
+    step = max(1, SIMS_BLOCK_ELEMS // max(1, cent.size))
+    for lo in range(0, len(m), step):
+        d = np.linalg.norm(m[lo : lo + step, None, :] - cent[None, :, :], axis=2)
+        out[lo : lo + step] = (
+            d.argmin(axis=1) if nprobe is None else np.argsort(d, axis=1)[:, :nprobe]
+        )
+    return out
 
 
 def build_ivf_index(
@@ -557,8 +560,7 @@ def build_ivf_index(
     rng = np.random.RandomState(seed)
     cent = x[rng.choice(len(x), size=min(nlist, len(x)), replace=False)]
     for _ in range(n_iter):
-        d = np.linalg.norm(x[:, None, :] - cent[None, :, :], axis=2)
-        assign = d.argmin(axis=1)
+        assign = _nearest_centroids(x, cent)
         for c in range(len(cent)):
             pts = x[assign == c]
             if len(pts):
@@ -587,10 +589,7 @@ def build_ivf_index(
 
     @F.pandas_udf("int")
     def _assign(s: pd.Series) -> pd.Series:
-        c_l = bc.value
-        m = np.asarray(list(s), dtype=np.float32)
-        d = np.linalg.norm(m[:, None, :] - c_l[None, :, :], axis=2)
-        return pd.Series(d.argmin(axis=1))
+        return pd.Series(_nearest_centroids(np.asarray(list(s), dtype=np.float32), bc.value))
 
     return index_df.withColumn("centroid_id", _assign(F.col(index_col))), cent.tolist()
 
@@ -602,11 +601,8 @@ def _probe_udf(centroids: list[list[float]], nprobe: int, spark):
 
     @F.pandas_udf("array<int>")
     def _probes(s: pd.Series) -> pd.Series:
-        c_l = bc.value
         m = np.asarray(list(s), dtype=np.float32)
-        d = np.linalg.norm(m[:, None, :] - c_l[None, :, :], axis=2)
-        npb = min(nprobe, d.shape[1])
-        return pd.Series(list(np.argsort(d, axis=1)[:, :npb]))
+        return pd.Series(list(_nearest_centroids(m, bc.value, nprobe)))
 
     return _probes
 
@@ -729,19 +725,18 @@ def vector_search_ivf(
     spark = query_df.sparkSession
     _probes = _probe_udf(centroids, nprobe, spark)
 
-    import pyspark.sql.types as T  # noqa: PLC0415
-
     q0 = query_df.withColumn(_QID, F.monotonically_increasing_id())
     # Per-CELL GEMM top-k (optimization guide §4.2): the old form joined
     # every (query, candidate) pair as a JVM row and paid an interpreted
     # zip_with dot per pair plus a corpus-candidate-sized window sort.
-    # Cogrouping query probes with the pruned index on centroid_id runs ONE
-    # float64 GEMM per cell and emits only k candidates per (query, cell);
-    # the global k-cut then sorts queries×nprobe×k rows instead of
-    # queries×(index/nlist)×nprobe. The per-cell cut is LOSSLESS: it keeps
-    # the top-k of each cell under the same (sim DESC, payload ASC) total
-    # order the global cut uses, and the global top-k is contained in the
-    # union of per-cell top-ks.
+    # Cogrouping query probes with the pruned index on centroid_id runs the
+    # _topk kernel once per cell (row-blocked: a hot cell's sims matrix
+    # stays within SIMS_BLOCK_ELEMS) and emits only k candidates per
+    # (query, cell); the global k-cut then sorts queries×nprobe×k rows
+    # instead of queries×(index/nlist)×nprobe. The per-cell cut is
+    # LOSSLESS: it keeps the top-k of each cell under the same (sim DESC,
+    # payload ASC) total order the global cut uses, and the global top-k
+    # is contained in the union of per-cell top-ks.
     qp = q0.select(_QID, query_col).withColumn(
         "centroid_id", F.explode(_probes(F.col(query_col)))
     )
@@ -758,31 +753,14 @@ def vector_search_ivf(
     def _percell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
             return pd.DataFrame({f.name: [] for f in cell_schema.fields})
-        # presort the cell by the payload tuple ASC: a stable descending-sim
-        # argsort over this order is exactly the (sim DESC, payload ASC)
-        # ranking, ties included
-        order = sorted(
-            range(len(right)),
-            key=lambda i: tuple(right.iloc[i][c] for c in payload_cols),
-        )
+        order = _payload_order([right[c].to_numpy() for c in payload_cols])
         mat = np.asarray(list(right["__index_vec"].iloc[order]), dtype=np.float64)
-        inorm = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-        inorm[inorm == 0] = 1.0
         qm = np.asarray(list(left[query_col]), dtype=np.float64)
-        qn = np.sqrt(np.einsum("ij,ij->i", qm, qm))
-        qn[qn == 0] = 1.0
-        sims = (qm @ mat.T) / (qn[:, None] * inorm[None, :])
-        if round_sim is not None:
-            sims = _round_half_away(sims, round_sim)
-        kk = min(k, sims.shape[1])
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-        b = len(left)
-        qrep = np.repeat(np.arange(b), kk)
-        flat = top.ravel()
-        out = {_QID: left[_QID].to_numpy()[qrep]}
+        top, sims = _gemm_topk(qm, mat, k, round_sim)
+        out = {_QID: np.repeat(left[_QID].to_numpy(), top.shape[1])}
         for c in payload_cols:
-            out[c] = right[c].iloc[order].to_numpy()[flat]
-        out["__sim"] = sims[qrep, flat]
+            out[c] = right[c].to_numpy()[order][top.ravel()]
+        out["__sim"] = sims.ravel()
         return pd.DataFrame(out)
 
     cell_hits = qp.groupBy("centroid_id").cogroup(
@@ -804,9 +782,7 @@ def vector_search_ivf(
     # left-join back onto the original query rows: a query whose nprobe
     # probed cells contain no index rows must still appear (with an empty
     # search_results array) — the operator appends a column to EVERY row
-    empty = F.array().cast(
-        T.ArrayType(T.StructType([ivf_index_df.schema[c] for c in payload_cols]))
-    )
+    empty = F.array().cast(_results_type(ivf_index_df, payload_cols))
     return q0.join(results, on=_QID, how="left").select(
         *query_df.columns, F.coalesce(F.col(output_col), empty).alias(output_col)
     )

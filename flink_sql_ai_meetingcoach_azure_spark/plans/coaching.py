@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from flink_sql_ai_meetingcoach_azure_spark.functions.text import assemble_coaching_prompt
 from flink_sql_ai_meetingcoach_azure_spark.models.registry import ModelRegistry
-from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import vector_search
+from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import embed_and_search_numpy
 
 
 def filter_prospect(messages: DataFrame) -> DataFrame:
@@ -41,56 +41,34 @@ def coaching_pipeline(
     k: int = 3,
     embed_model: str = "openaiembed",
     gen_model: str = "coaching_response_generator",
-    search_method: str = "numpy",
     exact_retrieval: bool = False,
 ) -> DataFrame:
     """messages(message, speaker, ...) + index(document_id, chunks,
     embedding) -> (message, rag_results_string, coaching_response)
     matching the reference output schema (kafka_utils.py:362-374).
 
-    ``search_method='numpy'`` (default) runs the retrieval as one GEMM per
-    Arrow batch against the broadcast index — measured ~35× faster than the
-    JVM higher-order-function path at 2 000 msgs × 1 000 chunks × 256 dims
-    (interpreted per-element lambdas don't amortize); ``'sql'`` keeps the
-    whole plan in Catalyst expressions (small-k / plan-inspection path)."""
+    Stages b+c run fused: ONE mapInPandas stage embeds the batch (provider
+    call) and ranks it against the broadcast index with the shared top-k
+    kernel — half the Python worker stages of embed-then-search (see
+    :func:`embed_and_search_numpy`). ``exact_retrieval`` selects its
+    SQL-oracle ranking (raw dot, 6 dp)."""
     # a. route prospect messages only — pushed below everything expensive
     prospects = filter_prospect(messages).select("message", "speaker")
 
-    if search_method == "numpy":
-        # b+c fused: ONE mapInPandas stage embeds the batch (provider call)
-        # and GEMMs it against the broadcast index — halves the Python
-        # worker stages on the hot path (see embed_and_search_numpy)
-        from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
-            embed_and_search_numpy,
-        )
-
-        with_rag = embed_and_search_numpy(
-            prospects,
-            knowledge_index,
-            registry.get(embed_model).provider,
-            k=k,
-            text_col="message",
-            index_col="embedding",
-            payload_cols=["document_id", "chunks"],
-            embed_col="embedding",
-            output_col="rag_results",
-            exact=exact_retrieval,
-        )
-    else:
-        # b. embed
-        embedded = registry.ml_predict(prospects, embed_model, "message", "embedding")
-
-        # c. retrieve top-k, strip embeddings from payload (reference :372-376)
-        with_rag = vector_search(
-            embedded,
-            knowledge_index,
-            k=k,
-            query_col="embedding",
-            index_col="embedding",
-            payload_cols=["document_id", "chunks"],
-            output_col="rag_results",
-            method=search_method,
-        )
+    # b+c. embed + retrieve top-k; the payload strips embeddings
+    # (reference :372-376)
+    with_rag = embed_and_search_numpy(
+        prospects,
+        knowledge_index,
+        registry.get(embed_model).provider,
+        k=k,
+        text_col="message",
+        index_col="embedding",
+        payload_cols=["document_id", "chunks"],
+        embed_col="embedding",
+        output_col="rag_results",
+        exact=exact_retrieval,
+    )
 
     # d. prompt assembly + generation
     prompt = assemble_coaching_prompt("message", "rag_results", k=k)

@@ -3372,7 +3372,7 @@ def q_rag_pipeline_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["message"])
     )
     return coaching_pipeline(
-        messages, knowledge, reg, search_method="numpy", exact_retrieval=True
+        messages, knowledge, reg, exact_retrieval=True
     ).orderBy("message")
 
 
@@ -12733,42 +12733,33 @@ def q_silhouette_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = _refined_seeds(spark, emb, CLUSTER_K)
     # GEMM top-2 (optimization guide §4.2): the old broadcast cross join
     # paid an interpreted 3-fold cosine per (vec, centroid) pair plus one
-    # exchange for the per-vec top-2 aggregate; one float64 GEMM per Arrow
-    # batch against the k-row centroid model computes every sp and the
+    # exchange for the per-vec top-2 aggregate; the shared top-k kernel
+    # per Arrow batch against the k-row centroid model computes the
     # (sp DESC, cid ASC) top-2 map-side — no Exchange before the
-    # per-cluster rollup. sp = round(cos·1e6) half-away (SQL round), ties
-    # by first-max over the cid-ASC centroid axis — identical to the old
-    # min-struct ordering.
+    # per-cluster rollup. sp = round(cos, 6)·1e6 half-away (SQL round),
+    # ties by cid over the cid-ASC-presorted centroid axis — identical to
+    # the old min-struct ordering.
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
-    cent_rows = sorted(seeds.collect(), key=lambda r: r["centroid_id"])
-    cmat = np.asarray([r["centroid"] for r in cent_rows], dtype=np.float64)
-    cnorm = np.sqrt(np.einsum("ij,ij->i", cmat, cmat))
-    cnorm[cnorm == 0] = 1.0
-    cids = np.asarray([r["centroid_id"] for r in cent_rows], dtype=np.int64)
-    bc = spark.sparkContext.broadcast((cids, cmat, cnorm))
+    from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
+        _gemm_topk,
+        _index_matrix,
+    )
+
+    cmat, pay = _index_matrix(seeds.collect(), ["centroid_id"], "centroid")
+    bc = spark.sparkContext.broadcast((pay["centroid_id"].astype(np.int32), cmat))
 
     def _top2(batches):
-        cids_l, cmat_l, cnorm_l = bc.value
+        cids_l, cmat_l = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             x = np.asarray(list(pdf["embedding"]), dtype=np.float64)
-            xn = np.sqrt(np.einsum("ij,ij->i", x, x))
-            xn[xn == 0] = 1.0
-            cos = (x @ cmat_l.T) / (xn[:, None] * cnorm_l[None, :])
-            sp = (np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5)).astype(
-                np.int64
-            )
-            top = np.argsort(-sp, axis=1, kind="stable")[:, :2]
-            rows = np.arange(len(sp))
+            top, cos6 = _gemm_topk(x, cmat_l, 2, round_sim=6)
+            sp = np.rint(cos6 * 1e6).astype(np.int64)
             yield pd.DataFrame(
-                {
-                    "cluster_id": cids_l[top[:, 0]].astype("int32"),
-                    "s1p": sp[rows, top[:, 0]],
-                    "s2p": sp[rows, top[:, 1]],
-                }
+                {"cluster_id": cids_l[top[:, 0]], "s1p": sp[:, 0], "s2p": sp[:, 1]}
             )
 
     top2 = emb.select("embedding").mapInPandas(
@@ -13762,7 +13753,9 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
+        _norms,
         _round_half_away,
+        _similarity,
     )
 
     lam, lam1 = MMR_LAMBDA_X10, 10 - MMR_LAMBDA_X10
@@ -13772,14 +13765,8 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         sim_ppm = pdf["sim_ppm"].to_numpy(dtype=np.int64)
         mat = np.asarray(list(pdf["embedding"]), dtype=np.float64)
-        nrm = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-        nrm[nrm == 0] = 1.0
-        cos6 = _round_half_away(
-            (mat @ mat.T) / (nrm[:, None] * nrm[None, :]), 6
-        )
-        dd_ppm = (np.sign(cos6) * np.floor(np.abs(cos6) * 1e6 + 0.5)).astype(
-            np.int64
-        )
+        cos6 = _round_half_away(_similarity(mat, mat, _norms(mat)), 6)
+        dd_ppm = np.rint(cos6 * 1e6).astype(np.int64)
         n = len(ids)
         maxsel = np.full(n, -1_000_000, dtype=np.int64)
         unsel = np.ones(n, dtype=bool)
@@ -14254,42 +14241,31 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     # GEMM form (optimization guide §4.2): the eval set is the broadcast
-    # model side by construction, so one float64 GEMM per Arrow batch of
-    # the streaming train side computes every pair sim AND the per-row
-    # (sim DESC, eval_id ASC) argmax map-side — no pair rows in the JVM,
-    # no per-vec window exchange. Row-wise first-max over the
-    # eval_id-ASC-sorted eval axis = the rk=1 pick; the τ filter commutes
-    # with the argmax (a row survives iff its max survives).
+    # model side by construction, so the shared top-k kernel at k=1 per
+    # Arrow batch of the streaming train side computes every pair sim AND
+    # the per-row (sim DESC, eval_id ASC) pick map-side — no pair rows in
+    # the JVM, no per-vec window exchange. The τ filter commutes with the
+    # pick (a row survives iff its max survives).
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
-        _round_half_away,
+        _gemm_topk,
+        _index_matrix,
     )
 
-    ev_rows = sorted(ev.collect(), key=lambda r: r["eval_id"])
-    eids = np.asarray([r["eval_id"] for r in ev_rows], dtype=np.int64)
-    emat = np.asarray([r["__ev"] for r in ev_rows], dtype=np.float64)
-    enorm = np.sqrt(np.einsum("ij,ij->i", emat, emat))
-    enorm[enorm == 0] = 1.0
-    bc = spark.sparkContext.broadcast((eids, emat, enorm))
+    emat, pay = _index_matrix(ev.collect(), ["eval_id"], "__ev")
+    bc = spark.sparkContext.broadcast((pay["eval_id"].astype(np.int64), emat))
 
     def _flag(batches):
-        eids_l, emat_l, enorm_l = bc.value
+        eids_l, emat_l = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             x = np.asarray(list(pdf["embedding"]), dtype=np.float64)
-            xn = np.sqrt(np.einsum("ij,ij->i", x, x))
-            xn[xn == 0] = 1.0
-            cos6 = _round_half_away(
-                (x @ emat_l.T) / (xn[:, None] * enorm_l[None, :]), 6
-            )
-            ppm = (np.sign(cos6) * np.floor(np.abs(cos6) * 1e6 + 0.5)).astype(
-                np.int64
-            )
-            best = ppm.argmax(axis=1)  # first max = eval_id-ASC tie-break
-            bp = ppm[np.arange(len(best)), best]
+            top, cos6 = _gemm_topk(x, emat_l, 1, round_sim=6)
+            best = top[:, 0]
+            bp = np.rint(cos6[:, 0] * 1e6).astype(np.int64)
             keep = bp >= SEMDECON_TAU_PPM
             yield pd.DataFrame(
                 {

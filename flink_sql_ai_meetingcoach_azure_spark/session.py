@@ -14,6 +14,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
+#: the directory holding this package: Python workers import it by name (a
+#: UDF pickles package functions by reference), so it goes on their path
+#: instead of relying on the driver's working directory
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "meetingcoach-spark",
@@ -42,6 +47,7 @@ def get_spark(
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
         # timestamp type — read as bigint nanos and convert (queries._events)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         # many distinct codegen'd plans in one session (bench/correctness
         # suites) exhaust the default JVM code cache, stalling JIT/Janino —

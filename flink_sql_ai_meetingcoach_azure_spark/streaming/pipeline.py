@@ -68,16 +68,13 @@ def streaming_coaching_pipeline(
         "message", "speaker"
     )
     embedded = registry.ml_predict(prospects, "openaiembed", "message", "embedding")
-    # method='numpy' (mapInPandas): window functions are not allowed on
-    # streaming DataFrames, so the SQL top-k path can't run here; the numpy
-    # path is also the lower-latency one per micro-batch.
+    # the search is a map-only mapInPandas, so it is streaming-legal as is
     with_rag = vector_search(
         embedded,
         knowledge_index,
         k=k,
         payload_cols=["document_id", "chunks"],
         output_col="rag_results",
-        method="numpy",
     )
     prompt = assemble_coaching_prompt("message", "rag_results", k=k)
     with_prompt = with_rag.withColumn("__prompt", prompt)
@@ -190,7 +187,6 @@ def staged_coaching_pipeline(
         k=k,
         payload_cols=["document_id", "chunks"],
         output_col="rag_results",
-        method="numpy",
     )
     _sink(with_rag, "messages_prospect_rag_results")
 

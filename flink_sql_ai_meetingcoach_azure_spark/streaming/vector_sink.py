@@ -37,6 +37,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (
+    _nearest_centroids,
+    read_ivf_centroids,
+)
+
 
 class StreamingIvfIngest:
     """``foreachBatch`` sink appending micro-batches to an IVF parquet index.
@@ -73,10 +78,6 @@ class StreamingIvfIngest:
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
-            read_ivf_centroids,
-        )
-
         spark = batch_df.sparkSession
         marker = self._marker(spark, batch_id)
         fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -106,10 +107,7 @@ class StreamingIvfIngest:
 
         @F.pandas_udf("int")
         def _a(s: pd.Series) -> pd.Series:
-            cent = bc.value
-            m = np.asarray(list(s), dtype=np.float32)
-            d = np.linalg.norm(m[:, None, :] - cent[None, :, :], axis=2)
-            return pd.Series(d.argmin(axis=1))
+            return pd.Series(_nearest_centroids(np.asarray(list(s), dtype=np.float32), bc.value))
 
         out = batch_df.withColumn("centroid_id", _a(F.col(self.index_col)))
         if self.signature_dim is not None:

@@ -64,3 +64,20 @@ def test_streaming_bench_teardown_leaves_no_jvm_traces(spark, capfd):
     combined = captured.out + captured.err
     assert "at org.apache.spark" not in combined, combined[-2000:]
     assert "Failed to cancel job group" not in combined, combined[-2000:]
+
+
+def test_correctness_tool_rejects_unknown_entry_names():
+    """A misspelled entry name must fail the run, not be skipped into an
+    ``ALL OK`` over zero checked entries."""
+    import subprocess
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    out = subprocess.run(
+        [sys.executable, "tools/check_correctness.py", "/nonexistent", "tpch_q1",
+         "no_such_entry"],
+        cwd=repo, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 1
+    assert "unknown entries: ['no_such_entry']" in out.stdout
+    assert "ALL OK" not in out.stdout

@@ -268,23 +268,23 @@ def test_vector_search_sql_topk(spark):
     assert got == ["a", "b"]  # ranked by cosine desc
 
 
-def test_vector_search_numpy_agrees_with_sql(spark):
+def test_vector_search_agrees_with_flat_reference(spark):
     q = spark.createDataFrame(
         [("q1", [1.0, 0.0, 0.0]), ("q2", [0.1, 0.9, 0.0])], ["qid", "embedding"]
     )
-    sql_out = {r["qid"]: [s["document_id"] for s in r["search_results"]]
-               for r in vector_search(q, _index(spark), k=3,
-                                      payload_cols=["document_id", "chunks"],
-                                      method="sql").collect()}
-    np_out = {r["qid"]: [s["document_id"] for s in r["search_results"]]
-              for r in vector_search(q, _index(spark), k=3,
-                                     payload_cols=["document_id", "chunks"],
-                                     method="numpy").collect()}
-    assert sql_out == np_out
+    ref = {}
+    for r in sorted(vector_search_topk_flat(q, _index(spark).drop("chunks"), k=3,
+                                            payload_cols=["document_id"]).collect(),
+                    key=lambda r: r["search_rank"]):
+        ref.setdefault(r["qid"], []).append(r["document_id"])
+    got = {r["qid"]: [s["document_id"] for s in r["search_results"]]
+           for r in vector_search(q, _index(spark), k=3,
+                                  payload_cols=["document_id", "chunks"]).collect()}
+    assert got == ref
 
 
 def test_vector_search_broadcast_guard(spark):
-    """The numpy/broadcast paths refuse to driver-collect an index past
+    """The broadcast searches refuse to driver-collect an index past
     max_index_rows, naming the on-disk IVF path in the error; at or under
     the ceiling they run normally."""
     from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (
@@ -295,10 +295,9 @@ def test_vector_search_broadcast_guard(spark):
     q = spark.createDataFrame([("q1", [1.0, 0.0, 0.0])], ["qid", "embedding"])
     idx = _index(spark)  # 4 rows
     with pytest.raises(ValueError, match="vector_search_ivf_parquet"):
-        vector_search(q, idx, k=2, payload_cols=["document_id"],
-                      method="numpy", max_index_rows=3)
+        vector_search(q, idx, k=2, payload_cols=["document_id"], max_index_rows=3)
     ok = vector_search(q, idx, k=2, payload_cols=["document_id"],
-                       method="numpy", max_index_rows=4).head()
+                       max_index_rows=4).head()
     assert len(ok["search_results"]) == 2
 
     msgs = spark.createDataFrame([("hello",)], ["message"])
@@ -311,8 +310,7 @@ def test_vector_search_broadcast_guard(spark):
 def test_vector_search_autoroutes_to_ivf_past_cliff(spark, tmp_path):
     """With fallback_path set, an index past max_index_rows transparently
     takes the partition-pruned on-disk IVF path instead of raising — and at
-    nprobe >= nlist the routed results are identical to the broadcast path
-    (both numpy and sql methods)."""
+    nprobe >= nlist the routed results are identical to the broadcast path."""
     from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (
         build_ivf_index,
         write_ivf_index,
@@ -331,16 +329,14 @@ def test_vector_search_autoroutes_to_ivf_past_cliff(spark, tmp_path):
                 for r in df.collect()}
 
     exact = names(vector_search(q, idx, k=2, payload_cols=["document_id"]))
-    for method in ("numpy", "sql"):
-        routed = vector_search(
-            q, idx, k=2, payload_cols=["document_id"], method=method,
-            max_index_rows=3, fallback_path=path, fallback_nprobe=2,
-        )
-        assert names(routed) == exact
+    routed = vector_search(
+        q, idx, k=2, payload_cols=["document_id"],
+        max_index_rows=3, fallback_path=path, fallback_nprobe=2,
+    )
+    assert names(routed) == exact
     # without a fallback the guard still raises with guidance
     with pytest.raises(ValueError, match="fallback_path"):
-        vector_search(q, idx, k=2, payload_cols=["document_id"],
-                      method="numpy", max_index_rows=3)
+        vector_search(q, idx, k=2, payload_cols=["document_id"], max_index_rows=3)
 
 
 def test_build_ivf_index_refine_iters_full_corpus_refinement(spark):

@@ -14,6 +14,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_sql_ai_meetingcoach_azure_spark.models import default_registry
+from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (
+    vector_search_topk_flat,
+)
 from flink_sql_ai_meetingcoach_azure_spark.plans import (
     build_knowledge_index,
     coaching_pipeline,
@@ -116,16 +119,18 @@ def test_semantic_goldens_on_reference_corpus(spark):
         assert top_docs[0] in acceptable, (message[:50], top_docs)
 
 
-def test_both_search_methods_agree_on_goldens(spark):
+def test_coaching_pipeline_agrees_with_flat_reference_on_goldens(spark):
     reg = default_registry(dim=64)
     index = build_knowledge_index(_corpus(spark), reg).cache()
     chunks = index.select("chunks").limit(5).collect()
     msgs = spark.createDataFrame(
         [(c["chunks"], "prospect") for c in chunks], ["message", "speaker"]
     )
-    a = {r["message"]: r["rag_results_string"]
-         for r in coaching_pipeline(msgs, index, reg, search_method="numpy").collect()}
-    b = {r["message"]: r["rag_results_string"]
-         for r in coaching_pipeline(msgs, index, reg, search_method="sql").collect()}
-    for m in a:
-        assert json.loads(a[m])[0] == json.loads(b[m])[0], m
+    got = {r["message"]: json.loads(r["rag_results_string"])[0]
+           for r in coaching_pipeline(msgs, index, reg).collect()}
+    embedded = reg.ml_predict(msgs, "openaiembed", "message", "embedding")
+    ref = {r["message"]: {"document_id": r["document_id"], "chunks": r["chunks"]}
+           for r in vector_search_topk_flat(
+               embedded, index, k=1, payload_cols=["document_id", "chunks"]
+           ).collect()}
+    assert got == ref

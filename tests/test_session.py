@@ -47,3 +47,36 @@ def test_cluster_scale_conf_applies_to_a_session():
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_workers_import_the_package_from_any_working_directory(tmp_path):
+    """A Python worker unpickling a UDF that calls a package function must
+    import the package even when the Spark application starts outside the
+    repository (workers inherit its working directory, not its sys.path)."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    code = f"""
+import sys
+sys.path.insert(0, {str(repo)!r})
+from flink_sql_ai_meetingcoach_azure_spark import get_spark
+from flink_sql_ai_meetingcoach_azure_spark.models.providers import mock_embedding
+
+def dims(batches):
+    for pdf in batches:
+        yield pdf.assign(d=[len(mock_embedding(str(i), 4)) for i in pdf["id"]])
+
+spark = get_spark("worker-path", master="local[1]")
+print("DIMS", sorted({{r.d for r in spark.range(3).mapInPandas(dims, "id long, d int").collect()}}))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "DIMS [4]" in out.stdout, out.stderr[-3000:]

@@ -181,6 +181,10 @@ def check_entries(spark, sf_dir: str, only=()) -> list[str]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    unknown = [n for n in sys.argv[2:] if n not in QUERIES]
+    if unknown:
+        print(f"unknown entries: {unknown}")
+        return 1
     spark = get_spark("correctness-check")
     failures = check_entries(spark, sf_dir, sys.argv[2:])
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
