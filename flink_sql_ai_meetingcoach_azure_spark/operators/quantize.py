@@ -32,8 +32,10 @@ from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (
     _norms,
     _payload_order,
     _presorted,
+    _read_sidecar,
     _round_half_away,
     _topk,
+    _write_sidecar,
 )
 
 
@@ -381,35 +383,18 @@ def write_ivfpq_index(enc_df: DataFrame, centroids, codebooks, path: str) -> Non
     (via :func:`~.vector_search.write_ivf_index`) + a `_pq_codebooks.json`
     sidecar through the same Hadoop FileSystem API (portable to hdfs/s3a/
     abfs)."""
-    import json  # noqa: PLC0415
-
     from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
         write_ivf_index,
     )
 
     write_ivf_index(enc_df, centroids, path)
-    spark = enc_df.sparkSession
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{path.rstrip('/')}/_pq_codebooks.json"
+    _write_sidecar(
+        enc_df.sparkSession, path, "_pq_codebooks.json", np.asarray(codebooks).tolist()
     )
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    out.write(bytearray(json.dumps(np.asarray(codebooks).tolist()).encode("utf-8")))
-    out.close()
 
 
 def read_pq_codebooks(spark, path: str) -> np.ndarray:
-    import json  # noqa: PLC0415
-
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_pq_codebooks.json")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(jpath)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return np.asarray(json.loads(text), dtype=np.float64)
+    return np.asarray(_read_sidecar(spark, path, "_pq_codebooks.json"), dtype=np.float64)
 
 
 def vector_search_ivfpq_parquet(

@@ -34,6 +34,7 @@ itself is huge, IVF-partitioned parquet with partition pruning on
 
 from __future__ import annotations
 
+import json
 from typing import Callable, Iterator
 
 import numpy as np
@@ -621,9 +622,6 @@ def write_ivf_index(ivf_index_df: DataFrame, centroids: list[list[float]], path:
     without paying a Spark write job for an nlist-row file. The ``_``
     prefix keeps it invisible to ``spark.read.parquet(path)`` (Hadoop
     hidden-path filter)."""
-    import json  # noqa: PLC0415
-
-    spark = ivf_index_df.sparkSession
     # co-locate each cell before the partitioned write: without this every
     # input partition emits a file into every cell directory (partitions ×
     # nlist small files — slower to write and a small-file read penalty on
@@ -636,25 +634,33 @@ def write_ivf_index(ivf_index_df: DataFrame, centroids: list[list[float]], path:
         .partitionBy("centroid_id")
         .parquet(path)
     )
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_centroids.json")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    out.write(bytearray(json.dumps(centroids).encode("utf-8")))
-    out.close()
+    _write_sidecar(ivf_index_df.sparkSession, path, "_centroids.json", centroids)
 
 
 def read_ivf_centroids(spark, path: str) -> list[list[float]]:
-    import json  # noqa: PLC0415
+    return _read_sidecar(spark, path, "_centroids.json")
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_centroids.json")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(jpath)
+
+def _write_sidecar(spark, path: str, name: str, obj) -> None:
+    """``obj`` as JSON in the index file ``<path>/<name>``, written through
+    the Hadoop FileSystem API."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{name}")
+    out = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).create(jpath, True)
     try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        out.write(bytearray(json.dumps(obj).encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _read_sidecar(spark, path: str, name: str):
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{name}")
+    stream = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).open(jpath)
+    try:
+        return json.loads(
+            spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        )
     finally:
         stream.close()
-    return json.loads(text)
 
 
 def ivf_pruned_scan(spark, path: str, cells: list[int]) -> DataFrame:

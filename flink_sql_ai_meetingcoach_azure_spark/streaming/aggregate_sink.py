@@ -13,10 +13,8 @@ LSM state shape as the near-dup dedup and IVF-ingest sinks:
   a parquet log — append-cheap, no rewrite of existing state;
 - reads merge on the fly (``current()``: one groupBy-sum over the log);
   ``compact()`` folds the log back to one row per key offline;
-- replayed batches are no-ops via ``_batches/<id>`` markers (Hadoop FS
-  API — hdfs/s3a/abfs safe), so restart recovery cannot double-count —
-  the write-then-mark pair leaves the same at-most-one-duplicate-batch
-  crash window every non-transactional object-store sink has.
+- each batch commits exactly once, replays and crashes included, through
+  ``maintenance.commit_batch`` under a ``_batches/<id>`` marker.
 
 Only COMBINABLE aggregates (count, sum, min, max — and anything
 derivable from them: mean, integer-cents totals, value ranges) belong
@@ -53,6 +51,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (
+    commit_batch,
+    read_log,
+    replace_log_atomically,
+)
 
 _HLL_M = 1024  # 2^10 buckets; registers are a sparse map per key
 _HLL_R = 51  # 60-bit md5 // 1024 leaves a 50-bit field; rho in [1, 51]
@@ -112,11 +116,11 @@ class StreamingAggregateSink:
         instead. One parquet-footer read, cached per sink instance."""
         if self._schema_checked:
             return
-        try:
-            cols = self.spark.read.parquet(f"{self.state_dir}/log").columns
-        except Exception:  # noqa: BLE001 — no log yet: nothing to match
+        log = read_log(self.spark, f"{self.state_dir}/log")
+        if log is None:  # no log yet: nothing to match
             self._schema_checked = True
             return
+        cols = log.columns
         checks = [
             ("__hll", "distinct_col", self.distinct_col is not None),
             ("__hdr", "quantile_col", self.quantile_col is not None),
@@ -164,13 +168,6 @@ class StreamingAggregateSink:
                     "state dir to change it)"
                 )
         self._schema_checked = True
-
-    # -- replay markers (same contract as StreamingIvfIngest) ----------
-    def _marker(self, batch_id: int):
-        jvm = self.spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(
-            f"{self.state_dir}/_batches/{int(batch_id)}"
-        )
 
     def _hdr_partial(self, df: DataFrame) -> DataFrame:
         """Per-key sparse HDR bucket counts (bucket = octave·SUB + linear
@@ -315,26 +312,22 @@ class StreamingAggregateSink:
         return base.join(regs, self.key_cols, "left")
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        marker = self._marker(batch_id)
-        fs = marker.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if fs.exists(marker):
-            return  # replayed batch: already committed
         self._check_log_schema()
+        writes = []
         if not batch_df.isEmpty():
-            self._partial(batch_df).write.mode("append").parquet(
-                f"{self.state_dir}/log"
-            )
-        fs.create(marker, True).close()
+            writes = [(self._partial(batch_df), f"{self.state_dir}/log", None)]
+        commit_batch(self.spark, f"{self.state_dir}/_batches/{int(batch_id)}", writes)
 
     # -- merge-on-read views -------------------------------------------
-    def _merged(self) -> DataFrame:
-        from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (  # noqa: PLC0415
-            recover_log,
-        )
-
-        recover_log(self.spark, f"{self.state_dir}/log")  # self-heal a crashed compact
+    def _log(self) -> DataFrame:
         self._check_log_schema()
-        log = self.spark.read.parquet(f"{self.state_dir}/log")
+        log = read_log(self.spark, f"{self.state_dir}/log")
+        if log is None:
+            raise FileNotFoundError(f"{self.state_dir}: no batch committed yet")
+        return log
+
+    def _merged(self) -> DataFrame:
+        log = self._log()
         aggs = (
             [F.sum("__n").cast("long").alias("n_rows")]
             + [
@@ -364,11 +357,7 @@ class StreamingAggregateSink:
             )
         if self.exact_distinct_col is not None:
             bmp = (
-                log.select(
-                    *self.key_cols, F.explode("__bmp").alias("__w", "__bits")
-                )
-                .groupBy(*self.key_cols, "__w")
-                .agg(F.bit_or("__bits").alias("__bits"))
+                self._merged_map(log, "__bmp", "__w", "__bits", F.bit_or)
                 .groupBy(*self.key_cols)
                 .agg(
                     F.sum(F.bit_count("__bits")).cast("long").alias(
@@ -387,14 +376,21 @@ class StreamingAggregateSink:
             self._merged_registers(log), self.key_cols, "left"
         ).withColumn("distinct_est", F.coalesce("distinct_est", F.lit(0.0)))
 
+    def _merged_map(self, log: DataFrame, col: str, k: str, v: str, merge) -> DataFrame:
+        """(keys…, k, v): the entries of the sparse map ``col`` over the
+        whole log, one per (key, k), merged by ``merge`` — lossless for
+        each sketch's own merge (max registers, summed bucket counts,
+        or-ed bitmap words)."""
+        return (
+            log.select(*self.key_cols, F.explode(col).alias(k, v))
+            .groupBy(*self.key_cols, k)
+            .agg(merge(v).alias(v))
+        )
+
     def _merged_registers(self, log: DataFrame) -> DataFrame:
         """Register merge (max per bucket — lossless) + the same
         exact-BIGINT harmonic-denominator estimate as q_hll_vocab."""
-        regs = (
-            log.select(*self.key_cols, F.explode("__hll").alias("__bucket", "__rho"))
-            .groupBy(*self.key_cols, "__bucket")
-            .agg(F.max("__rho").alias("__rho"))
-        )
+        regs = self._merged_map(log, "__hll", "__bucket", "__rho", F.max)
         per = regs.groupBy(*self.key_cols).agg(
             F.count(F.lit(1)).alias("__nonzero"),
             F.sum(F.expr(f"shiftleft(1L, {_HLL_R} - __rho)")).alias("__s_nz"),
@@ -428,17 +424,8 @@ class StreamingAggregateSink:
 
         if self.quantile_col is None:
             raise ValueError("current_quantiles() requires quantile_col")
-        from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (  # noqa: PLC0415
-            recover_log,
-        )
-
-        recover_log(self.spark, f"{self.state_dir}/log")
-        log = self.spark.read.parquet(f"{self.state_dir}/log")
-        hist = (
-            log.select(*self.key_cols, F.explode("__hdr").alias("__bucket", "__cnt"))
-            .groupBy(*self.key_cols, "__bucket")
-            .agg(F.sum("__cnt").alias("__cnt"))
-        )
+        log = self._log()
+        hist = self._merged_map(log, "__hdr", "__bucket", "__cnt", F.sum)
         w = Window.partitionBy(*self.key_cols).orderBy("__bucket")
         n = hist.groupBy(*self.key_cols).agg(F.sum("__cnt").alias("__n_vals"))
         cum = hist.withColumn("__cum", F.sum("__cnt").over(w)).join(n, self.key_cols)
@@ -490,13 +477,7 @@ class StreamingAggregateSink:
         the sketch)."""
         if self.kmv_col is None:
             raise ValueError("current_kmv() requires kmv_col")
-        from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (  # noqa: PLC0415
-            recover_log,
-        )
-
-        recover_log(self.spark, f"{self.state_dir}/log")
-        self._check_log_schema()
-        log = self.spark.read.parquet(f"{self.state_dir}/log")
+        log = self._log()
         per = self._merged_kmv_rows(log).groupBy(*self.key_cols).agg(
             F.array_sort(F.collect_list("__h")).alias("kmv_sketch"),
             F.count(F.lit(1)).alias("n_sketch"),
@@ -519,7 +500,9 @@ class StreamingAggregateSink:
         """Fold the log to one partial row per key (same read results,
         O(keys) storage; merged HLL registers fold losslessly). Offline
         maintenance, not on the hot path."""
-        log = self.spark.read.parquet(f"{self.state_dir}/log")
+        log = read_log(self.spark, f"{self.state_dir}/log")
+        if log is None:
+            return
         aggs = (
             [F.sum("__n").cast("long").alias("__n")]
             + [
@@ -534,51 +517,19 @@ class StreamingAggregateSink:
             ]
         )
         merged = log.groupBy(*self.key_cols).agg(*aggs)
-        if self.quantile_col is not None:
-            hdr_folded = (
-                log.select(
-                    *self.key_cols, F.explode("__hdr").alias("__bucket", "__cnt")
+        sketches = [
+            (self.quantile_col, "__hdr", "__bucket", "__cnt", F.sum),
+            (self.distinct_col, "__hll", "__bucket", "__rho", F.max),
+            (self.exact_distinct_col, "__bmp", "__w", "__bits", F.bit_or),
+        ]
+        for on, col, k, v, merge in sketches:
+            if on is not None:
+                folded = (
+                    self._merged_map(log, col, k, v, merge)
+                    .groupBy(*self.key_cols)
+                    .agg(F.map_from_entries(F.collect_list(F.struct(k, v))).alias(col))
                 )
-                .groupBy(*self.key_cols, "__bucket")
-                .agg(F.sum("__cnt").alias("__cnt"))
-                .groupBy(*self.key_cols)
-                .agg(
-                    F.map_from_entries(
-                        F.collect_list(F.struct("__bucket", "__cnt"))
-                    ).alias("__hdr")
-                )
-            )
-            merged = merged.join(hdr_folded, self.key_cols, "left")
-        if self.distinct_col is not None:
-            folded = (
-                log.select(
-                    *self.key_cols, F.explode("__hll").alias("__bucket", "__rho")
-                )
-                .groupBy(*self.key_cols, "__bucket")
-                .agg(F.max("__rho").alias("__rho"))
-                .groupBy(*self.key_cols)
-                .agg(
-                    F.map_from_entries(
-                        F.collect_list(F.struct("__bucket", "__rho"))
-                    ).alias("__hll")
-                )
-            )
-            merged = merged.join(folded, self.key_cols, "left")
-        if self.exact_distinct_col is not None:
-            bmp_folded = (
-                log.select(
-                    *self.key_cols, F.explode("__bmp").alias("__w", "__bits")
-                )
-                .groupBy(*self.key_cols, "__w")
-                .agg(F.bit_or("__bits").alias("__bits"))
-                .groupBy(*self.key_cols)
-                .agg(
-                    F.map_from_entries(
-                        F.collect_list(F.struct("__w", "__bits"))
-                    ).alias("__bmp")
-                )
-            )
-            merged = merged.join(bmp_folded, self.key_cols, "left")
+                merged = merged.join(folded, self.key_cols, "left")
         if self.kmv_col is not None:
             kmv_folded = (
                 self._merged_kmv_rows(log)
@@ -588,10 +539,6 @@ class StreamingAggregateSink:
             merged = merged.join(kmv_folded, self.key_cols, "left")
         # crash-safe write-then-swap (streaming.maintenance): never hold
         # the only copy of the state in memory while truncating the dir
-        from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (  # noqa: PLC0415
-            replace_log_atomically,
-        )
-
         replace_log_atomically(self.spark, f"{self.state_dir}/log", merged)
 
 

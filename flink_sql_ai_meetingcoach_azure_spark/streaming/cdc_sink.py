@@ -19,9 +19,8 @@ near-dup / IVF-ingest sinks:
   included (asserted in tests);
 - ``compact()`` folds the log to one row per key — again KEEPING
   tombstones — without changing any read;
-- replayed batches are no-ops via ``_batches/<id>`` markers (Hadoop FS
-  API), the same at-most-one-duplicate-batch crash window as every
-  non-transactional object-store sink.
+- each batch commits exactly once, replays and crashes included, through
+  ``maintenance.commit_batch`` under a ``_batches/<id>`` marker.
 
 At 100 TB: per batch one key-partitioned window (the operator's inherent
 cost on any engine) + an append of O(active keys per batch) rows; the log
@@ -36,6 +35,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import apply_changes
+from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (
+    commit_batch,
+    read_log,
+    replace_log_atomically,
+)
 
 
 class StreamingUpsertSink:
@@ -58,13 +62,6 @@ class StreamingUpsertSink:
         self.spark = spark
         self.delete_op = delete_op
 
-    # -- replay markers (same contract as StreamingAggregateSink) -------
-    def _marker(self, batch_id: int):
-        jvm = self.spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(
-            f"{self.state_dir}/_batches/{int(batch_id)}"
-        )
-
     def _latest_per_key(self, df: DataFrame) -> DataFrame:
         """Latest change per key by seq — tombstones KEPT (this is
         apply_changes minus the delete filter)."""
@@ -78,27 +75,19 @@ class StreamingUpsertSink:
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        marker = self._marker(batch_id)
-        fs = marker.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if fs.exists(marker):
-            return  # replayed batch: already committed
+        writes = []
         if not batch_df.isEmpty():
-            self._latest_per_key(batch_df).write.mode("append").parquet(
-                f"{self.state_dir}/log"
-            )
-        fs.create(marker, True).close()
+            writes = [(self._latest_per_key(batch_df), f"{self.state_dir}/log", None)]
+        commit_batch(self.spark, f"{self.state_dir}/_batches/{int(batch_id)}", writes)
 
     # -- merge-on-read views -------------------------------------------
     def current(self) -> DataFrame:
         """The maintained upsert view: latest non-deleted row per key —
         equal to batch apply_changes over the union of all ingested
         batches."""
-        from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (  # noqa: PLC0415
-            recover_log,
-        )
-
-        recover_log(self.spark, f"{self.state_dir}/log")  # self-heal a crashed compact
-        log = self.spark.read.parquet(f"{self.state_dir}/log")
+        log = read_log(self.spark, f"{self.state_dir}/log")
+        if log is None:
+            raise FileNotFoundError(f"{self.state_dir}: no batch committed yet")
         return apply_changes(
             log, self.key_cols, self.seq_cols, self.op_col, self.delete_op
         )
@@ -111,11 +100,9 @@ class StreamingUpsertSink:
         dir is swapped out (see streaming.maintenance) — an in-place
         overwrite backed only by a localCheckpoint loses the state if the
         driver dies mid-write."""
-        from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (  # noqa: PLC0415
-            replace_log_atomically,
-        )
-
-        log = self.spark.read.parquet(f"{self.state_dir}/log")
+        log = read_log(self.spark, f"{self.state_dir}/log")
+        if log is None:
+            return
         replace_log_atomically(
             self.spark, f"{self.state_dir}/log", self._latest_per_key(log)
         )

@@ -1,4 +1,9 @@
-"""Crash-safe log compaction shared by the LSM merge-on-read sinks.
+"""Crash-safe batch commit and log compaction shared by the foreachBatch
+sinks.
+
+Every sink commits a micro-batch through :func:`commit_batch` and reads its
+log through :func:`read_log`; ``compact()`` replaces a log through
+:func:`replace_log_atomically`.
 
 The naive compaction — ``folded.localCheckpoint(); folded.write.mode(
 "overwrite").parquet(log)`` — holds the ONLY copy of the state in executor
@@ -24,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 _TMP_SUFFIX = "__compact_tmp"
 _OLD_SUFFIX = "__pre_compact"
+_INFLIGHT = "__inflight_"
 
 
 def _fs_path(spark: SparkSession, p: str):
@@ -50,6 +56,16 @@ def recover_log(spark: SparkSession, log_path: str) -> None:
             fs.delete(old, True)  # crashed after swap: drop the stale copy
 
 
+def read_log(spark: SparkSession, log_path: str) -> DataFrame | None:
+    """The parquet log at ``log_path`` after self-healing an interrupted
+    compaction, or None before the first batch is committed."""
+    recover_log(spark, log_path)
+    fs, log = _fs_path(spark, log_path.rstrip("/"))
+    if not fs.exists(log):
+        return None
+    return spark.read.parquet(log_path)
+
+
 def replace_log_atomically(
     spark: SparkSession, log_path: str, folded: DataFrame
 ) -> None:
@@ -68,3 +84,74 @@ def replace_log_atomically(
     fs.rename(tmp, log)
     if fs.exists(old):
         fs.delete(old, True)
+
+
+def _stage(df: DataFrame, path: str, partition_cols: list[str] | None) -> None:
+    df.write.mode("overwrite").partitionBy(*(partition_cols or [])).parquet(path)
+
+
+def _data_files(fs, root, rel: str = ""):
+    """(path, path relative to ``root``) of every data file under
+    ``root``; ``_SUCCESS`` and hidden checksum files are skipped."""
+    for st in fs.listStatus(root):
+        path = st.getPath()
+        name = path.getName()
+        if name.startswith(("_", ".")):
+            continue
+        if st.isDirectory():
+            yield from _data_files(fs, path, f"{rel}{name}/")
+        else:
+            yield path, f"{rel}{name}"
+
+
+def _move(fs, src, dst) -> None:
+    fs.mkdirs(dst.getParent())  # e.g. a new centroid_id=c partition
+    if not fs.rename(src, dst):
+        raise OSError(f"could not move {src} to {dst}")
+
+
+def commit_batch(
+    spark: SparkSession,
+    marker_path: str,
+    writes: list[tuple[DataFrame, str, list[str] | None]],
+) -> None:
+    """Append each ``(df, path, partition_cols)`` of one micro-batch to its
+    parquet directory exactly once, however often the batch is replayed
+    and wherever a previous attempt crashed. The marker's file name is the
+    batch id; an empty ``writes`` only marks the batch.
+
+    1. Marker present: the batch is a replay — delete leftover staging
+       and return.
+    2. Stage: write each target whose staging is not finished (no
+       ``_SUCCESS``) to the sibling ``<path>__inflight_<id>``. A sibling is
+       invisible to readers of ``<path>`` and to a compaction swapping it.
+    3. Roll forward: move every staged data file to the same relative path
+       under ``<path>``, creating partition directories as needed.
+    4. Create the marker, then delete the staging directories.
+
+    Crash cases, each replaying to the state of a single apply: during (2)
+    the unfinished staging is rewritten — no live directory has changed
+    yet, so the rewrite sees the same state; during (3) the finished
+    staging is not rewritten and only the files not yet moved are moved;
+    between (3) and (4) nothing is left to move, so the replay only marks;
+    after the marker, the replay only deletes the staging."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path  # one class lookup per commit
+    conf = spark._jsc.hadoopConfiguration()
+    marker = hpath(marker_path)
+    fs = marker.getFileSystem(conf)
+    batch = marker_path.rstrip("/").rsplit("/", 1)[-1]
+    targets = []  # (df, partition cols, filesystem, staging dir, target dir)
+    for df, path, cols in writes:
+        dst = hpath(path.rstrip("/"))
+        stage = hpath(f"{path.rstrip('/')}{_INFLIGHT}{batch}")
+        targets.append((df, cols, dst.getFileSystem(conf), stage, dst))
+    if not fs.exists(marker):
+        for df, cols, tfs, stage, _ in targets:
+            if not tfs.exists(hpath(stage, "_SUCCESS")):
+                _stage(df, stage.toString(), cols)
+        for _, _, tfs, stage, dst in targets:
+            for src, rel in _data_files(tfs, stage):
+                _move(tfs, src, hpath(dst, rel))
+        fs.createNewFile(marker)
+    for _, _, tfs, stage, _ in targets:
+        tfs.delete(stage, True)

@@ -18,8 +18,8 @@ Scale shape (this is a ``foreachBatch`` sink, not driver state):
   cheap and idempotent (re-appending a replayed batch cannot change a
   min), and ``compact()`` rewrites the log into one row per bucket when
   the tail grows.  On a cluster the same sink runs against any Hadoop
-  filesystem path.  A per-batch marker short-circuits replays entirely,
-  because the SURVIVOR append (unlike the state log) is not idempotent.
+  filesystem path.  The survivor output and the state append of a batch
+  commit together, exactly once, through ``maintenance.commit_batch``.
 - Everything per batch is distributed: signature computation (one
   combinable groupBy), the state join keyed by the uniform (band, bh)
   key, and the anti-join that emits survivors.  The driver moves no rows.
@@ -36,6 +36,11 @@ from pyspark.sql import DataFrame, functions as F
 from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (
     lsh_band_keys,
     minhash_signatures,
+)
+from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (
+    commit_batch,
+    read_log,
+    replace_log_atomically,
 )
 
 
@@ -69,14 +74,8 @@ class StreamingNearDupDedup:
 
     # -- state ------------------------------------------------------------
     def _read_state(self, spark) -> DataFrame | None:
-        from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (  # noqa: PLC0415
-            recover_log,
-        )
-
-        recover_log(spark, self.state_path)  # self-heal a crashed compact
-        try:
-            log = spark.read.parquet(self.state_path)
-        except Exception:  # noqa: BLE001 — first batch: no state yet
+        log = read_log(spark, self.state_path)
+        if log is None:
             return None
         return log.groupBy("band", "bh").agg(F.min("min_id").alias("min_id"))
 
@@ -86,19 +85,9 @@ class StreamingNearDupDedup:
         merged = self._read_state(spark)
         if merged is None:
             return
-        from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (  # noqa: PLC0415
-            replace_log_atomically,
-        )
-
         # crash-safe write-then-swap: a failure mid-compaction leaves the
         # full pre-compaction log recoverable (streaming.maintenance)
         replace_log_atomically(spark, self.state_path, merged)
-
-    def _marker(self, spark, batch_id: int):
-        jvm = spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(
-            f"{self.state_path.rstrip('/')}_batches/{int(batch_id)}"
-        )
 
     # -- signature -> band keys (overridden by the image sibling) ----------
     def _band_keys(self, batch_df: DataFrame) -> DataFrame:
@@ -153,17 +142,12 @@ class StreamingNearDupDedup:
     # -- per micro-batch ---------------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        idc = self.id_col
-        # batch marker (same discipline as StreamingIvfIngest): the state
-        # log is replay-idempotent by construction (min/distinct-merge),
-        # but the SURVIVOR append is not — a replayed batch would
-        # duplicate output rows without this
-        marker = self._marker(spark, batch_id)
-        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(marker):
-            return
+        # the state log is replay-idempotent by construction (min/distinct-
+        # merge), but the SURVIVOR append is not: both commit under one
+        # marker, outside the state directory that compaction swaps
+        marker = f"{self.state_path.rstrip('/')}_batches/{int(batch_id)}"
         if batch_df.isEmpty():
-            fs.create(marker, True).close()
+            commit_batch(spark, marker, [])
             return
         keys = self._band_keys(batch_df)
         # one small materialization: keys feed the dup decision AND the
@@ -171,12 +155,14 @@ class StreamingNearDupDedup:
         keys = keys.localCheckpoint()
 
         dups, state_append = self._decide(spark, keys)
-        admitted = batch_df.join(dups, idc, "left_anti")
-        admitted.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
-            "append"
-        ).parquet(self.output_path)
-        state_append.write.mode("append").parquet(self.state_path)
-        fs.create(marker, True).close()
+        admitted = batch_df.join(dups, self.id_col, "left_anti").withColumn(
+            "batch_id", F.lit(int(batch_id))
+        )
+        commit_batch(
+            spark,
+            marker,
+            [(admitted, self.output_path, None), (state_append, self.state_path, None)],
+        )
 
 
 class StreamingSignatureNearDup(StreamingNearDupDedup):
@@ -229,17 +215,9 @@ class StreamingSignatureNearDup(StreamingNearDupDedup):
         ).select(self.id_col, "bb.band", "bb.bh", "sig0", "sig1")
 
     def _read_state(self, spark) -> DataFrame | None:
-        from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (  # noqa: PLC0415
-            recover_log,
-        )
-
-        recover_log(spark, self.state_path)
-        try:
-            log = spark.read.parquet(self.state_path)
-        except Exception:  # noqa: BLE001 — first batch: no state yet
-            return None
+        log = read_log(spark, self.state_path)
         # distinct-merge: replayed appends repeat rows, never change them
-        return log.distinct()
+        return None if log is None else log.distinct()
 
     def _decide(self, spark, keys: DataFrame) -> tuple[DataFrame, DataFrame]:
         idc = self.id_col

@@ -15,12 +15,8 @@ Scale shape:
   ``centroid_id`` so each cell receives ONE new file per batch (without it
   every task writes a sliver into every cell directory — the small-file
   spiral).  Nothing is collected.
-- Idempotent replay: a ``_batches/<epoch id>`` marker (Hadoop FS API, so
-  hdfs/s3a/abfs work) is written AFTER the append commits; a replayed
-  batch whose marker exists is skipped.  The write-then-mark pair leaves
-  an at-most-one-duplicate-batch window on a crash between the two — the
-  same contract as any non-transactional object-store sink; pair with a
-  compaction that dedups on a key column when exactly-once matters.
+- Exactly-once under replay and crashes: each batch commits through
+  ``maintenance.commit_batch`` under a ``_batches/<epoch id>`` marker.
 - Centroids are FROZEN at ingest time (classic IVF ingest): drift is
   handled by periodic offline re-clustering, not per-batch (re-assigning
   old vectors would rewrite the whole index — the documented tradeoff).
@@ -41,6 +37,7 @@ from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (
     _nearest_centroids,
     read_ivf_centroids,
 )
+from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import commit_batch
 
 
 class StreamingIvfIngest:
@@ -71,31 +68,16 @@ class StreamingIvfIngest:
         self._centroids = None
         self._bc = None  # broadcast once, reused by every micro-batch
 
-    def _marker(self, spark, batch_id: int):
-        jvm = spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(
-            f"{self.index_path.rstrip('/')}/_batches/{int(batch_id)}"
-        )
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        marker = self._marker(spark, batch_id)
-        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(marker):
-            return  # replayed batch: already committed
+        marker = f"{self.index_path.rstrip('/')}/_batches/{int(batch_id)}"
         if batch_df.isEmpty():
-            fs.create(marker, True).close()
+            commit_batch(spark, marker, [])
             return
         if self._centroids is None:
             self._centroids = read_ivf_centroids(spark, self.index_path)
-        assigned = self._assign(batch_df)
-        (
-            assigned.repartition("centroid_id")
-            .write.mode("append")
-            .partitionBy("centroid_id")
-            .parquet(self.index_path)
-        )
-        fs.create(marker, True).close()
+        assigned = self._assign(batch_df).repartition("centroid_id")
+        commit_batch(spark, marker, [(assigned, self.index_path, ["centroid_id"])])
 
     def _assign(self, batch_df: DataFrame) -> DataFrame:
         spark = batch_df.sparkSession

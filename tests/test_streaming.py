@@ -8,6 +8,7 @@ import datetime as dt
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1321,6 +1322,210 @@ def test_compaction_crash_recovery_write_then_swap(spark, tmp_path):
     _shutil.move(f"{state}/log", f"{state}/log__pre_compact")
     got = sink.current().collect()
     assert [(r.k, r.val) for r in got] == [("a", 10)]
+
+    # ...and so does compact() of both LSM sinks
+    from flink_sql_ai_meetingcoach_azure_spark.streaming.aggregate_sink import (
+        StreamingAggregateSink,
+    )
+
+    _shutil.move(f"{state}/log", f"{state}/log__pre_compact")
+    sink.compact()
+    assert [(r.k, r.val) for r in sink.current().collect()] == [("a", 10)]
+    assert not _os.path.exists(f"{state}/log__pre_compact")
+
+    agg_state = str(tmp_path / "agg_state")
+    agg = StreamingAggregateSink(agg_state, ["k"], ["v"], spark)
+    agg(spark.createDataFrame([("a", 1), ("a", 2)], "k string, v long"), 0)
+    _shutil.move(f"{agg_state}/log", f"{agg_state}/log__pre_compact")
+    agg.compact()
+    assert [(r.k, r.n_rows, r.sum_v) for r in agg.current().collect()] == [
+        ("a", 2, 3)
+    ]
+    assert not _os.path.exists(f"{agg_state}/log__pre_compact")
+
+
+# ---- one replay-safe batch commit (streaming.maintenance.commit_batch) ----
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_after_first_call(monkeypatch, name):
+    """Make ``maintenance.<name>`` do its work once, then raise — the
+    process dies right after that step of ``commit_batch``."""
+    from flink_sql_ai_meetingcoach_azure_spark.streaming import maintenance
+
+    real = getattr(maintenance, name)
+
+    def crash(*args, **kwargs):
+        real(*args, **kwargs)
+        raise _Crash(name)
+
+    monkeypatch.setattr(maintenance, name, crash)
+
+
+def _commit_case(spark, kind, root, sf_dir):
+    """(sink factory, two batches, the batch markers' directory, the
+    parquet directories the sink appends to) for one foreachBatch sink."""
+    if kind == "aggregate":
+        from flink_sql_ai_meetingcoach_azure_spark.streaming.aggregate_sink import (
+            StreamingAggregateSink,
+        )
+
+        schema = "k string, v long"
+        batches = [[("a", 1), ("a", 2)], [("a", 5), ("b", 7)]]
+        return (
+            lambda: StreamingAggregateSink(f"{root}/agg", ["k"], ["v"], spark),
+            [spark.createDataFrame(b, schema) for b in batches],
+            f"{root}/agg/_batches",
+            [f"{root}/agg/log"],
+        )
+    if kind == "upsert":
+        from flink_sql_ai_meetingcoach_azure_spark.streaming.cdc_sink import (
+            StreamingUpsertSink,
+        )
+
+        schema = "k string, seq long, op string, val long"
+        batches = [
+            [("a", 1, "U", 10), ("a", 2, "U", 11), ("b", 1, "U", 3)],
+            [("b", 2, "D", 0), ("c", 1, "U", 4)],
+        ]
+        return (
+            lambda: StreamingUpsertSink(f"{root}/cdc", ["k"], ["seq"], "op", spark),
+            [spark.createDataFrame(b, schema) for b in batches],
+            f"{root}/cdc/_batches",
+            [f"{root}/cdc/log"],
+        )
+    if kind == "neardup":
+        from flink_sql_ai_meetingcoach_azure_spark.streaming.neardup import (
+            StreamingNearDupDedup,
+        )
+
+        return (
+            lambda: StreamingNearDupDedup(f"{root}/nd_state", f"{root}/nd_out"),
+            [
+                spark.createDataFrame(b, ["doc_id", "text"])
+                for b in (_DOCS[:3], _DOCS[3:])
+            ],
+            f"{root}/nd_state_batches",
+            [f"{root}/nd_out", f"{root}/nd_state"],
+        )
+    from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (
+        build_ivf_index,
+        write_ivf_index,
+    )
+    from flink_sql_ai_meetingcoach_azure_spark.streaming.vector_sink import (
+        StreamingIvfIngest,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
+    write_ivf_index(
+        *build_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), nlist=4),
+        f"{root}/ivf",
+    )
+    return (
+        lambda: StreamingIvfIngest(f"{root}/ivf"),
+        [emb.filter(F.col("vec_id") % 4 == r) for r in (1, 3)],
+        f"{root}/ivf/_batches",
+        [f"{root}/ivf"],
+    )
+
+
+def _log_rows(spark, path):
+    return sorted(
+        tuple(r) for r in spark.read.parquet(path).drop("embedding").collect()
+    )
+
+
+@pytest.mark.parametrize("crash", ["staged_one", "moved_first", "appended_unmarked"])
+@pytest.mark.parametrize("kind", ["aggregate", "upsert", "neardup", "ivf"])
+def test_sink_crash_then_replay_equals_single_apply(
+    spark, sf_dir, tmp_path, monkeypatch, kind, crash
+):
+    """Exactly-once survives a crash anywhere in a sink's batch commit:
+    after the crash the restarted sink replays the same batch id, and
+    every directory the sink appends to (aggregate partials, upsert log,
+    near-dup survivors AND state, IVF index) holds the rows of ONE clean
+    apply — no doubled n/sum, no duplicated survivor or index rows, no
+    staging left behind.
+
+    ``appended_unmarked`` is the crash between the last data append and
+    the marker. It is injected without any hook into the commit routine
+    (a plain file sits where the marker directory goes, so creating the
+    marker fails), so it reproduces the same crash on a sink that appends
+    straight to its log and only then marks the batch."""
+    import glob as _glob
+
+    from py4j.protocol import Py4JJavaError
+
+    make_ref, ref_batches, _, ref_targets = _commit_case(
+        spark, kind, str(tmp_path / "ref"), sf_dir
+    )
+    make_ref()(ref_batches[0], 0)
+    want = [_log_rows(spark, p) for p in ref_targets]
+
+    root = str(tmp_path / "crash")
+    make_sink, batches, marker_dir, targets = _commit_case(spark, kind, root, sf_dir)
+
+    if crash == "appended_unmarked":
+        os.makedirs(os.path.dirname(marker_dir), exist_ok=True)
+        open(marker_dir, "w").close()
+        with pytest.raises(Py4JJavaError):
+            make_sink()(batches[0], 0)
+        os.remove(marker_dir)
+    else:
+        step = {"staged_one": "_stage", "moved_first": "_move"}[crash]
+        _crash_after_first_call(monkeypatch, step)
+        with pytest.raises(_Crash):
+            make_sink()(batches[0], 0)
+        monkeypatch.undo()
+
+    make_sink()(batches[0], 0)  # restarted query replays the batch
+    assert [_log_rows(spark, p) for p in targets] == want
+    assert _glob.glob(f"{root}/**/*__inflight_*", recursive=True) == []
+    assert os.path.exists(f"{marker_dir}/0")
+
+
+@pytest.mark.parametrize("kind", ["neardup", "ivf"])
+def test_replayed_commit_reads_the_same_through_spark_and_pyarrow(
+    spark, sf_dir, tmp_path, monkeypatch, kind
+):
+    """The files a batch commit moves into place are plain parquet parts:
+    after a clean commit and after a crash + replay, the near-dup output
+    and state and the partitioned IVF index read the same rows through
+    ``spark.read.parquet``, ``pyarrow.parquet.read_table`` and a recursive
+    ``*.parquet`` glob, and no staging directory is left."""
+    import glob as _glob
+
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path)
+    make_sink, batches, _, targets = _commit_case(spark, kind, root, sf_dir)
+    make_sink()(batches[0], 0)
+    assert _glob.glob(f"{root}/**/*__inflight_*", recursive=True) == []
+
+    _crash_after_first_call(monkeypatch, "_move")
+    with pytest.raises(_Crash):
+        make_sink()(batches[1], 1)
+    monkeypatch.undo()
+    make_sink()(batches[1], 1)
+
+    assert _glob.glob(f"{root}/**/*__inflight_*", recursive=True) == []
+    id_col = {"nd_out": "doc_id", "nd_state": "min_id", "ivf": "vec_id"}
+    for path in targets:
+        col = id_col[os.path.basename(path)]
+        via_spark = sorted(r[0] for r in spark.read.parquet(path).select(col).collect())
+        via_arrow = sorted(pq.read_table(path, columns=[col]).column(col).to_pylist())
+        files = _glob.glob(f"{path}/**/*.parquet", recursive=True)
+        assert via_arrow == via_spark
+        assert sum(pq.ParquetFile(f).metadata.num_rows for f in files) == len(via_spark)
+    if kind == "ivf":
+        ids = [
+            r.vec_id
+            for r in spark.read.parquet(targets[0]).filter("vec_id % 2 = 1").collect()
+        ]
+        assert sorted(ids) == sorted(r.vec_id for b in batches for r in b.collect())
 
 
 def test_streaming_watermark_admits_before_and_drops_after_boundary(spark, tmp_path):
