@@ -4,6 +4,11 @@ Local-mode testing runs on ``local[N]``; the configuration is chosen so the
 same logical plans scale to a real multi-executor cluster: AQE on (runtime
 coalesce + skew-join handling), Arrow enabled for the pandas-UDF inference
 path, UTC session timezone so timestamp semantics match the DuckDB oracle.
+
+Python workers fork from :mod:`.worker_daemon`: stock workers re-read the
+central directory of ``pyspark.zip`` and the py4j zip 16 times before every
+task (140-260 ms on CPython 3.11.7, 4 vCPUs); that daemon's workers re-read
+an archive only after it changed (0.2 ms per task).
 """
 
 from __future__ import annotations
@@ -48,6 +53,8 @@ def get_spark(
         # timestamp type — read as bigint nanos and convert (queries._events)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
+        .config("spark.python.daemon.module",
+                "flink_sql_ai_meetingcoach_azure_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         # many distinct codegen'd plans in one session (bench/correctness
         # suites) exhaust the default JVM code cache, stalling JIT/Janino —

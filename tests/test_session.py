@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from flink_sql_ai_meetingcoach_azure_spark.session import cluster_scale_conf
 
 
@@ -80,3 +82,91 @@ spark.stop()
         capture_output=True, text=True, timeout=300,
     )
     assert "DIMS [4]" in out.stdout, out.stderr[-3000:]
+
+
+def test_python_tasks_do_not_reread_unchanged_zip_archives(spark):
+    """Workers start from the engine's daemon: ``importlib.invalidate_caches``
+    (called by ``pyspark.worker`` before every task) re-reads no central
+    directory of an unchanged ``pyspark.zip`` or py4j zip."""
+
+    def rereads(batches):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        read, calls = zipimport._read_directory, []
+
+        def counting(archive):
+            calls.append(archive)
+            return read(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"n": [len(calls)]})
+
+    rows = spark.range(1, numPartitions=1).mapInPandas(rereads, "n int").collect()
+    assert [r.n for r in rows] == [0]
+
+
+def test_stat_checked_zip_cache_rereads_only_a_changed_archive(tmp_path):
+    """An unchanged archive keeps its directory object across
+    ``importlib.invalidate_caches()``; a module appended to the archive in
+    place is importable after the next one."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from flink_sql_ai_meetingcoach_azure_spark.worker_daemon import (
+        invalidate_if_changed,
+    )
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipcache_first.py", "X = 1\n")
+    stock = zipimport.zipimporter.invalidate_caches
+    zipimport.zipimporter.invalidate_caches = invalidate_if_changed
+    sys.path.insert(0, archive)
+    try:
+        assert importlib.import_module("zipcache_first").X == 1
+        importer = sys.path_importer_cache[archive]
+        importlib.invalidate_caches()
+        files = importer._files
+        importlib.invalidate_caches()
+        assert importer._files is files
+        with zipfile.ZipFile(archive, "a") as z:
+            z.writestr("zipcache_second.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert importlib.import_module("zipcache_second").Y == 2
+    finally:
+        zipimport.zipimporter.invalidate_caches = stock
+        sys.path.remove(archive)
+        sys.path_importer_cache.pop(archive, None)
+        for name in ("zipcache_first", "zipcache_second"):
+            sys.modules.pop(name, None)
+
+
+def test_a_failing_udf_surfaces_and_the_next_job_runs(spark):
+    """A UDF error under the engine's daemon reaches the driver as a
+    ``PythonException``, and the daemon serves the next job's workers."""
+    from pyspark.errors import PythonException
+
+    def boom(batches):
+        for _ in batches:
+            raise ValueError("boom")
+        yield from ()
+
+    def ok(batches):
+        yield from batches
+
+    with pytest.raises(PythonException, match="boom"):
+        spark.range(4, numPartitions=2).mapInPandas(boom, "id long").collect()
+    rows = spark.range(4, numPartitions=2).mapInPandas(ok, "id long").collect()
+    assert sorted(r.id for r in rows) == [0, 1, 2, 3]
