@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from flink_sql_ai_meetingcoach_azure_spark.models.registry import ModelRegistry
-from flink_sql_ai_meetingcoach_azure_spark.sqlapi import register_engine_sql
+from flink_sql_ai_meetingcoach_azure_spark.sqlapi import register_engine_sql, register_model_sql
 
 __all__ = [
     "FlinkStatementSession",
@@ -592,7 +592,12 @@ class FlinkStatementSession:
         (Confluent Flink's table↔topic identity), Flink ``scan.startup.mode``
         → ``startingOffsets``, consumer isolation level passed through as a
         ``kafka.``-prefixed option. This is the seam between the DDL catalog
-        and the streaming pipeline when a real broker exists."""
+        and the continuous chain when a real broker exists::
+
+            stream = open_message_stream(spark, sess.source_config(
+                "messages_conversation", "broker:9092", registry=schema_registry))
+            run_reference_pipeline_continuous(spark, knowledge_df, stream, out_root)
+        """
         spec = self.tables[name]
         if spec.connector != "kafka":
             raise ValueError(f"table {name!r} uses connector {spec.connector!r}, not kafka")
@@ -610,33 +615,6 @@ class FlinkStatementSession:
             cfg["registry"] = registry
         cfg.update(overrides)
         return cfg
-
-    def start_streaming_pipeline(
-        self,
-        source,
-        knowledge_index: DataFrame,
-        out_root: str,
-        k: int = 3,
-        **source_kwargs,
-    ):
-        """Run the script's CTAS chain CONTINUOUSLY — the reference's actual
-        execution model (each CTAS is an always-on Flink job). Stages come
-        from streaming/pipeline.py::staged_coaching_pipeline (one
-        materialized dir per stage, mirroring the per-stage topics); models
-        come from this session's CREATE MODEL registry. ``source`` is a
-        table name declared Kafka-backed via CREATE TABLE (resolved through
-        :meth:`source_config`; pass ``bootstrap_servers=...``), an
-        ``open_message_stream`` config dict, or a streaming DataFrame.
-        Returns the StreamingQuery handles."""
-        from flink_sql_ai_meetingcoach_azure_spark.streaming.pipeline import (  # noqa: PLC0415
-            staged_coaching_pipeline,
-        )
-
-        if isinstance(source, str):
-            source = self.source_config(source, **source_kwargs)
-        return staged_coaching_pipeline(
-            self.spark, source, knowledge_index, self.registry, out_root, k=k
-        )
 
     # -- execution ----------------------------------------------------------
 
@@ -720,10 +698,10 @@ class FlinkStatementSession:
         self.models[name] = ModelSpec(
             name, input_schema, out_field.name, out_field.dataType, options
         )
-        # re-register the SQL functions: spark.udf.register pickles the
+        # re-register the model functions: spark.udf.register pickles the
         # registry SNAPSHOT into the Python-worker closure, so models added
         # after registration would be missing worker-side otherwise
-        register_engine_sql(self.spark, self.registry)
+        register_model_sql(self.spark, self.registry)
 
     def _create_table(self, stmt: str, raw: str) -> DataFrame | None:
         m = re.match(r"CREATE\s+TABLE\s+(\w+)\s*(.)", stmt, re.I | re.S)
@@ -862,9 +840,11 @@ class FlinkStatementSession:
         RESTARTABLE: calling this again with the same ``out_root`` (a new
         process, or after stopping the handles) resumes every stage from its
         checkpoint — already-committed source files are not reprocessed, so
-        stage topics stay exactly-once across restarts; the Top-N view's
-        in-memory buffer is re-seeded from its materialized source topic so
-        pre-restart history survives.
+        stage topics stay exactly-once across restarts. The Top-N view keeps
+        its pre-restart history whatever its parent (a stage topic or the
+        source stream): its sink logs the ≤ n buffered rows and the batch id
+        inside the view's checkpoint after every batch, and re-seeds from
+        that log on start.
 
         Returns the started StreamingQuery handles; callers stop them or
         ``processAllAvailable()`` in tests.
@@ -955,27 +935,14 @@ class FlinkStatementSession:
             return None
         if ts_col not in sink_input.columns:
             return None  # can't maintain latest-n without the order column
+        ckpt = f"{root}/_ckpt/__view_{name}"
         sink = RecentHistorySink(
             n=int(m.group(5)), ts_col=ts_col, view_name=name, spark=self.spark,
+            state_path=f"{ckpt}/view_buffer",
         )
-        # RESTART: the streaming source resumes from its checkpoint, so
-        # pre-restart rows never re-arrive — seed the (in-memory) bounded
-        # buffer from the materialized source topic so the view keeps its
-        # history across restarts (the reference's view is a continuous
-        # query over the full topic, not just post-restart records); rows
-        # committed after the sink's last checkpoint arrive twice (seed +
-        # replay) — the sink trims the seeded copies at the first replayed
-        # batch's min timestamp (RecentHistorySink.seed)
-        try:
-            sink.seed(self.spark.sql(
-                f"SELECT {outer_cols} FROM "
-                f"(SELECT {inner_cols} FROM parquet.`{root}/{src}`) __topn_seed"
-            ))
-        except Exception:  # noqa: BLE001 — first start: no topic yet
-            pass
         return (
             sink_input.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{root}/_ckpt/__view_{name}")
+            .option("checkpointLocation", ckpt)
             .outputMode("append")
             .start()
         )

@@ -15,8 +15,9 @@ each — terraform/generate_personalized_commands.sh:347-433):
 
 Here stages a–d fuse into a single narrow plan (filter → embed UDF →
 broadcast vector search → prompt concat → generate UDF): shuffle-free except
-the per-query top-k, which is broadcast-side (SURVEY §4.3.4). The streaming
-variant with per-stage materialization lives in streaming/pipeline.py.
+the per-query top-k, which is broadcast-side (SURVEY §4.3.4). The continuous
+chain, one standing query and topic per stage, runs the reference's own
+statements (``ddl.run_reference_pipeline_continuous``).
 """
 
 from __future__ import annotations

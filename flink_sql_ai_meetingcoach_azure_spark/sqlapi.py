@@ -18,8 +18,9 @@ Reference statement shapes covered (terraform/generate_personalized_commands.sh)
 
 Model dispatch: Flink passes the model name as a SQL literal; here the
 registered functions capture the :class:`ModelRegistry` and dispatch on the
-first argument, so new ``CREATE MODEL`` equivalents (``registry.register_*``)
-are callable from SQL with no re-registration.
+first argument. Registration pickles the registry as it is then, so a model
+added later (``registry.register_*``) is callable from SQL after
+:func:`register_model_sql` runs again, as ``CREATE MODEL`` does.
 """
 
 from __future__ import annotations
@@ -53,9 +54,16 @@ def register_engine_sql(spark: SparkSession, registry: ModelRegistry) -> None:
         )
 
     spark.udf.register("ml_character_text_splitter", ml_character_text_splitter)
+    register_model_sql(spark, registry)
+    register_sketch_sql(spark)
 
-    # model-dispatching inference functions: Arrow-batched, grouped by model
-    # name within each batch so providers still see amortized batches
+
+def register_model_sql(spark: SparkSession, registry: ModelRegistry) -> None:
+    """Register the model-dispatching inference functions ``ml_embed`` and
+    ``ml_generate``: Arrow-batched, grouped by model name within each batch
+    so providers still see amortized batches. Registration pickles
+    ``registry`` as it is now, so call this again after adding a model."""
+
     @F.pandas_udf(T.ArrayType(T.FloatType()))
     def ml_embed(model: pd.Series, text: pd.Series) -> pd.Series:
         out = pd.Series([None] * len(text), dtype=object)
@@ -81,7 +89,6 @@ def register_engine_sql(spark: SparkSession, registry: ModelRegistry) -> None:
         return out
 
     spark.udf.register("ml_generate", ml_generate.asNondeterministic())
-    register_sketch_sql(spark)
 
 
 def register_sketch_sql(spark: SparkSession) -> None:

@@ -1,6 +1,5 @@
 from flink_sql_ai_meetingcoach_azure_spark.streaming.pipeline import (  # noqa: F401
     dedup_stream,
-    streaming_coaching_pipeline,
     RecentHistorySink,
 )
 from flink_sql_ai_meetingcoach_azure_spark.streaming.aggregate_sink import (  # noqa: F401

@@ -1,11 +1,11 @@
-"""Structured Streaming layer (SURVEY.md §2.10, §3.2 streaming variant).
+"""Structured Streaming operators (SURVEY.md §2.10).
 
-Maps the reference's continuous-query semantics:
+The reference's continuous CTAS chain (one always-on statement and one Kafka
+topic per stage, generate_personalized_commands.sh:347-433) runs through
+``ddl.FlinkStatementSession.start_continuous``: one standing query and one
+parquet topic per statement. This module holds the streaming operators that
+chain and other callers compose:
 
-- Kafka topic per stage → one streaming DataFrame per stage; optional
-  per-stage materialization (``materialize_intermediates``) mirrors the
-  reference's intermediate topics (generate_personalized_commands.sh:568-576)
-  for inspectability.
 - at-least-once + content dedup (md5 + 300 s TTL dict,
   app/utils/kafka_utils.py:209-249) → ``withWatermark`` +
   ``dropDuplicates`` on the content hash (T4). Spark checkpointing already
@@ -23,9 +23,12 @@ import threading
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_sql_ai_meetingcoach_azure_spark.functions.text import assemble_coaching_prompt
-from flink_sql_ai_meetingcoach_azure_spark.models.registry import ModelRegistry
-from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import vector_search
+from flink_sql_ai_meetingcoach_azure_spark.streaming.maintenance import (
+    read_log,
+    replace_log_atomically,
+)
+
+_BATCH_COL = "__batch_id"
 
 
 def dedup_stream(
@@ -52,40 +55,6 @@ def dedup_stream(
     else:  # batch DataFrames don't support the watermark-scoped variant
         deduped = hashed.dropDuplicates(["__content_hash"])
     return deduped.drop("__content_hash")
-
-
-def streaming_coaching_pipeline(
-    message_stream: DataFrame,
-    knowledge_index: DataFrame,
-    registry: ModelRegistry,
-    k: int = 3,
-) -> DataFrame:
-    """Streaming version of plans/coaching.py: stream-static broadcast join
-    against the (batch) knowledge index; every transform is narrow, so each
-    micro-batch is a single stage — same property as the reference's
-    per-row continuous pipeline."""
-    prospects = message_stream.filter(F.col("speaker") == "prospect").select(
-        "message", "speaker"
-    )
-    embedded = registry.ml_predict(prospects, "openaiembed", "message", "embedding")
-    # the search is a map-only mapInPandas, so it is streaming-legal as is
-    with_rag = vector_search(
-        embedded,
-        knowledge_index,
-        k=k,
-        payload_cols=["document_id", "chunks"],
-        output_col="rag_results",
-    )
-    prompt = assemble_coaching_prompt("message", "rag_results", k=k)
-    with_prompt = with_rag.withColumn("__prompt", prompt)
-    generated = registry.ml_predict(
-        with_prompt, "coaching_response_generator", "__prompt", "coaching_response"
-    )
-    return generated.select(
-        "message",
-        F.to_json(F.col("rag_results")).alias("rag_results_string"),
-        "coaching_response",
-    )
 
 
 def join_streams_on_key_within(
@@ -116,95 +85,6 @@ def join_streams_on_key_within(
         & (r_marked[right_ts] <= l_marked[left_ts] + F.expr(f"INTERVAL {max_delay}"))
     )
     return l_marked.join(r_marked, cond, how).drop(r_marked[on])
-
-
-def staged_coaching_pipeline(
-    spark,
-    source_stream: DataFrame | dict,
-    knowledge_index: DataFrame,
-    registry: ModelRegistry,
-    out_root: str,
-    k: int = 3,
-):
-    """The reference's 4 chained CTAS statements with one materialized
-    intermediate per stage (generate_personalized_commands.sh:347-433: each
-    stage writes its own Kafka topic; here each writes a parquet dir under
-    ``out_root`` and the next stage ``readStream``s it).
-
-    ``source_stream`` may be a DataFrame or a source-config dict
-    (``sources.kafka.open_message_stream``): ``{"type": "kafka",
-    "bootstrap_servers", "topic", "registry"}`` reads the reference's input
-    topic with Confluent-Avro decode; ``{"type": "file", ...}`` is the
-    brokerless stand-in the tests drive.
-
-    Returns the list of StreamingQuery handles (callers stop them or
-    ``processAllAvailable`` in tests). The fused single-plan variant
-    (:func:`streaming_coaching_pipeline`) is the performance path; this one
-    exists for the reference's per-stage inspectability — the demo's
-    observability depends on the intermediate topics existing.
-    """
-    if isinstance(source_stream, dict):
-        # config-selected source: {"type": "kafka", ...} for the reference's
-        # messages_conversation topic (Confluent-Avro decoded through the
-        # registry seam), {"type": "file", ...} for the brokerless stand-in
-        from flink_sql_ai_meetingcoach_azure_spark.sources.kafka import (  # noqa: PLC0415
-            open_message_stream,
-        )
-
-        source_stream = open_message_stream(spark, source_stream)
-    root = out_root.rstrip("/")
-    queries = []
-
-    def _sink(df: DataFrame, name: str):
-        q = (
-            df.writeStream.format("parquet")
-            .option("path", f"{root}/{name}")
-            .option("checkpointLocation", f"{root}/_ckpt/{name}")
-            .outputMode("append")
-            .start()
-        )
-        queries.append(q)
-        return q
-
-    # stage a: messages_prospect = SELECT * WHERE speaker='prospect' (:347-350)
-    prospects = source_stream.filter(F.col("speaker") == "prospect").select(
-        "message", "speaker"
-    )
-    _sink(prospects, "messages_prospect")
-
-    # stage b: + embedding via ML_PREDICT('openaiembed', message) (:355-362)
-    st_a = spark.readStream.schema(prospects.schema).parquet(f"{root}/messages_prospect")
-    embedded = registry.ml_predict(st_a, "openaiembed", "message", "embedding")
-    _sink(embedded, "messages_prospect_embeddings")
-
-    # stage c: + rag_results via VECTOR_SEARCH(..., k) (:367-385)
-    st_b = spark.readStream.schema(embedded.schema).parquet(
-        f"{root}/messages_prospect_embeddings"
-    )
-    with_rag = vector_search(
-        st_b,
-        knowledge_index,
-        k=k,
-        payload_cols=["document_id", "chunks"],
-        output_col="rag_results",
-    )
-    _sink(with_rag, "messages_prospect_rag_results")
-
-    # stage d: prompt CONCAT + generation (:412-433)
-    st_c = spark.readStream.schema(with_rag.schema).parquet(
-        f"{root}/messages_prospect_rag_results"
-    )
-    prompt = assemble_coaching_prompt("message", "rag_results", k=k)
-    generated = registry.ml_predict(
-        st_c.withColumn("__prompt", prompt), "coaching_response_generator",
-        "__prompt", "coaching_response",
-    ).select(
-        "message",
-        F.to_json(F.col("rag_results")).alias("rag_results_string"),
-        "coaching_response",
-    )
-    _sink(generated, "messages_prospect_rag_llm_response")
-    return queries
 
 
 def speaker_running_stats(stream: DataFrame, n_context: int = 3) -> DataFrame:
@@ -276,6 +156,14 @@ class RecentHistorySink:
         stream.writeStream.foreachBatch(sink).start()
         spark.sql("SELECT * FROM recent_conversation_history")       # bare
         spark.sql("SELECT * FROM global_temp.recent_conversation_history")
+
+    A batch whose id is at or below the last merged one is a replay of
+    rows the buffer already holds, and is skipped. With ``state_path`` set
+    (which needs ``spark``), the buffer survives a restart: after each
+    batch with rows, the ≤ n buffered rows and the batch id replace the
+    parquet log at ``state_path``, and the constructor seeds the buffer and
+    the batch id from that log. Keep ``state_path`` inside the query's
+    checkpoint directory, so ``reset_stream_state`` drops both together.
     """
 
     def __init__(
@@ -284,15 +172,24 @@ class RecentHistorySink:
         ts_col: str = "rowtime",
         view_name: str | None = "recent_conversation_history",
         spark=None,
+        state_path: str | None = None,
     ) -> None:
         self.n = n
         self.ts_col = ts_col
         self.view_name = view_name
         self._spark = spark
-        self._lock = threading.Lock()
+        self._state_path = state_path
+        self._lock = threading.RLock()  # __call__ reads current() under it
         self._buf = None  # pandas DataFrame
         self._schema = None
-        self._seed_overlap_pending = False
+        self._batch_id = -1  # the last batch merged into the buffer
+        log = None if state_path is None else read_log(spark, state_path)
+        if log is not None:  # None: first start
+            pdf = log.toPandas()
+            self._batch_id = int(pdf.pop(_BATCH_COL).max())
+            self._schema = log.drop(_BATCH_COL).schema
+            self._merge(pdf)
+            self._publish(spark.createDataFrame(self.current(), schema=self._schema))
 
     def _batch_top(self, batch_df: DataFrame) -> DataFrame:
         """Executor-side latest-n of one micro-batch.  ``orderBy(desc).
@@ -302,42 +199,28 @@ class RecentHistorySink:
         the union's top-n is always a subset of buffer ∪ batch-top-n."""
         return batch_df.orderBy(F.desc(self.ts_col)).limit(self.n)
 
-    def seed(self, snapshot: DataFrame) -> None:
-        """Pre-populate the buffer from a materialized-topic snapshot before
-        (re)starting the stream (ddl.start_continuous restart path).  Rows
-        the topic committed after the view stream's last checkpoint exist in
-        BOTH the snapshot and the post-restart replay; the first replayed
-        micro-batch's min timestamp trims the seeded copies (see __call__),
-        so legitimately duplicate topic rows still count once per occurrence
-        — full-row dedup would collapse them."""
-        pdf = self._batch_top(snapshot).toPandas()
-        with self._lock:
-            self._schema = snapshot.schema
-            self._merge(pdf)
-            self._seed_overlap_pending = True
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         pdf = self._batch_top(batch_df).toPandas()
         with self._lock:
+            if batch_id <= self._batch_id:
+                return
             self._schema = batch_df.schema
-            if self._seed_overlap_pending and len(pdf):
-                # overlap trim: everything at/after the earliest replayed
-                # timestamp (of the FULL batch, not its top-n) re-arrives
-                # via the stream, so drop the seeded copies.  Caveat: a
-                # checkpointed row sharing that exact boundary timestamp is
-                # trimmed yet never replayed — ties at the boundary lose.
-                boundary = batch_df.agg(F.min(self.ts_col)).collect()[0][0]
-                if boundary is not None and self._buf is not None:
-                    self._buf = self._buf[self._buf[self.ts_col] < boundary]
-                self._seed_overlap_pending = False
             self._merge(pdf)
-            if self.view_name:
-                ordered = self._buf.sort_values(self.ts_col).reset_index(drop=True)
-                session = self._spark or batch_df.sparkSession
-                view = session.createDataFrame(ordered, schema=self._schema)
-                view.createOrReplaceGlobalTempView(self.view_name)
-                if self._spark is not None:
-                    view.createOrReplaceTempView(self.view_name)
+            self._batch_id = batch_id
+            session = self._spark or batch_df.sparkSession
+            view = session.createDataFrame(self.current(), schema=self._schema)
+            if self._state_path is not None and len(pdf):
+                # ≤ n rows: one task writes one file, not one per slice
+                log = view.coalesce(1).withColumn(_BATCH_COL, F.lit(batch_id))
+                replace_log_atomically(session, self._state_path, log)
+            self._publish(view)
+
+    def _publish(self, view: DataFrame) -> None:
+        if not self.view_name:
+            return
+        view.createOrReplaceGlobalTempView(self.view_name)
+        if self._spark is not None:
+            view.createOrReplaceTempView(self.view_name)
 
     def _merge(self, pdf) -> None:
         import pandas as pd  # noqa: PLC0415

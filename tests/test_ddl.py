@@ -269,6 +269,21 @@ WITH(
     assert sess.registry.get("coaching_response_generator").task == "text_generation"
 
 
+def test_create_model_reregisters_only_the_model_functions(spark):
+    """CREATE MODEL re-registers ml_embed / ml_generate (they pickle the
+    registry as it was at registration), and nothing else."""
+    sess = FlinkStatementSession(spark, mock_dim=8)
+    spark.sql("DROP TEMPORARY FUNCTION IF EXISTS sketch_hash60")
+    sess.execute("""
+CREATE MODEL emb8 INPUT (input STRING) OUTPUT (embedding ARRAY<FLOAT>)
+WITH ('provider' = 'azureopenai', 'task' = 'embedding')""")
+    assert not spark.catalog.functionExists("sketch_hash60")
+    (row,) = spark.sql("SELECT ml_embed('emb8', 'hello') AS e").collect()
+    assert row["e"] == pytest.approx(MockProvider(dim=8).embed(["hello"])[0], rel=1e-6)
+    spark.sql("DROP TEMPORARY FUNCTION IF EXISTS sketch_hash60")
+    FlinkStatementSession(spark)  # restores the full function set
+
+
 def test_create_model_with_azure_factory(spark):
     """provider_factory wires CREATE MODEL options to the live provider
     class (no HTTP here — construction only)."""
@@ -463,28 +478,16 @@ WITH ('kafka.consumer.isolation-level' = 'read-uncommitted')""")
 
 
 def test_start_streaming_pipeline_from_ddl_session(spark, tmp_path):
-    """The DDL session's CREATE MODELs drive the CONTINUOUS staged pipeline
-    (the reference's execution model): file-source stand-in, one parquet
-    dir per stage, final stage carries the coaching output."""
+    """A DDL session drives the CONTINUOUS chain (the reference's execution
+    model) from a file-source stand-in: the source config reaches the
+    session as a stream through open_message_stream, the script's CREATE
+    MODELs supply the models, start_continuous writes one parquet dir per
+    stage, and the final stage carries the coaching output."""
     import json as _json
     import os
 
-    from flink_sql_ai_meetingcoach_azure_spark.plans.ingest import build_knowledge_index
-
-    sess = FlinkStatementSession(spark, mock_dim=32)
-    sess.execute("""
-CREATE MODEL openaiembed INPUT (input STRING) OUTPUT (embedding ARRAY<FLOAT>)
-WITH ('provider' = 'azureopenai', 'task' = 'embedding')""")
-    sess.execute("""
-CREATE MODEL coaching_response_generator INPUT (prompt STRING)
-OUTPUT (coaching_response STRING)
-WITH ('provider' = 'azureopenai', 'task' = 'text_generation')""")
-
-    docs = spark.createDataFrame(
-        [(f"d{i}.md", f"doc {i}", f"c{i}", f"text body {i} " * 30) for i in range(4)],
-        ["document_id", "document_name", "document_category", "document_text"],
-    )
-    index = build_knowledge_index(docs, sess.registry).cache()
+    from flink_sql_ai_meetingcoach_azure_spark.ddl import reference_pipeline_script
+    from flink_sql_ai_meetingcoach_azure_spark.sources.kafka import open_message_stream
 
     src = str(tmp_path / "msgs")
     os.makedirs(src)
@@ -496,23 +499,33 @@ WITH ('provider' = 'azureopenai', 'task' = 'text_generation')""")
                 )
                 + "\n"
             )
-    import pyspark.sql.types as T
-
     schema = T.StructType(
         [
             T.StructField("message", T.StringType()),
             T.StructField("speaker", T.StringType()),
-            T.StructField("rowtime", T.StringType()),
+            T.StructField("rowtime", T.TimestampType()),
         ]
     )
-    queries = sess.start_streaming_pipeline(
-        {"type": "file", "path": src, "schema": schema, "format": "json"},
-        index,
-        str(tmp_path / "stages"),
+    docs = spark.createDataFrame(
+        [(f"d{i}.md", f"doc {i}", f"c{i}", f"text body {i} " * 30) for i in range(4)],
+        ["document_id", "document_name", "document_category", "document_text"],
     )
+
+    sess = FlinkStatementSession(spark, mock_dim=32)
+    sess.register_source("knowledge", docs)
+    sess.register_streaming_source(
+        "messages_conversation",
+        open_message_stream(
+            spark, {"type": "file", "path": src, "schema": schema, "format": "json"}
+        ),
+    )
+    sess.execute_script(reference_pipeline_script())
+    assert set(sess.models) == {"openaiembed", "coaching_response_generator"}
+    queries = sess.start_continuous(str(tmp_path / "stages"))
     try:
-        for q in queries:
-            q.processAllAvailable()
+        for _ in range(4):  # one pass per chained stage
+            for q in queries:
+                q.processAllAvailable()
     finally:
         for q in queries:
             q.stop()
@@ -687,6 +700,53 @@ def test_reference_script_runs_continuously(spark, tmp_path):
     finally:
         for q in handles:
             q.stop()
+
+
+def test_reference_script_view_survives_restart(spark, tmp_path):
+    """The verbatim script's monitoring view reads the SOURCE stream
+    (messages_conversation), not a stage topic. Across a stop and a
+    restart over the same out_root, its latest-6 holds the rows from both
+    sides of the restart."""
+    from flink_sql_ai_meetingcoach_azure_spark.ddl import (
+        run_reference_pipeline_continuous,
+    )
+
+    docs = spark.createDataFrame(
+        [(f"kb/doc{i}.md", f"doc{i}.md", "kb", f"pricing tier {i} ### seats " * 20)
+         for i in range(3)],
+        ["document_id", "document_name", "document_category", "document_text"],
+    )
+    src_dir = str(tmp_path / "msgs_topic")
+    out = str(tmp_path / "stages")
+    schema = "message string, speaker string, rowtime timestamp"
+
+    def publish(lo, hi):
+        spark.createDataFrame(
+            [(f"m{i}", "prospect" if i % 2 else "salesperson", i) for i in range(lo, hi)],
+            "message string, speaker string, seq long",
+        ).select(
+            "message", "speaker",
+            F.timestamp_seconds(F.col("seq") + 1_700_000_000).alias("rowtime"),
+        ).write.mode("append").parquet(src_dir)
+
+    def run():
+        stream = spark.readStream.schema(schema).parquet(src_dir)
+        _, handles = run_reference_pipeline_continuous(spark, docs, stream, out, mock_dim=32)
+        try:
+            for _ in range(4):
+                for q in handles:
+                    q.processAllAvailable()
+        finally:
+            for q in handles:
+                q.stop()
+        return [r["message"] for r in spark.table("recent_conversation_history").collect()]
+
+    publish(0, 4)
+    assert run() == ["m0", "m1", "m2", "m3"]
+    publish(4, 6)
+    assert run() == [f"m{i}" for i in range(6)]
+    final = spark.read.parquet(f"{out}/messages_prospect_rag_llm_response")
+    assert sorted(r["message"] for r in final.collect()) == ["m1", "m3", "m5"]
 
 
 def test_start_continuous_streaming_insert_select_and_virtual_view(spark, tmp_path):

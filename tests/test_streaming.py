@@ -1,6 +1,6 @@
-"""Structured Streaming layer (SURVEY.md §2.10): streaming coaching
-pipeline (stream-static vector search), content-hash dedup with watermark,
-foreachBatch recent-history sink."""
+"""Structured Streaming layer (SURVEY.md §2.10): the continuous coaching
+chain's stage topics, content-hash dedup with watermark, foreachBatch
+recent-history sink."""
 
 from __future__ import annotations
 
@@ -12,14 +12,15 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from flink_sql_ai_meetingcoach_azure_spark.models import default_registry
-from flink_sql_ai_meetingcoach_azure_spark.plans import build_knowledge_index
+from flink_sql_ai_meetingcoach_azure_spark.ddl import (
+    run_reference_pipeline,
+    run_reference_pipeline_continuous,
+)
+from flink_sql_ai_meetingcoach_azure_spark.sources.kafka import open_message_stream
 from flink_sql_ai_meetingcoach_azure_spark.streaming.pipeline import (
     RecentHistorySink,
     dedup_stream,
     join_streams_on_key_within,
-    staged_coaching_pipeline,
-    streaming_coaching_pipeline,
 )
 
 MSG_SCHEMA = T.StructType(
@@ -38,60 +39,12 @@ def _write_batch(path, rows, n=0):
             f.write(json.dumps({"message": m, "speaker": s, "rowtime": ts}) + "\n")
 
 
-def test_streaming_coaching_pipeline(spark, tmp_path):
-    src = str(tmp_path / "messages")
-    _write_batch(
-        src,
-        [
-            ("Tell me about pricing options", "prospect", "2026-01-01T10:00:00"),
-            ("Sure, one moment", "salesperson", "2026-01-01T10:00:05"),
-            ("What about integration effort?", "prospect", "2026-01-01T10:00:10"),
-        ],
-    )
-    reg = default_registry(dim=32)
-    knowledge = spark.createDataFrame(
-        [("kb/pricing.md", "Pricing tiers ### start at $10 per seat."),
-         ("kb/integration.md", "Integration ### takes two weeks typically.")],
-        ["document_id", "document_text"],
-    )
-    index = build_knowledge_index(knowledge, reg)
-
-    stream = spark.readStream.schema(MSG_SCHEMA).json(src)
-    out = streaming_coaching_pipeline(stream, index, reg, k=2)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("coaching_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM coaching_out").collect()
-    finally:
-        q.stop()
-    assert len(rows) == 2  # salesperson filtered
-    by_msg = {r["message"]: r for r in rows}
-    assert set(by_msg) == {"Tell me about pricing options", "What about integration effort?"}
-    for r in rows:
-        rag = json.loads(r["rag_results_string"])
-        assert len(rag) == 2
-        assert r["coaching_response"].startswith("```json")
-
-    # streaming == batch, byte for byte: the same micro-batched plan must
-    # produce exactly what the batch pipeline produces on the same input
-    from flink_sql_ai_meetingcoach_azure_spark.plans.coaching import coaching_pipeline
-
-    batch_msgs = spark.read.schema(MSG_SCHEMA).json(src)
-    batch_rows = coaching_pipeline(batch_msgs, index, reg, k=2).collect()
-    assert {r["message"]: (r["rag_results_string"], r["coaching_response"]) for r in batch_rows} == {
-        m: (r["rag_results_string"], r["coaching_response"]) for m, r in by_msg.items()
-    }
-
-
 def test_staged_pipeline_materializes_intermediates(spark, tmp_path):
-    """Every reference stage exists as an inspectable materialized table
-    (mirrors the per-stage Kafka topics, :568-576)."""
+    """Every reference stage exists as an inspectable materialized topic
+    (mirrors the per-stage Kafka topics, :568-576). A file-source config
+    reaches the statement chain through open_message_stream, the script's
+    CREATE MODELs drive the models, and the final row equals the batch
+    statement chain's."""
     src = str(tmp_path / "msgs")
     out = str(tmp_path / "stages")
     _write_batch(
@@ -99,34 +52,42 @@ def test_staged_pipeline_materializes_intermediates(spark, tmp_path):
         [("Pricing is steep", "prospect", "2026-01-01T10:00:00"),
          ("Noted", "salesperson", "2026-01-01T10:00:01")],
     )
-    reg = default_registry(dim=32)
     knowledge = spark.createDataFrame(
-        [("kb/pricing.md", "Pricing tiers ### start at $10 per seat.")],
-        ["document_id", "document_text"],
+        [(f"kb/doc{i}.md", f"doc{i}.md", "kb",
+          " ### ".join(f"Pricing tier {i}.{j} starts at ${10 * j} per seat." for j in range(8)))
+         for i in range(3)],
+        ["document_id", "document_name", "document_category", "document_text"],
     )
-    index = build_knowledge_index(knowledge, reg)
-    stream = spark.readStream.schema(MSG_SCHEMA).json(src)
-    queries = staged_coaching_pipeline(spark, stream, index, reg, out)
+    cfg = {"type": "file", "path": src, "schema": MSG_SCHEMA, "format": "json"}
+    sess, handles = run_reference_pipeline_continuous(
+        spark, knowledge, open_message_stream(spark, cfg), out, mock_dim=32
+    )
     try:
-        # drain stage-by-stage: each stage's input is the previous stage's
-        # materialized output, so one pass per stage is required
-        for q in queries:
-            q.processAllAvailable()
+        assert len(handles) == 5  # 4 stage queries + the Top-N view sink
+        # each stage reads the previous stage's topic: one pass per stage
+        for _ in range(4):
+            for q in handles:
+                q.processAllAvailable()
     finally:
-        for q in queries:
+        for q in handles:
             q.stop()
+    assert set(sess.models) == {"openaiembed", "coaching_response_generator"}
     stages = [
         "messages_prospect",
         "messages_prospect_embeddings",
         "messages_prospect_rag_results",
         "messages_prospect_rag_llm_response",
     ]
-    counts = {s: spark.read.parquet(f"{out}/{s}").count() for s in stages}
-    assert counts == {s: 1 for s in stages}  # salesperson row filtered in stage a
-    final = spark.read.parquet(f"{out}/messages_prospect_rag_llm_response").head()
-    assert final["message"] == "Pricing is steep"
-    assert "pricing.md" in final["rag_results_string"]
-    assert final["coaching_response"].startswith("```json")
+    for s in stages:  # salesperson row filtered in the first stage
+        rows = spark.read.parquet(f"{out}/{s}").collect()
+        assert [r["message"] for r in rows] == ["Pricing is steep"], s
+    final = spark.read.parquet(f"{out}/messages_prospect_rag_llm_response").collect()
+    assert "kb/doc" in final[0]["rag_results_string"]
+    assert final[0]["coaching_response"].startswith("```json")
+    run_reference_pipeline(
+        spark, knowledge, spark.read.schema(MSG_SCHEMA).json(src), mock_dim=32
+    )
+    assert spark.table("messages_prospect_rag_llm_response").collect() == final
 
 
 def test_dedup_stream(spark, tmp_path):
@@ -418,34 +379,31 @@ def test_recent_history_sink_plans_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_recent_history_seed_overlap_trim(spark):
-    """Restart semantics: rows committed after the view stream's checkpoint
-    are in BOTH the seed snapshot and the replay — the first replayed
-    batch's min ts trims the seeded copies.  Legitimately duplicate topic
-    rows (same message/speaker/rowtime twice) must still count twice; the
-    old full-row dedup collapsed them (ADVICE r4)."""
+def test_recent_history_restart_skips_replayed_batches(spark, tmp_path):
+    """Restart semantics: the sink logs its buffer with the batch id after
+    each batch, a new sink seeds from that log, and a replayed batch (id at
+    or below the logged one) is skipped, so nothing counts twice. A row
+    tying the last seeded timestamp is kept, and legitimately duplicate
+    rows (same message/speaker/rowtime twice) still count twice."""
     schema = "message string, speaker string, rowtime timestamp"
 
-    def df(rows):
-        return spark.createDataFrame(rows, schema).select(
-            "message", "speaker", F.col("rowtime").cast("timestamp").alias("rowtime")
+    def df(*rows):
+        return spark.createDataFrame(
+            [(m, "p", dt.datetime(2026, 1, 1, 10, 0, s)) for m, s in rows], schema
         )
 
-    import datetime as dt
-
-    def ts(s):
-        return dt.datetime(2026, 1, 1, 10, 0, s)
-
-    sink = RecentHistorySink(n=4, ts_col="rowtime", spark=spark)
-    # topic snapshot: m0..m3, where m2 appears twice LEGITIMATELY and
-    # m2/m2/m3 were committed after the view stream's last checkpoint
-    sink.seed(df([("m0", "p", ts(0)), ("m1", "p", ts(1)),
-                  ("m2", "p", ts(2)), ("m2", "p", ts(2)), ("m3", "p", ts(3))]))
-    # replay re-delivers the post-checkpoint rows, plus a new m4
-    sink(df([("m2", "p", ts(2)), ("m2", "p", ts(2)),
-             ("m3", "p", ts(3)), ("m4", "p", ts(4))]), 0)
-    cur = sink.current()
-    assert list(cur["message"]) == ["m2", "m2", "m3", "m4"]  # no double-count
+    state = str(tmp_path / "ckpt" / "view_buffer")
+    sink = RecentHistorySink(n=5, spark=spark, view_name=None, state_path=state)
+    assert sink.current() is None  # first start: no log yet
+    sink(df(("m0", 0), ("m1", 1)), 0)
+    batch1 = df(("m2", 2), ("m2", 2), ("m3", 3))
+    sink(batch1, 1)
+    # restart: batch 1 was logged, but the stream had not committed it
+    again = RecentHistorySink(n=5, spark=spark, view_name=None, state_path=state)
+    assert list(again.current()["message"]) == ["m0", "m1", "m2", "m2", "m3"]
+    again(batch1, 1)  # the replay
+    again(df(("m3b", 3), ("m4", 4)), 2)
+    assert sorted(again.current()["message"]) == ["m2", "m2", "m3", "m3b", "m4"]
 
 
 def test_reset_stream_state_replays_from_start(spark, tmp_path):
