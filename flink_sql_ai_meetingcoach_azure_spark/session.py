@@ -9,12 +9,35 @@ Python workers fork from :mod:`.worker_daemon`: stock workers re-read the
 central directory of ``pyspark.zip`` and the py4j zip 16 times before every
 task (140-260 ms on CPython 3.11.7, 4 vCPUs); that daemon's workers re-read
 an archive only after it changed (0.2 ms per task).
+
+Local files are written without a child process per file: pyspark ships no
+``libhadoop.so``, so Hadoop's stock ``RawLocalFileSystem`` runs ``chmod``
+for every file it creates (each parquet part, ``.crc``, log and marker) and
+``readlink`` for each FileContext create and rename (every offset, commit
+and sink-metadata log entry): 4,130 of them in a 37 s ``coach`` benchmark
+run on 4 vCPUs. ``NioLocalFileSystem.java`` does both in-process with
+java.nio. On a ``local[...]`` master, the call to :func:`get_spark` that
+launches the JVM compiles it once with the JDK's ``javac`` (classes cached
+under ``_jvm/<source hash>/`` next to it), puts it on
+``spark.driver.extraClassPath`` and sets it as the ``file://``
+``FileSystem`` and ``AbstractFileSystem``. A JVM launched without it, or a
+host without ``javac`` (one warning), keeps Hadoop's stock classes.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import warnings
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
@@ -23,6 +46,58 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 #: UDF pickles package functions by reference), so it goes on their path
 #: instead of relying on the driver's working directory
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_NIO_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                              "NioLocalFileSystem.java")
+#: compiled classes live in ``<this>/<hash of source and Hadoop jar>/``
+NIO_FS_CACHE = os.path.join(os.path.dirname(_NIO_FS_SOURCE), "_jvm")
+NIO_FS_CLASS = "flink_sql_ai_meetingcoach_azure_spark.NioLocalFileSystem"
+
+
+@functools.lru_cache(maxsize=None)
+def nio_fs_classes() -> str | None:
+    """The class directory of ``NioLocalFileSystem.java``, compiled on first
+    use; None, with one warning, when it cannot be compiled."""
+    hadoop = glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    with open(_NIO_FS_SOURCE, "rb") as f:
+        key = hashlib.sha256(f.read() + repr(sorted(hadoop)).encode()).hexdigest()[:16]
+    out = os.path.join(NIO_FS_CACHE, key)
+    if os.path.isdir(out):
+        return out
+    java_home = os.environ.get("JAVA_HOME")
+    javac = (os.path.join(java_home, "bin", "javac") if java_home
+             else shutil.which("javac"))
+    try:
+        if not hadoop or not javac:
+            raise OSError("no javac or no Hadoop client jar")
+        os.makedirs(NIO_FS_CACHE, exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=NIO_FS_CACHE)
+        try:
+            # release 17: the oldest JVM Spark 4 runs on loads the classes
+            subprocess.run([javac, "--release", "17", "-cp", hadoop[0],
+                            "-d", tmp, _NIO_FS_SOURCE],
+                           check=True, capture_output=True, timeout=300)
+            os.rename(tmp, out)
+        except OSError:
+            if not os.path.isdir(out):  # else a concurrent process compiled it
+                raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return out
+    except (OSError, subprocess.SubprocessError) as e:
+        warnings.warn(f"{os.path.basename(_NIO_FS_SOURCE)} not compiled ({e}); "
+                      "local files are written by Hadoop's stock filesystem, "
+                      "which starts a process per file", RuntimeWarning,
+                      stacklevel=3)
+        return None
+
+
+def _jvm_loads(class_name: str) -> bool:
+    try:
+        SparkContext._jvm.java.lang.Class.forName(class_name)
+    except Py4JJavaError:
+        return False
+    return True
 
 
 def get_spark(
@@ -64,7 +139,24 @@ def get_spark(
             "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
         )
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    local = master == "local" or master.startswith("local[")
+    if local and SparkContext._gateway is None:  # this call launches the JVM
+        classes = nio_fs_classes()
+        if classes:
+            cp = conf.get("spark.driver.extraClassPath")
+            conf["spark.driver.extraClassPath"] = (
+                classes + os.pathsep + cp if cp else classes)
+        nio_fs = classes is not None
+    else:
+        nio_fs = local and _jvm_loads(NIO_FS_CLASS)
+    if nio_fs:
+        builder = (
+            builder.config("spark.hadoop.fs.file.impl", NIO_FS_CLASS)
+            .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+                    NIO_FS_CLASS + "$Fs")
+        )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -794,7 +794,8 @@ def test_start_continuous_restart_is_exactly_once(spark, tmp_path):
     restarts via Flink checkpoints): a second start_continuous over the same
     out_root resumes every stage from its checkpoint — pre-restart source
     rows are NOT reprocessed into the stage topics — and the Top-N view
-    keeps its pre-restart history (re-seeded from the materialized topic)."""
+    keeps its pre-restart history (re-seeded from its own buffer log in its
+    checkpoint)."""
     sess = FlinkStatementSession(spark)
     src_dir = str(tmp_path / "src")
     out = str(tmp_path / "stages")

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import os
+import threading
+
 import pytest
 
 from flink_sql_ai_meetingcoach_azure_spark.session import cluster_scale_conf
@@ -170,3 +175,164 @@ def test_a_failing_udf_surfaces_and_the_next_job_runs(spark):
         spark.range(4, numPartitions=2).mapInPandas(boom, "id long").collect()
     rows = spark.range(4, numPartitions=2).mapInPandas(ok, "id long").collect()
     assert sorted(r.id for r in rows) == [0, 1, 2, 3]
+
+
+def _jvm_children(pid: int) -> set[str]:
+    out = set()
+    for path in glob.glob(f"/proc/{pid}/task/*/children"):
+        with contextlib.suppress(OSError), open(path) as f:
+            out.update(f.read().split())
+    return out
+
+
+def _reaped_child_ticks(pid: int) -> int:
+    """CPU ticks of the children ``pid`` has waited for (cutime + cstime)."""
+    with open(f"/proc/{pid}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    return int(fields[13]) + int(fields[14])
+
+
+def _modes(root: str) -> dict[str, int]:
+    out = {}
+    for d, dirs, files in os.walk(root):
+        for name in dirs + files:
+            path = os.path.join(d, name)
+            out[os.path.relpath(path, root)] = os.stat(path).st_mode & 0o7777
+    return out
+
+
+def test_local_files_are_written_without_a_child_process(spark, tmp_path):
+    """The session's ``file://`` filesystem sets modes and reads links
+    in-process: FileSystem and FileContext creates, FileContext renames and
+    mkdirs start no child process of the JVM, and leave the same modes and
+    ``.crc`` files as Hadoop's stock classes; ``getFileLinkStatus`` answers
+    as the stock one for a file, a directory and a symlink, with and
+    without the ``file:`` scheme."""
+    n = 10
+    jvm, gateway = spark._jvm, spark.sparkContext._gateway
+    hfs = jvm.org.apache.hadoop.fs
+    conf = spark._jsc.hadoopConfiguration()
+    stock_conf = jvm.org.apache.hadoop.conf.Configuration(conf)
+    stock_conf.set("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+    stock_conf.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.LocalFs")
+    uri = jvm.java.net.URI("file:///")
+    faces = {
+        "nio": (hfs.FileSystem.get(uri, conf), hfs.FileContext.getFileContext(uri, conf)),
+        "stock": (hfs.FileSystem.newInstance(uri, stock_conf),
+                  hfs.FileContext.getFileContext(uri, stock_conf)),
+    }
+    flags = jvm.java.util.EnumSet.of(hfs.CreateFlag.CREATE)
+    opts = gateway.new_array(hfs.Options.CreateOpts, 1)
+    opts[0] = hfs.Options.CreateOpts.createParent()
+    no_rename_opts = gateway.new_array(hfs.Options.Rename, 0)
+
+    def write_tree(side):
+        fs, fc = faces[side]
+        root = f"file://{tmp_path}/{side}"
+        for i in range(n):
+            out = fs.create(hfs.Path(f"{root}/fs/part-{i}"), True)
+            out.write(120)
+            out.close()
+            out = fc.create(hfs.Path(f"{root}/fc/tmp-{i}"), flags, opts)
+            out.write(120)
+            out.close()
+            fc.rename(hfs.Path(f"{root}/fc/tmp-{i}"), hfs.Path(f"{root}/fc/log-{i}"),
+                      no_rename_opts)
+        fs.mkdirs(hfs.Path(f"{root}/dirs/fs/a"))
+        fc.mkdir(hfs.Path(f"{root}/dirs/fc/a"),
+                 hfs.permission.FsPermission.getDirDefault(), True)
+
+    write_tree("stock")
+    pid = jvm.java.lang.ProcessHandle.current().pid()
+    before, seen, done = _jvm_children(pid), set(), threading.Event()
+
+    def watch():
+        while not done.is_set():
+            seen.update(_jvm_children(pid))
+
+    watcher = threading.Thread(target=watch)
+    ticks = _reaped_child_ticks(pid)
+    watcher.start()
+    try:
+        write_tree("nio")
+    finally:
+        done.set()
+        watcher.join()
+    assert (len(seen - before), _reaped_child_ticks(pid) - ticks) == (0, 0)
+
+    nio, stock = _modes(str(tmp_path / "nio")), _modes(str(tmp_path / "stock"))
+    assert nio == stock
+    assert {"fs/.part-0.crc", "fc/.log-0.crc"} <= set(nio)
+    umask = os.umask(0o22)
+    os.umask(umask)
+    if umask == 0o22:
+        assert {m for k, m in nio.items() if "part-" in k or "log-" in k} == {0o644}
+        assert {m for k, m in nio.items() if k.startswith("dirs")} == {0o755}
+
+    (tmp_path / "file").write_text("x")
+    (tmp_path / "dir").mkdir()
+    (tmp_path / "link").symlink_to(tmp_path / "file")
+    for name in ("file", "dir", "link"):
+        for path in (f"file://{tmp_path}/{name}", f"{tmp_path}/{name}"):
+            got, want = (
+                (face[0].getFileLinkStatus(hfs.Path(path)).toString(),
+                 face[1].getFileLinkStatus(hfs.Path(path)).toString())
+                for face in (faces["nio"], faces["stock"])
+            )
+            assert got == want, path
+    faces["stock"][0].close()
+
+
+def test_get_spark_in_a_jvm_launched_without_the_filesystem(tmp_path):
+    """``get_spark`` after a plain ``SparkSession.builder`` session, whose
+    JVM lacks ``NioLocalFileSystem``, sets no ``fs.*.impl`` key and local
+    parquet writes and reads, also in a session started after a stop."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    code = f"""
+import sys
+sys.path.insert(0, {str(repo)!r})
+from pyspark.sql import SparkSession
+SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+from flink_sql_ai_meetingcoach_azure_spark import get_spark
+for i in range(2):
+    spark = get_spark("joined", master="local[1]")
+    out = {str(tmp_path)!r} + f"/t{{i}}"
+    spark.range(5).write.parquet(out)
+    conf = spark._jsc.hadoopConfiguration()
+    fs = spark._jvm.org.apache.hadoop.fs.FileSystem.get(spark._jvm.java.net.URI("file:///"), conf)
+    print("RUN", spark.read.parquet(out).count(), conf.get("fs.file.impl"),
+          spark.conf.get("spark.hadoop.fs.file.impl", None),
+          "Nio" in fs.getClass().getName())
+    spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    runs = [line for line in out.stdout.splitlines() if line.startswith("RUN")]
+    assert runs == ["RUN 5 None None False"] * 2, out.stderr[-3000:]
+
+
+def test_without_javac_the_stock_filesystem_is_kept(tmp_path, monkeypatch):
+    """No cached classes and no ``javac``: no class directory, one warning."""
+    import warnings
+
+    from flink_sql_ai_meetingcoach_azure_spark import session
+
+    monkeypatch.setattr(session, "NIO_FS_CACHE", str(tmp_path / "cache"))
+    monkeypatch.setenv("JAVA_HOME", str(tmp_path / "no-jdk"))
+    session.nio_fs_classes.cache_clear()
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            assert session.nio_fs_classes() is None
+            assert session.nio_fs_classes() is None
+        assert [w.category for w in caught] == [RuntimeWarning]
+    finally:
+        session.nio_fs_classes.cache_clear()
