@@ -41,4 +41,4 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query. As of r11 EVERY registry entry is
     oracle-backed — the mock model providers have closed SQL forms, so
     even the ML_PREDICT / VECTOR_SEARCH chains are value-verified."""
-    return {name: spec.sql for name, spec in QUERIES.items() if spec.sql is not None}
+    return {name: spec.sql for name, spec in QUERIES.items()}

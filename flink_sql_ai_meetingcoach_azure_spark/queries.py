@@ -17,6 +17,7 @@ Determinism rules (both engines must hash-identically, order-insensitive):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -117,10 +118,13 @@ def _prep(spark: SparkSession) -> None:
 _TOKS = "list_filter(string_split_regex(lower({col}), '\\s+'), t -> len(t) > 0)"
 
 
+QueryFn = Callable[[SparkSession, str], DataFrame]
+
+
 @dataclass
 class QuerySpec:
-    fn: Callable[[SparkSession, str], DataFrame]
-    sql: str | None  # None => non-SQL-expressible, rows-only check
+    fn: QueryFn
+    sql: str
 
 
 # ---------------------------------------------------------------------------
@@ -129,7 +133,6 @@ class QuerySpec:
 
 def q_filter_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1/P2/P3 — the stream-router equality filter (reference :347-350)."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     return ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "value")
 
@@ -141,7 +144,6 @@ SELECT event_id, user_id, value FROM events WHERE event_type = 'purchase'
 
 def q_keyword_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5/F13 — trigger-keyword predicate (data_utils.py:20-30) as one rlike."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     return docs.filter(keyword_trigger_col(F.col("text"), DEMO_KEYWORDS)).select(
         "doc_id", "lang", "n_chars"
@@ -156,7 +158,6 @@ WHERE regexp_matches(lower(text), '{KW_REGEX}')
 
 def q_case_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 — rule-based CASE dispatch (data_utils.py:32-54) + hash agg."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     category = (
         F.when(F.col("event_type").isin("purchase", "signup"), "conversion")
@@ -184,7 +185,6 @@ FROM events GROUP BY 1 ORDER BY category
 
 def q_null_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8 — null/empty guards (kafka_utils.py:413-415)."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     return ev.filter(
         F.col("props").isNotNull() & (F.length("props") > 0) & (F.col("value") > 0)
@@ -200,7 +200,6 @@ WHERE props IS NOT NULL AND len(props) > 0 AND value > 0
 def q_cache_hit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7 — exact-match cache short-circuit (api_routes.py:34-39) as a
     broadcast left join; hit-flag per message."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     cache = docs.filter(F.col("doc_id") % 10 == 0).select(
         F.col("text").alias("cache_key"), F.col("doc_id").alias("cache_doc")
@@ -227,7 +226,6 @@ LEFT JOIN (SELECT text AS cache_key, doc_id AS cache_doc
 def q_explode_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/F7 — CROSS JOIN UNNEST(text splitter) as explode over the pure-SQL
     fixed-stride chunker (JVM-side; the scale path for bulk chunking)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     starts = F.sequence(F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(CHUNK_STRIDE))
     return (
@@ -255,7 +253,6 @@ FROM documents, unnest(generate_series(1, greatest(len(text), 1), {CHUNK_STRIDE}
 def q_topn_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/A1 — ROW_NUMBER Top-N (reference view :489-505), partitioned by
     user so it scales (the global variant is q_recent_history)."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     top = recent_top_n(
         ev.select("user_id", "event_id", "ts"),
@@ -280,7 +277,6 @@ SELECT user_id, event_id, epoch_us(ts::TIMESTAMP) AS ts_us, msg_rank FROM (
 def q_recent_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 exact reference shape: global Top-6 latest, re-sorted ASC
     (generate_personalized_commands.sh:489-505)."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     return recent_top_n(
         ev.select("event_id", "ts", "event_type"),
@@ -301,7 +297,6 @@ SELECT event_id, ts::TIMESTAMP AS ts, event_type, msg_rank FROM (
 
 def q_order_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1/O3 — total-order sort + limit with deterministic tie-break."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     return ev.select("event_id", "value").orderBy(F.desc("value"), F.asc("event_id")).limit(10)
 
@@ -313,7 +308,6 @@ SELECT event_id, value FROM events ORDER BY value DESC, event_id ASC LIMIT 10
 
 def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Analytic frame (rowsBetween) — beyond-reference window coverage."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     w = (
@@ -337,7 +331,6 @@ FROM events ORDER BY user_id, event_id
 
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 — tumbling event-time window aggregation (hourly)."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     return (
@@ -361,7 +354,6 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 — session windows (30-min gap) per user via native
     ``F.session_window``; oracle = gaps-and-islands SQL. The streaming
     variant is the same expression over readStream with a watermark."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     return (
@@ -403,7 +395,6 @@ ORDER BY user_id, session_start_us
 
 def q_concat_prompt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 — prompt assembly CONCAT (reference :421-430 shape)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     return docs.filter(F.col("doc_id") < 20).select(
         "doc_id",
@@ -427,7 +418,6 @@ FROM documents WHERE doc_id < 20
 def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2/F3/F5 — array construction, 1-based element_at (Flink arr[i]
     semantics, SURVEY §7.4.3), negative index, size."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: F.length(t) > 0)
     return docs.select(
@@ -449,7 +439,6 @@ FROM t
 def q_json_cleanup_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14 — LLM-JSON cleanup (fence/trailing-comma strip, script.js:953-961)
     + typed JSON extraction on the events.props payload."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cleaned = F.regexp_replace(
         F.regexp_replace(F.col("props"), r"```(?:json)?", ""), r",\s*([}\]])", r"$1"
@@ -473,7 +462,6 @@ FROM events
 def q_path_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F15 — filename/dirname derivation from a path-ish id column (the
     reference's document_id convention), over the source column."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     fake_path = F.concat(F.col("lang"), F.lit("/"), F.col("source"), F.lit(".md"))
     return docs.select(
@@ -497,7 +485,6 @@ FROM documents
 
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing-summary agg (TPC-H Q1 shape) in exact integer cents."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     qty_c = F.round(F.col("l_quantity") * 100).cast("bigint")
     base_c = F.round(F.col("l_extendedprice") * 100).cast("bigint")
@@ -537,7 +524,6 @@ ORDER BY l_returnflag, l_linestatus
 
 def q_join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-join + agg: orders ⋈ customer ⋈ nation (dims broadcast)."""
-    _prep(spark)
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
@@ -565,7 +551,6 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """left_anti (NOT EXISTS): customers with no order above 300k (the
     bare no-orders variant is empty on the dense testdata — a 0-row match
     would be a vacuous correctness check)."""
-    _prep(spark)
     customer = _t(spark, sf_dir, "customer")
     big = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return customer.join(
@@ -584,7 +569,6 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.7 — EXCEPT via native set operators at (user, day) grain:
     days a user purchased but did not hit an error (user-grain is empty on
     the dense testdata — every user does everything)."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     day = F.unix_micros(F.date_trunc("day", F.col("ts"))).alias("day_us")
     buy_days = ev.filter(F.col("event_type") == "purchase").select("user_id", day).distinct()
@@ -608,7 +592,6 @@ FROM events WHERE event_type = 'error'
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2/F11 — md5-content dedup keeping deterministic min id
     (reference: kafka_utils.py:209-249 app-level dict)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     return dedup_exact(docs, "text", "doc_id", keep="min").select("doc_id", "n_chars")
 
@@ -619,7 +602,7 @@ WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY md5(text))
 """
 
 
-def _sql_shingles_cte(where: str = "") -> str:
+def _shingles_cte_sql(where: str = "") -> str:
     return f"""
 toks AS (SELECT doc_id, {_TOKS.format(col='text')} AS tk FROM documents {where}),
 sh AS (SELECT DISTINCT doc_id,
@@ -628,13 +611,13 @@ sh AS (SELECT DISTINCT doc_id,
 """
 
 
-def _sql_minhash_cte(where: str = "") -> str:
+def _minhash_cte_sql(where: str = "") -> str:
     base = md5_int32_sql("shingle")
     mins = ",\n       ".join(
         f"min({affine_hash_sql('bh', i)}) AS h{i}" for i in range(MINHASH_N)
     )
     return f"""
-WITH {_sql_shingles_cte(where)},
+WITH {_shingles_cte_sql(where)},
 shh AS (SELECT doc_id, {base} AS bh FROM sh),
 sig AS (SELECT doc_id, {mins} FROM shh GROUP BY doc_id)
 """
@@ -643,17 +626,15 @@ sig AS (SELECT doc_id, {mins} FROM shh GROUP BY doc_id)
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (8 perms, 3-token shingles) — the 100-TB near-dup
     path: one shuffle, map-side-combinable mins."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     return minhash_signatures(docs, "doc_id", "text", num_hashes=MINHASH_N, shingle_n=SHINGLE_N)
 
 
-SQL_MINHASH_SIGNATURES = _sql_minhash_cte() + "SELECT * FROM sig"
+SQL_MINHASH_SIGNATURES = _minhash_cte_sql() + "SELECT * FROM sig"
 
 
 def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH banding candidate pairs (4 bands × 2 rows)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=MINHASH_N, shingle_n=SHINGLE_N)
     return lsh_candidate_pairs(sigs, "doc_id", num_hashes=MINHASH_N, band_size=BAND_SIZE)
@@ -667,7 +648,7 @@ def _sql_lsh_pairs(where: str = "") -> str:
         for b in range(n_bands)
     )
     return (
-        _sql_minhash_cte(where)
+        _minhash_cte_sql(where)
         + f""",
 bands AS ({band_selects})
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -691,7 +672,6 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor (min id, struct-argmin — no window), negatives left-joined so
     anchors without a hard negative still emit. The whole miner is a
     composition of the two audited near-dup operators."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         ngram_jaccard_pairs,
     )
@@ -775,7 +755,6 @@ ORDER BY anchor_id
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash fingerprints (16-bit, token md5 hashes)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     return simhash(docs, "doc_id", "text", bits=SIMHASH_BITS)
 
@@ -800,7 +779,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: band-bucketed join (bands > max_hamming ⇒
     pigeonhole-EXACT, so the all-pairs oracle matches identically), one
     popcount(xor) verify per candidate."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import simhash_pairs  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < SIMHASH_PAIR_MAX_ID)
@@ -835,7 +813,6 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a shared promo header (every doc), a shared footer (every 3rd doc) and
     unique content slices — the operator must strip exactly the shared
     lines from every document and keep the rest in order."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import dedup_lines  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < LINE_DEDUP_MAX_ID)
@@ -881,7 +858,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: n-gram collision flags for every corpus
     doc against an eval-set stand-in (every 97th document — which overlaps
     the corpus range, so self-contamination is exercised)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         contamination_flags,
     )
@@ -915,7 +891,7 @@ FROM corpus c LEFT JOIN hits h ON c.doc_id = h.doc_id
 #: documents is guaranteed to produce at least one matching window
 SPAN_W = 8
 
-def _sql_span_postings_ctes(w: int) -> str:
+def _span_postings_ctes_sql(w: int) -> str:
     """DuckDB CTEs producing ``spans(doc_id, pos, h)`` — mirrors
     operators/spans.py::span_postings exactly: per-token 32-bit md5, then
     two Horner polynomial channels over lead() windows, concatenated."""
@@ -948,7 +924,6 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distributed fixed-window form of suffix-array substring dedup
     (Lee et al. 2022) — every 8-token window hashed, windows shared by
     >=2 distinct docs counted per document."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.spans import (  # noqa: PLC0415
         dup_span_stats,
     )
@@ -962,7 +937,7 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_dup_spans() -> str:
     return f"""
-WITH {_sql_span_postings_ctes(SPAN_W)},
+WITH {_span_postings_ctes_sql(SPAN_W)},
 g AS (SELECT h, min(doc_id) AS mn, max(doc_id) AS mx FROM spans GROUP BY h),
 dup AS (SELECT h FROM g WHERE mn <> mx),
 per_doc AS (SELECT doc_id, count(*) AS n FROM spans GROUP BY doc_id),
@@ -986,7 +961,6 @@ def q_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed self-join (per-hash cost, never corpus²) that feeds
     transitive clustering; hot boilerplate spans capped by doc-frequency
     before the join."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.spans import (  # noqa: PLC0415
         span_dup_pairs,
     )
@@ -1000,7 +974,7 @@ def q_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_span_pairs() -> str:
     return f"""
-WITH {_sql_span_postings_ctes(SPAN_W)},
+WITH {_span_postings_ctes_sql(SPAN_W)},
 sd AS (SELECT DISTINCT doc_id, h FROM spans),
 ok AS (SELECT h FROM sd GROUP BY h HAVING count(*) <= {NGRAM_MAX_DF}),
 f AS (SELECT doc_id, h FROM sd WHERE h IN (SELECT h FROM ok))
@@ -1015,7 +989,6 @@ ORDER BY id_a, id_b
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard pairs over a bounded id range (the LSH-verify
     stage in a full near-dup pipeline)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < JACCARD_MAX_ID)
     return ngram_jaccard_pairs(
         docs, "doc_id", "text", n=SHINGLE_N, threshold=0.0, max_doc_freq=NGRAM_MAX_DF
@@ -1043,7 +1016,6 @@ FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
 
 def q_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs (cosine >= 0.2, bounded id range)."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < COS_PAIR_MAX_ID)
     return embedding_cosine_pairs(emb, "vec_id", "embedding", threshold=0.2, round_to=6)
 
@@ -1065,7 +1037,6 @@ def q_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4 tables × 8 bits), exact cosine only within buckets. Same threshold
     as `embedding_cosine_pairs` — its output is the LSH-recall subset of
     that all-pairs baseline, and never touches the n² pair space."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import embedding_lsh_pairs  # noqa: PLC0415
 
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < COS_PAIR_MAX_ID)
@@ -1111,7 +1082,6 @@ WHERE round(list_dot_product(ea.v, eb.v) /
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VECTOR_SEARCH top-k (reference :379-384): brute-force exact cosine,
     broadcast index, per-query rank. k=3 like the reference."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < ANN_NQ).select(
         F.col("vec_id").alias("qid"), F.col("embedding")
@@ -1173,7 +1143,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller nprobe trades recall for the scan reduction. The index builds
     once per (session, sf_dir) and is cached (bench.py times the cold
     build+probe and the steady-state probe as separate lines)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
         vector_search_ivf_parquet,
     )
@@ -1227,7 +1196,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (operators/asof_join.py): each purchase matched to the
     latest preceding view of the same user. Union + one window pass — no
     pair-space materialization (the 100-TB path)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.asof_join import asof_join  # noqa: PLC0415
 
     ev = _events(spark, sf_dir)
@@ -1257,7 +1225,6 @@ ASOF LEFT JOIN (SELECT user_id, event_id AS view_id, ts FROM events
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID (stopword-hit argmax)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     return docs.select("doc_id", lang_id_col("text").alias("lang_pred"))
 
@@ -1287,7 +1254,6 @@ FROM m
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + BPE-ish subword estimate."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -1308,7 +1274,6 @@ def q_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-doc repetition quality signals (Gopher/RefinedWeb-style
     duplicate-word and top-bigram fractions) — explode + two
     partial-aggregated groupBys, linear in corpus tokens."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.text_analysis import (  # noqa: PLC0415
         repetition_scores,
     )
@@ -1341,7 +1306,6 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality signal: mean token log-prob under an add-one
     unigram model trained on the corpus itself. ln once per DISTINCT term,
     integer micro-nats summed per doc — partition-order-proof."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.text_analysis import (  # noqa: PLC0415
         unigram_lm_scores,
     )
@@ -1378,7 +1342,6 @@ def q_tiered_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     head at 100%, middle at 50%, tail at 10% by deterministic hash
     bucket. Composition: lm_score → CDF tiers over the score DOMAIN →
     codegen admit filter; no random draw anywhere."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.text_analysis import (  # noqa: PLC0415
         unigram_lm_scores,
     )
@@ -1448,7 +1411,6 @@ def q_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gated corpus — order matters and the oracle reproduces it);
     (3) deterministic hash train/val/test split. Every stage rand()-free
     and integer-exact, the whole chain one SQL oracle."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.text_analysis import (  # noqa: PLC0415
         unigram_lm_scores,
     )
@@ -1490,7 +1452,7 @@ def _sql_curation_v2() -> str:
     adm = hash_bucket_sql("doc_id", "cur2")
     spl = hash_bucket_sql("doc_id", "cur2split")
     return f"""
-WITH {_sql_span_postings_ctes(SPAN_W)},
+WITH {_span_postings_ctes_sql(SPAN_W)},
 g AS (SELECT h, min(doc_id) AS mn, max(doc_id) AS mx FROM spans GROUP BY h),
 dup AS (SELECT h FROM g WHERE mn <> mx),
 per_doc AS (SELECT doc_id, count(*) AS n FROM spans GROUP BY doc_id),
@@ -1545,7 +1507,6 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter-independent) → every vector labeled with its cluster
     (= component min id) and cluster size. The principled grouping the
     greedy single-pass `neardup_dedup` trades away."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.components import (  # noqa: PLC0415
         duplicate_clusters,
     )
@@ -1596,7 +1557,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     LPA's most-frequent-neighbor vote finds the densely-attached
     groups. Fixed rounds (pagerank discipline), smallest-label
     tie-break, unrolled-CTE oracle reproduces every round."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.components import (  # noqa: PLC0415
         label_propagation,
     )
@@ -1656,7 +1616,6 @@ def q_ann_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast → the ceiling moves 4× before IVF must take over). Queries
     stay full-precision; reconstruction q·s is exact float64 on both
     engines, so the oracle reproduces the quantized ranking bit-for-bit."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.quantize import (  # noqa: PLC0415
         vector_search_topk_quantized,
     )
@@ -1743,7 +1702,6 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs m LUT gathers instead of a 64-dim dot; the index is never
     broadcast or collected. Run at nprobe == nlist, results are EXACT PQ
     and share ann_pq's oracle."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.quantize import (  # noqa: PLC0415
         vector_search_ivfpq_parquet,
     )
@@ -1779,7 +1737,6 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest-id vectors) so the oracle reproduces codebook, assignment and
     ranking exactly; k-means codebooks are the recall-quality path and
     are pinned by recall tests in pytest."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.quantize import (  # noqa: PLC0415
         pq_codebooks_from_rows,
         vector_search_topk_pq,
@@ -1847,7 +1804,6 @@ def q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRANSITIVE near-dup cluster, so a paraphrase of a training row can
     never land in eval — per-row splits cannot prevent that contamination
     mode."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.components import (  # noqa: PLC0415
         leakage_safe_split,
     )
@@ -1902,7 +1858,6 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge rewrite as a list_reduce string fold; the exact-equality gate
     vs an independent dict-based Python trainer additionally lives in
     test_operators.py."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.bpe import learn_bpe_merges  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents")
@@ -1979,7 +1934,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     a later rank than the merge that produced it — the hash gate proves
     the equivalence on real data. At 100 TB: encoding is map-only over
     the corpus; the distinct-word fold table is vocabulary-sized."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.bpe import (  # noqa: PLC0415
         apply_bpe,
         learn_bpe_merges,
@@ -1999,7 +1953,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _sql_bpe_encode_ctes(n_merges: int = 8) -> str:
+def _bpe_encode_ctes_sql(n_merges: int = 8) -> str:
     """Training chain from _sql_bpe_merges (same b1..bN merge CTEs) plus
     an encode chain: per DISTINCT word, one list_reduce fold per rank in
     training order (sequential replay — equivalent to the application
@@ -2052,7 +2006,7 @@ wc AS (SELECT doc_id, CAST(len({toks}) AS BIGINT) AS n_words FROM documents)"""
 
 def _sql_bpe_encode(n_merges: int = 8) -> str:
     return (
-        _sql_bpe_encode_ctes(n_merges)
+        _bpe_encode_ctes_sql(n_merges)
         + """
 SELECT wc.doc_id, wc.n_words,
        COALESCE(agg.n_bpe_tokens, 0) AS n_bpe_tokens,
@@ -2073,7 +2027,6 @@ def q_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics: count of strictly-smaller rows), ppm in exact integers.
     At 100 TB the corpus is never globally sorted — only the distinct
     value table is."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.indexing import (  # noqa: PLC0415
         global_running_sum,
     )
@@ -2116,7 +2069,6 @@ def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution-shape quality signal between repeated-char spam (→0)
     and random noise (→ln|alphabet|); the oracle-expressible companion
     of the zlib compression ratio."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.text_analysis import (  # noqa: PLC0415
         char_entropy_scores,
     )
@@ -2162,7 +2114,6 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, no per-purchase scan; out-of-window or missing touches
     yield NULL attribution (the purchase row survives). Total order
     (ts, event_id) makes the pick engine-exact; gaps in integer µs."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     ev = _events(spark, sf_dir).filter(
@@ -2236,7 +2187,6 @@ def q_funnel_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     core): anchored greedy view→click→purchase funnel per user, 7-day
     completion bound. One pattern-type-filtered shuffle + a codegen'd
     per-user step-through — no k-way self-joins."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.cep import match_funnel  # noqa: PLC0415
 
     ev = _events(spark, sf_dir)
@@ -2289,7 +2239,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     — pure codegen expressions, a map-only pass at any scale. The oracle
     replays the same plant+scrub in DuckDB (patterns restricted to the
     Java/RE2-common regex subset)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.text_analysis import (  # noqa: PLC0415
         redact_pii_col,
     )
@@ -2334,7 +2283,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     {PACK_BUDGET}-token bins per language shard — ONE partitioned window
     (single hash exchange on the shard key), never a global sort; order key
     is data (doc_id) so bins are retry-deterministic."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.packing import (  # noqa: PLC0415
         pack_contiguous,
     )
@@ -2368,7 +2316,6 @@ def q_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing bin per lang is legitimately underfull; an overflow doc
     reports > 1e6). One combinable groupBy on top of the packing
     window — the report costs nothing beyond the packing itself."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.packing import (  # noqa: PLC0415
         pack_contiguous,
     )
@@ -2405,7 +2352,6 @@ ORDER BY lang, bin_id
 
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length/punct/stopword/word-length bands."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     return docs.select("doc_id", quality_score_col("text").alias("quality"))
 
@@ -2432,7 +2378,6 @@ FROM t
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: min of rolling char-shingle hashes."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     from flink_sql_ai_meetingcoach_azure_spark.functions.text_analysis import fingerprint_col  # noqa: PLC0415
 
@@ -2456,7 +2401,6 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (byte length, content hash). The decode/feature stage is the pandas-UDF
     path in operators/multimodal.py; this query checks the schema/bytes
     plumbing that feeds it."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     blob = F.encode(F.col("text"), "utf-8")
     return docs.select(
@@ -2482,7 +2426,6 @@ def q_png_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the is_png=false/NULL survival path. The oracle builds the
     identical bytes and slices the hex string (DuckDB cannot substring
     a BLOB)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         parse_png_header,
     )
@@ -2565,7 +2508,6 @@ def q_jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry raw text bytes (is_jpeg=false/NULL survival). The oracle
     replays the identical walk as a list_reduce fold over the hex
     string."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         parse_jpeg_header,
     )
@@ -2678,7 +2620,6 @@ def q_wav_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes 'fmt ' in its payload (walk-vs-byte-search pin); odd doc_ids
     carry raw text (is_wav=false/NULL survival). The oracle replays the
     identical chunk walk as a list_reduce fold over the hex string."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         parse_wav_header,
     )
@@ -2786,7 +2727,6 @@ def q_media_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-format parser/decoder see only its own rows. doc_id % 6 routes
     each row to one of five containers or raw text; the oracle builds
     the identical bytes and classifies/slices the hex string."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         sniff_media,
     )
@@ -2861,7 +2801,6 @@ def q_media_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined pass at any corpus size. Byte and dimension sums are exact
     integers (BMP's negative top-down heights sum as-is); formats with
     no fixed-offset dims (jpeg/wav/unknown) report NULL sums."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         sniff_media,
     )
@@ -2933,7 +2872,6 @@ def q_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Image dims vary per doc (W = 5 + id%4, H = 4 + id%3) so the NN
     grid is non-trivial and small dims leave some Adam7 passes
     empty."""
-    _prep(spark)
     import pyspark.sql.types as T  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
@@ -3055,7 +2993,6 @@ def q_wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle stays format-blind. A wrong endianness, sample width,
     header offset, sign convention, shift direction or float rounding
     all break the hash."""
-    _prep(spark)
     import pyspark.sql.types as T  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
@@ -3190,7 +3127,6 @@ def q_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     LZW width bump, bit order, interlace pass, or table override all
     break the hash. Animation compositing (transparency, dispose) is
     pinned by pytest round-trips."""
-    _prep(spark)
     import pyspark.sql.types as T  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
@@ -3290,7 +3226,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fake decoder is md5 counter-mode byte math, so the oracle recomputes
     the decoded tensor's exact integer byte sum in SQL (the float feature
     vector stays pytest-covered; ``intensity_sum`` pins the decode itself)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         attach_media_metadata,
         decode_and_featurize,
@@ -3348,7 +3283,6 @@ def q_rag_pipeline_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit vectors, 6-dp rounded sims, payload tie-break) so the oracle
     reproduces retrieval order bit-for-bit. bench.py measures this entry —
     per-row embed+GEMM+generate cost, not session overhead."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.models import default_registry  # noqa: PLC0415
     from flink_sql_ai_meetingcoach_azure_spark.plans import (  # noqa: PLC0415
         build_knowledge_index,
@@ -3385,14 +3319,14 @@ def _sql_rag_pipeline_bulk() -> str:
     )
     clean = "AND NOT regexp_matches(text, '" + _JSON_CLEAN_RE + "')"
     return f"""
-WITH {_sql_chunk_cte(BULK_KDOCS, clean)},
+WITH {_chunk_cte_sql(BULK_KDOCS, clean)},
 chd AS (SELECT DISTINCT document_id, chunks FROM ch),
 r AS (SELECT document_id, chunks,
-             {_sql_mock_embedding_raw('chunks', BULK_DIM)} AS raw FROM chd),
+             {_mock_embedding_raw_sql('chunks', BULK_DIM)} AS raw FROM chd),
 idx AS (SELECT document_id, chunks, {_SQL_EMB_NORM} AS embedding FROM r),
 msgs AS (SELECT DISTINCT substr(text, 1, 120) AS message
          FROM documents WHERE doc_id < {BULK_NMSG} {clean}),
-mr AS (SELECT message, {_sql_mock_embedding_raw('message', BULK_DIM)} AS raw FROM msgs),
+mr AS (SELECT message, {_mock_embedding_raw_sql('message', BULK_DIM)} AS raw FROM msgs),
 qe AS (SELECT message, {_SQL_EMB_NORM} AS qv FROM mr),
 scored AS (SELECT message, document_id, chunks,
                   round(list_dot_product(qv::DOUBLE[], embedding::DOUBLE[]), 6) AS sim
@@ -3445,7 +3379,6 @@ def q_chunk_embed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     array<float>: the driver's value hasher can't hash list cells, and the
     quantization (round-half-away on the float32-exact double, identical in
     Spark and DuckDB) keeps the check bit-exact without float formatting."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.models import default_registry  # noqa: PLC0415
     from flink_sql_ai_meetingcoach_azure_spark.plans import build_knowledge_index  # noqa: PLC0415
 
@@ -3473,7 +3406,7 @@ def q_chunk_embed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 INGEST_MAX_ID = 300
 
 
-def _sql_mock_embedding_raw(text_expr: str, dim: int = EMB_DIM) -> str:
+def _mock_embedding_raw_sql(text_expr: str, dim: int = EMB_DIM) -> str:
     """DuckDB list expr: the mock provider's md5-block embedding of
     ``text_expr`` BEFORE normalization (providers.mock_embedding)."""
     return (
@@ -3490,7 +3423,7 @@ _SQL_EMB_NORM = (
 )
 
 
-def _sql_chunk_cte(max_id: int, extra_where: str = "") -> str:
+def _chunk_cte_sql(max_id: int, extra_where: str = "") -> str:
     """Closed-form ML_CHARACTER_TEXT_SPLITTER over documents (validated
     chunk-for-chunk vs chunk_text on all 5 000 sf0.1 docs; no '###' in
     testdata, so splits collapse to stride windows + one tail-merge case):
@@ -3522,8 +3455,8 @@ _SQL_EMB_DIGEST = (
 
 def _sql_chunk_embed_ingest() -> str:
     return f"""
-WITH {_sql_chunk_cte(INGEST_MAX_ID)},
-r AS (SELECT document_id, chunks, {_sql_mock_embedding_raw('chunks')} AS raw FROM ch),
+WITH {_chunk_cte_sql(INGEST_MAX_ID)},
+r AS (SELECT document_id, chunks, {_mock_embedding_raw_sql('chunks')} AS raw FROM ch),
 e AS (SELECT document_id, chunks, {_SQL_EMB_NORM} AS embedding FROM r)
 SELECT document_id, chunks, {_SQL_EMB_DIGEST.format(emb='embedding')} AS emb_digest
 FROM e
@@ -3540,7 +3473,6 @@ def q_vocab_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, token) partials, not raw tokens). At 100 TB swap the exact
     distinct for approx_count_distinct (HLL, one pass, mergeable) — the
     exact form is kept for oracle parity."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents")
@@ -3567,7 +3499,6 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-type rollup through an 8-way SALTED join (big side salted by
     stable hash, medium side replicated per salt). Salting changes the
     partitioning, never the semantics — the oracle is the PLAIN join."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.skew import salted_join  # noqa: PLC0415
 
     ev = _events(spark, sf_dir).select("event_id", "event_type")
@@ -3592,7 +3523,6 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable across engines. At 100 TB the token count shuffle is keyed by
     (lang, token) — uniform save stopwords, which partial aggregation
     collapses before the exchange."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
@@ -3635,7 +3565,6 @@ def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch and the estimates are deterministic and hash-verifiable —
     output compares the exact top-20 terms with their sketch estimates
     (overestimate visible, never under)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (  # noqa: PLC0415
         md5_bigint_col,
     )
@@ -3713,7 +3642,6 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller than k, making the estimate exact there) — pure BIGINTs.
     Fixed hashes make sketch AND estimate deterministic — output
     compares against the exact Jaccard (both in integer ppm)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (  # noqa: PLC0415
         md5_bigint_col,
     )
@@ -3825,7 +3753,6 @@ def q_decayed_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge can diverge across engines/partitionings. The day domain is a
     tiny broadcast (≤ retention window in days); the corpus pass stays
     one codegen scan + partial-aggregated groupBy."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     age_days = F.expr(
@@ -3892,7 +3819,6 @@ def q_hll_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-range ln correction, 6-dp rounded. Output compares the exact
     COUNT(DISTINCT) with the estimate per language — the sketch IS the
     documented 100 TB swap for the exact expand."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (  # noqa: PLC0415
         md5_bigint_col,
     )
@@ -3985,7 +3911,6 @@ def q_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution check). Exact percentile = one sort-based agg per group;
     at 100 TB swap in approx_percentile (t-digest sketch, map-side
     combinable) — documented tradeoff, exact kept for oracle parity."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     return (
         docs.groupBy("lang")
@@ -4010,7 +3935,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware exact dedup: per content group keep the row with the
     most chars (id asc tie-break) — the curation policy when duplicates
     differ in metadata quality."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import dedup_keep_best  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "source", "n_chars")
@@ -4051,7 +3975,6 @@ def q_neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins for this (cluster-sizes join inside duplicate_clusters, a
     docs-attrs join before the aggregate, and a winner re-join with a
     second docs scan after it)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.components import (  # noqa: PLC0415
         connected_components,
     )
@@ -4120,7 +4043,6 @@ def q_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup REMOVAL end-to-end: LSH candidate pairs → drop
     every vector near-duplicating a smaller id. One GEMM bucket pass, one
     bucketed self-join, one anti-join — no n² pair space, no iteration."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         embedding_lsh_pairs,
         neardup_survivors,
@@ -4155,7 +4077,6 @@ ORDER BY vec_id
 def q_deterministic_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test labeling by md5 hash range: disjoint, exhaustive,
     stable under any partitioning — the rand()-free split."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.sampling import (  # noqa: PLC0415
         deterministic_split,
     )
@@ -4183,7 +4104,6 @@ ORDER BY doc_id
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stratum deterministic downsampling (halve the dominant 'en'
     stratum, keep the tail) — a pure filter, no count pass, no shuffle."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.sampling import (  # noqa: PLC0415
         stratified_sample,
     )
@@ -4213,7 +4133,6 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     train/val/test split. Every stage is a narrow filter or one combinable
     shuffle (the dedup groupBy) — the whole pipeline is two exchanges at
     any scale (dedup + final sort)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import dedup_exact  # noqa: PLC0415
     from flink_sql_ai_meetingcoach_azure_spark.operators.sampling import (  # noqa: PLC0415
         deterministic_split,
@@ -4265,7 +4184,6 @@ def q_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-UDF pipeline itself is value-verified, not just rows-counted.
     Similarity = dot product on unit vectors, rounded to 6 dp before
     ranking; ties broken by (document_id, chunks)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.vectors import dot_col  # noqa: PLC0415
     from flink_sql_ai_meetingcoach_azure_spark.models import default_registry  # noqa: PLC0415
     from flink_sql_ai_meetingcoach_azure_spark.plans import build_knowledge_index  # noqa: PLC0415
@@ -4305,12 +4223,12 @@ def q_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_rag_retrieval() -> str:
     return f"""
-WITH {_sql_chunk_cte(INGEST_MAX_ID)},
-r AS (SELECT document_id, chunks, {_sql_mock_embedding_raw('chunks')} AS raw FROM ch),
+WITH {_chunk_cte_sql(INGEST_MAX_ID)},
+r AS (SELECT document_id, chunks, {_mock_embedding_raw_sql('chunks')} AS raw FROM ch),
 idx AS (SELECT document_id, chunks, {_SQL_EMB_NORM} AS embedding FROM r),
 msgs AS (SELECT 'msg ' || CAST(event_id AS VARCHAR) || ' ' || event_type AS message
          FROM events WHERE event_id < {RAG_NQ}),
-mr AS (SELECT message, {_sql_mock_embedding_raw('message')} AS raw FROM msgs),
+mr AS (SELECT message, {_mock_embedding_raw_sql('message')} AS raw FROM msgs),
 qe AS (SELECT message, {_SQL_EMB_NORM} AS qv FROM mr),
 scored AS (SELECT message, document_id, chunks,
                   round(list_dot_product(qv::DOUBLE[], embedding::DOUBLE[]), 6) AS sim
@@ -4342,7 +4260,6 @@ def q_rag_pipeline_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     string algebra). Retrieval ordering is pinned (sim desc, document_id,
     chunks on the 6-dp dot product) so generation inputs are identical
     across engines."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.functions.text import (  # noqa: PLC0415
@@ -4419,13 +4336,13 @@ def _sql_rag_pipeline_verified() -> str:
         f"'\", \"used_excerpt\": \"' || substr(c{i}, 1, 80) || '\"}}'"
     )
     return f"""
-WITH {_sql_chunk_cte(INGEST_MAX_ID, "AND NOT regexp_matches(text, '" + _JSON_CLEAN_RE + "')")},
+WITH {_chunk_cte_sql(INGEST_MAX_ID, "AND NOT regexp_matches(text, '" + _JSON_CLEAN_RE + "')")},
 chd AS (SELECT DISTINCT document_id, chunks FROM ch),
-r AS (SELECT document_id, chunks, {_sql_mock_embedding_raw('chunks')} AS raw FROM chd),
+r AS (SELECT document_id, chunks, {_mock_embedding_raw_sql('chunks')} AS raw FROM chd),
 idx AS (SELECT document_id, chunks, {_SQL_EMB_NORM} AS embedding FROM r),
 msgs AS (SELECT 'msg ' || CAST(event_id AS VARCHAR) || ' ' || event_type AS message
          FROM events WHERE event_id < {RAG_NQ}),
-mr AS (SELECT message, {_sql_mock_embedding_raw('message')} AS raw FROM msgs),
+mr AS (SELECT message, {_mock_embedding_raw_sql('message')} AS raw FROM msgs),
 qe AS (SELECT message, {_SQL_EMB_NORM} AS qv FROM mr),
 scored AS (SELECT message, document_id, chunks,
                   round(list_dot_product(qv::DOUBLE[], embedding::DOUBLE[]), 6) AS sim
@@ -4475,7 +4392,6 @@ def q_ddl_ctas_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog-qualified names, $rowtime mapping and CTAS/view registration all
     exercised. (A deterministic tie-break is added over the reference's
     bare ORDER BY $rowtime DESC so the oracle hash is stable.)"""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.ddl import FlinkStatementSession  # noqa: PLC0415
 
     sess = FlinkStatementSession(spark)
@@ -4529,7 +4445,6 @@ def q_ddl_struct_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     constructor, CAST(ROW(..) AS ROW<..>) → named_struct, 1-based
     subscripts → element_at, and CAST(<complex> AS STRING) → the engine's
     JSON rendering — all via SQL statements."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.ddl import FlinkStatementSession  # noqa: PLC0415
 
     sess = FlinkStatementSession(spark)
@@ -4584,7 +4499,6 @@ def q_ddl_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break — so a pure-SQL oracle reproduces every stage including
     the generated coaching JSON byte-for-byte. Statement-vs-programmatic
     byte-parity is separately pinned by tests/test_ddl.py."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.ddl import run_reference_pipeline  # noqa: PLC0415
 
     docs = (
@@ -4624,12 +4538,12 @@ def _sql_ddl_reference_pipeline() -> str:
         f"'\", \"used_excerpt\": \"' || substr(c{i}, 1, 80) || '\"}}'"
     )
     return f"""
-WITH {_sql_chunk_cte(INGEST_MAX_ID, "AND NOT regexp_matches(text, '" + _JSON_CLEAN_RE + "')")},
-r AS (SELECT document_id, chunks, {_sql_mock_embedding_raw('chunks')} AS raw FROM ch),
+WITH {_chunk_cte_sql(INGEST_MAX_ID, "AND NOT regexp_matches(text, '" + _JSON_CLEAN_RE + "')")},
+r AS (SELECT document_id, chunks, {_mock_embedding_raw_sql('chunks')} AS raw FROM ch),
 idx AS (SELECT document_id, chunks, {_SQL_EMB_NORM} AS embedding FROM r),
 msgs AS (SELECT 'msg ' || CAST(event_id AS VARCHAR) || ' ' || event_type AS message
          FROM events WHERE event_id < {RAG_NQ} AND event_type = 'purchase'),
-mr AS (SELECT message, {_sql_mock_embedding_raw('message')} AS raw FROM msgs),
+mr AS (SELECT message, {_mock_embedding_raw_sql('message')} AS raw FROM msgs),
 qe AS (SELECT message, {_SQL_EMB_NORM} AS qv FROM mr),
 scored AS (SELECT message, document_id, chunks,
                   round(list_dot_product(qv::DOUBLE[], embedding::DOUBLE[])
@@ -4725,7 +4639,7 @@ def _bm25_qterms_df(spark: SparkSession):
     return spark.createDataFrame(rows, "qid bigint, term string")
 
 
-def _sql_bm25_ctes() -> str:
+def _bm25_ctes_sql() -> str:
     """Shared DuckDB CTE block reproducing operators/text_search.py
     (tokenize → prune to query terms → tf/df/stats → integer micro-point
     BM25 → per-qid rank)."""
@@ -4768,7 +4682,6 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     RAG. Postings are pruned to query terms BEFORE the tf shuffle; stats
     and df are broadcast; scores are exact integer micro-points
     (operators/text_search.py)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.text_search import (  # noqa: PLC0415
         bm25_scores,
         top_k_ranks,
@@ -4784,7 +4697,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_BM25_TOPK = f"""
-WITH {_sql_bm25_ctes()}
+WITH {_bm25_ctes_sql()}
 SELECT qid, doc_id, score_micro, rank
 FROM bm_ranked WHERE rank <= {BM25_K}
 ORDER BY qid, rank
@@ -4798,7 +4711,6 @@ def q_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     production pipeline tail where a cross-encoder would sit; the corpus
     is never touched by the reranker (candidate docs semi-joined before
     tokenization)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.text_search import (  # noqa: PLC0415
         rerank_by_term_overlap,
     )
@@ -4816,7 +4728,7 @@ def q_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_rerank_topk() -> str:
     return f"""
-WITH {_sql_hybrid_ctes()},
+WITH {_hybrid_ctes_sql()},
 cand AS (SELECT qid, doc_id, fused_rank FROM fr WHERE fused_rank <= {HYBRID_K}),
 dterm0 AS (SELECT doc_id, unnest(toks) AS term FROM dt),
 dterm AS (SELECT DISTINCT doc_id, term FROM dterm0),
@@ -4842,7 +4754,6 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     with Reciprocal Rank Fusion (integer micro-points — exact). Query i
     pairs keyword query BM25_QUERIES[i] with query vector embedding[i]
     over the shared id space (doc_id ≡ vec_id in the testdata)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.text_search import (  # noqa: PLC0415
         bm25_scores,
         rrf_fuse,
@@ -4876,10 +4787,10 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_hybrid_ctes() -> str:
+def _hybrid_ctes_sql() -> str:
     """BM25 CTEs + the vector half + RRF fusion, ending at ``fr`` —
     shared by the hybrid entry and the rerank stage built on it."""
-    return f"""{_sql_bm25_ctes()},
+    return f"""{_bm25_ctes_sql()},
 qv AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v FROM embeddings
        WHERE vec_id < {len(BM25_QUERIES)}),
 corpus AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -4905,7 +4816,7 @@ fr AS (SELECT qid, doc_id, rrf_micro, n_lists,
 
 
 SQL_HYBRID_RRF = f"""
-WITH {_sql_hybrid_ctes()}
+WITH {_hybrid_ctes_sql()}
 SELECT qid, doc_id, rrf_micro, n_lists, fused_rank
 FROM fr WHERE fused_rank <= {HYBRID_K}
 ORDER BY qid, fused_rank
@@ -4938,7 +4849,6 @@ def q_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5-ranked per-cluster sample
     (operators/clustering.py). The refinement keeps cells balanced, so
     the per-cluster quota samples modes instead of one dominant cell."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.clustering import (  # noqa: PLC0415
         assign_nearest_centroid,
         cluster_balanced_sample,
@@ -4955,7 +4865,7 @@ def q_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_cluster_sample() -> str:
-    ctes, cf = _sql_lloyd_ctes(CLUSTER_K)
+    ctes, cf = _lloyd_ctes_sql(CLUSTER_K)
     return f"""
 WITH {ctes},
 seeds AS (SELECT cid, list_transform(v, x -> CAST(x AS DOUBLE) / 1000000.0) AS cv
@@ -4987,7 +4897,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     what isn't). One distinct-shingle pass → one combinable
     document-frequency count → one shingle-keyed join back + per-doc
     combinable sum. Linear; the df table is vocabulary-sized."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import shingles  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents")
@@ -5064,7 +4973,6 @@ def q_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns: the driver's canonicalizer sorts raw pandas cells and
     cannot hash list cells (r10's only red row), and a scalar encoding
     is what a downstream prompt-assembly stage consumes anyway."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     ev = _events(spark, sf_dir)
@@ -5112,7 +5020,6 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is sketch-sized, 45 pairs × ≤2k rows, however big the corpus).
     At 100 TB you keep only the KMV half; the exact half is the quality
     gauge the gate verifies it against. Integer ppm everywhere."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (  # noqa: PLC0415
@@ -5256,7 +5163,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery (1-row broadcast cross, exact integer cents) + LEFT ANTI
     join pattern, rolled up per nation. The anti probe shuffles each
     side once on custkey; the average never plans a window."""
-    _prep(spark)
     cust = _t(spark, sf_dir, "customer")
     cents = F.round(F.col("c_acctbal") * 100).cast("bigint")
     c = cust.select("c_custkey", "c_nationkey", cents.alias("bal_cents"))
@@ -5310,7 +5216,6 @@ def q_global_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/indexing.py). Ids equal the global ORDER BY rank exactly,
     independent of partition boundaries; oracle = DuckDB row_number over
     the same total order."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.indexing import (  # noqa: PLC0415
         contiguous_row_ids,
     )
@@ -5354,7 +5259,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     largest cell fits; the all-pairs step never sees the corpus. Output
     is the surviving (cluster_id, vec_id, sim-to-centroid) rows; 6-dp
     rounding + id tie-breaks make the drop set engine-reproducible."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.clustering import (  # noqa: PLC0415
         assign_nearest_centroid,
     )
@@ -5415,7 +5319,7 @@ def _sql_semantic_dedup() -> str:
         "round(list_dot_product({a}, {b}) / "
         "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
     )
-    ctes, cf = _sql_lloyd_ctes(SEMDEDUP_K)
+    ctes, cf = _lloyd_ctes_sql(SEMDEDUP_K)
     return f"""
 WITH {ctes},
 seeds AS (SELECT cid, list_transform(v, x -> CAST(x AS DOUBLE) / 1000000.0) AS cv
@@ -5446,7 +5350,6 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (passes, reasons) from pure integer/ratio signals — a single
     WholeStageCodegen map over the scan
     (functions/text_analysis.py::gopher_filter_cols)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.text_analysis import (  # noqa: PLC0415
         gopher_filter_cols,
     )
@@ -5490,7 +5393,6 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-mixture rebalancing: cap each source at ceil(2·sqrt(n))
     rows chosen by salted-md5 rank (operators/sampling.py::mixture_sample
     — sqrt-temperature flattening of dominant domains, retry-stable)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.sampling import (  # noqa: PLC0415
         mixture_sample,
     )
@@ -5521,7 +5423,6 @@ def q_range_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     a frame), not a ROWS frame. One partitioned window keyed by user;
     integer-cents sums and µs range bounds, so frames and sums are exact
     on any engine/partitioning."""
-    _prep(spark)
     ev = _events(spark, sf_dir).select(
         "event_id",
         "user_id",
@@ -5563,7 +5464,6 @@ def q_above_user_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     back); the oracle states the correlated form. The predicate is
     evaluated in exact integer arithmetic (value·n > sum ⇔ value > avg)
     so float-division drift can never flip a boundary row."""
-    _prep(spark)
     ev = _events(spark, sf_dir).select(
         "event_id",
         "user_id",
@@ -5598,7 +5498,6 @@ def q_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     native `window(ts, '1 hour', '15 minutes')` plans ONE Expand node
     (4 rows per event map-side) + one partial-aggregated groupBy — no
     self-join against a window table."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     return (
@@ -5636,7 +5535,6 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     an array column, in EXACT integer micros — posexplode to (label, pos)
     → combinable BIGINT sum + count → truncated integer division. Float
     summation order never enters, so any partitioning/engine agrees."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     rows = emb.select(
         "label", F.posexplode("embedding").alias("pos", "x")
@@ -5683,7 +5581,6 @@ def q_pivot_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     output schema is static (and the plan is one partial-aggregated pass,
     not one pass per column). Integer-cents sums; absent combinations
     yield 0, not null, so downstream arithmetic is total."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     pivoted = (
@@ -5721,7 +5618,6 @@ def q_argmax_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     EVERY row. The right physical strategy whenever k=1; the struct's
     (value desc implied by max, id as tie-break) ordering makes the
     winner deterministic where `max_by` would not be."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     return (
@@ -5765,7 +5661,6 @@ def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per source + a broadcast quantile list + one combinable
     min-struct pick per (source, quantile). Never a percentile pass
     over the corpus; everything exact BIGINT."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents")
@@ -5858,7 +5753,6 @@ def q_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     even a domain-sized one); first bucket with cum*1e6 >= ppm*n, the
     estimate its exact-integer lower bound ((SUB+sub)*2^e div SUB).
     Everything BIGINT ⇒ hash-identical across engines/partitionings."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     hist = (
         li.select(
@@ -5946,7 +5840,6 @@ def q_hdr_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT-value table (operators/indexing.py::global_running_sum) —
     never a single-partition global window over rows; the estimate side
     reuses q_hdr_quantiles verbatim."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.indexing import (  # noqa: PLC0415
         global_running_sum,
     )
@@ -6028,7 +5921,6 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only float, rounded once) and the reject flag. The SAME core
     the streaming ks_drift_readout derives its statistic from (r11,
     VERDICT r10 #6), so batch and continuous forms cannot drift."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.drift import (  # noqa: PLC0415
         ks_from_counts,
     )
@@ -6089,7 +5981,6 @@ def q_rate_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT sums, and the only floats are the two sqrt's of exact
     integers + one final division, rounded once to milli-units.
     Zero-variance series pin r = 0."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     ev = _events(spark, sf_dir)
@@ -6165,7 +6056,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     digests, never document bodies — at 100 TB the diff costs two
     content-hash scans plus a key-shuffle of id+hash rows. Status
     logic is pure codegen CASE on null-ness + hash equality."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     v1 = docs.filter(F.col("doc_id") % 7 != 0).select(
         F.col("doc_id").alias("id1"), F.md5("text").alias("h1")
@@ -6219,7 +6109,6 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable groupBy — the profiling companion to the quantile entry.
     Integer bucket ids floor toward -inf on BOTH engines so negative
     values cannot straddle a bucket boundary."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     bucket = F.floor(cents / F.lit(100)).cast("bigint")
@@ -6250,7 +6139,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic product-analytics triangle, self-join-free: one combinable
     min-per-user pass broadcast back, then one distinct-count aggregate
     keyed by (cohort, day)."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     days = ev.select(
         "user_id", F.date_trunc("day", "ts").alias("d")
@@ -6288,7 +6176,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped when that latest operation is a delete. One partitioned
     window over the log; out-of-order capture is resolved by the sequence
     columns, not arrival order."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         apply_changes,
     )
@@ -6332,7 +6219,6 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     training on heavy-tailed measurements. Thresholds rounded to integer
     cents so the clip comparison can never straddle an engine's last
     float ulp."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     vals = ev.select("event_id", cents.alias("c"))
@@ -6377,7 +6263,6 @@ def q_unpivot_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's native `unpivot` produces one Expand pass (no per-column
     union); zero rows kept so pivot→unpivot is lossless and the pair is
     mutually inverse over the same fixed column set."""
-    _prep(spark)
     wide = q_pivot_by_type(spark, sf_dir)
     return (
         wide.unpivot(
@@ -6411,7 +6296,6 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     nulls-respecting window semantics ROWS frames alone don't give you.
     The per-user grid is generated with sequence+explode (bounded by the
     user's own time span) and joined back on (user, hour)."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     # spans derive FROM hourly (date_trunc is monotone, so
@@ -6476,7 +6360,6 @@ def q_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     (previous/next amount), ntile quartiles, cume_dist — ONE partitioned
     window pass, integer-cents values (exact running sums, no float-sum
     drift). Strict superset of the running-sum-only entry it subsumes."""
-    _prep(spark)
     ev = _events(spark, sf_dir).select(
         "event_id",
         "user_id",
@@ -6516,7 +6399,6 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows in ONE pass (partial-aggregated, no self-union) — the OLAP
     reporting shape. NULL group slots are coalesced to 'ALL' so every row
     is hash-assertable."""
-    _prep(spark)
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
@@ -6565,7 +6447,6 @@ def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     by coalescing the grouped column, which would conflate a genuine
     NULL detail group with the subtotal on nullable dimensions (ADVICE
     r5; safe-but-fragile on TPC-H's NOT NULL columns)."""
-    _prep(spark)
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
@@ -6617,7 +6498,6 @@ def q_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the brute-force levenshtein join — at scale the candidate
     join touches O(corpus) keys, never the n² pair space the oracle
     scans."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.editdist import (  # noqa: PLC0415
         edit_distance_pairs,
     )
@@ -6653,7 +6533,6 @@ def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_layout.py). Key computation is map-only exact-integer
     bit-interleaving (operators/layout.py); normalization bounds come
     from one 1-row aggregate."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.layout import (  # noqa: PLC0415
         normalize_to_bits,
         zorder_key,
@@ -6712,7 +6591,6 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     Components are 6-dp-rounded float64, so the oracle recomputes them
     exactly; output exploded to (vec_id, j, yj) scalars for the driver's
     value hash."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.projection import (  # noqa: PLC0415
         random_projection,
     )
@@ -6759,7 +6637,6 @@ def q_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     query row its version; tombstones carry forward as explicit NULLs, so a
     deleted dimension never resurrects. One exchange, linear, no
     non-equi join, no per-event scan."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     ev = _events(spark, sf_dir)
@@ -6841,7 +6718,6 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed by the NEXT change (deletes close but emit nothing),
     `is_current` marks open intervals. One partitioned lead() window —
     the warehouse-history complement of the final-state CDC collapse."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         scd2_history,
     )
@@ -6893,7 +6769,6 @@ def q_ann_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-dp-rounded with id tie-breaks, so the full composition — projection
     literals, shortlist boundary, re-rank — is hash-replayed by the
     oracle."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.projection import (  # noqa: PLC0415
         vector_search_topk_projected,
     )
@@ -7012,7 +6887,6 @@ def q_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     row even when a and c differ by 4 edits. Every stage is the audited
     linear-shuffle shape (segment equi-join, log²-round CC, one
     left-join filter)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.components import (  # noqa: PLC0415
         dedup_by_components,
     )
@@ -7058,7 +6932,6 @@ def q_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines divide the same numbers. The decorrelated two-pass shape
     (min-per-key joined back) a cluster wants instead of a correlated
     subquery."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     base = ev.select(
         "user_id",
@@ -7126,7 +6999,6 @@ def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     All aggregates combinable (exact COUNT DISTINCT expands to the
     two-phase plan; the documented 100-TB swap is approx_count_distinct)
     — the data-quality gate every ingest pipeline fronts with."""
-    _prep(spark)
     orders = _t(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     prof = orders.agg(
@@ -7216,7 +7088,6 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell rows per version instead of the ~11 that hour cells cost
     (measured ~2.5x faster at sf0.1, identical results — blocking only
     reorganizes candidates, the overlap predicate verifies every pair)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         scd2_history,
     )
@@ -7286,7 +7157,6 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent·basis-point BIGINT products (price cents × discount bp), one
     map-side-combined 1-row aggregate. The query whose cost at 100 TB is
     just I/O after pushdown."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     disc_bp = F.round(F.col("l_discount") * 100).cast("bigint")
@@ -7321,7 +7191,6 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     join into the fact chain → grouped revenue → top-10. Revenue in
     exact cent·bp integers; ORDER BY revenue DESC with orderkey
     tie-break plans TakeOrderedAndProject — never a global sort."""
-    _prep(spark)
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01")
@@ -7377,7 +7246,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     The c_nationkey = s_nationkey local-supplier predicate rides the
     supplier broadcast as a second equi-key, never a separate join.
     Revenue in exact cent·bp BIGINT."""
-    _prep(spark)
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = _t(spark, sf_dir, "nation").join(
         F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
@@ -7437,7 +7305,6 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the continuous-weight curation knob (quality-weighted corpus
     thinning) as a pure codegen integer filter, retry/partitioning
     stable by construction."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.sampling import (  # noqa: PLC0415
         weighted_sample,
     )
@@ -7469,7 +7336,6 @@ def q_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     [valid_from, valid_to) contains T. One codegen filter over the
     history (which itself is one window); T = (min+max)/2 in exact µs
     integers on both engines."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         scd2_history,
     )
@@ -7521,7 +7387,6 @@ def q_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities — exact integer division, so engines can't disagree
     on a probability digit. The sequence-mining companion to the funnel
     operator."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     bi = (
@@ -7573,7 +7438,6 @@ def q_mask_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Lee et al. ACL'22's curation step; `dup_spans` is the detection
     half). Output keeps the cleaned text as an md5 so the driver hashes
     scalars; counts pin the removal arithmetic."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.spans import (  # noqa: PLC0415
         mask_dup_spans,
     )
@@ -7590,7 +7454,7 @@ def q_mask_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_mask_spans() -> str:
     return f"""
-WITH {_sql_span_postings_ctes(SPAN_W)},
+WITH {_span_postings_ctes_sql(SPAN_W)},
 g AS (SELECT h, min(doc_id) AS mn, max(doc_id) AS mx FROM spans GROUP BY h),
 dup AS (SELECT h FROM g WHERE mn <> mx),
 starts AS (SELECT s.doc_id, s.pos FROM spans s WHERE s.h IN (SELECT h FROM dup)),
@@ -7623,7 +7487,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     and hub nodes can't square). Triangle density distinguishes
     boilerplate families (cliques) from chance collisions (isolated
     edges) — the structural signal behind cluster-then-dedup."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.components import (  # noqa: PLC0415
         triangle_count,
     )
@@ -7683,7 +7546,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds, one hash join + one combinable sum per round; every step
     is BIGINT floor division so the whole iteration hash-matches an
     unrolled SQL oracle (float summation order never enters)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.components import (  # noqa: PLC0415
         pagerank,
     )
@@ -7746,7 +7608,6 @@ def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     score_tiered_sample (operators/sampling.py) — a continuous column at
     100x cardinality must be quantized first (or use approx_percentile
     boundaries), never collected unbounded."""
-    _prep(spark)
     max_domain = 1_000_000
     ev = _events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
@@ -7803,7 +7664,6 @@ def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an exact rational, so ln runs once per DISTINCT bigram on the
     same integers on both engines (micro-nat rounding there; only
     BIGINTs sum per doc)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.text_analysis import (  # noqa: PLC0415
         bigram_lm_scores,
     )
@@ -7851,7 +7711,6 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never a cartesian; the inequality rides the join as a residual
     condition), so the fact⋈fact probe shuffles each side once and the
     final priority rollup is a 5-row aggregate."""
-    _prep(spark)
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1997-01-01"))
@@ -7889,7 +7748,6 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     other fact leg, nation broadcasts, and the top-20 plans
     TakeOrderedAndProject. Revenue in exact cent·bp BIGINTs, acctbal in
     exact cents."""
-    _prep(spark)
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1997-01-01"))
@@ -7940,7 +7798,6 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical conditional-aggregation pattern (CASE inside sum) in
     ONE pass over the joined facts: no per-branch subqueries, no union,
     map-side partials shrink each task to ≤3 rows."""
-    _prep(spark)
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -7979,7 +7836,6 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual OR over the two directions evaluated AFTER both broadcasts
     (never a join explosion — each side is already nation-pruned);
     facts join on their keys once each. Revenue exact cent·bp."""
-    _prep(spark)
     n1, n2 = "NATION_1", "NATION_2"
     nation = _t(spark, sf_dir, "nation").filter(F.col("n_name").isin(n1, n2))
     supp = (
@@ -8042,7 +7898,6 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     there is no hint pinning it — part is NOT F.broadcast-hinted here,
     deliberately), conditional aggregation, and the share as exact
     integer ppm (promo·1e6 div total) — no float division."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-03-01"))
         & (F.col("l_shipdate") < F.lit("1996-06-01"))
@@ -8100,7 +7955,6 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy over lineitem (exact centi-unit BIGINTs); the surviving
     ~1% of orderkeys broadcast back onto orders/customer; top-100 plans
     TakeOrderedAndProject."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     qty_centi = F.round(F.col("l_quantity") * 100).cast("bigint")
     big = (
@@ -8153,7 +8007,6 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     window), and the equality filter keeps every tied winner. The rollup
     relation is computed once — localCheckpoint, since it feeds both the
     max and the final join."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1996-04-01"))
@@ -8199,7 +8052,6 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     (size/quantity lower bounds) into scan-level pushdown while the
     per-block residue evaluates post-join in codegen. One row out,
     exact cent·bp."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     qty = F.col("l_quantity")
@@ -8250,7 +8102,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, ordered by ts with event_id tie-break): new-session flag from
     integer-µs lag arithmetic, session_seq as its running sum — no
     unpartitioned window anywhere, scales as one shuffle by user."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = SESSION_GAP_MIN * 60 * 1_000_000
@@ -8303,7 +8154,6 @@ def q_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a 100 TB write. One combinable groupBy + a broadcast 1-row
     total — the pre-flight check before paying a full shard write
     (skew_profile's sibling for the OUTPUT side)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (  # noqa: PLC0415
         md5_bigint_col,
     )
@@ -8371,7 +8221,6 @@ def q_event_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     EVERY (type, hour) bucket with its flag so quiet hours are part of
     the verified result, not silently absent. Bucket table is
     types × hours regardless of event volume."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     hourly = (
         ev.select(
@@ -8426,7 +8275,6 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion = any purchase in the session. Two exchanges total at
     any scale (the window's by-user and the groupBy's by-(user,
     session) — and the second collapses map-side)."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     gap_us = SESSION_GAP_MIN * 60 * 1_000_000
@@ -8490,7 +8338,6 @@ def q_tfidf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf·idf_micro is a pure BIGINT product, so ranking is exact. The
     idf join shuffles on term (vocabulary-sized — deliberately NOT a
     broadcast); top-k is one partitioned window."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents")
@@ -8568,7 +8415,6 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer division. Plan: brand filter pushed to the part scan,
     part broadcasts into the fact probe, the aggregate side shuffles the
     fact ONCE on partkey."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
     qty_c = F.round(F.col("l_quantity") * 100).cast("bigint")
@@ -8620,7 +8466,6 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     and an outer IN feeding the supplier⋈nation probe (semi join,
     nation broadcast). The 50 %% threshold compares integer quantity
     sums (``2·supp_q > tot_q``) — exact on both engines."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     red_parts = (
         _t(spark, sf_dir, "part")
@@ -8695,7 +8540,6 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     Supplier+nation broadcast into the fact probe; the two fact⋈fact
     probes shuffle lineitem on orderkey — the same key, so AQE reuses
     the exchange."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     supplier = _t(spark, sf_dir, "supplier")
@@ -8775,7 +8619,6 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Region suppliers prune the fact slice via one broadcast semi join
     before the (supplier, part) aggregate; top-100 plans
     TakeOrderedAndProject."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     supplier = _t(spark, sf_dir, "supplier")
     nation = _t(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 3)
@@ -8850,7 +8693,6 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the share is a single conditional aggregation — numerator and
     denominator in the same cent·bp BIGINTs, published as exact integer
     ppm (sum·1e6 div sum), so both engines emit identical integers."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01"))
@@ -8922,7 +8764,6 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     name-matched parts: the part filter is pushed, part/supplier/nation
     broadcast, lineitem⋈orders shuffles once on orderkey, and the rollup
     is a single combinable BIGINT aggregate."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
     orders = _t(spark, sf_dir, "orders")
@@ -8986,7 +8827,6 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold cleared exactly in BIGINTs (value·1000 > total·2). The
     nation's supplier list broadcasts into a semi join BEFORE the
     per-part shuffle."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     supplier = _t(spark, sf_dir, "supplier").filter(F.col("s_nationkey") == 7)
     nat_val = (
@@ -9036,7 +8876,6 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-less customers), then customers per order count. Both
     aggregates are combinable; the join shuffles each side once on
     custkey."""
-    _prep(spark)
     cust = _t(spark, sf_dir, "customer").select("c_custkey")
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
@@ -9079,7 +8918,6 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     part scan, part broadcasts, and COUNT(DISTINCT supplier) plans as
     Spark's two-phase distinct aggregate — partial per partition, never
     a driver-side distinct."""
-    _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#45")
@@ -9126,7 +8964,6 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge hint keeps the demonstration on the sort-merge path where
     bucketing applies even when one side would broadcast at test scale).
     Result identical to the plain join — the oracle runs it layout-free."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.layout import (  # noqa: PLC0415
         write_bucketed,
     )
@@ -9170,7 +9007,6 @@ def q_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     negatives by construction). At 100 TB this is the difference between
     shuffling the whole fact table and shuffling the matching slice.
     Oracle: the plain layout-free join."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.bloom import bloom_join  # noqa: PLC0415
 
     line = _t(spark, sf_dir, "lineitem").select(
@@ -9224,7 +9060,6 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly recounted through a broadcast semi join. The full-vocabulary
     shuffle the naive groupBy pays never happens; output is exact, so
     the oracle computes it with the full group-by it replaces."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
     from flink_sql_ai_meetingcoach_azure_spark.operators.heavy_hitters import (  # noqa: PLC0415
         heavy_hitters_exact,
@@ -9253,7 +9088,6 @@ def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers an engineer reads before picking broadcast vs salting
     (salt_n is the fan-out to hand operators/skew.salted_join). All
     arithmetic is integer div/ceil, bit-reproducible in the oracle."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.skew import skew_profile  # noqa: PLC0415
 
     ev = _events(spark, sf_dir)
@@ -9288,7 +9122,6 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram join is a vocabulary-keyed shuffle (never hint-broadcast),
     and the single ln runs per DISTINCT surviving bigram on exact
     integer ratios, micro-nat rounded — bit-reproducible in DuckDB."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.text_analysis import (  # noqa: PLC0415
         pmi_collocations,
     )
@@ -9331,7 +9164,6 @@ def q_frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the PCY bound), never full doc vocabularies. Exact integer output;
     the oracle computes the unpruned full group-by — pruning is
     result-invariant by the Apriori property."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.itemsets import (  # noqa: PLC0415
         frequent_pairs,
     )
@@ -9366,7 +9198,6 @@ def q_join_blowup(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-key join + a broadcast total; cost is independent of the
     (possibly enormous) forecast output — the number that tells an
     engineer to salt or rethink BEFORE paying the shuffle."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.skew import (  # noqa: PLC0415
         join_blowup_profile,
     )
@@ -9398,7 +9229,6 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     global order. Restricted to doc_id < 50 for the oracle's O(n²)
     brute-force cost, like the other pair entries; the operator itself
     is the scale path."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.setjoin import (  # noqa: PLC0415
         prefix_filter_jaccard_pairs,
     )
@@ -9436,7 +9266,6 @@ def q_term_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     appearing/vanishing entirely are scored, not dropped. Scale shape:
     two combinable term counts, one vocabulary-sized full-outer join,
     broadcast totals, TakeOrderedAndProject."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
 
@@ -9514,7 +9343,6 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SOURCE division instead of union division; both directions of a pair
     emit independently. The standard suppression rule for training
     corpora: drop the contained side, keep the container."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import shingles  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents")
@@ -9574,7 +9402,6 @@ def q_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     justified by THIS table, not folklore). One lag window partitioned by
     (user, type) — never global — then a combinable aggregate; integer µs
     so avg = exact sum div count."""
-    _prep(spark)
     from pyspark.sql import Window as W  # noqa: PLC0415
 
     ev = _events(spark, sf_dir)
@@ -9626,7 +9453,6 @@ def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries share) rounded to 6 dp BEFORE micro-int conversion, so the
     per-group sums are exact integers — cross-engine and
     partition-order safe. One map pass + one combinable aggregate."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.vectors import (  # noqa: PLC0415
         norm_col,
     )
@@ -9679,7 +9505,6 @@ def q_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the streaming-rollup algebra). At true 100 TB row counts the
     micro² sums approach BIGINT range — the documented fallback is
     DECIMAL(38,0) partials, same plan shape."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     q = F.transform(
         "embedding",
@@ -9744,7 +9569,6 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginal-sized joins; the cell table is |X|·|Y| rows regardless of N.
     Output keeps the exact integer numerator/denominator alongside the
     divided estimate so downstream math never re-rounds."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     pairs = ev.select(
         "event_type", (F.col("user_id") % MI_COHORT_MOD).alias("cohort")
@@ -9808,7 +9632,6 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form is four combinable BIGINT sums; the only floats are the
     two final slope divisions. Work: one corpus token pass + one
     vocabulary-sized ranking."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
     from flink_sql_ai_meetingcoach_azure_spark.operators.indexing import (  # noqa: PLC0415
         contiguous_row_ids,
@@ -9876,7 +9699,6 @@ def q_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason the rollup sink stores partials: a delivery's delta aggregate
     is delta-sized, the merge is key-local, and the 100-TB base is never
     touched (here the base agg stands in for the stored partial)."""
-    _prep(spark)
     orders = _t(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     base = orders.groupBy("o_orderstatus").agg(
@@ -9942,7 +9764,6 @@ def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; one summary row of exact-integer counts + ppm rates.
     At 100 TB this runs on a sampled sub-corpus — the tuning loop, not
     the production pass — which the doc_id cap models."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         ngram_jaccard_pairs,
     )
@@ -10026,7 +9847,6 @@ def q_simhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures is hamming-as-a-proxy-for-Jaccard. Same bounded shapes:
     df-capped shingle truth join, band-bucketed candidate join, one
     summary row of exact counts + ppm rates."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         ngram_jaccard_pairs,
         simhash_pairs,
@@ -10107,7 +9927,6 @@ def q_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     — for dense id spaces that's 64x fewer rows than distinct — and no
     expand/distinct pass over raw events ever happens. The oracle is
     plain COUNT(DISTINCT): the bitmap plan must reproduce it exactly."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     word = (F.col("user_id") / F.lit(64)).cast("bigint")
     bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(user_id % 64 AS INT))")
@@ -10134,7 +9953,6 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated shuffle, same as cube_revenue; 'ALL' coalescing keeps the
     output engine-portable (no grouping_id bit-encoding dependence);
     integer cents."""
-    _prep(spark)
     orders = _t(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("__gs_orders")
     return spark.sql(
@@ -10182,7 +10000,6 @@ def q_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups. (When both sides are large, the interval_join entry's
     cell-blocking is the equi-join rewrite; the broadcast NLJ is the right
     plan exactly while one side stays small.)"""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     bands = spark.createDataFrame(VALUE_BANDS, "lo int, hi int")
     return (
@@ -10226,7 +10043,6 @@ def q_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse exactly the constructed variant groups while raw md5 sees
     distinct texts. One codegen map pass + one combinable groupBy —
     normalization dedup at 100 TB costs the same as exact dedup."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < NORM_DUP_MAX_ID)
     base = docs.select(
         (F.col("doc_id") * 2).alias("vid"), F.col("text")
@@ -10281,7 +10097,6 @@ def q_cooc_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     The naive formulation (positions self-join on doc_id with |i−j| ≤ W)
     shuffles the corpus twice and hits doc-length skew; the slice form
     never leaves the row."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents")
@@ -10317,7 +10132,6 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate pass: open/close via min_by/max_by keyed on the
     (ts, event_id) total order (no per-group window, no sort), values in
     exact integer micro-units so engines can't disagree on a float sum."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     vm = F.round(F.col("value") * 1_000_000).cast("bigint")
     key = F.struct(F.col("ts"), F.col("event_id"))
@@ -10376,7 +10190,6 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the edges inside the radius; the unrolled SQL oracle computes the
     same thing as 4 rounds of min-union Bellman-Ford — the two
     formulations provably agree, which is the check."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.components import (  # noqa: PLC0415
         bfs_hops,
     )
@@ -10430,7 +10243,6 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     one combinable degree count + two node-keyed semi joins over an
     edge set that only shrinks; fixed rounds keep the operator
     oracle-unrollable (components.py::kcore)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.components import (  # noqa: PLC0415
         kcore,
     )
@@ -10484,7 +10296,6 @@ def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a single-partition ORDER BY window; the budget itself is a
     broadcast 1-row scalar, and the admit test is exact integer
     cross-multiplication (cum·100 ≤ total·pct)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
     from flink_sql_ai_meetingcoach_azure_spark.operators.indexing import (  # noqa: PLC0415
         global_running_sum,
@@ -10542,7 +10353,6 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate docs (the contrastive-miner restriction), threshold filters.
     Output is provably the new-side subset of the full-corpus near-dup
     pairs — the oracle computes it the expensive way and must agree."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         delta_lsh_pairs,
         ngram_jaccard_pairs,
@@ -10626,7 +10436,6 @@ def q_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns ``(cluster_id, pos, centroid_micro, n_vecs)`` — the refined
     centroids with final-assignment cell sizes, k·dim rows."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.clustering import (  # noqa: PLC0415
         lloyd_refine,
     )
@@ -10654,7 +10463,7 @@ def q_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_lloyd_ctes(k: int) -> tuple[str, str]:
+def _lloyd_ctes_sql(k: int) -> tuple[str, str]:
     """Unrolled exact-integer Lloyd CTE chain over ``embeddings`` —
     the SHARED oracle prefix for ``kmeans_refine`` and the
     refined-centroid consumers (``semantic_dedup`` / ``cluster_sample``,
@@ -10703,7 +10512,7 @@ c{i} AS (SELECT s.cid, COALESCE(u.v, s.v) AS v
 
 def _sql_kmeans_refine() -> str:
     k, dim = KMEANS_K, EMB_DIM
-    ctes, cf = _sql_lloyd_ctes(k)
+    ctes, cf = _lloyd_ctes_sql(k)
     dist = (
         f"list_sum(list_transform(range(1, {dim + 1}), "
         "j -> (e.v[j] - c.v[j]) * (e.v[j] - c.v[j])))"
@@ -10744,7 +10553,6 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     count) first and the exact-percentile sort touches histogram rows,
     not corpus rows (the group_quantiles / HDR seam is the fully
     sort-free alternative when values don't compress)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     med = docs.groupBy("source").agg(
         F.expr("CAST(round(percentile(n_chars, 0.5)) AS BIGINT)").alias("med")
@@ -10809,7 +10617,6 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-join of the level-1 sizes back onto the level-0 table —
     group-table-sized, never corpus-sized. At 100 TB both aggregates
     are map-side-combinable over bounded QI cardinality (types × 24)."""
-    _prep(spark)
     ev = _events(spark, sf_dir).select(
         "event_type", F.hour("ts").alias("hour")
     )
@@ -10872,7 +10679,6 @@ def q_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one combinable groupBy(cell) shuffle over the corpus;
     everything after is cells-sized (≤ (range/cell)² rows regardless of
     corpus size). No windows, no joins wider than the cell table."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     micro = lambda j: (  # noqa: E731
         F.round(F.element_at("embedding", j).cast("double") * 1_000_000)
@@ -10958,7 +10764,6 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     once. At 100 TB: hashing every position is inherent to CDC; it
     stays map-local here, and the only shuffles are cut- and
     chunk-keyed (output-sized, ~1/64 of corpus chars)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     k, m = CDC_GRAM, CDC_MOD
     cuts = (
@@ -11078,7 +10883,6 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     span), so C(n,2) is bounded per key regardless of corpus size; the
     user-day pre-aggregate is where the data-sized work happens and it
     is map-side combinable."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     ud = (
         ev.select(
@@ -11184,7 +10988,6 @@ def q_token_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: encode is map-only (vocabulary-sized per-batch cache),
     the rollup shuffles lang-cardinality rows."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.bpe import (  # noqa: PLC0415
         apply_bpe,
         learn_bpe_merges,
@@ -11220,7 +11023,7 @@ def q_token_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_token_compression() -> str:
     return (
-        _sql_bpe_encode_ctes()
+        _bpe_encode_ctes_sql()
         + """,
 bl AS (SELECT doc_id, lang,
               CAST(octet_length(encode(text)) AS BIGINT) AS b
@@ -11257,7 +11060,6 @@ def q_topic_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB the shuffles are: assignment (1 row/embedding), the
     token aggregate (combinable), and a clusters×vocab-bounded window."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.clustering import (  # noqa: PLC0415
@@ -11320,7 +11122,7 @@ def _sql_topic_keywords() -> str:
         "round(list_dot_product({a}, {b}) / "
         "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
     )
-    ctes, cf = _sql_lloyd_ctes(KMEANS_K)
+    ctes, cf = _lloyd_ctes_sql(KMEANS_K)
     toks = _TOKS.format(col="d.text")
     return f"""
 WITH {ctes},
@@ -11366,7 +11168,6 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable per-doc rollup — the lexical filter bag-of-words BM25
     cannot express. Matching docs ordered by first occurrence then id
     (deterministic)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.text_search import (  # noqa: PLC0415
         phrase_search,
     )
@@ -11401,7 +11202,6 @@ def q_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (per-user flag, then the 1-row conditional rollup) —
     nothing wider than users ever shuffles. Zero-variance edge (no or
     all conversions) pins z = 0."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.sampling import (  # noqa: PLC0415
         hash_bucket_col,
     )
@@ -11490,7 +11290,6 @@ def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (pinned). At 100 TB everything is keyed by user then by
     cohort — the exact median sorts within cohort-sized groups (the
     HDR/group_quantiles seam is the sort-free fallback)."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     s = (
         ev.filter(F.col("event_type") == "signup")
@@ -11557,7 +11356,6 @@ def q_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     One posexplode + combinable (label, half, pos) sum (k·2·dim result
     rows regardless of corpus size), arrays reassembled pos-ordered,
     zero windows. Labels missing a half drop (inner join — pinned)."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     sums = (
         emb.select(
@@ -11661,7 +11459,6 @@ def q_embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((label, pos) sums → label·dim rows; per-label sumsq), no windows,
     no pairs — the cheapest possible health check before committing to
     an ANN index."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     q = F.expr(
         "transform(embedding, "
@@ -11728,7 +11525,6 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide redundancy (broadcast 1-row total). Two combinable
     aggregates on the 32-byte digest — the shuffle never carries
     document bodies (the snapshot_diff discipline)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     per = (
         docs.select("source", F.md5("text").alias("h"))
@@ -11788,7 +11584,6 @@ def q_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 dp. One combinable (label, pos) aggregate (k·dim rows at any
     corpus size) broadcast back onto the members, then ONE
     label-partitioned bottom-k window — never a pairwise space."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     sums = (
         emb.select(
@@ -11895,7 +11690,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket counts. At 100 TB the only corpus-sized exchanges are the
     (doc, bucket) combinable aggregate — the model itself is
     constant-size by construction (that is DSIR's point)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (  # noqa: PLC0415
         md5_int32_col,
     )
@@ -12035,7 +11829,6 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the labeled seed is the broadcast side (small by
     definition here — the IVF route swaps in when it isn't), queries
     stream map-side; votes are k rows per query."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     labeled = emb.filter(F.col("vec_id") % 2 == 0).select(
         "vec_id", "embedding", "label"
@@ -12145,7 +11938,6 @@ def q_knn_classify_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     generate_personalized_commands.sh:379-384). ``round_sim=6`` pins the
     (sim DESC, vec_id ASC) k-cut to the oracle's 6dp ranking on BOTH
     routes, so the route flip is value-invisible."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
         vector_search,
     )
@@ -12206,7 +11998,6 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB the only corpus-sized work is the first groupBy; the
     CUSUM scan is bounded by buckets per type regardless of volume."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.drift import (  # noqa: PLC0415
         cusum_from_counts,
     )
@@ -12274,7 +12065,6 @@ def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB each edge costs one key-projected join — the parent side
     is usually dimension-sized and broadcasts; the child side never
     carries payload columns through the check."""
-    _prep(spark)
     parts = []
     for child, fk, parent, pk in FK_CHECKS:
         c = _t(spark, sf_dir, child).select(F.col(fk).alias("__k"))
@@ -12327,7 +12117,6 @@ def q_group_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     milli-cents² via trunc-div. Σc² stays inside BIGINT to ~4e9 rows at
     these magnitudes; shard the sums beyond (the bitmap_distinct
     discipline). One aggregate, group-cardinality output."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     g = (
         ev.select(
@@ -12386,7 +12175,6 @@ def q_spend_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     is pre-scaled so every product stays inside BIGINT at corpus scale
     (Σ sᵤ²·10⁶ would overflow first); top share in plain ppm. Two
     combinable aggregates, group-cardinality output."""
-    _prep(spark)
     ev = _events(spark, sf_dir)
     pu = (
         ev.select(
@@ -12441,7 +12229,6 @@ def q_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (true, predicted) cell with the cell count, the true-class total,
     and recall in exact ppm; cells table is |langs|² regardless of
     corpus size (one combinable count + one broadcast marginal join)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     pred = docs.select(
         "doc_id",
@@ -12498,7 +12285,6 @@ def q_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     is micro-rounded PER VECTOR so the group sums are exact BIGINT),
     then one combinable per-label aggregate. Zero vectors (undefined
     cosine) are excluded by the norm guard — pinned."""
-    _prep(spark)
     # One Arrow pass computes quantize → dequantize → cosine per batch
     # (optimization guide §4.2): the old form chained ~8 interpreted
     # higher-order array passes per row (maxabs transform, quantize
@@ -12587,7 +12373,6 @@ def q_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — per-user-partitioned window over the user-day table
     (calendar-bounded partitions), never over raw events. Days with
     activity but no new types still emit (running count carries)."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     ev = _events(spark, sf_dir)
@@ -12657,7 +12442,6 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive; a plain ORDER BY window would serialize the vocabulary
     through one task) over the VOCABULARY-sized term table; membership
     is a broadcast join; the per-source rollup is exact integer ppm."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         tokens_col,
     )
@@ -12728,7 +12512,6 @@ def q_silhouette_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     silhouette is pure integer algebra ((s1−s2)·1e6 div (1e6−s2) —
     never a float division), tie-break (sim DESC, cid ASC) matches
     assign_nearest_centroid. Per-cluster means are integer div."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     seeds = _refined_seeds(spark, emb, CLUSTER_K)
     # GEMM top-2 (optimization guide §4.2): the old broadcast cross join
@@ -12784,7 +12567,7 @@ def q_silhouette_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_silhouette_eval() -> str:
-    ctes, cf = _sql_lloyd_ctes(CLUSTER_K)
+    ctes, cf = _lloyd_ctes_sql(CLUSTER_K)
     return f"""
 WITH {ctes},
 seeds AS (SELECT cid, list_transform(v, x -> CAST(x AS DOUBLE) / 1000000.0) AS cv
@@ -12839,7 +12622,6 @@ def q_coreset_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per round — fresh codegen each time measured 2.7× slower mid-suite
     from code-cache pressure). Driver state never exceeds k·dim
     floats; identical min-set algebra, same oracle."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     seed = (
         emb.orderBy("vec_id").select("vec_id", "embedding").limit(1).collect()[0]
@@ -12939,7 +12721,6 @@ def q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     floats. One codegen regexp map over the scan + one combinable
     aggregate; at 100 TB this is scan-bound and shuffle-free up to the
     (lang, source)-sized result."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     per = docs.select(
         "lang",
@@ -13013,7 +12794,6 @@ def q_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the tuning loop on a sampled sub-corpus (the
     doc_id cap models it); the chosen τ then drives the banded
     production pass (lsh_pairs → neardup_keep_best)."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("doc_id") < LSH_EVAL_MAX_ID
     )
@@ -13116,7 +12896,6 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact at dim=64). At 100 TB: one linear pass + driver-free
     model-sized algebra; rounds are unrolled in the oracle exactly like
     pagerank's."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     q = F.transform(
         "embedding",
@@ -13345,7 +13124,6 @@ def q_vocab_coverage_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME helper the streaming vocab_coverage_readout derives its
     curve from, so batch and continuous forms cannot drift (ADVICE r10).
     Thresholds past the vocabulary saturate at 1e6 ppm by construction."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
     from flink_sql_ai_meetingcoach_azure_spark.operators.text_search import (  # noqa: PLC0415
         vocab_coverage_curve,
@@ -13397,7 +13175,6 @@ def q_minhash_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-integer error moments (quantization granularity is 125,000
     ppm at 8 perms — the expected |error| of a Bernoulli(j) mean at
     n=8; more perms shrink it as 1/√n)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (  # noqa: PLC0415
         ngram_jaccard_pairs,
     )
@@ -13466,7 +13243,7 @@ def _sql_minhash_error_eval() -> str:
     )
     return f"""
 WITH cand AS (SELECT * FROM ({_sql_lsh_pairs(cap)}) t),
-sig AS (SELECT * FROM ({_sql_minhash_cte(cap)} SELECT * FROM sig) t),
+sig AS (SELECT * FROM ({_minhash_cte_sql(cap)} SELECT * FROM sig) t),
 est AS (SELECT c.id_a, c.id_b,
                CAST(({matches}) * {1_000_000 // MINHASH_N} AS BIGINT) AS est_ppm
         FROM cand c JOIN sig a ON a.doc_id = c.id_a
@@ -13512,7 +13289,6 @@ def q_cosine_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep), similarities quantized to integer ppm before every
     comparison, then ONE broadcast 5-row τ join over the materialized
     pair list — extra thresholds are free."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < COS_PAIR_MAX_ID
     )
@@ -13600,7 +13376,6 @@ def q_ann_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     the float vectors are touched for M rows per query, not the corpus.
     Prefilter rank = (hamming ASC, vec_id ASC) — all-integer, engine-
     exact; rerank = the ann_topk discipline (6-dp sim DESC, id ASC)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.quantize import (  # noqa: PLC0415
         sign_signature_exprs,
     )
@@ -13715,7 +13490,6 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen in k, never a growing literal. The oracle unrolls the k
     rounds as MATERIALIZED CTEs (the Lloyd/pagerank fixed-round
     discipline)."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -13882,7 +13656,6 @@ def q_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
     search is the documented ANN ladder (flat here — the IVF/Hamming
     siblings share the ranking contract) and the histogram is two
     combinable aggregates over the hit list."""
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % HUB_Q_MOD == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding")
@@ -13967,7 +13740,6 @@ def q_knn_hubness_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking, so this is the same re-rank q_knn_hubness applies — and
     it guards the ties-at-1.000000 edge where self misses its own
     top-(k+1) and k+1 rows would otherwise survive)."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
         vector_search_ivf_parquet,
     )
@@ -14073,7 +13845,6 @@ def q_mmr_diversity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of corpus), means by truncating division; relevance =
     mean first-stage sim of the list. diversity_gain_ppm =
     intra_top − intra_mmr (positive when MMR de-duplicated the list)."""
-    _prep(spark)
     mmr = q_mmr_rerank(spark, sf_dir).select(
         "qid", F.col("neighbor_id").alias("vid"), "sim_ppm"
     )
@@ -14227,7 +13998,6 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     — one BroadcastNestedLoopJoin scan, no shuffle of the corpus, flag
     rows only survive; at 100 TB you'd route the same predicate through
     the IVF/Hamming rungs, which share this ranking contract."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -14353,7 +14123,6 @@ def q_semantic_decontaminate_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     routes. sim_ppm is then re-derived on the (train, top-1) pair —
     one bounded join against the eval-sized side, never a second
     corpus pass."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (  # noqa: PLC0415
@@ -14423,7 +14192,6 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     source — parallel by source; one global — the single documented
     global exchange, rank_normalize's shape) + one integer-key join
     back to the global order statistics; linear at any corpus size."""
-    _prep(spark)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -14497,7 +14265,6 @@ def q_md_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex) — one codegen projection, no shuffle until the tiny per-doc
     result. structure_ppm = markers·1e6 div chars — a comparable
     density whatever the doc length."""
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
 
     def cnt(marker: str) -> F.Column:
@@ -14591,7 +14358,6 @@ def q_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-AC paths (runs/ZRL/stuffing, progressive correction bits) are
     pinned by pytest round-trips; image dims vary per doc so the NN
     grid is non-trivial."""
-    _prep(spark)
     import pyspark.sql.types as T  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
@@ -14978,7 +14744,6 @@ def q_image_neardup_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     image_neardup's oracle — the codec flip is value-invisible, and a
     wrong Huffman decode, DC prediction, progressive refinement, IDCT
     scale or upsample all break the shared hash."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         dhash_signatures,
     )
@@ -15051,7 +14816,6 @@ def q_image_neardup_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's exactly and the entry SHARES image_neardup's oracle —
     a wrong LZW width bump, bit order, palette lookup or interlace
     pass all break the shared hash."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         dhash_signatures,
     )
@@ -15081,11 +14845,10 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     direction bits, packing, and hamming in pure SQL, so a wrong
     inflate, unfilter branch, resize index, grayscale truncation, bit
     order, or band math all break the hash."""
-    _prep(spark)
     return _dhash_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
 
 
-def _sql_dhash_sig_ctes() -> str:
+def _dhash_sig_ctes_sql() -> str:
     """Shared oracle CTE block: closed-form per-doc dHash direction
     bits and the packed 2x32-bit signature words."""
     return f"""
@@ -15109,7 +14872,7 @@ sig AS (SELECT doc_id,
 
 def _sql_image_neardup() -> str:
     return f"""
-WITH {_sql_dhash_sig_ctes()}
+WITH {_dhash_sig_ctes_sql()}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.sig0, b.sig0))
             + bit_count(xor(a.sig1, b.sig1)) AS BIGINT) AS hamming
@@ -15171,7 +14934,6 @@ def q_dhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     move but hamming 0 (caught), while a single cross-group
     last-column direction flip is a small L1 move at hamming 8
     (missed) — exactly the trade a gradient hash makes."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         decode_pixels,
     )
@@ -15206,7 +14968,7 @@ def q_dhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_dhash_recall_eval() -> str:
     return f"""
-WITH {_sql_dhash_sig_ctes()},
+WITH {_dhash_sig_ctes_sql()},
 g AS (SELECT doc_id, i, j,
              110 + 2 * i + 12 * (2 * s - j)
                + CASE WHEN m = 1 THEN 4 ELSE 0 END AS gv
@@ -15252,7 +15014,6 @@ def q_image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest-id-wins retention rule. The oracle computes the exact
     transitive closure (recursive CTE) over the closed-form signature
     pairs, so a wrong component fold or keep rule breaks the hash."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.components import (  # noqa: PLC0415
         duplicate_clusters,
     )
@@ -15277,7 +15038,7 @@ def q_image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_image_dup_clusters() -> str:
     return f"""
-WITH RECURSIVE {_sql_dhash_sig_ctes()},
+WITH RECURSIVE {_dhash_sig_ctes_sql()},
 pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
           FROM sig a JOIN sig b ON a.doc_id < b.doc_id
           WHERE bit_count(xor(a.sig0, b.sig0))
@@ -15372,7 +15133,6 @@ def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     local edits flip few bits. The oracle replays the closed-form step
     directions, so a wrong PCM unpack, mixdown, resample index, sign
     convention, bit order or band math all break the hash."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         audio_delta_signatures,
     )
@@ -15401,7 +15161,6 @@ def q_audio_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     move at hamming 0 (caught by the fingerprint, missed by raw
     distance-thinking), while a cross-group single-step direction
     difference can be a small L1 move the bands still separate."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         audio_delta_signatures,
         decode_samples,
@@ -15628,7 +15387,6 @@ def q_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference anchor: the reference treats media as opaque blobs
     (app/static/); clip-level dedup is the beyond-reference multimodal
     curation layer."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         video_dhash_signatures,
     )
@@ -15706,7 +15464,6 @@ def q_video_neardup_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-invisible, and a wrong LZW decode, frame boundary, palette
     lookup, interlace pass or compositing step all break the shared
     hash."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         video_dhash_signatures,
     )
@@ -15849,7 +15606,6 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted coefficient signs in closed form (inverse-DCT fixture), so
     a wrong decode, resize, grayscale, DCT normalization, bit order or
     band math all break the hash."""
-    _prep(spark)
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
         phash_signatures,
     )
@@ -15896,337 +15652,45 @@ ORDER BY doc_a, doc_b
 """
 
 
+# Route- and codec-flip siblings that reuse their base entry's oracle. The
+# IVF routes (ivf, ivfpq, the guarded non-broadcast fallbacks) probe with
+# nprobe == nlist, so every cell is probed and the result is exactly the
+# base route's; the DC-only JPEG blocks and the GIF palettes and frames
+# decode to the PNG / APNG fixtures' exact pixels.
+_SHARED_ORACLE = {
+    "knn_hubness_ivf": "knn_hubness",
+    "semantic_decontaminate_ivf": "semantic_decontaminate",
+    "knn_classify_ivf": "knn_classify",
+    "ann_ivf_topk": "ann_topk",
+    "ann_ivfpq": "ann_pq",
+    "image_neardup_jpeg": "image_neardup",
+    "image_neardup_gif": "image_neardup",
+    "video_neardup_gif": "video_neardup",
+}
+
+
+def _oracle(name: str) -> str:
+    """Entry ``name``'s DuckDB oracle: ``SQL_<NAME>`` or ``_sql_<name>()``."""
+    sql = globals().get(f"SQL_{name.upper()}")
+    return sql if sql is not None else globals()[f"_sql_{name}"]()
+
+
+def _prepared(fn: QueryFn) -> QueryFn:
+    """The one per-request hook: every registry call runs ``_prep`` first."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _prep(spark)
+        return fn(spark, sf_dir)
+
+    return run
+
+
+# every q_<name> function is entry <name>, in definition order
 _ALL_QUERIES: dict[str, QuerySpec] = {
-    # DEFINITION ORDER ONLY (historical — comments below record when
-    # each block landed). The driver-checked window is _WINDOW_R13
-    # after this dict: since r12 the window membership is COMPUTED from
-    # the CORRECTNESS_r*.json ledger (tools/evidence_ledger.py) and
-    # enforced by tests/test_entry_contract.py — never hand-claimed
-    # (VERDICT r11 #8).
-    "embedding_isotropy": QuerySpec(
-        q_embedding_isotropy, SQL_EMBEDDING_ISOTROPY
-    ),
-    "dup_rate_by_source": QuerySpec(
-        q_dup_rate_by_source, SQL_DUP_RATE_BY_SOURCE
-    ),
-    "silhouette_eval": QuerySpec(q_silhouette_eval, _sql_silhouette_eval()),
-    "coreset_sample": QuerySpec(q_coreset_sample, _sql_coreset_sample()),
-    "readability_scores": QuerySpec(
-        q_readability_scores, SQL_READABILITY_SCORES
-    ),
-    "dedup_sweep": QuerySpec(q_dedup_sweep, _sql_dedup_sweep()),
-    "pca_power": QuerySpec(q_pca_power, _sql_pca_power()),
-    "pq_recall_eval": QuerySpec(q_pq_recall_eval, _sql_pq_recall_eval()),
-    "vocab_coverage_sweep": QuerySpec(
-        q_vocab_coverage_sweep, _sql_vocab_coverage_sweep()
-    ),
-    "minhash_error_eval": QuerySpec(
-        q_minhash_error_eval, _sql_minhash_error_eval()
-    ),
-    "cosine_sweep": QuerySpec(q_cosine_sweep, _sql_cosine_sweep()),
-    "media_sniff": QuerySpec(q_media_sniff, _sql_media_sniff()),
-    "media_profile": QuerySpec(q_media_profile, _sql_media_profile()),
-    "context_windows": QuerySpec(q_context_windows, SQL_CONTEXT_WINDOWS),
-    # r11 additions — NEW entries go straight into the window (see the
-    # header note): binary-sketch ANN, MMR diversified retrieval, and
-    # the hubness gauge, each displacing one unchanged r10-green
-    # ballast line (source_overlap / ngram_novelty / event_rate_anomaly
-    # moved to the tail head)
-    "ann_hamming": QuerySpec(q_ann_hamming, _sql_ann_hamming()),
-    "mmr_rerank": QuerySpec(q_mmr_rerank, _sql_mmr_rerank()),
-    "knn_hubness": QuerySpec(q_knn_hubness, _sql_knn_hubness()),
-    # route-flip sibling: shares knn_hubness's oracle (nprobe == nlist
-    # makes the IVF probe exhaustive, so the histogram is value-identical)
-    "knn_hubness_ivf": QuerySpec(q_knn_hubness_ivf, _sql_knn_hubness()),
-    "hamming_recall_eval": QuerySpec(
-        q_hamming_recall_eval, _sql_hamming_recall_eval()
-    ),
-    "mmr_diversity_eval": QuerySpec(
-        q_mmr_diversity_eval, _sql_mmr_diversity_eval()
-    ),
-    "semantic_decontaminate": QuerySpec(
-        q_semantic_decontaminate, _sql_semantic_decontaminate()
-    ),
-    # r12: route-flip sibling — shares the oracle (nprobe == nlist makes
-    # the eval-index probe exhaustive, so the flag set is value-identical)
-    "semantic_decontaminate_ivf": QuerySpec(
-        q_semantic_decontaminate_ivf, _sql_semantic_decontaminate()
-    ),
-    "quantile_normalize": QuerySpec(
-        q_quantile_normalize, SQL_QUANTILE_NORMALIZE
-    ),
-    "md_structure": QuerySpec(q_md_structure, SQL_MD_STRUCTURE),
-    "jpeg_decode_stats": QuerySpec(
-        q_jpeg_decode_stats, _sql_jpeg_decode_stats()
-    ),
-    # r12 additions — straight into the window (header note): the
-    # image-dedup family over the REAL PNG codec path
-    "image_neardup": QuerySpec(q_image_neardup, _sql_image_neardup()),
-    # codec-flip sibling: shares the oracle (DC-only JPEG blocks decode
-    # to the PNG fixture's exact gray cells)
-    "image_neardup_jpeg": QuerySpec(
-        q_image_neardup_jpeg, _sql_image_neardup()
-    ),
-    "dhash_recall_eval": QuerySpec(
-        q_dhash_recall_eval, _sql_dhash_recall_eval()
-    ),
-    "phash_neardup": QuerySpec(q_phash_neardup, _sql_phash_neardup()),
-    "image_dup_clusters": QuerySpec(
-        q_image_dup_clusters, _sql_image_dup_clusters()
-    ),
-    "audio_neardup": QuerySpec(q_audio_neardup, _sql_audio_neardup()),
-    "audio_recall_eval": QuerySpec(
-        q_audio_recall_eval, _sql_audio_recall_eval()
-    ),
-    "video_neardup": QuerySpec(q_video_neardup, _sql_video_neardup()),
-    "image_neardup_gif": QuerySpec(q_image_neardup_gif, _sql_image_neardup()),
-    "video_neardup_gif": QuerySpec(q_video_neardup_gif, _sql_video_neardup()),
-    # ---- ballast: r10-externally-green lines (incl. every entry whose
-    # code the r11 refactors touched: cusum_changepoint / ks_drift /
-    # png_decode_stats below, vocab_coverage_sweep / pca_power /
-    # context_windows above) ----
-    "bpe_encode": QuerySpec(q_bpe_encode, _sql_bpe_encode()),
-    "neardup_keep_best": QuerySpec(q_neardup_keep_best, _sql_neardup_keep_best()),
-    "label_propagation": QuerySpec(q_label_propagation, _sql_label_propagation()),
-    "cusum_changepoint": QuerySpec(q_cusum_changepoint, SQL_CUSUM_CHANGEPOINT),
-    "fk_integrity": QuerySpec(q_fk_integrity, _sql_fk_integrity()),
-    # canonical known-good lines + heaviest r10-verified chains
-    "rag_pipeline_verified": QuerySpec(q_rag_pipeline_verified, _sql_rag_pipeline_verified()),
-    "tpch_q1": QuerySpec(q_tpch_q1, SQL_TPCH_Q1),
-    "ann_topk": QuerySpec(q_ann_topk, SQL_ANN_TOPK),
-    "cdc_chunks": QuerySpec(q_cdc_chunks, SQL_CDC_CHUNKS),
-    "topic_keywords": QuerySpec(q_topic_keywords, _sql_topic_keywords()),
-    "dsir_weights": QuerySpec(q_dsir_weights, _sql_dsir_weights()),
-    "knn_classify": QuerySpec(q_knn_classify, SQL_KNN_CLASSIFY),
-    # the route-flip demonstration (VERDICT r9 #2) shares knn_classify's
-    # oracle — identical semantics, non-broadcast IVF-probe plan
-    "knn_classify_ivf": QuerySpec(q_knn_classify_ivf, SQL_KNN_CLASSIFY),
-    "token_compression": QuerySpec(q_token_compression, _sql_token_compression()),
-    "phrase_search": QuerySpec(q_phrase_search, SQL_PHRASE_SEARCH),
-    "jpeg_meta": QuerySpec(q_jpeg_meta, SQL_JPEG_META),
-    "gram_matrix": QuerySpec(q_gram_matrix, SQL_GRAM_MATRIX),
-    "wav_meta": QuerySpec(q_wav_meta, _sql_wav_meta()),
-    "label_outliers": QuerySpec(q_label_outliers, _sql_label_outliers()),
-    "hdr_error_eval": QuerySpec(q_hdr_error_eval, _sql_hdr_error_eval()),
-    "ks_drift": QuerySpec(q_ks_drift, SQL_KS_DRIFT),
-    "rate_autocorr": QuerySpec(q_rate_autocorr, SQL_RATE_AUTOCORR),
-    "png_decode_stats": QuerySpec(q_png_decode_stats, _sql_png_decode_stats()),
-    "wav_decode_stats": QuerySpec(q_wav_decode_stats, _sql_wav_decode_stats()),
-    "gif_decode_stats": QuerySpec(q_gif_decode_stats, _sql_gif_decode_stats()),
-    "simhash_recall_eval": QuerySpec(
-        q_simhash_recall_eval, _sql_simhash_recall_eval()
-    ),
-    # the verbatim DDL chain, hash-verified end-to-end since r10
-    "ddl_reference_pipeline": QuerySpec(
-        q_ddl_reference_pipeline, _sql_ddl_reference_pipeline()
-    ),
-    # ---- outside the driver's 50-entry window ----
-    # every entry below was externally hash-checked in at least one
-    # r1-r10 driver window; the full tail is re-verified against its
-    # oracles at sf0.001 on every pytest run (test_entry_contract) and
-    # at sf0.01 by tools/check_correctness.py. Tail head: the 16
-    # r10-window lines (all ext-r10 hash-green) that handed their slots
-    # to the late-r10 pack + the three r11 additions in the r11
-    # rotation, then earlier rotations' alumni.
-    "source_overlap": QuerySpec(q_source_overlap, _sql_source_overlap()),
-    "ngram_novelty": QuerySpec(q_ngram_novelty, _sql_ngram_novelty()),
-    "event_rate_anomaly": QuerySpec(q_event_rate_anomaly, SQL_EVENT_RATE_ANOMALY),
-    "group_moments": QuerySpec(q_group_moments, SQL_GROUP_MOMENTS),
-    "spend_concentration": QuerySpec(
-        q_spend_concentration, SQL_SPEND_CONCENTRATION
-    ),
-    "quantization_error": QuerySpec(
-        q_quantization_error, SQL_QUANTIZATION_ERROR
-    ),
-    "langid_eval": QuerySpec(q_langid_eval, _sql_langid_eval()),
-    "cumulative_distinct": QuerySpec(
-        q_cumulative_distinct, SQL_CUMULATIVE_DISTINCT
-    ),
-    "oov_rate": QuerySpec(q_oov_rate, _sql_oov_rate()),
-    "theil_sen_trend": QuerySpec(q_theil_sen_trend, SQL_THEIL_SEN_TREND),
-    "char_entropy": QuerySpec(q_char_entropy, SQL_CHAR_ENTROPY),
-    "attribution": QuerySpec(q_attribution, SQL_ATTRIBUTION),
-    "png_meta": QuerySpec(q_png_meta, SQL_PNG_META),
-    "rank_normalize": QuerySpec(q_rank_normalize, SQL_RANK_NORMALIZE),
-    "temporal_enrich": QuerySpec(q_temporal_enrich, SQL_TEMPORAL_ENRICH),
-    "group_quantiles": QuerySpec(q_group_quantiles, _sql_group_quantiles()),
-    "session_stats": QuerySpec(q_session_stats, SQL_SESSION_STATS),
-    "shard_balance": QuerySpec(q_shard_balance, _sql_shard_balance()),
-    "pack_efficiency": QuerySpec(q_pack_efficiency, _sql_pack_efficiency()),
-    "k_anonymity": QuerySpec(q_k_anonymity, SQL_K_ANONYMITY),
-    "grid_density": QuerySpec(q_grid_density, SQL_GRID_DENSITY),
-    "ab_lift": QuerySpec(q_ab_lift, _sql_ab_lift()),
-    "funnel_latency": QuerySpec(q_funnel_latency, SQL_FUNNEL_LATENCY),
-    "mad_outliers": QuerySpec(q_mad_outliers, SQL_MAD_OUTLIERS),
-    "centroid_shift": QuerySpec(q_centroid_shift, _sql_centroid_shift()),
-    "semantic_dedup": QuerySpec(q_semantic_dedup, _sql_semantic_dedup()),
-    "cluster_sample": QuerySpec(q_cluster_sample, _sql_cluster_sample()),
-    "kmeans_refine": QuerySpec(q_kmeans_refine, _sql_kmeans_refine()),
-    "bloom_join": QuerySpec(q_bloom_join, SQL_BLOOM_JOIN),
-    "heavy_hitters": QuerySpec(q_heavy_hitters, SQL_HEAVY_HITTERS),
-    "incremental_neardup": QuerySpec(
-        q_incremental_neardup, _sql_incremental_neardup()
-    ),
-    "kcore": QuerySpec(q_kcore, _sql_kcore()),
-    "bfs_hops": QuerySpec(q_bfs_hops, _sql_bfs_hops()),
-    "setsim_join": QuerySpec(q_setsim_join, SQL_SETSIM_JOIN),
-    "containment_pairs": QuerySpec(q_containment_pairs, SQL_CONTAINMENT_PAIRS),
-    "skew_profile": QuerySpec(q_skew_profile, SQL_SKEW_PROFILE),
-    "join_blowup": QuerySpec(q_join_blowup, SQL_JOIN_BLOWUP),
-    "pmi_collocations": QuerySpec(q_pmi_collocations, SQL_PMI_COLLOCATIONS),
-    "frequent_pairs": QuerySpec(q_frequent_pairs, SQL_FREQUENT_PAIRS),
-    "lsh_recall_eval": QuerySpec(q_lsh_recall_eval, _sql_lsh_recall_eval()),
-    "term_drift": QuerySpec(q_term_drift, SQL_TERM_DRIFT),
-    "zipf_slope": QuerySpec(q_zipf_slope, SQL_ZIPF_SLOPE),
-    "mutual_info": QuerySpec(q_mutual_info, SQL_MUTUAL_INFO),
-    "interarrival_stats": QuerySpec(q_interarrival_stats, SQL_INTERARRIVAL_STATS),
-    "embedding_norms": QuerySpec(q_embedding_norms, SQL_EMBEDDING_NORMS),
-    "bitmap_distinct": QuerySpec(q_bitmap_distinct, SQL_BITMAP_DISTINCT),
-    "grouping_sets_revenue": QuerySpec(
-        q_grouping_sets_revenue, SQL_GROUPING_SETS_REVENUE
-    ),
-    "ivm_aggregate": QuerySpec(q_ivm_aggregate, SQL_IVM_AGGREGATE),
-    "snapshot_diff": QuerySpec(q_snapshot_diff, SQL_SNAPSHOT_DIFF),
-    "cooc_window": QuerySpec(q_cooc_window, SQL_COOC_WINDOW),
-    "ohlc_bars": QuerySpec(q_ohlc_bars, SQL_OHLC_BARS),
-    "band_join": QuerySpec(q_band_join, _sql_band_join()),
-    "normalized_dedup": QuerySpec(q_normalized_dedup, SQL_NORMALIZED_DEDUP),
-    "hdr_quantiles": QuerySpec(q_hdr_quantiles, _sql_hdr_quantiles()),
-    "budget_select": QuerySpec(q_budget_select, SQL_BUDGET_SELECT),
-    "gap_fill": QuerySpec(q_gap_fill, SQL_GAP_FILL),
-    "linear_trend": QuerySpec(q_linear_trend, SQL_LINEAR_TREND),
-    "winsorize": QuerySpec(q_winsorize, SQL_WINSORIZE),
-    "value_histogram": QuerySpec(q_value_histogram, SQL_VALUE_HISTOGRAM),
-    "unpivot_types": QuerySpec(q_unpivot_types, _sql_unpivot_types()),
-    "cohort_retention": QuerySpec(q_cohort_retention, SQL_COHORT_RETENTION),
-    "decayed_score": QuerySpec(q_decayed_score, SQL_DECAYED_SCORE),
-    "profile_columns": QuerySpec(q_profile_columns, SQL_PROFILE_COLUMNS),
-    "fuzzy_dedup": QuerySpec(q_fuzzy_dedup, _sql_fuzzy_dedup()),
-    "curation_v2": QuerySpec(q_curation_v2, _sql_curation_v2()),
-    "contrastive_pairs": QuerySpec(q_contrastive_pairs, _sql_contrastive_pairs()),
-    "rag_pipeline_bulk": QuerySpec(q_rag_pipeline_bulk, _sql_rag_pipeline_bulk()),
-    "chunk_embed_ingest": QuerySpec(q_chunk_embed_ingest, _sql_chunk_embed_ingest()),
-    "bpe_merges": QuerySpec(q_bpe_merges, _sql_bpe_merges()),
-    "ngram_jaccard": QuerySpec(q_ngram_jaccard, _sql_ngram_jaccard()),
-    "tpch_q9": QuerySpec(q_tpch_q9, SQL_TPCH_Q9),
-    "mask_spans": QuerySpec(q_mask_spans, _sql_mask_spans()),
-    "tpch_q2": QuerySpec(q_tpch_q2, SQL_TPCH_Q2),
-    "tpch_q8": QuerySpec(q_tpch_q8, SQL_TPCH_Q8),
-    "tpch_q11": QuerySpec(q_tpch_q11, SQL_TPCH_Q11),
-    "tpch_q13": QuerySpec(q_tpch_q13, SQL_TPCH_Q13),
-    "tpch_q16": QuerySpec(q_tpch_q16, SQL_TPCH_Q16),
-    "tpch_q17": QuerySpec(q_tpch_q17, SQL_TPCH_Q17),
-    "tpch_q20": QuerySpec(q_tpch_q20, SQL_TPCH_Q20),
-    "tpch_q21": QuerySpec(q_tpch_q21, SQL_TPCH_Q21),
-    "bucketed_join": QuerySpec(q_bucketed_join, SQL_BUCKETED_JOIN),
-    "tpch_q4": QuerySpec(q_tpch_q4, SQL_TPCH_Q4),
-    "tpch_q7": QuerySpec(q_tpch_q7, SQL_TPCH_Q7),
-    "tpch_q10": QuerySpec(q_tpch_q10, SQL_TPCH_Q10),
-    "tpch_q12": QuerySpec(q_tpch_q12, SQL_TPCH_Q12),
-    "tpch_q14": QuerySpec(q_tpch_q14, SQL_TPCH_Q14),
-    "tpch_q15": QuerySpec(q_tpch_q15, SQL_TPCH_Q15),
-    "tpch_q18": QuerySpec(q_tpch_q18, SQL_TPCH_Q18),
-    "tpch_q19": QuerySpec(q_tpch_q19, SQL_TPCH_Q19),
-    "tpch_q22": QuerySpec(q_tpch_q22, SQL_TPCH_Q22),
-    "global_row_number": QuerySpec(q_global_row_number, SQL_GLOBAL_ROW_NUMBER),
-    "sessionize": QuerySpec(q_sessionize, SQL_SESSIONIZE),
-    "tfidf_vectors": QuerySpec(q_tfidf_vectors, _sql_tfidf_vectors()),
-    "ann_recall_eval": QuerySpec(q_ann_recall_eval, _sql_ann_recall_eval()),
-    "ann_pq": QuerySpec(q_ann_pq, SQL_ANN_PQ),
-    "ann_ivfpq": QuerySpec(q_ann_ivfpq, SQL_ANN_PQ),
-    "ann_quantized": QuerySpec(q_ann_quantized, SQL_ANN_QUANTIZED),
-    "random_projection": QuerySpec(q_random_projection, _sql_random_projection()),
-    "ann_projected": QuerySpec(q_ann_projected, _sql_ann_projected()),
-    "rerank_topk": QuerySpec(q_rerank_topk, _sql_rerank_topk()),
-    "lm_score": QuerySpec(q_lm_score, SQL_LM_SCORE),
-    "dup_clusters": QuerySpec(q_dup_clusters, _sql_dup_clusters()),
-    "funnel_match": QuerySpec(q_funnel_match, SQL_FUNNEL_MATCH),
-    "leakage_split": QuerySpec(q_leakage_split, _sql_leakage_split()),
-    "range_rolling": QuerySpec(q_range_rolling, SQL_RANGE_ROLLING),
-    "above_user_avg": QuerySpec(q_above_user_avg, SQL_ABOVE_USER_AVG),
-    "tiered_sample": QuerySpec(q_tiered_sample, _sql_tiered_sample()),
-    "pivot_by_type": QuerySpec(q_pivot_by_type, _sql_pivot_by_type()),
-    "hopping_window": QuerySpec(q_hopping_window, SQL_HOPPING_WINDOW),
-    "label_centroids": QuerySpec(q_label_centroids, SQL_LABEL_CENTROIDS),
-    "cdc_apply": QuerySpec(q_cdc_apply, SQL_CDC_APPLY),
-    "argmax_per_user": QuerySpec(q_argmax_per_user, SQL_ARGMAX_PER_USER),
-    "weighted_sample": QuerySpec(q_weighted_sample, _sql_weighted_sample()),
-    "asof_snapshot": QuerySpec(q_asof_snapshot, SQL_ASOF_SNAPSHOT),
-    "transition_matrix": QuerySpec(q_transition_matrix, SQL_TRANSITION_MATRIX),
-    "equidepth_histogram": QuerySpec(q_equidepth_histogram, SQL_EQUIDEPTH_HISTOGRAM),
-    "keyword_trigger": QuerySpec(q_keyword_trigger, SQL_KEYWORD_TRIGGER),
-    "cache_hit_join": QuerySpec(q_cache_hit_join, SQL_CACHE_HIT_JOIN),
-    "explode_chunks": QuerySpec(q_explode_chunks, SQL_EXPLODE_CHUNKS),
-    "topn_per_user": QuerySpec(q_topn_per_user, SQL_TOPN_PER_USER),
-    "recent_history": QuerySpec(q_recent_history, SQL_RECENT_HISTORY),
-    "session_window": QuerySpec(q_session_window, SQL_SESSION_WINDOW),
-    "tpch_q3": QuerySpec(q_tpch_q3, SQL_TPCH_Q3),
-    "tpch_q5": QuerySpec(q_tpch_q5, SQL_TPCH_Q5),
-    "tpch_q6": QuerySpec(q_tpch_q6, SQL_TPCH_Q6),
-    "join_revenue_by_nation": QuerySpec(q_join_revenue_by_nation, SQL_JOIN_REVENUE_BY_NATION),
-    "cube_revenue": QuerySpec(q_cube_revenue, SQL_CUBE_REVENUE),
-    "window_analytics": QuerySpec(q_window_analytics, SQL_WINDOW_ANALYTICS),
-    "interval_join": QuerySpec(q_interval_join, SQL_INTERVAL_JOIN),
-    "scd2_history": QuerySpec(q_scd2_history, SQL_SCD2_HISTORY),
-    "dedup_exact": QuerySpec(q_dedup_exact, SQL_DEDUP_EXACT),
-    "lsh_pairs": QuerySpec(q_lsh_pairs, _sql_lsh_pairs()),
-    "simhash_pairs": QuerySpec(q_simhash_pairs, _sql_simhash_pairs()),
-    "embedding_lsh_pairs": QuerySpec(q_embedding_lsh_pairs, _sql_embedding_lsh_pairs()),
-    "neardup_dedup": QuerySpec(q_neardup_dedup, _sql_neardup_dedup()),
-    "dup_spans": QuerySpec(q_dup_spans, _sql_dup_spans()),
-    "span_pairs": QuerySpec(q_span_pairs, _sql_span_pairs()),
-    "decontaminate": QuerySpec(q_decontaminate, SQL_DECONTAMINATE),
-    "edit_distance_pairs": QuerySpec(q_edit_distance_pairs, SQL_EDIT_DISTANCE_PAIRS),
-    "ann_ivf_topk": QuerySpec(q_ann_ivf_topk, SQL_ANN_TOPK),
-    "bm25_topk": QuerySpec(q_bm25_topk, SQL_BM25_TOPK),
-    "hybrid_rrf": QuerySpec(q_hybrid_rrf, SQL_HYBRID_RRF),
-    "lang_id": QuerySpec(q_lang_id, _sql_lang_id()),
-    "quality_filter": QuerySpec(q_quality_filter, SQL_QUALITY_FILTER),
-    "repetition_scores": QuerySpec(q_repetition_scores, SQL_REPETITION_SCORES),
-    "lm_bigram_score": QuerySpec(q_lm_bigram_score, SQL_LM_BIGRAM_SCORE),
-    "countmin_sketch": QuerySpec(q_countmin_sketch, _sql_countmin_sketch()),
-    "hll_vocab": QuerySpec(q_hll_vocab, _sql_hll_vocab()),
-    "kmv_overlap": QuerySpec(q_kmv_overlap, _sql_kmv_overlap()),
-    "zorder_key": QuerySpec(q_zorder_key, _sql_zorder_key()),
-    "triangle_count": QuerySpec(q_triangle_count, _sql_triangle_count()),
-    "pagerank": QuerySpec(q_pagerank, _sql_pagerank()),
-    "multimodal_features": QuerySpec(q_multimodal_features, _sql_multimodal_features()),
-    "mixture_sample": QuerySpec(q_mixture_sample, SQL_MIXTURE_SAMPLE),
-    "curation_pipeline": QuerySpec(q_curation_pipeline, _sql_curation_pipeline()),
-    "pii_redact": QuerySpec(q_pii_redact, _sql_pii_redact()),
-    "pack_sequences": QuerySpec(q_pack_sequences, _sql_pack_sequences()),
-    "ddl_ctas_topn": QuerySpec(q_ddl_ctas_topn, SQL_DDL_CTAS_TOPN),
-    "ddl_struct_array": QuerySpec(q_ddl_struct_array, SQL_DDL_STRUCT_ARRAY),
-    "filter_route": QuerySpec(q_filter_route, SQL_FILTER_ROUTE),
-    "case_dispatch": QuerySpec(q_case_dispatch, SQL_CASE_DISPATCH),
-    "null_guard": QuerySpec(q_null_guard, SQL_NULL_GUARD),
-    "path_extract": QuerySpec(q_path_extract, SQL_PATH_EXTRACT),
-    "set_ops": QuerySpec(q_set_ops, SQL_SET_OPS),
-    "json_cleanup_extract": QuerySpec(q_json_cleanup_extract, SQL_JSON_CLEANUP_EXTRACT),
-    "top_terms": QuerySpec(q_top_terms, SQL_TOP_TERMS),
-    "length_percentiles": QuerySpec(q_length_percentiles, SQL_LENGTH_PERCENTILES),
-    "line_dedup": QuerySpec(q_line_dedup, SQL_LINE_DEDUP),
-    "fingerprint": QuerySpec(q_fingerprint, SQL_FINGERPRINT),
-    "dedup_keep_best": QuerySpec(q_dedup_keep_best, SQL_DEDUP_KEEP_BEST),
-    "asof_join": QuerySpec(q_asof_join, SQL_ASOF_JOIN),
-    "rollup_revenue": QuerySpec(q_rollup_revenue, SQL_ROLLUP_REVENUE),
-    "tumbling_window": QuerySpec(q_tumbling_window, SQL_TUMBLING_WINDOW),
-    "concat_prompt": QuerySpec(q_concat_prompt, SQL_CONCAT_PROMPT),
-    "array_ops": QuerySpec(q_array_ops, SQL_ARRAY_OPS),
-    "rag_retrieval": QuerySpec(q_rag_retrieval, _sql_rag_retrieval()),
-    "multimodal_meta": QuerySpec(q_multimodal_meta, SQL_MULTIMODAL_META),
-    "minhash_signatures": QuerySpec(q_minhash_signatures, SQL_MINHASH_SIGNATURES),
-    "simhash": QuerySpec(q_simhash, _sql_simhash()),
-    "order_limit": QuerySpec(q_order_limit, SQL_ORDER_LIMIT),
-    "window_running_sum": QuerySpec(q_window_running_sum, SQL_WINDOW_RUNNING_SUM),
-    "anti_join": QuerySpec(q_anti_join, SQL_ANTI_JOIN),
-    "embedding_cosine_pairs": QuerySpec(q_embedding_cosine_pairs, SQL_EMBEDDING_COSINE_PAIRS),
-    "salted_join": QuerySpec(q_salted_join, SQL_SALTED_JOIN),
-    "vocab_size": QuerySpec(q_vocab_size, SQL_VOCAB_SIZE),
-    "deterministic_split": QuerySpec(q_deterministic_split, _sql_deterministic_split()),
-    "stratified_sample": QuerySpec(q_stratified_sample, _sql_stratified_sample()),
-    "quality_score": QuerySpec(q_quality_score, _sql_quality_score()),
-    "token_stats": QuerySpec(q_token_stats, SQL_TOKEN_STATS),
+    key[2:]: QuerySpec(_prepared(fn), _oracle(_SHARED_ORACLE.get(key[2:], key[2:])))
+    for key, fn in list(globals().items())
+    if key.startswith("q_")
 }
 
 

@@ -100,6 +100,11 @@ def _jvm_loads(class_name: str) -> bool:
     return True
 
 
+def _half_of_memory_gb() -> int:
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return max(1, total // 2 // 1024**3)
+
+
 def get_spark(
     app_name: str = "meetingcoach-spark",
     master: str | None = None,
@@ -107,7 +112,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``) and
+    ``SPARK_DRIVER_MEM`` the JVM heap (default half of physical memory,
+    so the collector bounds the heap before the host does).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -130,7 +137,8 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
         .config("spark.python.daemon.module",
                 "flink_sql_ai_meetingcoach_azure_spark.worker_daemon")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", f"{_half_of_memory_gb()}g"))
         # many distinct codegen'd plans in one session (bench/correctness
         # suites) exhaust the default JVM code cache, stalling JIT/Janino —
         # first big query of each family then pays minutes, not seconds

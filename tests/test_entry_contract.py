@@ -3,6 +3,8 @@ calls. Cheap insurance that a refactor never breaks the entry surface."""
 
 from __future__ import annotations
 
+import inspect
+import os
 import sys
 
 
@@ -34,17 +36,15 @@ def test_entry_contract_shape():
 
 def test_window_rotation_matches_ledger():
     """The r10 stale-claim bug class, made impossible (VERDICT r11 #8):
-    every window/rotation claim is re-derived from the driver's own
-    CORRECTNESS_r*.json records on each pytest run —
+    the window claims are re-derived from the CORRECTNESS_r*.json
+    evidence ledger on each pytest run —
       1. the registry order actually starts with _WINDOW_R13;
-      2. every never-externally-checked entry is IN the window (new
+      2. the ledger covers exactly the registry's entries;
+      3. every never-externally-checked entry is IN the window (new
          work cannot re-open the external-evidence ledger);
-      3. every out-of-window entry has external green evidence at or
+      4. every out-of-window entry has external green evidence at or
          above the rotation floor (r13 rotated every r06-evidence
-         entry into the window — the tail floor is r08);
-      4. the window's stale-rotation slots really are the stalest: no
-         tail entry's evidence is older than any rotated-in entry's
-         evidence round."""
+         entry into the window — the tail floor is r08)."""
     sys.path.insert(0, "/root/repo")
     sys.path.insert(0, "/root/repo/tools")
     import __spark_entry__ as e
@@ -82,3 +82,51 @@ def test_out_of_window_oracles_stay_green(spark):
     assert tail_oracle_backed  # the set exists by construction
     failures = check_entries(spark, "/root/testdata/sf0.001", tail_oracle_backed)
     assert not failures, failures
+
+
+def test_registry_follows_the_naming_rule():
+    """The registry is derived, not hand-kept: entry <name> is the function
+    q_<name> paired with SQL_<NAME> or _sql_<name>(), and _SHARED_ORACLE
+    names the route / codec siblings that reuse a base entry's oracle. A
+    misnamed function or oracle fails here instead of silently dropping
+    out of the registry or out of its pair."""
+    from flink_sql_ai_meetingcoach_azure_spark import queries as q
+
+    fns = {k[2:]: v for k, v in vars(q).items()
+           if k.startswith("q_") and inspect.isfunction(v)}
+    assert list(q.QUERIES) == q._WINDOW_R13 + [
+        n for n in fns if n not in q._WINDOW_R13]
+    consts = {k[4:].lower() for k in vars(q) if k.startswith("SQL_")}
+    builders = {k[5:] for k, v in vars(q).items()
+                if k.startswith("_sql_") and inspect.isfunction(v)}
+    assert not consts & builders, consts & builders
+    own = set(fns) - set(q._SHARED_ORACLE)
+    # every oracle belongs to the entry with its name, and every entry
+    # but the siblings has one; the siblings' bases are among them
+    assert consts | builders == own, (consts | builders) ^ own
+    assert set(q._SHARED_ORACLE) <= set(fns)
+    assert set(q._SHARED_ORACLE.values()) <= own
+    for n, spec in q.QUERIES.items():
+        assert spec.fn.__wrapped__ is fns[n]
+
+
+def test_registry_prepares_an_unconfigured_session(spark, sf_dir):
+    """A caller may hand in a session without get_spark's settings. The
+    registry's wrapper runs _prep before every entry, so the entry still
+    reads events.ts as UTC timestamps under AQE."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as e
+
+    conf = spark.conf
+    try:
+        conf.set("spark.sql.session.timeZone", "America/New_York")
+        conf.set("spark.sql.adaptive.enabled", "false")
+        conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+        e.queries()["filter_route"](spark, sf_dir)
+        assert conf.get("spark.sql.session.timeZone") == "UTC"
+        assert conf.get("spark.sql.adaptive.enabled") == "true"
+        assert conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    finally:
+        conf.set("spark.sql.session.timeZone", "UTC")
+        conf.set("spark.sql.adaptive.enabled", "true")
+        conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

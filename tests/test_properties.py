@@ -145,7 +145,7 @@ def test_span_hash_duckdb_matches_python(texts, window):
         SPAN_HASH_P,
     )
     from flink_sql_ai_meetingcoach_azure_spark.queries import (
-        _sql_span_postings_ctes,
+        _span_postings_ctes_sql,
     )
 
     def py_spans(doc_id, text):
@@ -173,7 +173,7 @@ def test_span_hash_duckdb_matches_python(texts, window):
     got = sorted(
         tuple(r)
         for r in con.execute(
-            f"WITH {_sql_span_postings_ctes(window)} "
+            f"WITH {_span_postings_ctes_sql(window)} "
             "SELECT doc_id, pos, h FROM spans"
         ).fetchall()
     )
