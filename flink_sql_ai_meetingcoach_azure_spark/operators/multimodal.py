@@ -1665,7 +1665,8 @@ def decode_and_featurize(
     """Decode each payload and emit per-item image features.
 
     Output: (id_col, height, width, intensity_sum, mean_intensity,
-    channel_means[3], feature[64] float32) — ``intensity_sum`` is the exact
+    channel_means[3], feature[64] float32, null when ``height`` or
+    ``width`` is under 8) — ``intensity_sum`` is the exact
     integer sum of all decoded bytes (float-free, so correctness oracles can
     compare it bit-exactly). Runs as one Arrow batch per task via
     ``mapInPandas`` — the real-decoder seam is marked below.
@@ -1718,13 +1719,18 @@ def decode_and_featurize(
                     [_fake_decode(p, height, width) for p in pdf[payload_col]]
                 )  # (n, H, W, 3) uint8
             n = len(pdf)
-            flat = imgs.astype(np.float32) / 255.0
-            # 64-dim pooled feature: mean over an 8x8 grid of cells
+            # 64-dim pooled feature: mean over an 8x8 grid of cells; an
+            # output grid under 8x8 leaves cells empty, so it gets none
             gh, gw = 8, 8
-            cells = flat[:, : gh * (height // gh), : gw * (width // gw), :].reshape(
-                n, gh, height // gh, gw, width // gw, 3
-            )
-            feats = cells.mean(axis=(2, 4)).mean(axis=3).reshape(n, -1)
+            if height < gh or width < gw:
+                feature = [None] * n
+            else:
+                flat = imgs.astype(np.float32) / 255.0
+                cells = flat[:, : gh * (height // gh), : gw * (width // gw), :].reshape(
+                    n, gh, height // gh, gw, width // gw, 3
+                )
+                feats = cells.mean(axis=(2, 4)).mean(axis=3).reshape(n, -1)
+                feature = [f.astype(np.float32).tolist() for f in feats]
             ch_means = imgs.mean(axis=(1, 2))  # (n, 3)
             yield pd.DataFrame(
                 {
@@ -1734,7 +1740,7 @@ def decode_and_featurize(
                     "intensity_sum": imgs.reshape(n, -1).sum(axis=1, dtype=np.int64),
                     "mean_intensity": imgs.reshape(n, -1).mean(axis=1).astype(float),
                     "channel_means": [[float(c) for c in m] for m in ch_means],
-                    "feature": [f.astype(np.float32).tolist() for f in feats],
+                    "feature": feature,
                 },
                 columns=[f.name for f in out_schema.fields],
             )

@@ -1,7 +1,6 @@
 from flink_sql_ai_meetingcoach_azure_spark.sources.documents import (  # noqa: F401
     load_markdown_corpus,
 )
-from flink_sql_ai_meetingcoach_azure_spark.sources.tables import load_table  # noqa: F401
 from flink_sql_ai_meetingcoach_azure_spark.sources.cache import (  # noqa: F401
     ResponseCache,
 )

@@ -1,27 +1,10 @@
-"""Parquet table loaders for the driver's deterministic testdata
-(TESTDATA.md: region nation customer supplier part orders lineitem events
-documents embeddings at /root/testdata/sf{0.001,0.01,0.1})."""
+"""Names of the deterministic testdata tables (TESTDATA.md: one
+``<name>.parquet`` per table in each scale-factor directory);
+``queries._t`` reads them."""
 
 from __future__ import annotations
-
-import os
-
-from pyspark.sql import DataFrame, SparkSession
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
-    d = (sf_dir or DEFAULT_SF_DIR).rstrip("/")
-    return spark.read.parquet(f"{d}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None, tables: list[str] | None = None) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for t in tables or TABLES:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)

@@ -130,3 +130,33 @@ def test_registry_prepares_an_unconfigured_session(spark, sf_dir):
         conf.set("spark.sql.session.timeZone", "UTC")
         conf.set("spark.sql.adaptive.enabled", "true")
         conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+def test_cached_index_builds_once_per_key_until_cleared():
+    """bench.py times ann_ivf_topk's cold build by clearing _IVF_CACHE and
+    its steady-state probe by calling again: a hit must not rebuild, each
+    tag is its own index, and a clear forces the next call to rebuild."""
+    import hashlib
+    import tempfile
+    from types import SimpleNamespace
+
+    from flink_sql_ai_meetingcoach_azure_spark.queries import _IVF_CACHE, _cached_index
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-stub"))
+    sf_dir = "/data/sf0.001"
+    built = []
+    saved = dict(_IVF_CACHE)
+    try:
+        p1 = _cached_index(spark, sf_dir, "ivf_idx", built.append)
+        sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+        assert p1 == f"{tempfile.gettempdir()}/ivf_idx_app-stub_{sf_tag}/index"
+        assert _cached_index(spark, sf_dir, "ivf_idx", built.append) == p1
+        assert built == [p1]
+        p2 = _cached_index(spark, sf_dir, "ivfpq_idx", built.append)
+        assert p2 != p1 and built == [p1, p2]
+        _IVF_CACHE.clear()
+        assert _cached_index(spark, sf_dir, "ivf_idx", built.append) == p1
+        assert built == [p1, p2, p1]
+    finally:
+        _IVF_CACHE.clear()
+        _IVF_CACHE.update(saved)

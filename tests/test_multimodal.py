@@ -45,6 +45,17 @@ def test_decode_featurize_deterministic(spark):
     assert by_id["m1"]["feature"] != by_id["m2"]["feature"]
 
 
+def test_decode_featurize_under_8x8_has_null_feature(spark):
+    """The 64-dim feature pools an 8x8 cell grid; a smaller output grid
+    would leave every cell empty, so the feature is null, not 64 NaNs."""
+    out = decode_and_featurize(_media(spark), height=4, width=4).collect()
+    assert len(out) == 3
+    for r in out:
+        assert (r["height"], r["width"]) == (4, 4)
+        assert r["feature"] is None
+        assert len(r["channel_means"]) == 3
+
+
 def test_real_decoder_raises(spark):
     with pytest.raises(Exception, match="NotImplementedError|real image"):
         decode_and_featurize(_media(spark), decoder="real").collect()
