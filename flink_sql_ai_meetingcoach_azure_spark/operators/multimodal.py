@@ -5,37 +5,40 @@ Design: media payloads are opaque ``binary`` columns with typed metadata
 (modality, byte length, content hash); all heavy per-item work runs as
 Arrow-batched pandas functions over ``mapInPandas`` so each task processes
 a whole batch with NumPy, and partitioning/pushdown stay Spark-native.
+Every decode operator is one :func:`_payload_stage` around its per-batch
+body.
 
-Codec status (r13): FIVE container families decode FOR REAL with
-stdlib+numpy alone — :func:`decode_png` (zlib inflate + scanline
-unfilter; 8/16-bit gray/GA/RGB/RGBA, sub-byte grayscale 1/2/4, PALETTED
-ctype 3, Adam7 interlace — ``decoder='png'``, hash-verified by
-``png_decode_stats``), :func:`decode_jpeg` (canonical Huffman from DHT,
-byte unstuffing, DC prediction, run-length AC, dequant, float64 IDCT;
-progressive SOF2 via :func:`_decode_progressive`; ANY T.81 sampling
-layout 1-4 via NN-gather upsample; non-MCU-aligned dims; DRI in both
-scan kinds — ``decoder='jpeg'``, ``jpeg_decode_stats``),
-:func:`decode_gif` (variable-width LZW, local palettes, interlace, full
-animation compositing — ``decoder='gif'``, ``gif_decode_stats``),
-:func:`decode_bmp` (BI_RGB 24/32-bit + 8-bit paletted, both row orders
-— ``decoder='bmp'``), and :func:`decode_wav` (PCM 8/16/24-bit + IEEE
-float — ``wav_decode_stats``); video containers demux for real too:
-:func:`decode_apng_frames` (RGBA canvas compositing),
-:func:`decode_gif_frames` and :func:`decode_avi_mjpeg_frames`
-(Motion-JPEG movi chunks), dispatched per payload by
-``video_dhash_signatures(container='auto')``. :func:`nn_resize` is the
-pure-numpy resize stage. On top of the codecs sit the perceptual-dedup
-signatures: :func:`dhash_signatures` / :func:`phash_signatures`
-(images), :func:`audio_delta_signatures`, :func:`video_dhash_signatures`
-— all hash-verified near-dup entries. WebP/AVIF and inter-frame video
-codecs (H.26x) genuinely need libraries not in this container, so those
-paths stay STUBBED: ``decoder='fake'`` (default) derives a
-deterministic small tensor from the bytes (md5-seeded) so every
-downstream stage — feature extraction, frame sampling, batching shapes
-— is real and testable; ``decoder='real'`` raises
-``NotImplementedError`` at the exact seam where a PIL/ffmpeg call would
-go. Scan-side header metadata needs no decode at
-all: :func:`parse_png_header` / :func:`parse_jpeg_header` /
+Codecs, stdlib + numpy alone: :func:`decode_png` (zlib inflate +
+scanline unfilter; 8/16-bit gray/GA/RGB/RGBA, sub-byte grayscale 1/2/4,
+paletted color type 3, Adam7 interlace), :func:`decode_jpeg` (baseline
+and progressive through ONE scan loop: canonical Huffman from DHT, byte
+unstuffing, DC prediction, run-length AC, EOB runs, successive
+approximation, dequant, float64 IDCT; any T.81 sampling layout 1-4,
+non-MCU-aligned dims, restart intervals), :func:`decode_gif`
+(variable-width LZW, local palettes, interlace, animation compositing),
+:func:`decode_bmp` (BI_RGB 24/32-bit + 8-bit paletted, both row orders)
+and :func:`decode_wav` (PCM 8/16/24-bit + IEEE float). Video containers
+demux for real too: :func:`decode_apng_frames` (RGBA canvas
+compositing), :func:`decode_gif_frames` and
+:func:`decode_avi_mjpeg_frames` (Motion-JPEG movi chunks).
+:func:`nn_resize` is the pure-numpy resize stage.
+
+Format dispatch: a payload's magic bytes name its format, so no operator
+asks the caller for one. One table, ``_MAGIC``, feeds both the Catalyst
+classifier :func:`sniff_media` and the Python dispatch by which
+:func:`decode_image` (PNG / JPEG / GIF / BMP stills) and
+:func:`decode_frames` (APNG / animated GIF / AVI-MJPEG) pick the codec
+per payload; an unknown magic raises ``ValueError``. On top of the
+codecs sit the perceptual-dedup signatures: :func:`dhash_signatures` /
+:func:`phash_signatures` (images), :func:`audio_delta_signatures`,
+:func:`video_dhash_signatures` — all hash-verified near-dup entries.
+WebP/AVIF and inter-frame video codecs (H.26x) need libraries not in
+this container; :func:`decode_and_featurize`'s default ``decoder='fake'``
+derives a deterministic small tensor from the bytes (md5-seeded) so every
+downstream stage — feature extraction, frame sampling, batching shapes —
+is real and testable on any payload, and ``decoder='real'`` decodes
+through :func:`decode_image`. Scan-side header metadata needs no decode
+at all: :func:`parse_png_header` / :func:`parse_jpeg_header` /
 :func:`parse_wav_header` classify and size-filter in pure Catalyst.
 
 Scale notes (100 TB): the input is typically parquet with a binary column;
@@ -49,7 +52,10 @@ so Catalyst prunes work at the scan.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+import struct
+import zlib
+from functools import reduce
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -67,7 +73,21 @@ MEDIA_META = T.StructType(
 )
 
 
-_PNG_SIG_HEX = "89504E470D0A1A0A"
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _be(b, pos, nbytes: int):
+    """Big-endian unsigned integer of ``nbytes`` bytes at 1-based ``pos``
+    (an int or a Column) of the binary column ``b``, as a bigint."""
+    return F.conv(F.hex(F.substring(b, pos, nbytes)), 16, 10).cast("bigint")
+
+
+def _le(b, pos, nbytes: int):
+    """Little-endian twin of :func:`_be`, summed byte by byte."""
+    v = _be(b, pos, 1)
+    for k in range(1, nbytes):
+        v = v + _be(b, pos + k, 1) * F.lit(256**k)
+    return v
 
 
 def parse_png_header(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -86,19 +106,15 @@ def parse_png_header(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     fields — the row always survives (filter-not-fail, the
     attach_media_metadata discipline)."""
     b = F.col(payload_col)
-    sig_ok = F.hex(F.substring(b, 1, 8)) == F.lit(_PNG_SIG_HEX)
+    sig_ok = F.hex(F.substring(b, 1, 8)) == F.lit(_PNG_SIG.hex().upper())
     is_png = sig_ok & (F.length(b) >= 26)
-
-    def be(pos: int, nbytes: int):
-        return F.conv(F.hex(F.substring(b, pos, nbytes)), 16, 10).cast("bigint")
-
     return df.withColumns(
         {
             "is_png": F.coalesce(is_png, F.lit(False)),
-            "width": F.when(is_png, be(17, 4)),
-            "height": F.when(is_png, be(21, 4)),
-            "bit_depth": F.when(is_png, be(25, 1)),
-            "color_type": F.when(is_png, be(26, 1)),
+            "width": F.when(is_png, _be(b, 17, 4)),
+            "height": F.when(is_png, _be(b, 21, 4)),
+            "bit_depth": F.when(is_png, _be(b, 25, 1)),
+            "color_type": F.when(is_png, _be(b, 26, 1)),
         }
     )
 
@@ -131,11 +147,6 @@ def parse_jpeg_header(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     ``is_jpeg = false`` + NULLs (filter-not-fail)."""
     b = F.col(payload_col)
 
-    def be(pos, nbytes):
-        return F.conv(F.hex(F.substring(b, pos, F.lit(nbytes))), 16, 10).cast(
-            "bigint"
-        )
-
     def hx(pos, nbytes):
         return F.hex(F.substring(b, pos, F.lit(nbytes)))
 
@@ -149,7 +160,7 @@ def parse_jpeg_header(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             F.when(off <= 0, off)
             .when(hx(off, 1) != "FF", F.lit(0).cast("bigint"))
             .when(is_sof, -off)
-            .otherwise(off + 2 + be(off + 2, 2))
+            .otherwise(off + 2 + _be(b, off + 2, 2))
         )
 
     walked = F.aggregate(
@@ -160,19 +171,13 @@ def parse_jpeg_header(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     df = df.withColumn("__sof", F.when(soi_ok, -walked))
     sof = F.col("__sof")
     found = sof.isNotNull() & (sof > 0) & (F.length(b) >= sof + 9)
-
-    def be2(pos_expr, nbytes):
-        return F.conv(
-            F.hex(F.substring(b, pos_expr, F.lit(nbytes))), 16, 10
-        ).cast("bigint")
-
     return df.withColumns(
         {
             "is_jpeg": F.coalesce(found, F.lit(False)),
-            "precision": F.when(found, be2(sof + 4, 1)),
-            "height": F.when(found, be2(sof + 5, 2)),
-            "width": F.when(found, be2(sof + 7, 2)),
-            "n_components": F.when(found, be2(sof + 9, 1)),
+            "precision": F.when(found, _be(b, sof + 4, 1)),
+            "height": F.when(found, _be(b, sof + 5, 2)),
+            "width": F.when(found, _be(b, sof + 7, 2)),
+            "n_components": F.when(found, _be(b, sof + 9, 1)),
         }
     ).drop("__sof")
 
@@ -195,15 +200,6 @@ def parse_wav_header(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     NULLs (filter-not-fail)."""
     b = F.col(payload_col)
 
-    def byte(pos):
-        return F.conv(F.hex(F.substring(b, pos, F.lit(1))), 16, 10).cast("bigint")
-
-    def le(pos, nbytes: int):
-        v = byte(pos)
-        for k in range(1, nbytes):
-            v = v + byte(pos + k) * F.lit(256**k)
-        return v
-
     def tag(pos, s: str):
         return F.substring(b, pos, F.lit(len(s))).cast("string") == s
 
@@ -211,7 +207,7 @@ def parse_wav_header(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 
     def step(acc, _):
         off = acc  # >0: keep walking; <0: -(fmt data offset); 0: invalid
-        size = le(off + 4, 4)
+        size = _le(b, off + 4, 4)
         return (
             F.when(off <= 0, off)
             .when(F.length(b) < off + 7, F.lit(0).cast("bigint"))
@@ -228,37 +224,41 @@ def parse_wav_header(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     df = df.withColumn("__fmt", F.when(riff_ok, -walked))
     fmt = F.col("__fmt")
     found = fmt.isNotNull() & (fmt > 0) & (F.length(b) >= fmt + 15)
-
-    def le_at(pos_expr, nbytes: int):
-        v = F.conv(F.hex(F.substring(b, pos_expr, F.lit(1))), 16, 10).cast("bigint")
-        for k in range(1, nbytes):
-            v = v + F.conv(
-                F.hex(F.substring(b, pos_expr + k, F.lit(1))), 16, 10
-            ).cast("bigint") * F.lit(256**k)
-        return v
-
     return df.withColumns(
         {
             "is_wav": F.coalesce(found, F.lit(False)),
-            "audio_format": F.when(found, le_at(fmt, 2)),
-            "channels": F.when(found, le_at(fmt + 2, 2)),
-            "sample_rate": F.when(found, le_at(fmt + 4, 4)),
-            "bits_per_sample": F.when(found, le_at(fmt + 14, 2)),
+            "audio_format": F.when(found, _le(b, fmt, 2)),
+            "channels": F.when(found, _le(b, fmt + 2, 2)),
+            "sample_rate": F.when(found, _le(b, fmt + 4, 4)),
+            "bits_per_sample": F.when(found, _le(b, fmt + 14, 2)),
         }
     ).drop("__fmt")
 
 
-_GIF_SIG_HEX = ("474946383761", "474946383961")  # GIF87a / GIF89a
+# Container signatures, (format, ((offset, magic), ...)), matched in
+# order: the one table behind sniff_media (Catalyst) and decode_image /
+# decode_frames (Python). RIFF wraps WAVE and AVI alike, so those two
+# read offset 8 too.
+_MAGIC = (
+    ("png", ((0, _PNG_SIG),)),
+    ("jpeg", ((0, b"\xff\xd8\xff"),)),
+    ("gif", ((0, b"GIF87a"),)),
+    ("gif", ((0, b"GIF89a"),)),
+    ("bmp", ((0, b"BM"),)),
+    ("wav", ((0, b"RIFF"), (8, b"WAVE"))),
+    ("avi", ((0, b"RIFF"), (8, b"AVI "))),
+)
 
 
 def sniff_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Magic-byte container classification + cheap fixed-offset dimension
     extraction over an opaque binary column — the route-by-format pass a
     mixed-media corpus runs at the scan, BEFORE any per-format parser or
-    decode UDF: one codegen projection tags every payload png / jpeg /
-    gif / bmp / wav / avi / unknown, so the expensive per-format paths
-    (parse_jpeg_header's segment walk, the decode UDFs) each see only
-    their own rows. Pure Catalyst, zero Python, zero shuffle.
+    decode UDF: one codegen projection tags every payload with its
+    ``_MAGIC`` format (png / jpeg / gif / bmp / wav / avi) or unknown,
+    so the expensive per-format paths (parse_jpeg_header's segment walk,
+    the decode UDFs) each see only their own rows. Pure Catalyst, zero
+    Python, zero shuffle.
 
     Dimensions are extracted ONLY where the container fixes them at a
     constant offset (PNG IHDR big-endian, GIF logical-screen-descriptor
@@ -271,55 +271,73 @@ def sniff_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     b = F.col(payload_col)
     n = F.length(b)
 
-    def pfx(nbytes: int):
-        return F.hex(F.substring(b, 1, nbytes))
-
-    def be(pos: int, nbytes: int):
-        return F.conv(F.hex(F.substring(b, pos, nbytes)), 16, 10).cast("bigint")
-
-    def le(pos: int, nbytes: int):
-        v = F.conv(F.hex(F.substring(b, pos, 1)), 16, 10).cast("bigint")
-        for k in range(1, nbytes):
-            v = v + F.conv(F.hex(F.substring(b, pos + k, 1)), 16, 10).cast(
-                "bigint"
-            ) * F.lit(256**k)
-        return v
-
     def le_i32(pos: int):
-        v = le(pos, 4)
+        v = _le(b, pos, 4)
         return F.when(v >= F.lit(2**31), v - F.lit(2**32)).otherwise(v)
 
-    is_png = pfx(8) == F.lit(_PNG_SIG_HEX)
-    is_jpeg = pfx(3) == F.lit("FFD8FF")
-    is_gif = pfx(6).isin(*_GIF_SIG_HEX)
-    is_bmp = pfx(2) == F.lit("424D")
-    is_wav = (pfx(4) == F.lit("52494646")) & (
-        F.hex(F.substring(b, 9, 4)) == F.lit("57415645")
-    )
-    is_avi = (pfx(4) == F.lit("52494646")) & (
-        F.hex(F.substring(b, 9, 4)) == F.lit("41564920")  # "AVI " (r13)
-    )
-    fmt = (
-        F.when(is_png, "png")
-        .when(is_jpeg, "jpeg")
-        .when(is_gif, "gif")
-        .when(is_bmp, "bmp")
-        .when(is_wav, "wav")
-        .when(is_avi, "avi")
-        .otherwise("unknown")
-    )
+    is_fmt: dict = {}
+    for name, sig in _MAGIC:
+        hit = reduce(
+            lambda x, y: x & y,
+            [
+                F.hex(F.substring(b, off + 1, len(magic)))
+                == F.lit(magic.hex().upper())
+                for off, magic in sig
+            ],
+        )
+        is_fmt[name] = is_fmt[name] | hit if name in is_fmt else hit
+    fmt = None
+    for name, hit in is_fmt.items():
+        fmt = F.when(hit, name) if fmt is None else fmt.when(hit, name)
+    fmt = fmt.otherwise("unknown")
+    is_png, is_gif, is_bmp = is_fmt["png"], is_fmt["gif"], is_fmt["bmp"]
     width = (
-        F.when(is_png & (n >= 24), be(17, 4))
-        .when(is_gif & (n >= 10), le(7, 2))
+        F.when(is_png & (n >= 24), _be(b, 17, 4))
+        .when(is_gif & (n >= 10), _le(b, 7, 2))
         .when(is_bmp & (n >= 26), le_i32(19))
     )
     height = (
-        F.when(is_png & (n >= 24), be(21, 4))
-        .when(is_gif & (n >= 10), le(9, 2))
+        F.when(is_png & (n >= 24), _be(b, 21, 4))
+        .when(is_gif & (n >= 10), _le(b, 9, 2))
         .when(is_bmp & (n >= 26), le_i32(23))
     )
     return df.withColumns(
         {"media_format": fmt, "width": width, "height": height}
+    )
+
+
+def _decode_by_magic(payload, codecs: dict):
+    """Decode ``payload`` with the codec of the ``_MAGIC`` format its
+    leading bytes match — the Python twin of :func:`sniff_media`."""
+    head = bytes(payload[:12]) if payload else b""
+    fmt = next(
+        (name for name, sig in _MAGIC
+         if all(head[off : off + len(m)] == m for off, m in sig)),
+        "unknown",
+    )
+    if fmt not in codecs:
+        raise ValueError(f"no decoder for media format {fmt!r}")
+    return codecs[fmt](payload)
+
+
+def decode_image(payload) -> np.ndarray:
+    """Decode a still image with the codec its magic bytes name — PNG,
+    JPEG, GIF (first composited frame) or BMP — to (H, W, 3) uint8."""
+    return _decode_by_magic(
+        payload,
+        {"png": decode_png, "jpeg": decode_jpeg, "gif": decode_gif,
+         "bmp": decode_bmp},
+    )
+
+
+def decode_frames(payload) -> list[np.ndarray]:
+    """Demux a video container by its magic bytes — APNG (a plain PNG is
+    one frame), animated GIF or AVI Motion-JPEG — to (H, W, 3) uint8
+    frames; a real ingest stream carries all three side by side."""
+    return _decode_by_magic(
+        payload,
+        {"png": decode_apng_frames, "gif": decode_gif_frames,
+         "avi": decode_avi_mjpeg_frames},
     )
 
 
@@ -346,6 +364,41 @@ _ADAM7_PASSES = [
     (1, 0, 2, 2),
     (0, 1, 1, 2),
 ]
+
+# PNG color types (spec §6.1): samples per pixel and the legal bit depths
+_PNG_COLOR_TYPES = {
+    0: (1, (1, 2, 4, 8, 16)),  # grayscale
+    2: (3, (8, 16)),  # RGB
+    3: (1, (1, 2, 4, 8)),  # palette index
+    4: (2, (8, 16)),  # grayscale + alpha
+    6: (4, (8, 16)),  # RGBA
+}
+
+
+def _adam7(w: int, h: int):
+    """Adam7 pass geometry: the (row, column) pixel indices of each
+    NON-EMPTY pass in stream order — a pass that small dims leave empty
+    contributes no bytes to the stream."""
+    for x0, y0, dx, dy in _ADAM7_PASSES:
+        if w > x0 and h > y0:
+            yield np.arange(y0, h, dy), np.arange(x0, w, dx)
+
+
+def _pack_bits(vals: np.ndarray, depth: int) -> np.ndarray:
+    """(H, W) sub-byte samples -> (H, ceil(W·depth/8)) int64 byte rows,
+    MSB-first with the trailing byte zero-padded (spec §7.2)."""
+    h, w = vals.shape
+    bits = (vals[:, :, None] >> np.arange(depth - 1, -1, -1)) & 1
+    return np.packbits(
+        bits.reshape(h, w * depth).astype(np.uint8), axis=1
+    ).astype(np.int64)
+
+
+def _unpack_bits(rows: np.ndarray, w: int, depth: int) -> np.ndarray:
+    """Inverse of :func:`_pack_bits`: uint8 byte rows -> (H, W) int64."""
+    per = np.unpackbits(rows, axis=1)[:, : w * depth]
+    per = per.reshape(rows.shape[0], w, depth)
+    return (per * (1 << np.arange(depth - 1, -1, -1))).sum(axis=2)
 
 
 def _png_unfilter(
@@ -393,167 +446,130 @@ def _png_unfilter(
     return out, off
 
 
-def decode_png(payload: bytes) -> np.ndarray:
-    """REAL PNG decode with the standard library only (zlib is baked into
-    CPython — no PIL needed): parse chunks, inflate the concatenated IDAT
-    stream, and invert the per-scanline filters (None/Sub/Up/Average/
-    Paeth, PNG spec §6). Supports 8-bit AND 16-bit gray / gray+alpha /
-    RGB / RGBA, non-interlaced AND Adam7-interlaced (r13, spec §8.2:
-    seven passes, each an independently filtered sub-image — prev-row
-    state resets per pass — scattered back onto the 8x8 pixel lattice;
-    empty passes for small dims contribute no bytes). Filters operate
-    BYTEwise per spec §6 whatever the depth, with bpp =
-    channels·depth/8; 16-bit samples are big-endian, spec §7.1, and
-    are reduced to 8-bit by taking the high byte.
-    Returns (H, W, 3) uint8 RGB (gray replicated, alpha dropped).
-    PALETTED PNGs (color type 3, r13 — the indexed-color files the web
-    is full of) decode via the PLTE chunk at depths 8/4/2/1: filters
-    run BYTEwise with bpp=1, then sub-byte depths unpack MSB-first
-    (spec §7.2) before the palette lookup; Adam7 at sub-byte depths
-    stays the narrowed seam (per-pass bit packing needs a bit-level
-    scatter).
 
-    This closes most of the 'real decoders need PIL' gap for PNG: the
-    unfilter loop is per-scanline Python over numpy rows — decoding is
-    inherently per-item work inside the Arrow batch, exactly where the
-    mapInPandas seam puts it."""
-    import struct  # noqa: PLC0415
-    import zlib  # noqa: PLC0415
-
-    if not payload or len(payload) < 8 or bytes(payload[:8]) != b"\x89PNG\r\n\x1a\n":
+def _png_chunks(payload):
+    """Walk a PNG's chunk stream: yields (type, data) from the first
+    chunk after the signature up to IEND."""
+    if not payload or len(payload) < 8 or bytes(payload[:8]) != _PNG_SIG:
         raise ValueError("not a PNG payload")
     payload = bytes(payload)
-    pos, idat, meta, plte = 8, b"", None, None
+    pos = 8
     while pos + 8 <= len(payload):
         (ln,) = struct.unpack(">I", payload[pos : pos + 4])
         typ = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + ln]
-        if typ == b"IHDR":
-            w, h, depth, ctype, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data
+        if typ == b"IEND":
+            return
+        yield typ, payload[pos + 8 : pos + 8 + ln]
+        pos += 12 + ln
+
+
+def _png_ihdr(data: bytes) -> tuple[int, int, int, int, int]:
+    """IHDR -> (width, height, bit depth, color type, interlace)."""
+    w, h, depth, ctype, _comp, _filt, interlace = struct.unpack(
+        ">IIBBBBB", data
+    )
+    return w, h, depth, ctype, interlace
+
+
+def _png_file(chunks: list[tuple[bytes, bytes]]) -> bytes:
+    """Signature + each (type, data) as a length/type/data/CRC32 chunk."""
+    return _PNG_SIG + b"".join(
+        struct.pack(">I", len(data)) + typ + data
+        + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
+        for typ, data in chunks
+    )
+
+
+def _png_samples(
+    raw: bytes, w: int, h: int, depth: int, channels: int, interlace: int
+) -> np.ndarray:
+    """Inflated stream -> (H, W, channels) samples: unfilter the whole
+    image, or each Adam7 pass as its own filtered sub-image scattered
+    back onto the pixel lattice; then unpack sub-byte depths MSB-first
+    (spec §7.2) or keep the high byte of big-endian 16-bit samples
+    (§7.1). Filters run BYTEwise whatever the depth, with bpp =
+    max(1, channels·depth/8)."""
+    if depth < 8:
+        if interlace:
+            raise NotImplementedError(
+                "Adam7 at sub-byte depths needs bit-level pass scatter"
             )
-            meta = (w, h, depth, ctype, interlace)
+        rows, _ = _png_unfilter(raw, 0, h, -(-(w * depth) // 8), 1)
+        return _unpack_bits(rows, w, depth)[:, :, None]
+    bpp = channels * depth // 8
+    if interlace == 0:
+        out, _ = _png_unfilter(raw, 0, h, w * bpp, bpp)
+    else:
+        out = np.zeros((h, w * bpp), dtype=np.uint8)
+        lattice = out.reshape(h, w, bpp)
+        off = 0
+        for ys, xs in _adam7(w, h):
+            sub, off = _png_unfilter(raw, off, len(ys), len(xs) * bpp, bpp)
+            lattice[np.ix_(ys, xs)] = sub.reshape(len(ys), len(xs), bpp)
+    if depth == 16:
+        return (
+            np.frombuffer(out.tobytes(), dtype=">u2").reshape(h, w, channels)
+            >> 8
+        ).astype(np.uint8)
+    return out.reshape(h, w, channels)
+
+
+def _png_rgb(ihdr, plte, idat: bytes) -> np.ndarray:
+    """One PNG image (IHDR fields, PLTE, its zlib stream) -> (H, W, 3)
+    uint8: palette lookup, sub-byte gray max-scaled to 8 bits, gray
+    replicated, alpha dropped."""
+    if ihdr is None:
+        raise ValueError("PNG without IHDR")
+    w, h, depth, ctype, interlace = ihdr
+    if ctype not in _PNG_COLOR_TYPES:
+        raise NotImplementedError(f"unsupported PNG color type {ctype}")
+    channels, depths = _PNG_COLOR_TYPES[ctype]
+    if ctype == 3 and plte is None:
+        raise ValueError("paletted PNG without a PLTE chunk")
+    if depth not in depths or interlace not in (0, 1):
+        raise NotImplementedError(
+            f"PNG color type {ctype} at depth={depth} interlace={interlace}"
+        )
+    img = _png_samples(zlib.decompress(idat), w, h, depth, channels, interlace)
+    if ctype == 3:
+        idx = img[:, :, 0].astype(np.int64)
+        return np.ascontiguousarray(plte[idx % len(plte)])
+    if depth < 8:
+        img = (img * 255 // ((1 << depth) - 1)).astype(np.uint8)
+    if channels == 3:
+        return img
+    if channels == 4:
+        return np.ascontiguousarray(img[:, :, :3])
+    return np.repeat(img[:, :, :1], 3, axis=2)
+
+
+def decode_png(payload: bytes) -> np.ndarray:
+    """REAL PNG decode with the standard library only (zlib is baked into
+    CPython — no PIL needed): walk the chunks, inflate the concatenated
+    IDAT stream, and invert the per-scanline filters (None/Sub/Up/
+    Average/Paeth, PNG spec §6). Supports every color type — 8- and
+    16-bit gray / gray+alpha / RGB / RGBA, sub-byte grayscale 1/2/4
+    (max-scaled to 8 bits) and PALETTED color type 3 at depths 1/2/4/8
+    via the PLTE chunk — non-interlaced AND Adam7-interlaced (spec
+    §8.2: seven independently filtered sub-images — prev-row state
+    resets per pass — scattered back onto the 8x8 pixel lattice).
+    16-bit samples are big-endian (spec §7.1) and reduce to 8 bits by
+    their high byte. Returns (H, W, 3) uint8 RGB (gray replicated,
+    alpha dropped). Adam7 at sub-byte depths stays the narrowed seam
+    (per-pass bit packing needs a bit-level scatter).
+
+    The unfilter loop is per-scanline Python over numpy rows — decoding
+    is inherently per-item work inside the Arrow batch, exactly where
+    the mapInPandas seam puts it."""
+    ihdr, plte, idat = None, None, b""
+    for typ, data in _png_chunks(payload):
+        if typ == b"IHDR":
+            ihdr = _png_ihdr(data)
         elif typ == b"PLTE":
             plte = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
         elif typ == b"IDAT":
             idat += data
-        elif typ == b"IEND":
-            break
-        pos += 12 + ln
-    if meta is None:
-        raise ValueError("PNG without IHDR")
-    w, h, depth, ctype, interlace = meta
-    if ctype == 3:  # paletted (r13)
-        if plte is None:
-            raise ValueError("paletted PNG without a PLTE chunk")
-        if depth not in (1, 2, 4, 8):
-            raise NotImplementedError(f"paletted PNG depth {depth}")
-        if interlace == 1 and depth != 8:
-            raise NotImplementedError(
-                "Adam7 at sub-byte depths needs bit-level pass scatter"
-            )
-        raw = zlib.decompress(idat)
-        if depth == 8:
-            if interlace:
-                idx8, _ = None, None
-                # reuse the byte-per-pixel lattice machinery
-                img1 = _png_reconstruct_raw(raw, w, h, 8, 1, 1)
-                idx = img1[:, :, 0].astype(np.int64)
-            else:
-                rows, _ = _png_unfilter(raw, 0, h, w, 1)
-                idx = rows.astype(np.int64)
-        else:
-            stride = -(-(w * depth) // 8)  # ceil bytes per scanline
-            rows, _ = _png_unfilter(raw, 0, h, stride, 1)
-            bits = np.unpackbits(rows, axis=1)  # MSB-first per spec §7.2
-            per = bits[:, : w * depth].reshape(h, w, depth)
-            weights = 1 << np.arange(depth - 1, -1, -1)
-            idx = (per * weights).sum(axis=2).astype(np.int64)
-        return np.ascontiguousarray(plte[idx % len(plte)])
-    if ctype == 0 and depth in (1, 2, 4):  # sub-byte grayscale (r13:
-        # 1-bit document scans, 2/4-bit gray) — bpp=1 BYTEwise filters
-        # over the packed stream, MSB-first unpack, max-scale to 8-bit
-        if interlace == 1:
-            raise NotImplementedError(
-                "Adam7 at sub-byte depths needs bit-level pass scatter"
-            )
-        raw = zlib.decompress(idat)
-        stride = -(-(w * depth) // 8)
-        rows, _ = _png_unfilter(raw, 0, h, stride, 1)
-        bits = np.unpackbits(rows, axis=1)
-        per = bits[:, : w * depth].reshape(h, w, depth)
-        weights = 1 << np.arange(depth - 1, -1, -1)
-        v = (per * weights).sum(axis=2)
-        g = (v * 255 // ((1 << depth) - 1)).astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
-    if depth not in (8, 16) or interlace not in (0, 1):
-        raise NotImplementedError(
-            "decode_png supports 8/16-bit non/Adam7-interlaced PNGs; "
-            f"got depth={depth} interlace={interlace}"
-        )
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(ctype)
-    if channels is None:
-        raise NotImplementedError(f"unsupported PNG color type {ctype}")
-    return _png_reconstruct(zlib.decompress(idat), w, h, depth, channels,
-                            interlace)
-
-
-def _png_reconstruct(
-    raw: bytes, w: int, h: int, depth: int, channels: int, interlace: int
-) -> np.ndarray:
-    """Inflated stream -> (H, W, 3) uint8: unfilter (sequential or
-    Adam7), 16->8 high-byte reduction, channel normalization. Shared by
-    decode_png and the APNG frame demux (each APNG frame is its own
-    filtered stream over the same IHDR parameters)."""
-    img = _png_reconstruct_raw(raw, w, h, depth, channels, interlace)
-    if channels == 1:
-        return np.repeat(img, 3, axis=2)
-    if channels == 2:
-        return np.repeat(img[:, :, :1], 3, axis=2)
-    if channels == 4:
-        return np.ascontiguousarray(img[:, :, :3])
-    return img
-
-
-def _png_reconstruct_raw(
-    raw: bytes, w: int, h: int, depth: int, channels: int, interlace: int
-) -> np.ndarray:
-    """Like :func:`_png_reconstruct` but keeps the ORIGINAL channel
-    layout (H, W, channels) — the APNG compositor needs the alpha
-    plane the RGB normalization drops."""
-    sample_bytes = depth // 8
-    stride, bpp = w * channels * sample_bytes, channels * sample_bytes
-    if interlace == 0:
-        if len(raw) < (stride + 1) * h:
-            raise ValueError("truncated PNG pixel stream")
-        out, _ = _png_unfilter(raw, 0, h, stride, bpp)
-    else:  # Adam7 (spec §8.2): 7 independently-filtered sub-images
-        out = np.zeros((h, stride), dtype=np.uint8)
-        lattice = out.reshape(h, w, bpp)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7_PASSES:
-            pw = (w - x0 + dx - 1) // dx if w > x0 else 0
-            ph = (h - y0 + dy - 1) // dy if h > y0 else 0
-            if pw <= 0 or ph <= 0:
-                continue  # empty pass: zero bytes in the stream
-            sub, off = _png_unfilter(raw, off, ph, pw * bpp, bpp)
-            lattice[np.ix_(y0 + dy * np.arange(ph),
-                           x0 + dx * np.arange(pw))] = sub.reshape(
-                ph, pw, bpp
-            )
-    if depth == 16:
-        # big-endian 16-bit samples (spec §7.1); reduce to 8-bit via the
-        # high byte — after the BYTEwise unfilter above, that is simply
-        # every even-offset byte of each scanline
-        img = (
-            np.frombuffer(out.tobytes(), dtype=">u2")
-            .reshape(h, w, channels)
-            .astype(np.uint16)
-            >> 8
-        ).astype(np.uint8)
-    else:
-        img = out.reshape(h, w, channels)
-    return img
+    return _png_rgb(ihdr, plte, idat)
 
 
 def _to_rgba(img: np.ndarray) -> np.ndarray:
@@ -588,37 +604,25 @@ def decode_apng_frames(payload: bytes) -> list[np.ndarray]:
     IDAT). Each frame inflates and unfilters independently with the
     IHDR parameters (fdAT frames are never interlaced; the IDAT
     default image honors IHDR's interlace method), then composites
-    onto a persistent RGBA canvas (r13 — the seam closed): sub-region
-    frames render at their fcTL (x, y) offsets, blend_op SOURCE
-    replaces while OVER is Porter-Duff non-premultiplied alpha
-    compositing, and dispose_op none / background (region cleared to
-    transparent black) / previous (region reverted to its pre-render
-    contents) all apply before the next frame. Returned frames are
-    the composited canvas snapshots as (H, W, 3) uint8 (alpha dropped
-    after compositing, floor(x+.5) rounding — the decode_png
-    convention). A plain PNG (no acTL) returns its single image, so
-    the demux subsumes the still decoder."""
-    import struct  # noqa: PLC0415
-    import zlib  # noqa: PLC0415
-
-    if not payload or len(payload) < 8 or bytes(payload[:8]) != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG payload")
-    payload = bytes(payload)
-    pos, meta = 8, None
-    n_frames = None
-    idat = b""
+    onto a persistent RGBA canvas: sub-region frames render at their
+    fcTL (x, y) offsets, blend_op SOURCE replaces while OVER is
+    Porter-Duff non-premultiplied alpha compositing, and dispose_op
+    none / background (region cleared to transparent black) / previous
+    (region reverted to its pre-render contents) all apply before the
+    next frame. Returned frames are the composited canvas snapshots as
+    (H, W, 3) uint8 (alpha dropped after compositing, floor(x+.5)
+    rounding — the decode_png convention). A plain PNG (no acTL)
+    returns its single :func:`decode_png` image, so the demux subsumes
+    the still decoder."""
+    ihdr, plte, n_frames, idat = None, None, None, b""
     fctl_before_idat = False
-    fctls: list[tuple] = []  # (w, h, x, y, blend)
+    fctls: list[tuple] = []  # (w, h, x, y, dispose, blend)
     fdat_streams: list[bytes] = []  # one entry per fcTL-after-IDAT frame
-    while pos + 8 <= len(payload):
-        (ln,) = struct.unpack(">I", payload[pos : pos + 4])
-        typ = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + ln]
+    for typ, data in _png_chunks(payload):
         if typ == b"IHDR":
-            w, h, depth, ctype, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-            meta = (w, h, depth, ctype, interlace)
+            ihdr = _png_ihdr(data)
+        elif typ == b"PLTE":
+            plte = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
         elif typ == b"acTL":
             (n_frames,) = struct.unpack(">I", data[:4])
         elif typ == b"fcTL":
@@ -635,23 +639,21 @@ def decode_apng_frames(payload: bytes) -> list[np.ndarray]:
             if not fdat_streams:
                 raise ValueError("APNG fdAT without a preceding fcTL")
             fdat_streams[-1] += data[4:]  # strip the sequence number
-        elif typ == b"IEND":
-            break
-        pos += 12 + ln
-    if meta is None:
-        raise ValueError("PNG without IHDR")
-    w, h, depth, ctype, interlace = meta
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(ctype)
-    if channels is None:
-        raise NotImplementedError(f"unsupported PNG color type {ctype}")
     if n_frames is None:  # plain PNG: one frame
-        return [_png_reconstruct(zlib.decompress(idat), w, h, depth,
-                                 channels, interlace)]
+        return [_png_rgb(ihdr, plte, idat)]
+    if ihdr is None:
+        raise ValueError("PNG without IHDR")
+    w, h, depth, ctype, interlace = ihdr
+    if ctype == 3 or ctype not in _PNG_COLOR_TYPES or depth not in (8, 16):
+        raise NotImplementedError(
+            f"APNG frames of color type {ctype} at depth {depth}"
+        )
+    channels = _PNG_COLOR_TYPES[ctype][0]
     streams = ([idat] if fctl_before_idat else []) + fdat_streams
     # only the IDAT-backed default image inherits IHDR's interlace
     # method; fdAT frames are never interlaced (APNG spec — and a
     # silent interlace=0 misread of an Adam7 default image would pass
-    # the truncation check and decode garbage, code-review r13)
+    # the truncation check and decode garbage)
     ilaces = ([interlace] if fctl_before_idat else []) + [0] * len(
         fdat_streams
     )
@@ -667,7 +669,7 @@ def decode_apng_frames(payload: bytes) -> list[np.ndarray]:
     ):
         if fx + fw > w or fy + fh > h or fw == 0 or fh == 0:
             raise ValueError("APNG frame region outside the canvas")
-        src = _to_rgba(_png_reconstruct_raw(
+        src = _to_rgba(_png_samples(
             zlib.decompress(s), fw, fh, depth, channels, il
         ))
         region = canvas[fy : fy + fh, fx : fx + fw]
@@ -736,6 +738,22 @@ def _png_filter_rows(px: np.ndarray, filters: list[int], bpp: int) -> bytes:
     return lines
 
 
+def _png_rows(
+    img: np.ndarray, w: int, h: int, channels: int, depth: int
+) -> np.ndarray:
+    """Pixels -> (H, stride) int64 scanline bytes before filtering:
+    sub-byte samples packed MSB-first, 16-bit serialized big-endian
+    (spec §7)."""
+    if depth < 8:
+        return _pack_bits(np.asarray(img, dtype=np.uint8).reshape(h, w), depth)
+    if depth == 16:
+        be = img.reshape(h, w * channels).astype(np.uint16).astype(">u2")
+        return np.frombuffer(be.tobytes(), dtype=np.uint8).reshape(
+            h, w * channels * 2
+        ).astype(np.int64)
+    return img.reshape(h, w * channels).astype(np.int64)
+
+
 def encode_png(
     img: np.ndarray,
     color_type: int = 2,
@@ -745,159 +763,47 @@ def encode_png(
     palette: np.ndarray | None = None,
 ) -> bytes:
     """Minimal spec-correct PNG encoder (test/fixture helper — stdlib
-    zlib + CRC32): 8- or 16-bit, non-interlaced or Adam7 (r13), one
-    IDAT. ``filters`` picks the per-row filter type (default all 0) and
-    APPLIES the forward filter — BYTEwise with bpp = channels·depth/8,
-    exactly as the spec defines for any depth — so round-trips through
-    :func:`decode_png` exercise every unfilter branch with real
-    filtered data at both depths. With ``interlace=1`` the rows are
-    split into the seven Adam7 sub-images (spec §8.2), each filtered
-    independently; ``filters`` then applies sequentially across the
-    passes' scanlines (sum of pass heights entries). 16-bit input must
-    be uint16; samples are serialized big-endian (spec §7.1)."""
-    import struct  # noqa: PLC0415
-    import zlib  # noqa: PLC0415
-
+    zlib + CRC32), one IDAT, any color type at any of its legal depths:
+    8/16-bit gray, gray+alpha, RGB and RGBA; sub-byte gray and paletted
+    (color type 3, ``img`` holds indices, ``palette`` the PLTE) packed
+    MSB-first. ``filters`` picks the per-row filter type (default all
+    0) and APPLIES the forward filter — BYTEwise with bpp =
+    max(1, channels·depth/8), exactly as the spec defines for any depth
+    — so round-trips through :func:`decode_png` exercise every unfilter
+    branch with real filtered data. With ``interlace=1`` (depth >= 8)
+    the rows are split into the seven Adam7 sub-images (spec §8.2),
+    each filtered independently; ``filters`` then applies sequentially
+    across the passes' scanlines (sum of pass heights entries). 16-bit
+    input must be uint16; samples are serialized big-endian (spec
+    §7.1)."""
     if interlace not in (0, 1):
         raise ValueError(f"interlace must be 0 or 1, got {interlace}")
+    channels, depths = _PNG_COLOR_TYPES[color_type]
+    if depth not in depths:
+        raise ValueError(f"color type {color_type} takes depths {depths}")
+    if interlace and depth < 8:
+        raise ValueError("Adam7 sub-byte packing not supported")
     h, w = img.shape[0], img.shape[1]
-    if color_type == 0 and depth in (1, 2, 4):
-        # sub-byte grayscale (r13): img holds raw sample values
-        vals = np.asarray(img, dtype=np.uint8).reshape(h, w)
-        weights0 = np.arange(depth - 1, -1, -1)
-        bits0 = ((vals[:, :, None] >> weights0) & 1).reshape(h, w * depth)
-        pad0 = (-bits0.shape[1]) % 8
-        if pad0:
-            bits0 = np.concatenate(
-                [bits0, np.zeros((h, pad0), dtype=bits0.dtype)], axis=1
-            )
-        px0 = np.packbits(bits0.astype(np.uint8), axis=1).astype(np.int64)
-        filters = list(filters or [0] * h)
-        lines0 = _png_filter_rows(px0, filters, 1)
-        import struct as _s0  # noqa: PLC0415
-        import zlib as _z0  # noqa: PLC0415
-
-        def _chunk0(typ: bytes, data: bytes) -> bytes:
-            return (
-                _s0.pack(">I", len(data)) + typ + data
-                + _s0.pack(">I", _z0.crc32(typ + data) & 0xFFFFFFFF)
-            )
-
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + _chunk0(b"IHDR", _s0.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 0))
-            + _chunk0(b"IDAT", _z0.compress(lines0))
-            + _chunk0(b"IEND", b"")
-        )
-    if color_type == 3:  # paletted (r13): img holds indices
-        if depth not in (1, 2, 4, 8):
-            raise ValueError(f"paletted depth must be 1/2/4/8, got {depth}")
-        if interlace and depth != 8:
-            raise ValueError("Adam7 sub-byte packing not supported")
-        pal = np.asarray(palette, dtype=np.uint8)
-        idx = np.asarray(img, dtype=np.uint8).reshape(h, w)
-        if depth == 8:
-            px = idx.astype(np.int64)
-        else:
-            weights = np.arange(depth - 1, -1, -1)
-            bits = ((idx[:, :, None] >> weights) & 1).reshape(h, w * depth)
-            pad = (-bits.shape[1]) % 8
-            if pad:
-                bits = np.concatenate(
-                    [bits, np.zeros((h, pad), dtype=bits.dtype)], axis=1
-                )
-            px = np.packbits(bits.astype(np.uint8), axis=1).astype(np.int64)
-        if interlace:  # depth 8 only (guarded above): byte lattice
-            lattice = px.reshape(h, w, 1)
-            subs = []
-            for x0, y0, dx, dy in _ADAM7_PASSES:
-                pw = (w - x0 + dx - 1) // dx if w > x0 else 0
-                ph = (h - y0 + dy - 1) // dy if h > y0 else 0
-                if pw <= 0 or ph <= 0:
-                    continue
-                subs.append(
-                    lattice[np.ix_(y0 + dy * np.arange(ph),
-                                   x0 + dx * np.arange(pw))].reshape(ph, pw)
-                )
-            total = sum(s.shape[0] for s in subs)
-            filters = list(filters or [0] * total)
-            lines, used = b"", 0
-            for s in subs:
-                lines += _png_filter_rows(
-                    s, filters[used : used + s.shape[0]], 1
-                )
-                used += s.shape[0]
-        else:
-            filters = list(filters or [0] * h)
-            lines = _png_filter_rows(px, filters, 1)
-        import struct as _s  # noqa: PLC0415
-        import zlib as _z  # noqa: PLC0415
-
-        def _chunk(typ: bytes, data: bytes) -> bytes:
-            return (
-                _s.pack(">I", len(data)) + typ + data
-                + _s.pack(">I", _z.crc32(typ + data) & 0xFFFFFFFF)
-            )
-
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + _chunk(b"IHDR", _s.pack(">IIBBBBB", w, h, depth, 3, 0, 0,
-                                      interlace))
-            + _chunk(b"PLTE", pal.tobytes())
-            + _chunk(b"IDAT", _z.compress(lines))
-            + _chunk(b"IEND", b"")
-        )
-    if depth not in (8, 16):
-        raise ValueError(f"depth must be 8 or 16, got {depth}")
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
-    if depth == 16:
-        # serialize big-endian, then filter over the BYTE stream
-        be = img.reshape(h, w * channels).astype(np.uint16).astype(">u2")
-        px = np.frombuffer(be.tobytes(), dtype=np.uint8).reshape(
-            h, w * channels * 2
-        ).astype(np.int64)
-    else:
-        px = img.reshape(h, w * channels).astype(np.int64)
-    bpp = channels * (depth // 8)
-    if interlace == 0:
-        filters = list(filters or [0] * h)
-        lines = _png_filter_rows(px, filters, bpp)
-    else:
+    bpp = max(1, channels * depth // 8)
+    px = _png_rows(img, w, h, channels, depth)
+    if interlace:
         lattice = px.reshape(h, w, bpp)
-        subs = []
-        for x0, y0, dx, dy in _ADAM7_PASSES:
-            pw = (w - x0 + dx - 1) // dx if w > x0 else 0
-            ph = (h - y0 + dy - 1) // dy if h > y0 else 0
-            if pw <= 0 or ph <= 0:
-                continue
-            subs.append(
-                lattice[np.ix_(y0 + dy * np.arange(ph),
-                               x0 + dx * np.arange(pw))].reshape(
-                    ph, pw * bpp
-                )
-            )
-        total = sum(s.shape[0] for s in subs)
-        filters = list(filters or [0] * total)
-        lines, used = b"", 0
-        for s in subs:
-            lines += _png_filter_rows(s, filters[used : used + s.shape[0]], bpp)
-            used += s.shape[0]
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + typ
-            + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, interlace)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(lines))
-        + chunk(b"IEND", b"")
-    )
+        subs = [
+            lattice[np.ix_(ys, xs)].reshape(len(ys), len(xs) * bpp)
+            for ys, xs in _adam7(w, h)
+        ]
+    else:
+        subs = [px]
+    filters = list(filters or [0] * sum(len(s) for s in subs))
+    lines, used = b"", 0
+    for s in subs:
+        lines += _png_filter_rows(s, filters[used : used + len(s)], bpp)
+        used += len(s)
+    chunks = [(b"IHDR", struct.pack(">IIBBBBB", w, h, depth, color_type,
+                                    0, 0, interlace))]
+    if color_type == 3:
+        chunks.append((b"PLTE", np.asarray(palette, dtype=np.uint8).tobytes()))
+    return _png_file(chunks + [(b"IDAT", zlib.compress(lines)), (b"IEND", b"")])
 
 
 def encode_apng(
@@ -915,75 +821,44 @@ def encode_apng(
     running sequence numbers. ``filters`` (optional, per frame: list
     of per-row filter lists) applies the forward scanline filters
     inside each frame's own stream, so round-trips exercise the
-    per-frame unfilter reset. r13 compositing knobs: ``rects`` gives
+    per-frame unfilter reset. Compositing knobs: ``rects`` gives
     later frames' (x, y) offsets (their array dims are then the
     sub-region dims), ``blend`` per-frame 0=SOURCE/1=OVER, ``dispose``
     per-frame 0=none/1=background/2=previous."""
-    import struct  # noqa: PLC0415
-    import zlib  # noqa: PLC0415
-
     if not frames:
         raise ValueError("APNG needs at least one frame")
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
+    if color_type == 3 or depth not in (8, 16):
+        raise ValueError("APNG frames need color type 0/2/4/6 at depth 8/16")
+    channels = _PNG_COLOR_TYPES[color_type][0]
     h, w = frames[0].shape[0], frames[0].shape[1]
-    bpp = channels * (depth // 8)
     n = len(frames)
     rects = list(rects or [(0, 0)] * n)
-    blend = list(blend or [0] * n)
-    dispose = list(dispose or [0] * n)
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + typ
-            + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    def frame_stream(img: np.ndarray, filt) -> bytes:
-        fh, fw = img.shape[0], img.shape[1]
-        if depth == 16:
-            be = img.reshape(fh, fw * channels).astype(np.uint16).astype(">u2")
-            px = np.frombuffer(be.tobytes(), dtype=np.uint8).reshape(
-                fh, fw * channels * 2
-            ).astype(np.int64)
-        else:
-            px = img.reshape(fh, fw * channels).astype(np.int64)
-        return zlib.compress(
-            _png_filter_rows(px, list(filt or [0] * fh), bpp)
-        )
-
-    seq = 0
-
-    def fctl(img, rect, bl, dp) -> bytes:
-        nonlocal seq
-        body = struct.pack(
-            ">IIIIIHHBB", seq, img.shape[1], img.shape[0],
-            rect[0], rect[1], 1, 10, dp, bl,
-        )
-        seq += 1
-        return chunk(b"fcTL", body)
-
-    if frames[0].shape[:2] != (h, w) or rects[0] != (0, 0):
+    if rects[0] != (0, 0):
         raise ValueError("APNG frame 0 is the default image: full canvas")
-    parts = [
-        b"\x89PNG\r\n\x1a\n",
-        chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, depth, color_type,
-                                   0, 0, 0)),
-        chunk(b"acTL", struct.pack(">II", n, 0)),
+    chunks = [
+        (b"IHDR", struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, 0)),
+        (b"acTL", struct.pack(">II", n, 0)),
     ]
-    filters = filters or [None] * n
-    parts.append(fctl(frames[0], rects[0], blend[0], dispose[0]))
-    parts.append(chunk(b"IDAT", frame_stream(frames[0], filters[0])))
-    for img, filt, rect, bl, dp in zip(
-        frames[1:], filters[1:], rects[1:], blend[1:], dispose[1:]
-    ):
-        parts.append(fctl(img, rect, bl, dp))
-        body = struct.pack(">I", seq) + frame_stream(img, filt)
+    seq = 0
+    for i, (img, filt, rect, bl, dp) in enumerate(zip(
+        frames, filters or [None] * n, rects, blend or [0] * n,
+        dispose or [0] * n,
+    )):
+        fh, fw = img.shape[0], img.shape[1]
+        chunks.append((b"fcTL", struct.pack(
+            ">IIIIIHHBB", seq, fw, fh, rect[0], rect[1], 1, 10, dp, bl
+        )))
         seq += 1
-        parts.append(chunk(b"fdAT", body))
-    parts.append(chunk(b"IEND", b""))
-    return b"".join(parts)
+        stream = zlib.compress(_png_filter_rows(
+            _png_rows(img, fw, fh, channels, depth),
+            list(filt or [0] * fh), channels * depth // 8,
+        ))
+        if i == 0:
+            chunks.append((b"IDAT", stream))
+        else:
+            chunks.append((b"fdAT", struct.pack(">I", seq) + stream))
+            seq += 1
+    return _png_file(chunks + [(b"IEND", b"")])
 
 
 # ---------------------------------------------------------------------------
@@ -1098,16 +973,14 @@ def _gif_lzw_encode(indices, min_code_size: int) -> bytes:
     return bytes(out)
 
 
-def _gif_deinterlace(grid: np.ndarray) -> np.ndarray:
-    """Invert the 4-pass GIF row interlace: stored rows are the passes'
-    rows concatenated; scatter them back to their display positions."""
-    h = grid.shape[0]
-    order = []
-    for start, step in _GIF_INTERLACE_PASSES:
-        order.extend(range(start, h, step))
-    out = np.empty_like(grid)
-    out[np.asarray(order, dtype=np.int64)] = grid
-    return out
+def _gif_row_order(h: int) -> np.ndarray:
+    """The 4-pass GIF row interlace: display row of each stored row
+    (stored rows are the passes' rows concatenated)."""
+    return np.asarray(
+        [y for start, step in _GIF_INTERLACE_PASSES
+         for y in range(start, h, step)],
+        dtype=np.int64,
+    )
 
 
 def decode_gif_frames(payload: bytes) -> list[np.ndarray]:
@@ -1195,8 +1068,10 @@ def _gif_image_walk(data, pos, canvas, gct, bg_rgb):
         if len(idx) < iw * ih:
             raise ValueError("truncated GIF image data")
         grid = np.asarray(idx[: iw * ih], dtype=np.int64).reshape(ih, iw)
-        if iflags & 0x40:
-            grid = _gif_deinterlace(grid)
+        if iflags & 0x40:  # scatter stored rows to display rows
+            out = np.empty_like(grid)
+            out[_gif_row_order(ih)] = grid
+            grid = out
         pal = lct if lct is not None else gct
         if pal is None:
             raise ValueError("GIF image without a color table")
@@ -1230,8 +1105,6 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     convention sniff_media already reports — positive height is
     BOTTOM-UP row order, negative is top-down. Returns (H, W, 3) uint8
     RGB. Compressed BMPs (RLE/bitfields) raise — the documented seam."""
-    import struct  # noqa: PLC0415
-
     data = bytes(payload or b"")
     if len(data) < 54 or data[:2] != b"BM":
         raise ValueError("not a BMP payload")
@@ -1284,8 +1157,6 @@ def encode_bmp(
     """Minimal spec-correct BMP writer (fixture helper): BI_RGB 24/32-bit
     BGR(A) or 8-bit paletted (``img`` then holds indices), 4-byte row
     padding, bottom-up by default or top-down via negative height."""
-    import struct  # noqa: PLC0415
-
     h, w = img.shape[0], img.shape[1]
     if bpp == 8:
         pal = np.asarray(palette, dtype=np.uint8)
@@ -1378,8 +1249,6 @@ def encode_avi_mjpeg(
     'AVI ' with a LIST hdrl (avih + one LIST strl: strh 'vids'/'MJPG'
     + strf BITMAPINFOHEADER) and a LIST movi of '00dc' chunks, each a
     complete JPEG stream, even-padded per RIFF."""
-    import struct  # noqa: PLC0415
-
     def chunk(cid: bytes, body: bytes) -> bytes:
         pad = b"\x00" if len(body) & 1 else b""
         return cid + struct.pack("<I", len(body)) + body + pad
@@ -1429,8 +1298,6 @@ def encode_gif(
     (index or None) and ``dispose`` (0/1/2/3) lists exercise the
     compositing path. The color table size is padded to the next power
     of two as the format requires."""
-    import struct  # noqa: PLC0415
-
     n_frames = len(frames)
     interlace = list(interlace or [False] * n_frames)
     rects = list(rects or [(0, 0)] * n_frames)
@@ -1471,10 +1338,7 @@ def encode_gif(
             mcs = max(2, size_bits)
         grid = np.asarray(f, dtype=np.int64)
         if il:
-            order = []
-            for start, step in _GIF_INTERLACE_PASSES:
-                order.extend(range(start, ih, step))
-            grid = grid[np.asarray(order, dtype=np.int64)]
+            grid = grid[_gif_row_order(ih)]
         lzw = _gif_lzw_encode(grid.reshape(-1).tolist(), mcs)
         out += bytes([mcs])
         for i in range(0, len(lzw), 255):
@@ -1500,8 +1364,6 @@ def _wav_manual_chunks(data: bytes) -> tuple[int, int, int, int, bytes]:
     decode layer): returns (fmt_code, channels, rate, bits_per_sample,
     raw data-chunk bytes). Used for the formats the stdlib `wave`
     module refuses — IEEE-float WAV (fmt code 3, r13)."""
-    import struct  # noqa: PLC0415
-
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, fmt, frames = 12, None, None
@@ -1579,6 +1441,59 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     return x, rate
 
 
+def _payload_stage(
+    df: DataFrame,
+    id_col: str,
+    fields: list[T.StructField],
+    batch_fn: Callable[[pd.DataFrame], dict],
+) -> DataFrame:
+    """The one per-payload Arrow stage behind every decode operator: a
+    ``mapInPandas`` over ``df`` whose output schema is ``(id_col,
+    *fields)``. ``batch_fn(pdf)`` returns the output columns of one
+    non-empty batch by field name; the stage adds ``id_col`` from the
+    input unless ``batch_fn`` returns its own (a 1→N explode). Empty
+    batches yield nothing."""
+    schema = T.StructType([df.schema[id_col], *fields])
+    names = [f.name for f in schema.fields]
+
+    def _proc(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield pd.DataFrame(
+                    {id_col: pdf[id_col].to_numpy(), **batch_fn(pdf)},
+                    columns=names,
+                )
+
+    return df.mapInPandas(_proc, schema=schema)
+
+
+def _long(name: str) -> T.StructField:
+    return T.StructField(name, T.LongType())
+
+
+_SIG_FIELDS = [_long("sig0"), _long("sig1")]
+_POW32 = 1 << np.arange(32, dtype=np.int64)
+
+
+def _sign_words(bits: np.ndarray) -> dict:
+    """Pack (n, 64) sign bits row-major into TWO 32-bit BIGINT words,
+    ``sig0`` = bits 0..31 and ``sig1`` = bits 32..63 — the convention of
+    ``quantize.sign_signature_exprs`` and for the same reason: bit 63
+    would overflow the oracle's signed BIGINT shift, and 32-bit words
+    keep every packed term exact in both engines."""
+    bits = np.asarray(bits, dtype=np.int64).reshape(len(bits), 64)
+    return {
+        "sig0": (bits[:, :32] * _POW32).sum(axis=1),
+        "sig1": (bits[:, 32:] * _POW32).sum(axis=1),
+    }
+
+
+def _gray(img: np.ndarray) -> np.ndarray:
+    """Integer grayscale ``(299·R + 587·G + 114·B) // 1000`` (int64)."""
+    img = img.astype(np.int64)
+    return (img[..., 0] * 299 + img[..., 1] * 587 + img[..., 2] * 114) // 1000
+
+
 def audio_features(
     df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
 ) -> DataFrame:
@@ -1588,51 +1503,31 @@ def audio_features(
     and sum of squares / zero crossings, plus RMS in rounded milli-units
     (the only float). Undecodable payloads survive as is_decoded=false +
     NULLs (filter-not-fail)."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("is_decoded", T.BooleanType()),
-            T.StructField("sample_rate", T.LongType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("sumsq", T.LongType()),
-            T.StructField("zero_crossings", T.LongType()),
-            T.StructField("rms_milli", T.LongType()),
-        ]
-    )
+    fields = [T.StructField("is_decoded", T.BooleanType())] + [
+        _long(n) for n in ("sample_rate", "n_samples", "duration_ms",
+                           "sumsq", "zero_crossings", "rms_milli")
+    ]
 
-    def _proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    x, rate = decode_wav(payload)
-                    if not len(x) or rate <= 0:
-                        raise ValueError("empty audio")
-                except Exception:  # noqa: BLE001 — filter-not-fail contract
-                    rows.append((mid, False, None, None, None, None, None, None))
-                    continue
-                sumsq = int((x * x).sum())
-                zc = int((np.signbit(x[1:]) != np.signbit(x[:-1])).sum())
-                rows.append(
-                    (
-                        mid,
-                        True,
-                        int(rate),
-                        len(x),
-                        len(x) * 1000 // rate,
-                        sumsq,
-                        zc,
-                        round(1000.0 * (sumsq / len(x)) ** 0.5),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields]
-            )
+    def features(payload) -> tuple:
+        try:
+            x, rate = decode_wav(payload)
+            if not len(x) or rate <= 0:
+                raise ValueError("empty audio")
+        except Exception:  # noqa: BLE001 — filter-not-fail contract
+            return (False,) + (None,) * 6
+        sumsq = int((x * x).sum())
+        zc = int((np.signbit(x[1:]) != np.signbit(x[:-1])).sum())
+        return (True, int(rate), len(x), len(x) * 1000 // rate, sumsq, zc,
+                round(1000.0 * (sumsq / len(x)) ** 0.5))
 
-    return df.mapInPandas(_proc, schema=out_schema)
+    def batch(pdf):
+        decoded, *stats = zip(*[features(p) for p in pdf[payload_col]])
+        return {"is_decoded": list(decoded)} | {
+            f.name: pd.array(list(c), dtype="Int64")
+            for f, c in zip(fields[1:], stats)
+        }
+
+    return _payload_stage(df, id_col, fields, batch)
 
 
 def _fake_decode(payload: bytes, h: int, w: int) -> np.ndarray:
@@ -1668,105 +1563,80 @@ def decode_and_featurize(
     channel_means[3], feature[64] float32, null when ``height`` or
     ``width`` is under 8) — ``intensity_sum`` is the exact
     integer sum of all decoded bytes (float-free, so correctness oracles can
-    compare it bit-exactly). Runs as one Arrow batch per task via
-    ``mapInPandas`` — the real-decoder seam is marked below.
+    compare it bit-exactly). ``decoder='real'`` decodes each payload by
+    its magic bytes (:func:`decode_image`: PNG, JPEG, GIF or BMP) and
+    nearest-neighbor resizes it; ``decoder='fake'`` derives the tensor
+    from the bytes (:func:`_fake_decode`), so any payload featurizes.
+    Runs as one Arrow batch per task via ``mapInPandas``.
     """
-    if decoder not in ("fake", "png", "jpeg", "gif", "bmp", "real"):
+    if decoder not in ("fake", "real"):
         raise ValueError(f"unknown decoder {decoder!r}")
+    fields = [
+        T.StructField("height", T.IntegerType()),
+        T.StructField("width", T.IntegerType()),
+        _long("intensity_sum"),
+        T.StructField("mean_intensity", T.DoubleType()),
+        T.StructField("channel_means", T.ArrayType(T.DoubleType())),
+        T.StructField("feature", T.ArrayType(T.FloatType())),
+    ]
 
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("height", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("intensity_sum", T.LongType()),
-            T.StructField("mean_intensity", T.DoubleType()),
-            T.StructField("channel_means", T.ArrayType(T.DoubleType())),
-            T.StructField("feature", T.ArrayType(T.FloatType())),
-        ]
-    )
-
-    def _proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if decoder == "real":
-                # REAL-DECODER SEAM (narrowed again in r12: progressive
-                # JPEG now decodes for real via decoder='jpeg' — Annex G
-                # multi-scan path; baseline JPEG since r11, PNG since
-                # r10): this branch remains for WebP/AVIF/..., which
-                # need PIL/opencv
-                raise NotImplementedError(
-                    "WebP/AVIF decoding requires PIL/opencv (not in "
-                    "this container); use decoder='png'/'jpeg'/'gif' for "
-                    "real PNG, baseline/progressive JPEG or GIF, or "
-                    "decoder='fake'"
-                )
-            # decode per item (a real codec is per-item too), then compute
-            # every statistic over the STACKED batch — one numpy pass
-            # instead of per-row Python
-            if decoder in ("png", "jpeg", "gif", "bmp"):
-                dec = {"png": decode_png, "jpeg": decode_jpeg,
-                       "gif": decode_gif, "bmp": decode_bmp}[decoder]
-                imgs = np.stack(
-                    [
-                        nn_resize(dec(p), height, width)
-                        for p in pdf[payload_col]
-                    ]
-                )  # (n, height, width, 3) uint8 — real pixels
-            else:
-                imgs = np.stack(
-                    [_fake_decode(p, height, width) for p in pdf[payload_col]]
-                )  # (n, H, W, 3) uint8
-            n = len(pdf)
-            # 64-dim pooled feature: mean over an 8x8 grid of cells; an
-            # output grid under 8x8 leaves cells empty, so it gets none
-            gh, gw = 8, 8
-            if height < gh or width < gw:
-                feature = [None] * n
-            else:
-                flat = imgs.astype(np.float32) / 255.0
-                cells = flat[:, : gh * (height // gh), : gw * (width // gw), :].reshape(
-                    n, gh, height // gh, gw, width // gw, 3
-                )
-                feats = cells.mean(axis=(2, 4)).mean(axis=3).reshape(n, -1)
-                feature = [f.astype(np.float32).tolist() for f in feats]
-            ch_means = imgs.mean(axis=(1, 2))  # (n, 3)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "height": np.full(n, imgs.shape[1], dtype=np.int32),
-                    "width": np.full(n, imgs.shape[2], dtype=np.int32),
-                    "intensity_sum": imgs.reshape(n, -1).sum(axis=1, dtype=np.int64),
-                    "mean_intensity": imgs.reshape(n, -1).mean(axis=1).astype(float),
-                    "channel_means": [[float(c) for c in m] for m in ch_means],
-                    "feature": feature,
-                },
-                columns=[f.name for f in out_schema.fields],
+    def batch(pdf):
+        # decode per item (a real codec is per-item too), then compute
+        # every statistic over the STACKED batch — one numpy pass
+        # instead of per-row Python
+        imgs = np.stack([
+            nn_resize(decode_image(p), height, width) if decoder == "real"
+            else _fake_decode(p, height, width)
+            for p in pdf[payload_col]
+        ])  # (n, height, width, 3) uint8
+        n = len(pdf)
+        # 64-dim pooled feature: mean over an 8x8 grid of cells; an
+        # output grid under 8x8 leaves cells empty, so it gets none
+        gh, gw = 8, 8
+        if height < gh or width < gw:
+            feature = [None] * n
+        else:
+            flat = imgs.astype(np.float32) / 255.0
+            cells = flat[:, : gh * (height // gh), : gw * (width // gw), :].reshape(
+                n, gh, height // gh, gw, width // gw, 3
             )
+            feats = cells.mean(axis=(2, 4)).mean(axis=3).reshape(n, -1)
+            feature = [f.astype(np.float32).tolist() for f in feats]
+        ch_means = imgs.mean(axis=(1, 2))  # (n, 3)
+        return {
+            "height": np.full(n, imgs.shape[1], dtype=np.int32),
+            "width": np.full(n, imgs.shape[2], dtype=np.int32),
+            "intensity_sum": imgs.reshape(n, -1).sum(axis=1, dtype=np.int64),
+            "mean_intensity": imgs.reshape(n, -1).mean(axis=1).astype(float),
+            "channel_means": [[float(c) for c in m] for m in ch_means],
+            "feature": feature,
+        }
 
-    return df.mapInPandas(_proc, schema=out_schema)
+    return _payload_stage(df, id_col, fields, batch)
 
 
 DHASH_H, DHASH_W = 8, 9  # dHash grid: 8 rows x 9 cols -> 64 sign bits
+
+
+def _dhash_bits(img: np.ndarray) -> np.ndarray:
+    """The 64 dHash bits of one image: :func:`nn_resize` to the 8x9
+    grid, :func:`_gray`, then ``gray[i][j+1] > gray[i][j]`` row-major."""
+    g = _gray(nn_resize(img, DHASH_H, DHASH_W))
+    return (g[:, 1:] > g[:, :-1]).astype(np.int64).reshape(64)
 
 
 def dhash_signatures(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "media_id",
-    decoder: str = "png",
 ) -> DataFrame:
     """Perceptual dHash over REAL decoded pixels (difference hash — the
-    image near-dup signature web-scale corpora dedup on): decode with
-    the real codec, :func:`nn_resize` to the 8x9 grid, integer
-    grayscale ``(299·R + 587·G + 114·B) // 1000``, then the 64
-    adjacent-column sign bits ``gray[i][j+1] > gray[i][j]`` packed
-    row-major into TWO 32-bit BIGINT words (``sig0`` = bits 0..31,
-    ``sig1`` = bits 32..63) — the same two-word convention as
-    ``quantize.sign_signature_exprs`` and for the same reason: bit 63
-    would overflow the oracle's signed BIGINT shift, and 32-bit words
-    keep every packed term exact in both engines.
+    image near-dup signature web-scale corpora dedup on): decode each
+    payload by its magic bytes (:func:`decode_image`), :func:`nn_resize`
+    to the 8x9 grid, integer grayscale ``(299·R + 587·G + 114·B) //
+    1000``, then the 64 adjacent-column sign bits ``gray[i][j+1] >
+    gray[i][j]`` packed row-major into the two 32-bit BIGINT words of
+    :func:`_sign_words`.
 
     Reference anchor: the reference dedups text by md5 only
     (terraform/generate_personalized_commands.sh INSERT dedup keys);
@@ -1774,135 +1644,45 @@ def dhash_signatures(
     ``mapInPandas`` Arrow batch — embarrassingly parallel per file
     split, and only the 16-byte signature (never the decoded image)
     reaches the shuffle."""
-    if decoder not in ("png", "jpeg", "gif", "bmp"):
-        raise ValueError(f"unknown real decoder {decoder!r}")
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("sig0", T.LongType()),
-            T.StructField("sig1", T.LongType()),
-        ]
-    )
-
-    def _proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dec = {"png": decode_png, "jpeg": decode_jpeg,
-               "gif": decode_gif, "bmp": decode_bmp}[decoder]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            grays = []
-            for p in pdf[payload_col]:
-                img = nn_resize(dec(p), DHASH_H, DHASH_W).astype(np.int64)
-                grays.append(
-                    (
-                        img[:, :, 0] * 299
-                        + img[:, :, 1] * 587
-                        + img[:, :, 2] * 114
-                    )
-                    // 1000
-                )
-            g = np.stack(grays)  # (n, 8, 9) int64
-            n = len(pdf)
-            bits = (g[:, :, 1:] > g[:, :, :-1]).astype(np.int64).reshape(n, 64)
-            pw = 1 << np.arange(32, dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "sig0": (bits[:, :32] * pw).sum(axis=1),
-                    "sig1": (bits[:, 32:] * pw).sum(axis=1),
-                },
-                columns=[f.name for f in out_schema.fields],
-            )
-
-    return df.mapInPandas(_proc, schema=out_schema)
+    return _payload_stage(df, id_col, _SIG_FIELDS, lambda pdf: _sign_words(
+        np.stack([_dhash_bits(decode_image(p)) for p in pdf[payload_col]])
+    ))
 
 
 def video_dhash_signatures(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "media_id",
-    container: str = "apng",
 ) -> DataFrame:
     """Perceptual VIDEO (clip) near-dup signature — the moving-picture
     member of the family (text: minhash/simhash; image: dHash/pHash;
-    audio: sign-of-delta; video: this): demux the APNG, animated-GIF
-    or AVI-MJPEG container (:func:`decode_apng_frames` /
-    :func:`decode_gif_frames` / :func:`decode_avi_mjpeg_frames` — real
-    zlib/LZW/JPEG frames, no ffmpeg; ``container='auto'`` dispatches
-    per payload by magic bytes, the mixed-corpus shape), dHash
-    every frame with the image rung's exact math (nn_resize to 8x9,
-    integer grayscale, adjacent-column sign bits), then MAJORITY-VOTE
-    each of the 64 bits across frames (bit = 1 iff 2·Σ > n_frames;
-    ties → 0) into one clip signature packed as the repo's standard
-    two 32-bit BIGINT words. Majority voting makes the signature
-    robust to per-frame noise (a bit flipped in a minority of frames
-    vanishes) while a re-encoded or brightness-shifted copy of the
-    whole clip keeps all 64 bits. Runs inside one mapInPandas Arrow
-    batch; only (n_frames, 16-byte signature) reaches the shuffle —
-    the same scale contract as every signature rung."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("sig0", T.LongType()),
-            T.StructField("sig1", T.LongType()),
-        ]
+    audio: sign-of-delta; video: this): demux each payload by its magic
+    bytes (:func:`decode_frames`: APNG, animated GIF or AVI-MJPEG — real
+    zlib/LZW/JPEG frames, no ffmpeg; a mixed-container corpus needs no
+    routing), dHash every frame with the image rung's exact math
+    (:func:`_dhash_bits`), then MAJORITY-VOTE each of the 64 bits across
+    frames (bit = 1 iff 2·Σ > n_frames; ties → 0) into one clip
+    signature packed as the repo's standard two 32-bit BIGINT words.
+    Majority voting makes the signature robust to per-frame noise (a bit
+    flipped in a minority of frames vanishes) while a re-encoded or
+    brightness-shifted copy of the whole clip keeps all 64 bits. Runs
+    inside one mapInPandas Arrow batch; only (n_frames, 16-byte
+    signature) reaches the shuffle — the same scale contract as every
+    signature rung."""
+
+    def batch(pdf):
+        n_frames, bits = [], []
+        for p in pdf[payload_col]:
+            frames = decode_frames(p)
+            votes = np.sum([_dhash_bits(img) for img in frames], axis=0)
+            n_frames.append(len(frames))
+            bits.append(2 * votes > len(frames))
+        return {"n_frames": n_frames, **_sign_words(np.stack(bits))}
+
+    return _payload_stage(
+        df, id_col, [T.StructField("n_frames", T.IntegerType()), *_SIG_FIELDS],
+        batch,
     )
-
-    if container not in ("apng", "gif", "avi", "auto"):
-        raise ValueError(f"unknown video container {container!r}")
-
-    def _demux_auto(p):
-        """Per-payload magic-byte dispatch — the mixed-container corpus
-        shape (r13): a real ingest stream carries APNG, animated GIF
-        and AVI-MJPEG side by side."""
-        b = bytes(p[:12])
-        if b[:8] == b"\x89PNG\r\n\x1a\n":
-            return decode_apng_frames(p)
-        if b[:6] in (b"GIF87a", b"GIF89a"):
-            return decode_gif_frames(p)
-        if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-            return decode_avi_mjpeg_frames(p)
-        raise ValueError("unrecognized video container")
-
-    def _proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        demux = {
-            "apng": decode_apng_frames,
-            "gif": decode_gif_frames,
-            "avi": decode_avi_mjpeg_frames,
-            "auto": _demux_auto,
-        }[container]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nf, s0, s1 = [], [], []
-            for p in pdf[payload_col]:
-                frames = demux(p)
-                votes = np.zeros(64, dtype=np.int64)
-                for img in frames:
-                    g = nn_resize(img, DHASH_H, DHASH_W).astype(np.int64)
-                    gray = (
-                        g[:, :, 0] * 299 + g[:, :, 1] * 587 + g[:, :, 2] * 114
-                    ) // 1000
-                    votes += (
-                        (gray[:, 1:] > gray[:, :-1]).astype(np.int64).reshape(64)
-                    )
-                bits = (2 * votes > len(frames)).astype(np.int64)
-                pw = 1 << np.arange(32, dtype=np.int64)
-                nf.append(len(frames))
-                s0.append(int((bits[:32] * pw).sum()))
-                s1.append(int((bits[32:] * pw).sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "n_frames": nf,
-                    "sig0": s0,
-                    "sig1": s1,
-                },
-                columns=[f.name for f in out_schema.fields],
-            )
-
-    return df.mapInPandas(_proc, schema=out_schema)
 
 
 AUDIO_SIG_POINTS = 65  # resampled envelope points -> 64 delta sign bits
@@ -1923,46 +1703,30 @@ def audio_delta_signatures(
     the repo's standard two 32-bit BIGINT words. Undecodable payloads
     yield NULL words (route with parse_wav_header first). One
     mapInPandas Arrow batch; 16 bytes/clip reach the shuffle."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("sig0", T.LongType()),
-            T.StructField("sig1", T.LongType()),
-        ]
-    )
 
-    def _proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pw = 1 << np.arange(32, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sigs0, sigs1 = [], []
-            for p in pdf[payload_col]:
-                try:
-                    x, _ = decode_wav(p)
-                    if len(x) == 0:
-                        raise ValueError("empty audio")
-                except Exception:  # noqa: BLE001 — undecodable payload
-                    sigs0.append(None)
-                    sigs1.append(None)
-                    continue
-                idx = (
-                    np.arange(AUDIO_SIG_POINTS, dtype=np.int64) * len(x)
-                ) // AUDIO_SIG_POINTS
-                env = x[idx]
-                bits = (env[1:] > env[:-1]).astype(np.int64)
-                sigs0.append(int((bits[:32] * pw).sum()))
-                sigs1.append(int((bits[32:] * pw).sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "sig0": pd.array(sigs0, dtype="Int64"),
-                    "sig1": pd.array(sigs1, dtype="Int64"),
-                },
-                columns=[f.name for f in out_schema.fields],
-            )
+    def envelope_bits(payload) -> np.ndarray | None:
+        try:
+            x, _ = decode_wav(payload)
+        except Exception:  # noqa: BLE001 — undecodable payload
+            return None
+        if len(x) == 0:
+            return None
+        env = x[(np.arange(AUDIO_SIG_POINTS, dtype=np.int64) * len(x))
+                // AUDIO_SIG_POINTS]
+        return env[1:] > env[:-1]
 
-    return df.mapInPandas(_proc, schema=out_schema)
+    def batch(pdf):
+        bits = [envelope_bits(p) for p in pdf[payload_col]]
+        words = _sign_words(np.stack(
+            [np.zeros(64, bool) if b is None else b for b in bits]
+        ))
+        return {
+            k: pd.array([None if b is None else int(w)
+                         for b, w in zip(bits, v)], dtype="Int64")
+            for k, v in words.items()
+        }
+
+    return _payload_stage(df, id_col, _SIG_FIELDS, batch)
 
 
 def decode_samples(
@@ -1975,28 +1739,12 @@ def decode_samples(
     the exact ground-truth seam for sample-distance evals
     (``audio_recall_eval``). Bounded eval samples only; at corpus scale
     ship the 16-byte :func:`audio_delta_signatures` output."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("samples", T.ArrayType(T.LongType())),
-        ]
+    return _payload_stage(
+        df, id_col, [T.StructField("samples", T.ArrayType(T.LongType()))],
+        lambda pdf: {
+            "samples": [decode_wav(p)[0].tolist() for p in pdf[payload_col]]
+        },
     )
-
-    def _proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "samples": [
-                        decode_wav(p)[0].tolist() for p in pdf[payload_col]
-                    ],
-                },
-                columns=[f.name for f in out_schema.fields],
-            )
-
-    return df.mapInPandas(_proc, schema=out_schema)
 
 
 PHASH_N = 32  # pHash DCT grid (32x32 gray -> low 8x8 spectral block)
@@ -2015,99 +1763,47 @@ def phash_signatures(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "media_id",
-    decoder: str = "png",
 ) -> DataFrame:
     """Spectral perceptual hash over REAL decoded pixels — the
     DCT-domain sibling of :func:`dhash_signatures` (pHash family:
     low-frequency sign structure survives compression/noise that moves
-    every pixel, while dHash tracks local gradients): decode, resize to
-    the 32x32 grid, integer grayscale, orthonormal 2D DCT-II (float64),
-    then the SIGN bits of the low-frequency 8x8 coefficient block
-    (row-major u·8+v, DC included) packed into the same two 32-bit
-    BIGINT words as every other sign sketch in this repo. High-
-    frequency edits are invisible by construction — the property the
-    fixture corpus and the recall eval measure. One mapInPandas Arrow
-    batch; 16 bytes/image reach the shuffle."""
-    if decoder not in ("png", "jpeg", "gif", "bmp"):
-        raise ValueError(f"unknown real decoder {decoder!r}")
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("sig0", T.LongType()),
-            T.StructField("sig1", T.LongType()),
-        ]
-    )
+    every pixel, while dHash tracks local gradients): decode by magic
+    bytes, resize to the 32x32 grid, integer grayscale, orthonormal 2D
+    DCT-II (float64), then the SIGN bits of the low-frequency 8x8
+    coefficient block (row-major u·8+v, DC included) packed into the
+    same two 32-bit BIGINT words as every other sign sketch in this
+    repo. High-frequency edits are invisible by construction — the
+    property the fixture corpus and the recall eval measure. One
+    mapInPandas Arrow batch; 16 bytes/image reach the shuffle."""
+    d = _dct_matrix(PHASH_N)
 
-    def _proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dec = {"png": decode_png, "jpeg": decode_jpeg,
-               "gif": decode_gif, "bmp": decode_bmp}[decoder]
-        d = _dct_matrix(PHASH_N)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sigs0, sigs1 = [], []
-            pw = 1 << np.arange(32, dtype=np.int64)
-            for p in pdf[payload_col]:
-                img = nn_resize(dec(p), PHASH_N, PHASH_N).astype(np.int64)
-                gray = (
-                    img[:, :, 0] * 299
-                    + img[:, :, 1] * 587
-                    + img[:, :, 2] * 114
-                ) // 1000
-                spec = d @ gray.astype(np.float64) @ d.T
-                bits = (spec[:8, :8] > 0).astype(np.int64).reshape(64)
-                sigs0.append(int((bits[:32] * pw).sum()))
-                sigs1.append(int((bits[32:] * pw).sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "sig0": sigs0,
-                    "sig1": sigs1,
-                },
-                columns=[f.name for f in out_schema.fields],
-            )
+    def spectral_bits(payload) -> np.ndarray:
+        g = _gray(nn_resize(decode_image(payload), PHASH_N, PHASH_N))
+        return (d @ g.astype(np.float64) @ d.T)[:8, :8] > 0
 
-    return df.mapInPandas(_proc, schema=out_schema)
+    return _payload_stage(df, id_col, _SIG_FIELDS, lambda pdf: _sign_words(
+        np.stack([spectral_bits(p) for p in pdf[payload_col]])
+    ))
 
 
 def decode_pixels(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "media_id",
-    decoder: str = "png",
 ) -> DataFrame:
-    """Decode each payload and emit the FULL pixel stream as one
-    ``array<bigint>`` column (row-major y, x, channel) — the exact
-    ground-truth seam for pixel-distance evals (``dhash_recall_eval``).
-    Bounded eval samples only: at corpus scale ship the 16-byte
-    :func:`dhash_signatures` output, never raw pixels."""
-    if decoder not in ("png", "jpeg", "gif", "bmp"):
-        raise ValueError(f"unknown real decoder {decoder!r}")
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("pixels", T.ArrayType(T.LongType())),
-        ]
+    """Decode each payload by its magic bytes and emit the FULL pixel
+    stream as one ``array<bigint>`` column (row-major y, x, channel) —
+    the exact ground-truth seam for pixel-distance evals
+    (``dhash_recall_eval``). Bounded eval samples only: at corpus scale
+    ship the 16-byte :func:`dhash_signatures` output, never raw
+    pixels."""
+    return _payload_stage(
+        df, id_col, [T.StructField("pixels", T.ArrayType(T.LongType()))],
+        lambda pdf: {"pixels": [
+            decode_image(p).astype(np.int64).reshape(-1).tolist()
+            for p in pdf[payload_col]
+        ]},
     )
-
-    def _proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dec = {"png": decode_png, "jpeg": decode_jpeg,
-               "gif": decode_gif, "bmp": decode_bmp}[decoder]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "pixels": [
-                        dec(p).astype(np.int64).reshape(-1).tolist()
-                        for p in pdf[payload_col]
-                    ],
-                },
-                columns=[f.name for f in out_schema.fields],
-            )
-
-    return df.mapInPandas(_proc, schema=out_schema)
 
 
 def sample_video_frames(
@@ -2117,41 +1813,31 @@ def sample_video_frames(
     n_frames: int = 4,
     height: int = 16,
     width: int = 16,
-    decoder: str = "fake",
 ) -> DataFrame:
     """Frame sampling: one output row per (video, frame_idx) — the 1→N
-    explode shape of a real video pipeline, with the demux stubbed."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame_md5", T.StringType()),
-            T.StructField("mean_intensity", T.DoubleType()),
-        ]
-    )
+    explode shape of a video pipeline, each frame a :func:`_fake_decode`
+    tensor of the payload and the frame index (real demux:
+    :func:`decode_frames`)."""
 
-    def _proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                payload = r[payload_col] or b""
-                if decoder == "real":
-                    raise NotImplementedError(
-                        "real video demux requires ffmpeg (not in this container)"
-                    )
-                for i in range(n_frames):
-                    frame = _fake_decode(payload + i.to_bytes(4, "big"), height, width)
-                    rows.append(
-                        {
-                            id_col: r[id_col],
-                            "frame_idx": i,
-                            "frame_md5": hashlib.md5(frame.tobytes()).hexdigest(),
-                            "mean_intensity": float(frame.mean()),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+    def batch(pdf):
+        ids, idx, md5s, means = [], [], [], []
+        for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for i in range(n_frames):
+                frame = _fake_decode(
+                    (payload or b"") + i.to_bytes(4, "big"), height, width
+                )
+                ids.append(mid)
+                idx.append(i)
+                md5s.append(hashlib.md5(frame.tobytes()).hexdigest())
+                means.append(float(frame.mean()))
+        return {id_col: ids, "frame_idx": idx, "frame_md5": md5s,
+                "mean_intensity": means}
 
-    return df.mapInPandas(_proc, schema=out_schema)
+    return _payload_stage(df, id_col, [
+        T.StructField("frame_idx", T.IntegerType()),
+        T.StructField("frame_md5", T.StringType()),
+        T.StructField("mean_intensity", T.DoubleType()),
+    ], batch)
 
 
 # ---------------------------------------------------------------------------
@@ -2230,13 +1916,31 @@ def _idct_matrix() -> np.ndarray:
 
 
 _IDCT_M = _idct_matrix()
+# natural (row·8 + col) index of each zigzag position
+_ZIGZAG_NATURAL = np.array([r * 8 + c for r, c in _ZIGZAG])
 
 
 class _BitReader:
-    """MSB-first bit reader over UNSTUFFED entropy-coded bytes."""
+    """MSB-first bit reader over one scan's UNSTUFFED entropy data,
+    pre-split on its RSTn markers into restart segments. ``sync(u)``
+    moves to segment ``u // dri`` when restart unit ``u`` (an MCU in an
+    interleaved scan, a block in a one-component scan) opens a new
+    interval and returns True, so the caller resets its DC predictors
+    and EOB run (T.81 F.2.1.3.1: restarts re-align byte boundaries and
+    kill all inter-MCU state)."""
 
-    def __init__(self, data: bytes) -> None:
-        self.data, self.pos, self.bit = data, 0, 0
+    def __init__(self, segs: list[bytes], dri: int) -> None:
+        self.segs, self.dri, self.seg = segs, dri, 0
+        self.data, self.pos, self.bit = segs[0], 0, 0
+
+    def sync(self, u: int) -> bool:
+        if not self.dri or u // self.dri == self.seg:
+            return False
+        si = u // self.dri
+        if si >= len(self.segs):
+            raise ValueError("JPEG missing RST marker")
+        self.seg, self.data, self.pos, self.bit = si, self.segs[si], 0, 0
+        return True
 
     def read_bit(self) -> int:
         if self.pos >= len(self.data):
@@ -2254,46 +1958,14 @@ class _BitReader:
         return v
 
     def decode_symbol(self, table: dict) -> int:
-        code, length = 0, 0
-        while length <= 16:
+        """``table`` maps ``(1 << length) | code`` to its symbol."""
+        code = 1
+        for _ in range(16):
             code = (code << 1) | self.read_bit()
-            length += 1
-            sym = table.get((code, length))
+            sym = table.get(code)
             if sym is not None:
                 return sym
         raise ValueError("invalid JPEG Huffman code")
-
-
-class _RestartReader:
-    """_BitReader plus DRI resync (r13, progressive scans): the scan's
-    entropy data arrives pre-split on RSTn markers; ``sync(u)`` swaps
-    to restart segment ``u // dri`` when unit ``u`` (MCU for
-    interleaved scans, block for non-interleaved) crosses a boundary,
-    returning True so the caller resets its DC-predictor / EOB-run
-    state (T.81 F.2.1.3.1: restarts re-align byte boundaries and kill
-    all inter-MCU state)."""
-
-    def __init__(self, segs: list[bytes], dri: int) -> None:
-        self.segs, self.dri, self.seg = segs, dri, 0
-        self.r = _BitReader(segs[0])
-
-    def sync(self, u: int) -> bool:
-        if not self.dri or u // self.dri == self.seg:
-            return False
-        si = u // self.dri
-        if si >= len(self.segs):
-            raise ValueError("JPEG missing RST marker")
-        self.seg, self.r = si, _BitReader(self.segs[si])
-        return True
-
-    def read_bit(self) -> int:
-        return self.r.read_bit()
-
-    def read_bits(self, n: int) -> int:
-        return self.r.read_bits(n)
-
-    def decode_symbol(self, table: dict) -> int:
-        return self.r.decode_symbol(table)
 
 
 def _extend(bits_val: int, category: int) -> int:
@@ -2305,30 +1977,61 @@ def _extend(bits_val: int, category: int) -> int:
     return bits_val
 
 
+def _jpeg_blocks(
+    scan: list[tuple[int, int]],
+    mcus_y: int,
+    mcus_x: int,
+    height: int,
+    width: int,
+    hmax: int,
+    vmax: int,
+):
+    """Block order of one scan over components with sampling factors
+    ``scan`` = [(h, v)]. Several components: interleaved MCU order
+    (T.81 A.2.3), each component's h×v blocks in raster order within
+    the MCU. One component: raster order over its OWN ceil(dim/8) block
+    grid (A.2.2) — not the MCU-padded grid; they differ for non-aligned
+    dims (a 100px luma row in 4:2:0 is 13 raster blocks but 14
+    padded-grid columns). Yields (restart unit, index into ``scan``,
+    block row, block col); a restart unit is an MCU when interleaved and
+    a block otherwise."""
+    if len(scan) > 1:
+        u = 0
+        for my in range(mcus_y):
+            for mx in range(mcus_x):
+                for i, (sh, sv) in enumerate(scan):
+                    for bv in range(sv):
+                        for bh in range(sh):
+                            yield u, i, my * sv + bv, mx * sh + bh
+                u += 1
+        return
+    [(sh, sv)] = scan
+    comp_h = -(-(height * sv) // vmax)  # the component's own dims
+    comp_w = -(-(width * sh) // hmax)
+    cols = -(-comp_w // 8)
+    for by in range(-(-comp_h // 8)):
+        for bx in range(cols):
+            yield by * cols + bx, 0, by, bx
+
+
 def decode_jpeg(payload: bytes) -> np.ndarray:
-    """REAL baseline JPEG decode (stdlib + numpy, no PIL): marker walk,
-    DQT/DHT/SOF0/SOS parse, byte-unstuffed Huffman entropy decode with
-    DC prediction and run-length AC, dezigzag, dequant, float64 IDCT
-    (T.81 §A.3.3), level shift, JFIF YCbCr→RGB. Returns (H, W, 3)
-    uint8. Supported: SOF0/SOF1 baseline AND SOF2 progressive (T.81
-    Annex G via :func:`_decode_progressive` — spectral selection,
-    successive approximation, EOB runs; r12), 8-bit, grayscale or
-    3-component with ANY sampling factors 1-4 (4:4:4 / 4:2:2 / 4:2:0 /
-    4:1:1 / 4:1:0 and non-divisible mixes like 3-vs-2 — r13;
-    interleaved T.81 §A.2.3 MCU order, subsampled planes upsampled by
-    nearest-neighbor index gather), restart intervals in BOTH baseline and progressive
-    scans (DRI/RSTn resync with predictor + EOB-run reset; restart
-    units are MCUs in interleaved scans, blocks in non-interleaved
-    ones — r13), and — r13 — NON-MCU-ALIGNED dimensions
+    """REAL JPEG decode (stdlib + numpy, no PIL): marker walk,
+    DQT (8- and 16-bit entries)/DHT/SOF/DRI/SOS parse, byte unstuffing,
+    then :func:`_decode_scans` — one scan loop for baseline/extended
+    sequential (SOF0/SOF1) AND progressive (SOF2, T.81 Annex G) frames —
+    and a float64 IDCT (T.81 §A.3.3), level shift and JFIF YCbCr→RGB.
+    Returns (H, W, 3) uint8. Supported: 8-bit, grayscale or
+    3-component, interleaved or one scan per component, ANY sampling
+    factors 1-4 (4:4:4 / 4:2:2 / 4:2:0 / 4:1:1 / 4:1:0 and
+    non-divisible mixes like 3-vs-2; subsampled planes upsampled by
+    nearest-neighbor index gather), restart intervals (DRI/RSTn resync
+    with predictor + EOB-run reset), and NON-MCU-ALIGNED dimensions
     (T.81 A.2.4: the edge MCUs are coded complete; decode the ceil-MCU
     grid, crop to the declared h x w — the real-photo case, e.g.
-    1000x750). The remaining refusals are malformed streams, >4
-    factors, and unsupported component counts — every T.81 sampling
-    layout decodes.
+    1000x750). The refusals are malformed streams, >4 factors and
+    unsupported component counts.
     Rounding convention everywhere: floor(x + 0.5) — reproducible in
     closed-form SQL oracles (no bankers' rounding)."""
-    import struct  # noqa: PLC0415
-
     if not payload or len(payload) < 4 or bytes(payload[:2]) != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     payload = bytes(payload)
@@ -2336,10 +2039,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     qtables: dict[int, np.ndarray] = {}
     dri = 0  # restart interval in MCUs (0 = none)
     huff: dict[tuple[int, int], dict] = {}  # (class 0=DC/1=AC, id) -> table
-    frame = None  # (h, w, comps) ; comps = [(cid, qid)]
-    scan = None  # [(cid, dc_id, ac_id)], entropy data
+    frame = None  # (h, w, [(cid, qid, sh, sv)])
     progressive = False
-    scans: list = []  # SOF2: (sel, ss, se, ah, al, segs, huff-snapshot)
+    scans: list = []  # (sel, ss, se, ah, al, segs, huff-snapshot, dri)
     while pos + 2 <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("JPEG marker sync lost")
@@ -2368,7 +2070,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                     for k in range(64):
                         tbl[_ZIGZAG[k]] = data[i + 1 + k]
                     i += 65
-                else:  # 16-bit big-endian entries (r12)
+                else:  # 16-bit big-endian entries
                     for k in range(64):
                         tbl[_ZIGZAG[k]] = (
                             (data[i + 1 + 2 * k] << 8)
@@ -2383,12 +2085,12 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 bits = list(data[i + 1 : i + 17])
                 nv = sum(bits)
                 vals = list(data[i + 17 : i + 17 + nv])
-                codes = _huff_codes(bits, vals)
                 huff[(cls, tid)] = {
-                    (c, ln): sym for sym, (c, ln) in codes.items()
+                    (1 << ln) | c: sym
+                    for sym, (c, ln) in _huff_codes(bits, vals).items()
                 }
                 i += 17 + nv
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 prog.
+        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 prog.
             h, w = struct.unpack(">HH", data[1:5])
             ncomp = data[5]
             comps = []
@@ -2412,6 +2114,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 sel.append((cid, tt >> 4, tt & 0xF))
             ss, se = data[1 + 2 * ns], data[2 + 2 * ns]
             ah, al = data[3 + 2 * ns] >> 4, data[3 + 2 * ns] & 0xF
+            if not progressive:  # sequential: every scan is the full band
+                ss, se, ah, al = 0, 63, 0, 0
             raw = payload[pos + 2 + seg_len :]
             # unstuff FF00 -> FF; split on RSTn (FFD0-FFD7) into restart
             # segments; any other FFxx ends the scan
@@ -2434,92 +2138,15 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 out.append(b)
                 j += 1
             segs.append(bytes(out))
-            if not progressive:
-                scan = (sel, segs)
-                break
-            # progressive: scans reference the tables AND restart
-            # interval in force when the scan starts (DHT/DRI may
-            # change between scans)
+            # a scan uses the tables AND restart interval in force when
+            # it starts (DHT/DRI may change between scans)
             scans.append((sel, ss, se, ah, al, segs, dict(huff), dri))
             pos = pos + 2 + seg_len + j
             continue
         pos += 2 + seg_len
-    if frame is None or (scan is None and not scans):
+    if frame is None or not scans:
         raise ValueError("JPEG without SOF/SOS")
-    h, w, comps = frame
-    if progressive:
-        return _decode_progressive(h, w, comps, qtables, scans)
-    sel, segs = scan
-    meta_by_cid = {cid: (qid, sh, sv) for cid, qid, sh, sv in comps}
-    hmax = max(sh for _, _, sh, _ in comps)
-    vmax = max(sv for _, _, _, sv in comps)
-    reader = _BitReader(segs[0])
-    # T.81 A.2.4: non-MCU-aligned dims are coded as COMPLETE MCUs (the
-    # encoder pads the edge); decode the full ceil-MCU grid and crop to
-    # the declared h x w at reconstruction (r13 — most real photos,
-    # e.g. 1000x750, land here)
-    mcus_y = -(-h // (8 * vmax))
-    mcus_x = -(-w // (8 * hmax))
-    planes = {
-        cid: np.zeros((mcus_y * meta_by_cid[cid][2] * 8,
-                       mcus_x * meta_by_cid[cid][1] * 8))
-        for cid, _, _ in sel
-    }
-    pred = {cid: 0 for cid, _, _ in sel}
-
-    def _decode_block(cid: int, dc_id: int, ac_id: int) -> np.ndarray:
-        dct, act = huff[(0, dc_id)], huff[(1, ac_id)]
-        coefs = np.zeros(64, dtype=np.int64)
-        cat = reader.decode_symbol(dct)
-        diff = _extend(reader.read_bits(cat), cat) if cat else 0
-        pred[cid] += diff
-        coefs[0] = pred[cid]
-        k = 1
-        while k < 64:
-            rs = reader.decode_symbol(act)
-            r, s = rs >> 4, rs & 0xF
-            if rs == 0x00:  # EOB
-                break
-            if rs == 0xF0:  # ZRL: 16 zeros
-                k += 16
-                continue
-            k += r
-            if k > 63:
-                raise ValueError("JPEG AC run overflow")
-            coefs[k] = _extend(reader.read_bits(s), s)
-            k += 1
-        block = np.zeros((8, 8), dtype=np.int64)
-        for kk in range(64):
-            block[_ZIGZAG[kk]] = coefs[kk]
-        fq = block * qtables[meta_by_cid[cid][0]]
-        return _IDCT_M.T @ fq.astype(np.float64) @ _IDCT_M
-
-    # interleaved MCU order (T.81 §A.2.3): per MCU, each scan component
-    # contributes sh×sv blocks in raster order within the MCU; with a
-    # DRI in force, every `dri` MCUs the stream re-aligns at an RSTn
-    # marker (its own unstuffed segment) and DC predictors reset
-    n_mcu = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if dri and n_mcu and n_mcu % dri == 0:
-                seg_idx = n_mcu // dri
-                if seg_idx >= len(segs):
-                    raise ValueError("JPEG missing RST marker")
-                reader = _BitReader(segs[seg_idx])
-                for c in pred:
-                    pred[c] = 0
-            n_mcu += 1
-            for cid, dc_id, ac_id in sel:
-                _, sh, sv = meta_by_cid[cid]
-                for bv in range(sv):
-                    for bh in range(sh):
-                        pix = _decode_block(cid, dc_id, ac_id)
-                        yy = (my * sv + bv) * 8
-                        xx = (mx * sh + bh) * 8
-                        planes[cid][yy : yy + 8, xx : xx + 8] = pix
-    return _jpeg_planes_to_rgb(
-        planes, [cid for cid, _, _ in sel], meta_by_cid, hmax, vmax, h, w
-    )
+    return _decode_scans(*frame, qtables, scans, progressive)
 
 
 def _jpeg_planes_to_rgb(
@@ -2566,181 +2193,266 @@ def _jpeg_planes_to_rgb(
     return np.clip(np.floor(rgb + 0.5), 0, 255).astype(np.uint8)
 
 
-def _decode_progressive(
-    h: int, w: int, comps: list, qtables: dict, scans: list
+
+def _decode_scans(
+    h: int, w: int, comps: list, qtables: dict, scans: list,
+    progressive: bool,
 ) -> np.ndarray:
-    """SOF2 progressive decode (T.81 Annex G, Huffman): coefficients
-    accumulate across scans in zigzag order — DC first scans carry the
-    point-transformed value << Al with prediction, DC refinement scans
-    one bit per block, AC first scans spectral bands with EOB-run
-    coding, AC refinement scans correction bits (G.1.2.3) — then one
-    dequant + float64 IDCT per block exactly as the baseline path.
-    Interleaved MCU order for multi-component DC scans; raster order
-    over the component's block grid for single-component scans."""
+    """The one JPEG scan loop (T.81 Annexes F and G, Huffman).
+    Coefficients accumulate per component block in zigzag order across
+    scans. A sequential scan is the full-band case ss=0, se=63, ah=al=0:
+    per block a predicted DC, then run-length AC up to its EOB.
+    Progressive scans are its parts: DC first (predicted,
+    point-transformed << Al), DC refinement (one bit per block), AC
+    first (one spectral band, EOB runs spanning blocks) and AC
+    refinement (correction bits, G.1.2.3). Then one dezigzag, dequant
+    and float64 IDCT per block."""
     meta_by_cid = {cid: (qid, sh, sv) for cid, qid, sh, sv in comps}
     hmax = max(sh for _, _, sh, _ in comps)
     vmax = max(sv for _, _, _, sv in comps)
     # T.81 A.2.4: ceil-MCU grid; the declared dims are restored by the
-    # crop in _jpeg_planes_to_rgb (r13)
+    # crop in _jpeg_planes_to_rgb
     mcus_y = -(-h // (8 * vmax))
     mcus_x = -(-w // (8 * hmax))
-    # zigzag-order coefficient store per component block grid
     coef = {
         cid: np.zeros((mcus_y * sv, mcus_x * sh, 64), dtype=np.int64)
         for cid, _, sh, sv in comps
     }
-
-    def _blocks_interleaved(sel):
-        """MCU block order (T.81 §A.2.3) for a multi-component scan —
-        covers the full padded MCU grid. Yields (mcu_index, ...): the
-        restart interval counts MCUs."""
-        u = 0
-        for _my in range(mcus_y):
-            for _mx in range(mcus_x):
-                for cid, dc_id, ac_id in sel:
-                    _, sh, sv = meta_by_cid[cid]
-                    for bv in range(sv):
-                        for bh in range(sh):
-                            yield (u, cid, dc_id, ac_id,
-                                   _my * sv + bv, _mx * sh + bh)
-                u += 1
-
-    def _blocks_raster(sel):
-        """Raster order over the single component's OWN block grid —
-        T.81 A.2.2: a non-interleaved scan codes ceil(comp_dim/8)
-        blocks per axis from the component's true dimensions, NOT the
-        MCU-padded grid (they differ for non-aligned dims: a 100px
-        luma row in 4:2:0 is 13 raster blocks but 14 padded-grid
-        columns). Each block IS one restart unit here."""
-        [(cid, dc_id, ac_id)] = sel
-        _, sh, sv = meta_by_cid[cid]
-        comp_h = -(-(h * sv) // vmax)
-        comp_w = -(-(w * sh) // hmax)
-        u = 0
-        for by in range(-(-comp_h // 8)):
-            for bx in range(-(-comp_w // 8)):
-                yield u, cid, dc_id, ac_id, by, bx
-                u += 1
-
     for sel, ss, se, ah, al, segs, huff, dri in scans:
-        reader = _RestartReader(segs, dri)
-        blocks = (
-            _blocks_interleaved(sel) if len(sel) > 1 else _blocks_raster(sel)
+        if progressive and ss == 0 and se != 0:
+            raise ValueError("invalid progressive scan: DC band with AC")
+        if progressive and ss > 0 and len(sel) != 1:
+            raise ValueError("invalid progressive scan: interleaved AC")
+        reader = _BitReader(segs, dri)
+        grids = [coef[cid] for cid, _, _ in sel]
+        dc = [huff[(0, t)] for _, t, _ in sel] if ss == 0 and ah == 0 else None
+        ac = [huff[(1, t)] for _, _, t in sel] if se else None
+        pred = [0] * len(sel)
+        eobrun = 0
+        p1, m1 = 1 << al, -1 << al
+        blocks = _jpeg_blocks(
+            [meta_by_cid[cid][1:] for cid, _, _ in sel],
+            mcus_y, mcus_x, h, w, hmax, vmax,
         )
-        if ss == 0:  # DC scan (must be the whole band 0..0)
-            if se != 0:
-                raise ValueError("invalid progressive scan: DC band with AC")
-            if ah == 0:  # first DC scan: predicted, point-transformed
-                pred = {cid: 0 for cid, _, _ in sel}
-                for u, cid, dc_id, _, by, bx in blocks:
-                    if reader.sync(u):  # RSTn: predictors reset (F.2.1.3.1)
-                        pred = {c: 0 for c in pred}
-                    cat = reader.decode_symbol(huff[(0, dc_id)])
-                    diff = _extend(reader.read_bits(cat), cat) if cat else 0
-                    pred[cid] += diff
-                    coef[cid][by, bx, 0] = pred[cid] << al
-            else:  # DC refinement: one bit per block
-                p1 = 1 << al
-                for u, cid, _, _, by, bx in blocks:
-                    reader.sync(u)  # no predictor state to reset
-                    if reader.read_bit():
-                        coef[cid][by, bx, 0] |= p1
-        else:  # AC scan: T.81 requires a single component
-            if len(sel) != 1:
-                raise ValueError("invalid progressive scan: interleaved AC")
-            [(_, _, ac_id)] = sel
-            act = huff[(1, ac_id)]
-            eobrun = 0
-            p1, m1 = 1 << al, -1 << al
-            if ah == 0:  # first AC scan for this band: EOB-run coding
-                for u, cid, _, _, by, bx in blocks:
-                    if reader.sync(u):  # RSTn: EOB run cannot span it
-                        eobrun = 0
-                    if eobrun > 0:
-                        eobrun -= 1
+        for u, i, by, bx in blocks:
+            if reader.sync(u):  # RSTn: predictors and EOB run reset
+                pred = [0] * len(sel)
+                eobrun = 0
+            blk = grids[i][by, bx]
+            if ss == 0:
+                if ah == 0:  # DC first (or sequential): predicted
+                    cat = reader.decode_symbol(dc[i])
+                    if cat:
+                        pred[i] += _extend(reader.read_bits(cat), cat)
+                    blk[0] = pred[i] << al
+                elif reader.read_bit():  # DC refinement: one bit
+                    blk[0] |= p1
+            if not se:
+                continue
+            act = ac[i]
+            k = max(ss, 1)
+            if ah == 0:  # AC first (or sequential): EOB-run coding
+                if eobrun > 0:
+                    eobrun -= 1
+                    continue
+                while k <= se:
+                    rs = reader.decode_symbol(act)
+                    r, s = rs >> 4, rs & 0xF
+                    if s == 0:
+                        if r != 15:  # EOBn: run of 2^r (+ ext bits)
+                            eobrun = (1 << r) - 1
+                            if r:
+                                eobrun += reader.read_bits(r)
+                            break
+                        k += 16  # ZRL
                         continue
-                    blk = coef[cid][by, bx]
-                    k = ss
+                    k += r
+                    if k > se:
+                        raise ValueError("JPEG AC run overflow")
+                    blk[k] = _extend(reader.read_bits(s), s) << al
+                    k += 1
+                continue
+            # AC refinement (G.1.2.3): correction bits
+            if eobrun == 0:
+                while k <= se:
+                    rs = reader.decode_symbol(act)
+                    r, s = rs >> 4, rs & 0xF
+                    val = 0
+                    if s == 0:
+                        if r != 15:
+                            eobrun = 1 << r
+                            if r:
+                                eobrun += reader.read_bits(r)
+                            break
+                        # r == 15: skip 16 zero-history coefs
+                    else:
+                        if s != 1:
+                            raise ValueError("invalid AC refinement size")
+                        val = p1 if reader.read_bit() else m1
                     while k <= se:
-                        rs = reader.decode_symbol(act)
-                        r, s = rs >> 4, rs & 0xF
-                        if s == 0:
-                            if r != 15:  # EOBn: run of 2^r (+ ext bits)
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += reader.read_bits(r)
+                        if blk[k] != 0:
+                            if reader.read_bit() and (blk[k] & p1) == 0:
+                                blk[k] += p1 if blk[k] >= 0 else m1
+                        else:
+                            if r == 0:
                                 break
-                            k += 16  # ZRL
-                            continue
-                        k += r
-                        if k > se:
-                            raise ValueError("JPEG AC run overflow")
-                        blk[k] = _extend(reader.read_bits(s), s) << al
+                            r -= 1
                         k += 1
-            else:  # AC refinement (G.1.2.3): correction bits
-                for u, cid, _, _, by, bx in blocks:
-                    if reader.sync(u):
-                        eobrun = 0
-                    blk = coef[cid][by, bx]
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            rs = reader.decode_symbol(act)
-                            r, s = rs >> 4, rs & 0xF
-                            val = 0
-                            if s == 0:
-                                if r != 15:
-                                    eobrun = 1 << r
-                                    if r:
-                                        eobrun += reader.read_bits(r)
-                                    break
-                                # r == 15: skip 16 zero-history coefs
-                            else:
-                                if s != 1:
-                                    raise ValueError(
-                                        "invalid AC refinement size"
-                                    )
-                                val = p1 if reader.read_bit() else m1
-                            while k <= se:
-                                if blk[k] != 0:
-                                    if (
-                                        reader.read_bit()
-                                        and (blk[k] & p1) == 0
-                                    ):
-                                        blk[k] += p1 if blk[k] >= 0 else m1
-                                else:
-                                    if r == 0:
-                                        break
-                                    r -= 1
-                                k += 1
-                            if val and k <= se:
-                                blk[k] = val
-                            k += 1
-                    if eobrun > 0:
-                        # correction sweep over the rest of the band
-                        while k <= se:
-                            if blk[k] != 0:
-                                if reader.read_bit() and (blk[k] & p1) == 0:
-                                    blk[k] += p1 if blk[k] >= 0 else m1
-                            k += 1
-                        eobrun -= 1
-    # dequant + IDCT per block — identical math to the baseline path
+                    if val and k <= se:
+                        blk[k] = val
+                    k += 1
+            if eobrun > 0:
+                # correction sweep over the rest of the band
+                while k <= se:
+                    if blk[k] != 0:
+                        if reader.read_bit() and (blk[k] & p1) == 0:
+                            blk[k] += p1 if blk[k] >= 0 else m1
+                    k += 1
+                eobrun -= 1
+    # dezigzag + dequant + IDCT, all blocks of a component at once
     planes = {}
-    for cid, qid, sh, sv in comps:
+    for cid, qid, _, _ in comps:
         grid = coef[cid]
-        plane = np.zeros((grid.shape[0] * 8, grid.shape[1] * 8))
-        for by in range(grid.shape[0]):
-            for bx in range(grid.shape[1]):
-                block = np.zeros((8, 8), dtype=np.int64)
-                for kk in range(64):
-                    block[_ZIGZAG[kk]] = grid[by, bx, kk]
-                fq = block * qtables[qid]
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    _IDCT_M.T @ fq.astype(np.float64) @ _IDCT_M
-                )
-        planes[cid] = plane
+        nby, nbx = grid.shape[:2]
+        natural = np.zeros_like(grid)
+        natural[:, :, _ZIGZAG_NATURAL] = grid
+        fq = natural.reshape(nby, nbx, 8, 8) * qtables[qid]
+        pix = _IDCT_M.T @ fq.astype(np.float64) @ _IDCT_M
+        planes[cid] = pix.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
     return _jpeg_planes_to_rgb(
         planes, [cid for cid, _, _, _ in comps], meta_by_cid, hmax, vmax, h, w
+    )
+
+
+class _BitWriter:
+    """MSB-first entropy writer for one scan (T.81 F.1.2.3): at each
+    flush the bits pad with 1s to a byte boundary and every 0xFF data
+    byte is stuffed with 0x00; with a restart interval ``dri`` a
+    byte-aligned RSTn marker (n cycling 0-7) closes every ``dri``
+    restart units."""
+
+    def __init__(self, dri: int = 0) -> None:
+        self.acc = self.nbits = 0
+        self.raw, self.out = bytearray(), bytearray()
+        self.dri, self.seg, self.rst = dri, 0, 0
+
+    def put(self, code: int, length: int) -> None:
+        """The low ``length`` bits of ``code``."""
+        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
+        self.nbits += length
+        if self.nbits >= 32:
+            keep = self.nbits % 8
+            self.raw += (self.acc >> keep).to_bytes(self.nbits // 8, "big")
+            self.acc &= (1 << keep) - 1
+            self.nbits = keep
+
+    def put_coded(self, codes: dict, sym: int, v: int = 0, s: int = 0) -> None:
+        """Huffman code of ``sym``, then the ``s`` magnitude bits of
+        ``v`` (T.81 F.1.2.1: negatives as v + 2^s - 1)."""
+        self.put(*codes[sym])
+        self.put(v if v >= 0 else v + (1 << s) - 1, s)
+
+    def restart(self, u: int, before: Callable[[], None] | None = None) -> bool:
+        """At restart unit ``u``: when it opens a new interval, code what
+        ``before`` holds pending into the closing one, flush and write
+        the RSTn marker, and return True so the caller resets its
+        predictors — no run spans a restart."""
+        if not self.dri or u // self.dri == self.seg:
+            return False
+        if before:
+            before()
+        self.seg = u // self.dri
+        self.flush()
+        self.out += bytes((0xFF, 0xD0 + self.rst))
+        self.rst = (self.rst + 1) % 8
+        return True
+
+    def flush(self) -> None:
+        pad = -self.nbits % 8
+        self.put((1 << pad) - 1, pad)
+        self.raw += self.acc.to_bytes(self.nbits // 8, "big")
+        self.acc = self.nbits = 0
+        self.out += bytes(self.raw).replace(b"\xff", b"\xff\x00")
+        self.raw.clear()
+
+    def finish(self) -> bytes:
+        self.flush()
+        return bytes(self.out)
+
+
+def _category(v: int) -> int:
+    """Magnitude category (bit length of |v|) of a DC diff / AC value."""
+    return abs(int(v)).bit_length()
+
+
+def _put_ac_band(wr: _BitWriter, codes: dict, band: list[int]) -> bool:
+    """Run-length code one AC band up to its last nonzero value (ZRL
+    per 16 zeros, then (run, size) + magnitude bits; T.81 F.1.2.2).
+    Returns True when zeros trail it, i.e. the band still owes an
+    EOB."""
+    last = max((i for i, v in enumerate(band) if v), default=-1)
+    run = 0
+    for v in band[: last + 1]:
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            wr.put(*codes[0xF0])  # ZRL
+            run -= 16
+        s = _category(v)
+        wr.put_coded(codes, (run << 4) | s, v, s)
+        run = 0
+    return last < len(band) - 1
+
+
+def _jpeg_segment(marker: int, body: bytes) -> bytes:
+    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+
+
+def _jpeg_tables(q: np.ndarray, ac_bits: list[int], ac_vals: list[int]) -> bytes:
+    """DQT (one 8-bit table in zigzag order) + DHT (the Annex K
+    luminance DC table as table 0, the given AC table as table 0)."""
+    zzq = bytes(int(q[_ZIGZAG[k]]) for k in range(64))
+    return _jpeg_segment(0xDB, b"\x00" + zzq) + _jpeg_segment(
+        0xC4,
+        b"\x00" + bytes(_STD_DC_BITS) + bytes(_STD_DC_VALS)
+        + b"\x10" + bytes(ac_bits) + bytes(ac_vals),
+    )
+
+
+def _jpeg_frame(
+    marker: int, height: int, width: int, sampling: list, restart_interval: int
+) -> tuple[bytes, bytes]:
+    """(SOFn segment, DRI segment or b'') for components 1..n, all on
+    quant table 0."""
+    sof = _jpeg_segment(marker, struct.pack(
+        ">BHHB", 8, height, width, len(sampling)
+    ) + b"".join(
+        struct.pack(">BBB", ci + 1, (sh << 4) | sv, 0)
+        for ci, (sh, sv) in enumerate(sampling)
+    ))
+    dri = (
+        _jpeg_segment(0xDD, struct.pack(">H", restart_interval))
+        if restart_interval else b""
+    )
+    return sof, dri
+
+
+def _jpeg_sos(cis: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
+    return _jpeg_segment(0xDA, bytes([len(cis)]) + b"".join(
+        struct.pack(">BB", ci + 1, 0x00) for ci in cis
+    ) + bytes([ss, se, (ah << 4) | al]))
+
+
+def _jpeg_geometry(coefs_by_comp, sampling, height, width) -> tuple:
+    """Encoder side of :func:`_jpeg_blocks`'s (mcus_y, mcus_x, height,
+    width, hmax, vmax): the MCU grid follows component 0's coefficient
+    array."""
+    return (
+        coefs_by_comp[0].shape[0] // sampling[0][1],
+        coefs_by_comp[0].shape[1] // sampling[0][0],
+        height, width,
+        max(sh for sh, _ in sampling), max(sv for _, sv in sampling),
     )
 
 
@@ -2766,127 +2478,28 @@ def encode_jpeg(
     DRI segment and a byte-aligned RSTn marker (n cycling 0-7, DC
     predictors reset) every that-many MCUs — the resync machinery real
     encoders emit by default."""
-    import struct  # noqa: PLC0415
-
     dc_codes = _huff_codes(_STD_DC_BITS, _STD_DC_VALS)
     ac_codes = _huff_codes(_STD_AC_BITS, _STD_AC_VALS)
-    bitbuf: list[int] = []
-
-    def put(code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            bitbuf.append((code >> i) & 1)
-
-    def put_val(v: int) -> int:
-        """category + magnitude bits of a DC diff / AC coefficient."""
-        cat, a = 0, abs(int(v))
-        while a:
-            cat += 1
-            a >>= 1
-        return cat
-
     ncomp = len(coefs_by_comp)
-    if sampling is None:
-        sampling = [(1, 1)] * ncomp
-    sv0, sh0 = sampling[0][1], sampling[0][0]
-    mcus_y = coefs_by_comp[0].shape[0] // sv0
-    mcus_x = coefs_by_comp[0].shape[1] // sh0
+    sampling = list(sampling or [(1, 1)] * ncomp)
+    wr = _BitWriter(restart_interval)
     pred = [0] * ncomp
-
-    def _encode_block(ci: int, yb: int, xb: int) -> None:
-        block = coefs_by_comp[ci][yb, xb]
+    for u, ci, by, bx in _jpeg_blocks(
+        sampling, *_jpeg_geometry(coefs_by_comp, sampling, height, width)
+    ):
+        if wr.restart(u):
+            pred = [0] * ncomp
+        block = coefs_by_comp[ci][by, bx]
         zz = [int(block[_ZIGZAG[k]]) for k in range(64)]
         diff = zz[0] - pred[ci]
         pred[ci] = zz[0]
-        cat = put_val(diff)
-        c, ln = dc_codes[cat]
-        put(c, ln)
-        if cat:
-            bits = diff if diff >= 0 else diff + (1 << cat) - 1
-            put(bits, cat)
-        run = 0
-        last_nz = max((k for k in range(1, 64) if zz[k]), default=0)
-        for k in range(1, 64):
-            if k > last_nz:
-                c, ln = ac_codes[0x00]  # EOB
-                put(c, ln)
-                break
-            v = zz[k]
-            if v == 0:
-                run += 1
-                continue
-            while run >= 16:
-                c, ln = ac_codes[0xF0]  # ZRL
-                put(c, ln)
-                run -= 16
-            s = put_val(v)
-            c, ln = ac_codes[(run << 4) | s]
-            put(c, ln)
-            bits = v if v >= 0 else v + (1 << s) - 1
-            put(bits, s)
-            run = 0
-
-    ent = bytearray()
-
-    def _flush_bits() -> None:
-        while len(bitbuf) % 8:
-            bitbuf.append(1)  # pad with 1s (spec §F.1.2.3)
-        for i in range(0, len(bitbuf), 8):
-            b = 0
-            for j in range(8):
-                b = (b << 1) | bitbuf[i + j]
-            ent.append(b)
-            if b == 0xFF:
-                ent.append(0x00)  # byte stuffing
-        bitbuf.clear()
-
-    # interleaved MCU order (T.81 §A.2.3) — matches the decoder exactly
-    n_mcu, rst = 0, 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                _flush_bits()
-                ent.extend((0xFF, 0xD0 + rst))
-                rst = (rst + 1) % 8
-                for ci in range(ncomp):
-                    pred[ci] = 0
-            n_mcu += 1
-            for ci in range(ncomp):
-                sh, sv = sampling[ci]
-                for bv in range(sv):
-                    for bh in range(sh):
-                        _encode_block(ci, my * sv + bv, mx * sh + bh)
-    _flush_bits()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    zzq = bytes(int(q[_ZIGZAG[k]]) for k in range(64))
-    dqt = seg(0xDB, b"\x00" + zzq)
-    dht = seg(
-        0xC4,
-        b"\x00" + bytes(_STD_DC_BITS) + bytes(_STD_DC_VALS)
-        + b"\x10" + bytes(_STD_AC_BITS) + bytes(_STD_AC_VALS),
-    )
-    sof_comps = b"".join(
-        struct.pack(
-            ">BBB", cid + 1, (sampling[cid][0] << 4) | sampling[cid][1], 0
-        )
-        for cid in range(ncomp)
-    )
-    sof = seg(
-        0xC0, struct.pack(">BHHB", 8, height, width, ncomp) + sof_comps
-    )
-    sos_comps = b"".join(
-        struct.pack(">BB", cid + 1, 0x00) for cid in range(ncomp)
-    )
-    sos = seg(0xDA, bytes([ncomp]) + sos_comps + b"\x00\x3f\x00")
-    dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
+        wr.put_coded(dc_codes, _category(diff), diff, _category(diff))
+        if _put_ac_band(wr, ac_codes, zz[1:]):
+            wr.put(*ac_codes[0x00])  # EOB
+    sof, dri = _jpeg_frame(0xC0, height, width, sampling, restart_interval)
     return (
-        b"\xff\xd8" + dqt + dht + dri + sof + sos + bytes(ent)
+        b"\xff\xd8" + _jpeg_tables(q, _STD_AC_BITS, _STD_AC_VALS) + dri + sof
+        + _jpeg_sos(list(range(ncomp)), 0, 63, 0, 0) + wr.finish()
         + b"\xff\xd9"
     )
 
@@ -2926,183 +2539,80 @@ def encode_jpeg_progressive(
     ZRL/correction-bit buffering of G.1.2.3. DC point transform is the
     spec's arithmetic right shift; AC is the magnitude shift
     (sign·(|v|>>Al))."""
-    import struct  # noqa: PLC0415
-
     if al not in (0, 1):
         raise ValueError("al must be 0 or 1")
     dc_codes = _huff_codes(_STD_DC_BITS, _STD_DC_VALS)
     ac_codes = _huff_codes(_PROG_AC_BITS, _PROG_AC_VALS)
     ncomp = len(coefs_by_comp)
-    if sampling is None:
-        sampling = [(1, 1)] * ncomp
-    sv0, sh0 = sampling[0][1], sampling[0][0]
-    mcus_y = coefs_by_comp[0].shape[0] // sv0
-    mcus_x = coefs_by_comp[0].shape[1] // sh0
-    bitbuf: list[int] = []
+    sampling = list(sampling or [(1, 1)] * ncomp)
+    geometry = _jpeg_geometry(coefs_by_comp, sampling, height, width)
 
     def zz(ci: int, by: int, bx: int, k: int) -> int:
         return int(coefs_by_comp[ci][by, bx][_ZIGZAG[k]])
 
-    def put(code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            bitbuf.append((code >> i) & 1)
+    def blocks(cis):
+        for u, i, by, bx in _jpeg_blocks([sampling[ci] for ci in cis], *geometry):
+            yield u, cis[i], by, bx
 
-    def cat_of(v: int) -> int:
-        c, a = 0, abs(int(v))
-        while a:
-            c += 1
-            a >>= 1
-        return c
+    def eob_run_coder(wr: _BitWriter, pending: list[int]):
+        """(count one more EOB'd block, code the pending run): EOBn is
+        coded lazily, with the correction bits ``pending`` buffered
+        behind it."""
+        run = [0]
 
-    def flush_scan() -> bytes:
-        while len(bitbuf) % 8:
-            bitbuf.append(1)  # pad with 1s (spec §F.1.2.3)
-        out = bytearray()
-        for i in range(0, len(bitbuf), 8):
-            b = 0
-            for j in range(8):
-                b = (b << 1) | bitbuf[i + j]
-            out.append(b)
-            if b == 0xFF:
-                out.append(0x00)  # byte stuffing
-        bitbuf.clear()
-        return bytes(out)
+        def flush() -> None:
+            if run[0]:
+                r = run[0].bit_length() - 1
+                wr.put(*ac_codes[r << 4])
+                wr.put(run[0] - (1 << r), r)
+                run[0] = 0
+                for bit in pending:
+                    wr.put(bit, 1)
+                pending.clear()
 
-    # restart machinery (r13): scan_tail accumulates the scan's already
-    # byte-aligned restart segments + RSTn markers; emitters call
-    # maybe_restart(u, before=...) at each unit, where `before` codes
-    # any PENDING symbols (EOB runs + buffered correction bits) into
-    # the closing segment first -- runs never span a restart
-    scan_tail = bytearray()
-    rst_state = {"seg": 0, "n": 0}
+        def add() -> None:
+            run[0] += 1
+            if run[0] == 0x7FFF:
+                flush()
 
-    def maybe_restart(u, before=None) -> bool:
-        if not restart_interval or u // restart_interval == rst_state["seg"]:
-            return False
-        if before:
-            before()
-        rst_state["seg"] = u // restart_interval
-        scan_tail.extend(flush_scan())
-        scan_tail.extend((0xFF, 0xD0 + rst_state["n"]))
-        rst_state["n"] = (rst_state["n"] + 1) % 8
-        return True
+        return add, flush
 
-    def blocks_interleaved(cis):
-        u = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for ci in cis:
-                    sh, sv = sampling[ci]
-                    for bv in range(sv):
-                        for bh in range(sh):
-                            yield u, ci, my * sv + bv, mx * sh + bh
-                u += 1
-
-    def blocks_raster(ci):
-        # T.81 A.2.2: non-interleaved scans code the component's OWN
-        # ceil(dim/8) block grid, not the MCU-padded grid — must match
-        # the decoder exactly for non-aligned dims (r13)
-        sh, sv = sampling[ci]
-        hmax_ = max(s for s, _ in sampling)
-        vmax_ = max(s for _, s in sampling)
-        comp_h = -(-(height * sv) // vmax_)
-        comp_w = -(-(width * sh) // hmax_)
-        u = 0
-        for by in range(-(-comp_h // 8)):
-            for bx in range(-(-comp_w // 8)):
-                yield u, ci, by, bx
-                u += 1
-
-    def dc_first_scan(cis, al_):
+    def dc_first_scan(wr, cis, al_):
         pred = {ci: 0 for ci in cis}
-        it = (
-            blocks_interleaved(cis) if len(cis) > 1 else blocks_raster(cis[0])
-        )
-        for u, ci, by, bx in it:
-            if maybe_restart(u):
+        for u, ci, by, bx in blocks(cis):
+            if wr.restart(u):
                 pred = {c: 0 for c in pred}  # F.2.1.3.1 predictor reset
             v = zz(ci, by, bx, 0) >> al_  # DC: arithmetic shift (G.1.2.1)
             diff = v - pred[ci]
             pred[ci] = v
-            c = cat_of(diff)
-            code, ln = dc_codes[c]
-            put(code, ln)
-            if c:
-                put(diff if diff >= 0 else diff + (1 << c) - 1, c)
+            wr.put_coded(dc_codes, _category(diff), diff, _category(diff))
 
-    def dc_refine_scan(cis, al_):
-        it = (
-            blocks_interleaved(cis) if len(cis) > 1 else blocks_raster(cis[0])
-        )
-        for u, ci, by, bx in it:
-            maybe_restart(u)  # no predictor state in a refinement scan
-            put((zz(ci, by, bx, 0) >> al_) & 1, 1)
+    def dc_refine_scan(wr, cis, al_):
+        for u, ci, by, bx in blocks(cis):
+            wr.restart(u)  # no predictor state in a refinement scan
+            wr.put((zz(ci, by, bx, 0) >> al_) & 1, 1)
 
-    def ac_first_scan(ci, ss, se, al_):
-        eobrun = 0
-
-        def flush_eobrun():
-            nonlocal eobrun
-            if eobrun:
-                r = eobrun.bit_length() - 1
-                code, ln = ac_codes[r << 4]
-                put(code, ln)
-                if r:
-                    put(eobrun - (1 << r), r)
-                eobrun = 0
-
-        for u, _, by, bx in blocks_raster(ci):
-            maybe_restart(u, before=flush_eobrun)
+    def ac_first_scan(wr, ci, ss, se, al_):
+        add_eob, flush_eobrun = eob_run_coder(wr, [])
+        for u, _, by, bx in blocks([ci]):
+            wr.restart(u, before=flush_eobrun)
             band = []
             for k in range(ss, se + 1):
                 v = zz(ci, by, bx, k)
                 band.append((1 if v >= 0 else -1) * (abs(v) >> al_))
             if not any(band):
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    flush_eobrun()
+                add_eob()
                 continue
             flush_eobrun()
-            run = 0
-            last_nz = max(i for i, v in enumerate(band) if v)
-            for i, v in enumerate(band):
-                if i > last_nz:
-                    break
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    code, ln = ac_codes[0xF0]
-                    put(code, ln)
-                    run -= 16
-                s = cat_of(v)
-                code, ln = ac_codes[(run << 4) | s]
-                put(code, ln)
-                put(v if v >= 0 else v + (1 << s) - 1, s)
-                run = 0
-            if last_nz < se - ss:
-                eobrun = 1  # trailing zeros: this block ends with an EOB
+            if _put_ac_band(wr, ac_codes, band):
+                add_eob()  # trailing zeros: this block ends with an EOB
         flush_eobrun()
 
-    def ac_refine_scan(ci, ss, se, al_):
-        eobrun = 0
+    def ac_refine_scan(wr, ci, ss, se, al_):
         be: list[int] = []  # correction bits buffered across the EOB run
-
-        def flush_eobrun():
-            nonlocal eobrun
-            if eobrun:
-                r = eobrun.bit_length() - 1
-                code, ln = ac_codes[r << 4]
-                put(code, ln)
-                if r:
-                    put(eobrun - (1 << r), r)
-                eobrun = 0
-                for bit in be:
-                    put(bit, 1)
-                be.clear()
-
-        for u, _, by, bx in blocks_raster(ci):
-            maybe_restart(u, before=flush_eobrun)
+        add_eob, flush_eobrun = eob_run_coder(wr, be)
+        for u, _, by, bx in blocks([ci]):
+            wr.restart(u, before=flush_eobrun)
             absv, sgn = [], []
             for k in range(ss, se + 1):
                 v = zz(ci, by, bx, k)
@@ -3121,85 +2631,44 @@ def encode_jpeg_progressive(
                 # ZRLs required, unless foldable into the EOB (G.1.2.3)
                 while r > 15 and i <= eob_i:
                     flush_eobrun()
-                    code, ln = ac_codes[0xF0]
-                    put(code, ln)
+                    wr.put(*ac_codes[0xF0])
                     r -= 16
                     for bit in br:
-                        put(bit, 1)
+                        wr.put(bit, 1)
                     br = []
                 if t > 1:  # already significant: one correction bit
                     br.append(t & 1)
                     continue
                 # newly significant: (run, 1) + sign bit
                 flush_eobrun()
-                code, ln = ac_codes[(r << 4) | 1]
-                put(code, ln)
-                put(sgn[i], 1)
+                wr.put(*ac_codes[(r << 4) | 1])
+                wr.put(sgn[i], 1)
                 for bit in br:
-                    put(bit, 1)
+                    wr.put(bit, 1)
                 br = []
                 r = 0
             if r > 0 or br:
-                eobrun += 1
                 be.extend(br)
-                if eobrun == 0x7FFF:
-                    flush_eobrun()
+                add_eob()
         flush_eobrun()
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+    sof, dri = _jpeg_frame(0xC2, height, width, sampling, restart_interval)
+    parts = [b"\xff\xd8", _jpeg_tables(q, _PROG_AC_BITS, _PROG_AC_VALS), sof, dri]
 
-    parts = [b"\xff\xd8"]
-    zzq = bytes(int(q[_ZIGZAG[k]]) for k in range(64))
-    parts.append(seg(0xDB, b"\x00" + zzq))
-    parts.append(
-        seg(
-            0xC4,
-            b"\x00" + bytes(_STD_DC_BITS) + bytes(_STD_DC_VALS)
-            + b"\x10" + bytes(_PROG_AC_BITS) + bytes(_PROG_AC_VALS),
-        )
-    )
-    sof_comps = b"".join(
-        struct.pack(
-            ">BBB", ci + 1, (sampling[ci][0] << 4) | sampling[ci][1], 0
-        )
-        for ci in range(ncomp)
-    )
-    parts.append(
-        seg(0xC2, struct.pack(">BHHB", 8, height, width, ncomp) + sof_comps)
-    )
-    if restart_interval:
-        parts.append(seg(0xDD, struct.pack(">H", restart_interval)))
-
-    def sos(cis, ss, se, ah, al_, emitter):
-        hdr = (
-            bytes([len(cis)])
-            + b"".join(struct.pack(">BB", ci + 1, 0x00) for ci in cis)
-            + bytes([ss, se, (ah << 4) | al_])
-        )
-        scan_tail.clear()
-        rst_state["seg"], rst_state["n"] = 0, 0
-        emitter()
-        parts.append(seg(0xDA, hdr) + bytes(scan_tail) + flush_scan())
+    def scan(cis, ss, se, ah, al_, emit, *args):
+        wr = _BitWriter(restart_interval)
+        emit(wr, *args)
+        parts.append(_jpeg_sos(cis, ss, se, ah, al_) + wr.finish())
 
     all_cis = list(range(ncomp))
-    sos(all_cis, 0, 0, 0, al, lambda: dc_first_scan(all_cis, al))
+    scan(all_cis, 0, 0, 0, al, dc_first_scan, all_cis, al)
     for ci in all_cis:
-        sos([ci], 1, 5, 0, al, lambda ci=ci: ac_first_scan(ci, 1, 5, al))
-        sos([ci], 6, 63, 0, al, lambda ci=ci: ac_first_scan(ci, 6, 63, al))
+        scan([ci], 1, 5, 0, al, ac_first_scan, ci, 1, 5, al)
+        scan([ci], 6, 63, 0, al, ac_first_scan, ci, 6, 63, al)
     if al:
-        sos(
-            all_cis, 0, 0, al, al - 1,
-            lambda: dc_refine_scan(all_cis, al - 1),
-        )
+        scan(all_cis, 0, 0, al, al - 1, dc_refine_scan, all_cis, al - 1)
         for ci in all_cis:
-            sos(
-                [ci], 1, 5, al, al - 1,
-                lambda ci=ci: ac_refine_scan(ci, 1, 5, al - 1),
-            )
-            sos(
-                [ci], 6, 63, al, al - 1,
-                lambda ci=ci: ac_refine_scan(ci, 6, 63, al - 1),
-            )
+            scan([ci], 1, 5, al, al - 1, ac_refine_scan, ci, 1, 5, al - 1)
+            scan([ci], 6, 63, al, al - 1, ac_refine_scan, ci, 6, 63, al - 1)
     parts.append(b"\xff\xd9")
     return b"".join(parts)

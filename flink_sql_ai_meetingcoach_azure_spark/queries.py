@@ -1133,19 +1133,22 @@ def _cached_index(
     spark: SparkSession, sf_dir: str, tag: str, write: Callable[[str], None]
 ) -> str:
     """Path of the index ``tag`` over ``sf_dir``, calling ``write(path)``
-    to build it only on the first call per (session, sf_dir, tag)."""
+    to build it only on the first call per (session, sf_dir, tag). The
+    index lives under the application's driver temp directory
+    (``SparkFiles.getRootDirectory()``), which ``spark.stop()`` deletes,
+    so no session leaves its indexes behind."""
     import hashlib  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     # applicationId (not id(spark): CPython recycles ids of dead sessions)
-    # + a DETERMINISTIC path per (tag, app, sf_dir): rebuilds overwrite in
-    # place, so cache clears never orphan an unbounded trail of temp dirs
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, tag)
+    # + a DETERMINISTIC path per (tag, sf_dir) in the app's own directory:
+    # rebuilds overwrite in place, so cache clears orphan nothing
+    sc = spark.sparkContext
+    key = (sc.applicationId, sf_dir, tag)
     path = _IVF_CACHE.get(key)
     if path is None:
+        root = sc._jvm.org.apache.spark.SparkFiles.getRootDirectory()
         sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = f"{tempfile.gettempdir()}/{tag}_{app}_{sf_tag}/index"
+        path = f"{root}/{tag}_{sf_tag}/index"
         write(path)
         _IVF_CACHE[key] = path
     return path
@@ -2929,7 +2932,7 @@ def q_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = decode_and_featurize(
         _media(docs, encode), id_col="doc_id", height=PNGDEC_OUT,
-        width=PNGDEC_OUT, decoder="png",
+        width=PNGDEC_OUT, decoder="real",
     )
     return out.select("doc_id", "height", "width", "intensity_sum").orderBy(
         "doc_id"
@@ -3114,7 +3117,7 @@ def q_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = decode_and_featurize(
         _media(docs, encode), id_col="doc_id", height=GIFDEC_OUT,
-        width=GIFDEC_OUT, decoder="gif",
+        width=GIFDEC_OUT, decoder="real",
     )
     return out.select("doc_id", "height", "width", "intensity_sum").orderBy(
         "doc_id"
@@ -14318,7 +14321,7 @@ def q_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = decode_and_featurize(
         _media(docs, encode), id_col="doc_id", height=JPEGDEC_OUT,
-        width=JPEGDEC_OUT, decoder="jpeg",
+        width=JPEGDEC_OUT, decoder="real",
     )
     return out.select("doc_id", "height", "width", "intensity_sum").orderBy(
         "doc_id"
@@ -14569,9 +14572,9 @@ def q_image_neardup_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < DHASH_MAX_ID
     ).select("doc_id")
     media = _dhash_fixture_media_jpeg(docs)
-    sigs = dhash_signatures(
-        media, id_col="doc_id", decoder="jpeg"
-    ).localCheckpoint(eager=False)
+    sigs = dhash_signatures(media, id_col="doc_id").localCheckpoint(
+        eager=False
+    )
     return _sig_band_pairs(sigs, DHASH_T).orderBy("doc_a", "doc_b")
 
 
@@ -14619,9 +14622,9 @@ def q_image_neardup_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < DHASH_MAX_ID
     ).select("doc_id")
     media = _dhash_fixture_media_gif(docs)
-    sigs = dhash_signatures(
-        media, id_col="doc_id", decoder="gif"
-    ).localCheckpoint(eager=False)
+    sigs = dhash_signatures(media, id_col="doc_id").localCheckpoint(
+        eager=False
+    )
     return _sig_band_pairs(sigs, DHASH_T).orderBy("doc_a", "doc_b")
 
 
@@ -15073,7 +15076,8 @@ def _video_neardup_fixture_media(docs: DataFrame) -> DataFrame:
     jpeg_decode_stats closed form; grayscale replication keeps dHash's
     integer gray == G) — all three decode to the SAME direction bits,
     so one oracle covers the mixed corpus and the per-payload
-    magic-byte dispatch (container='auto') is on the hash path."""
+    magic-byte dispatch (multimodal.decode_frames) is on the hash
+    path."""
     import numpy as np  # noqa: PLC0415
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
@@ -15123,7 +15127,7 @@ def q_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash/simhash; image: dHash/pHash; audio: sign-of-delta; video:
     this): clips arrive as APNG, animated GIF AND AVI-MJPEG by
     doc_id % 3, dispatched per payload by magic bytes
-    (video_dhash_signatures container='auto' — the real ingest shape),
+    (video_dhash_signatures via decode_frames — the real ingest shape),
     REAL demux (zlib fcTL/fdAT walk / LZW frames / RIFF movi chunks of
     entropy-coded JPEGs), per-frame dHash with the image rung's exact
     math, per-bit MAJORITY vote across frames into one clip signature,
@@ -15145,8 +15149,7 @@ def q_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < VIDEONEAR_MAX_ID
     ).select("doc_id")
     sigs = video_dhash_signatures(
-        _video_neardup_fixture_media(docs), id_col="doc_id",
-        container="auto",
+        _video_neardup_fixture_media(docs), id_col="doc_id"
     ).select("doc_id", "sig0", "sig1").localCheckpoint(eager=False)
     return _sig_band_pairs(sigs, VIDEONEAR_T).orderBy("doc_a", "doc_b")
 
@@ -15200,9 +15203,7 @@ def q_video_neardup_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < VIDEONEAR_MAX_ID
     ).select("doc_id")
     sigs = video_dhash_signatures(
-        _video_neardup_fixture_media_gif(docs),
-        id_col="doc_id",
-        container="gif",
+        _video_neardup_fixture_media_gif(docs), id_col="doc_id"
     ).select("doc_id", "sig0", "sig1").localCheckpoint(eager=False)
     return _sig_band_pairs(sigs, VIDEONEAR_T).orderBy("doc_a", "doc_b")
 

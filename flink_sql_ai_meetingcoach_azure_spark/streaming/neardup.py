@@ -268,22 +268,10 @@ class StreamingSignatureNearDup(StreamingNearDupDedup):
 
 class StreamingImageNearDup(StreamingSignatureNearDup):
     """Continuous IMAGE near-dup dedup: dHash signatures over REAL
-    decoded pixels (``operators/multimodal.dhash_signatures``) through
-    the band-prefilter + exact-Hamming-confirm state sink — the
-    streaming form of the batch ``image_neardup`` entry."""
-
-    def __init__(
-        self,
-        state_path: str,
-        output_path: str,
-        id_col: str = "doc_id",
-        payload_col: str = "payload",
-        decoder: str = "png",
-    ) -> None:
-        super().__init__(
-            state_path, output_path, id_col=id_col, payload_col=payload_col
-        )
-        self.decoder = decoder
+    decoded pixels (``operators/multimodal.dhash_signatures``, each
+    payload decoded by its magic bytes) through the band-prefilter +
+    exact-Hamming-confirm state sink — the streaming form of the batch
+    ``image_neardup`` entry."""
 
     def _signatures(self, batch_df: DataFrame) -> DataFrame:
         from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
@@ -291,10 +279,7 @@ class StreamingImageNearDup(StreamingSignatureNearDup):
         )
 
         return dhash_signatures(
-            batch_df,
-            payload_col=self.payload_col,
-            id_col=self.id_col,
-            decoder=self.decoder,
+            batch_df, payload_col=self.payload_col, id_col=self.id_col
         )
 
 
@@ -318,22 +303,10 @@ class StreamingAudioNearDup(StreamingSignatureNearDup):
 class StreamingVideoNearDup(StreamingSignatureNearDup):
     """Continuous VIDEO (clip) near-dup dedup (r13): per-frame dHash
     majority-voted clip signatures (``multimodal.video_dhash_signatures``
-    over APNG or animated-GIF payloads) through the same band-prefilter
-    + exact-Hamming-confirm state sink — the streaming modality
-    quartet: text, images, clips and audio all dedup continuously."""
-
-    def __init__(
-        self,
-        state_path: str,
-        output_path: str,
-        id_col: str = "doc_id",
-        payload_col: str = "payload",
-        container: str = "apng",
-    ) -> None:
-        super().__init__(
-            state_path, output_path, id_col=id_col, payload_col=payload_col
-        )
-        self.container = container
+    over APNG, animated-GIF or AVI-MJPEG payloads, each demuxed by its
+    magic bytes) through the same band-prefilter + exact-Hamming-confirm
+    state sink — the streaming modality quartet: text, images, clips and
+    audio all dedup continuously."""
 
     def _signatures(self, batch_df: DataFrame) -> DataFrame:
         from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (  # noqa: PLC0415
@@ -341,8 +314,5 @@ class StreamingVideoNearDup(StreamingSignatureNearDup):
         )
 
         return video_dhash_signatures(
-            batch_df,
-            payload_col=self.payload_col,
-            id_col=self.id_col,
-            container=self.container,
+            batch_df, payload_col=self.payload_col, id_col=self.id_col
         )

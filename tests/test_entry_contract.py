@@ -132,24 +132,23 @@ def test_registry_prepares_an_unconfigured_session(spark, sf_dir):
         conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-def test_cached_index_builds_once_per_key_until_cleared():
+def test_cached_index_builds_once_per_key_until_cleared(spark):
     """bench.py times ann_ivf_topk's cold build by clearing _IVF_CACHE and
     its steady-state probe by calling again: a hit must not rebuild, each
     tag is its own index, and a clear forces the next call to rebuild."""
     import hashlib
-    import tempfile
-    from types import SimpleNamespace
+
+    from pyspark import SparkFiles
 
     from flink_sql_ai_meetingcoach_azure_spark.queries import _IVF_CACHE, _cached_index
 
-    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-stub"))
     sf_dir = "/data/sf0.001"
     built = []
     saved = dict(_IVF_CACHE)
     try:
         p1 = _cached_index(spark, sf_dir, "ivf_idx", built.append)
         sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        assert p1 == f"{tempfile.gettempdir()}/ivf_idx_app-stub_{sf_tag}/index"
+        assert p1 == f"{SparkFiles.getRootDirectory()}/ivf_idx_{sf_tag}/index"
         assert _cached_index(spark, sf_dir, "ivf_idx", built.append) == p1
         assert built == [p1]
         p2 = _cached_index(spark, sf_dir, "ivfpq_idx", built.append)
@@ -160,3 +159,31 @@ def test_cached_index_builds_once_per_key_until_cleared():
     finally:
         _IVF_CACHE.clear()
         _IVF_CACHE.update(saved)
+
+
+def test_cached_index_is_deleted_when_the_session_stops(tmp_path):
+    """An index built through _cached_index lives in the application's
+    temp directory, so stopping the session deletes it: a run of many
+    sessions leaves no index directories behind."""
+    import subprocess
+    from pathlib import Path
+
+    script = (
+        "import os\n"
+        "from flink_sql_ai_meetingcoach_azure_spark import get_spark\n"
+        "from flink_sql_ai_meetingcoach_azure_spark.queries import _cached_index\n"
+        "s = get_spark('index-leak', master='local[1]')\n"
+        "p = _cached_index(s, '/data/sf', 'ivf_idx',\n"
+        "                  lambda path: s.range(3).write.parquet(path))\n"
+        "assert os.path.isdir(p), p\n"
+        "s.stop()\n"
+        "print('exists' if os.path.exists(p) else 'gone', p)\n"
+    )
+    repo = Path(__file__).resolve().parents[1]
+    env = dict(os.environ, SPARK_LOCAL_DIRS=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[0] == "gone", out.stdout

@@ -56,13 +56,53 @@ def test_decode_featurize_under_8x8_has_null_feature(spark):
         assert len(r["channel_means"]) == 3
 
 
-def test_real_decoder_raises(spark):
-    with pytest.raises(Exception, match="NotImplementedError|real image"):
+def test_real_decoder_dispatches_by_magic(spark):
+    """decoder='real' decodes each payload with the codec its magic
+    bytes name — PNG, JPEG, GIF and BMP side by side in one batch — and
+    a payload of unknown magic fails loudly instead of featurizing."""
+    import numpy as np
+
+    from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (
+        decode_image,
+        encode_bmp,
+        encode_gif,
+        encode_jpeg,
+        encode_png,
+        nn_resize,
+    )
+
+    rng = np.random.RandomState(4)
+    idx = rng.randint(0, 6, (8, 8))
+    pal = rng.randint(0, 256, (6, 3)).astype(np.uint8)
+    coefs = np.zeros((1, 1, 8, 8), np.int64)
+    coefs[0, 0, :2, :2] = rng.randint(-20, 21, (2, 2))
+    payloads = {
+        "png": encode_png(pal[idx]),
+        "jpeg": encode_jpeg([coefs], np.full((8, 8), 8), 8, 8),
+        "gif": encode_gif([idx], pal),
+        "bmp": encode_bmp(pal[idx]),
+    }
+    df = spark.createDataFrame(
+        [(k, bytearray(v)) for k, v in payloads.items()],
+        "media_id string, payload binary",
+    )
+    got = {r.media_id: r.intensity_sum for r in decode_and_featurize(
+        df, height=4, width=4, decoder="real").collect()}
+    assert got == {
+        k: int(nn_resize(decode_image(v), 4, 4).sum())
+        for k, v in payloads.items()
+    }
+    assert got["png"] == got["gif"] == got["bmp"] != got["jpeg"]
+    with pytest.raises(Exception, match="no decoder for media format"):
         decode_and_featurize(_media(spark), decoder="real").collect()
+    with pytest.raises(ValueError, match="unknown decoder"):
+        decode_and_featurize(_media(spark), decoder="png")
 
 
 def test_frame_sampling(spark):
-    out = sample_video_frames(_media(spark).filter("media_id='m1'"), n_frames=4).collect()
+    out = sample_video_frames(
+        _media(spark).filter("media_id='m1'"), n_frames=4
+    ).collect()
     assert len(out) == 4
     assert [r["frame_idx"] for r in out] == [0, 1, 2, 3]
     # frames differ from each other
@@ -234,7 +274,7 @@ def test_decode_png_16bit_high_byte_reduction():
 
 
 def test_decode_and_featurize_png_real_pixels(spark):
-    """decoder='png' runs the REAL decode inside mapInPandas: a solid-
+    """decoder='real' runs the REAL decode inside mapInPandas: a solid-
     color PNG must produce exactly-known intensity sums after the
     nearest-neighbor resize (no interpolation: NN preserves the solid
     value)."""
@@ -255,7 +295,7 @@ def test_decode_and_featurize_png_real_pixels(spark):
         "media_id string, payload binary",
     )
     got = {r.media_id: r for r in
-           decode_and_featurize(df, height=4, width=4, decoder="png").collect()}
+           decode_and_featurize(df, height=4, width=4, decoder="real").collect()}
     assert got["solid"].intensity_sum == 200 * 4 * 4 * 3
     assert got["solid"].height == 4 and got["solid"].width == 4
     # gradient: NN resize picks columns floor(x*8/4) = 0,2,4,6
@@ -1415,7 +1455,7 @@ def test_apng_interlaced_default_image():
 def test_avi_mjpeg_demux_and_auto_dispatch(spark):
     """AVI Motion-JPEG (r13): RIFF tree walk finds LIST movi, decodes
     each ..dc chunk through the real JPEG decoder (even-padding
-    honored); container='auto' dispatches a MIXED corpus (APNG /
+    honored); video_dhash_signatures dispatches a MIXED corpus (APNG /
     GIF / AVI) per payload by magic bytes and yields identical
     signatures for identical content across containers."""
     import numpy as np
@@ -1471,8 +1511,7 @@ def test_avi_mjpeg_demux_and_auto_dispatch(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: (r.sig0, r.sig1, r.n_frames)
-            for r in video_dhash_signatures(
-                df, id_col="doc_id", container="auto").collect()}
+            for r in video_dhash_signatures(df, id_col="doc_id").collect()}
     assert rows[1] == rows[2] == rows[3]
     assert rows[1][2] == 3
 
@@ -1513,9 +1552,10 @@ def test_decode_bmp_roundtrip():
 
 
 def test_dhash_decoder_bmp_matches_png():
-    """decoder='bmp' through dhash_signatures yields the same
-    signatures as the PNG path for identical pixels — the codec-flip
-    invariance the other three codecs already pin."""
+    """A BMP decodes to the same pixels as the PNG of the same image, so
+    dhash_signatures (which dispatches by magic bytes) yields the same
+    signatures for both — the codec-flip invariance the other three
+    codecs already pin."""
     import numpy as np
 
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (
@@ -1638,3 +1678,280 @@ def test_allpairs_l1_truth_matches_join_form(spark):
         )
     )
     assert got == ref
+
+
+def _golden_media_cases():
+    """Fixed-seed inputs through every fixture encoder: all PNG color
+    types at 8 and 16 bits, sequential and Adam7, paletted and sub-byte
+    gray; APNG with sub-region rects, OVER blend and every dispose; GIF
+    with interlace, a local palette, transparency and an LZW table
+    overflow; BMP 24/32/8-bit; baseline JPEG gray, 4:4:4 and 4:2:0 with
+    restarts; progressive JPEG at al 0 and 1 with restarts; AVI-MJPEG."""
+    import numpy as np
+
+    from flink_sql_ai_meetingcoach_azure_spark.operators import multimodal as mm
+
+    def filt(n):  # every filter type, cycling over n rows
+        return [r % 5 for r in range(n)]
+
+    rng = np.random.RandomState(1313)
+    q = rng.randint(1, 40, (8, 8)).astype(np.int64)
+    c = {}
+    for ct, ch in ((0, 1), (2, 3), (4, 2), (6, 4)):
+        img = rng.randint(0, 256, (7, 9, ch)).astype(np.uint8)
+        c[f"png_ct{ct}"] = mm.encode_png(img, ct, filt(7))
+        img16 = rng.randint(0, 65536, (5, 6, ch)).astype(np.uint16)
+        c[f"png16_ct{ct}"] = mm.encode_png(img16, ct, filt(5), depth=16)
+        c[f"png_adam7_ct{ct}"] = mm.encode_png(img, ct, filt(15), interlace=1)
+        c[f"png16_adam7_ct{ct}"] = mm.encode_png(
+            img16, ct, depth=16, interlace=1
+        )
+    pal = rng.randint(0, 256, (40, 3)).astype(np.uint8)
+    idx = rng.randint(0, 40, (7, 11))
+    c["png_pal8"] = mm.encode_png(idx, 3, filt(7), palette=pal)
+    c["png_pal8_adam7"] = mm.encode_png(
+        idx, 3, filt(15), interlace=1, palette=pal
+    )
+    for d in (1, 2, 4):
+        sub = rng.randint(0, 1 << d, (5, 11))
+        c[f"png_pal{d}"] = mm.encode_png(sub, 3, filt(5), depth=d, palette=pal)
+        c[f"png_gray{d}"] = mm.encode_png(sub, 0, filt(5), depth=d)
+    frames = [rng.randint(0, 256, (6, 8, 4)).astype(np.uint8),
+              rng.randint(0, 256, (3, 4, 4)).astype(np.uint8),
+              rng.randint(0, 256, (2, 5, 4)).astype(np.uint8)]
+    c["apng_rects"] = mm.encode_apng(
+        frames, 6, [[1, 2, 3, 4, 0, 1], [4, 3, 2], [0, 1]],
+        rects=[(0, 0), (2, 1), (3, 4)], blend=[0, 1, 1], dispose=[0, 2, 1])
+    c["apng16_gray"] = mm.encode_apng(
+        [rng.randint(0, 65536, (4, 5, 1)).astype(np.uint16) for _ in range(2)],
+        0, depth=16,
+    )
+    gpal = rng.randint(0, 256, (5, 3)).astype(np.uint8)
+    lpal = rng.randint(0, 256, (20, 3)).astype(np.uint8)
+    gframes = [rng.randint(0, 5, (9, 7)), rng.randint(0, 20, (4, 3)),
+               rng.randint(0, 5, (9, 7))]
+    c["gif_interlaced_local"] = mm.encode_gif(
+        gframes, gpal, interlace=[True, False, True],
+        rects=[(0, 0), (2, 3), (0, 0)], transparent=[None, 1, 2],
+        dispose=[0, 3, 2], bg=1, local_palettes=[None, lpal, None],
+    )
+    big = (np.arange(64 * 64).reshape(64, 64) * 7919 % 251)
+    c["gif_lzw_overflow"] = mm.encode_gif(
+        [big], rng.randint(0, 256, (251, 3)).astype(np.uint8)
+    )
+    img = rng.randint(0, 256, (5, 7, 3)).astype(np.uint8)
+    c["bmp24"] = mm.encode_bmp(img)
+    c["bmp32_topdown"] = mm.encode_bmp(img, 32, top_down=True)
+    c["bmp8"] = mm.encode_bmp(rng.randint(0, 40, (6, 9)), 8, palette=pal)
+
+    def coefs(by, bx):
+        k = np.zeros((by, bx, 8, 8), np.int64)
+        k[:, :, :3, :3] = rng.randint(-40, 41, (by, bx, 3, 3))
+        k[:, :, 7, 7] = rng.randint(-2, 3, (by, bx))
+        return k
+
+    gray = coefs(3, 2)
+    c["jpeg_gray"] = mm.encode_jpeg([gray], q, 24, 16)
+    ycc = [coefs(4, 4), coefs(2, 2), coefs(2, 2)]
+    s420 = [(2, 2), (1, 1), (1, 1)]
+    c["jpeg_420_rst"] = mm.encode_jpeg(
+        ycc, q, 30, 27, sampling=s420, restart_interval=3
+    )
+    c["jpeg_444"] = mm.encode_jpeg([coefs(2, 3) for _ in range(3)], q, 16, 24)
+    for al in (0, 1):
+        c[f"jpegp_al{al}_rst"] = mm.encode_jpeg_progressive(
+            ycc, q, 30, 27, sampling=s420, al=al, restart_interval=2
+        )
+        c[f"jpegp_al{al}_gray"] = mm.encode_jpeg_progressive(
+            [gray], q, 24, 16, al=al
+        )
+    c["avi_mjpeg"] = mm.encode_avi_mjpeg(
+        [c["jpeg_gray"], c["jpeg_444"][:-1]], 16, 24, fps=12
+    )
+    return c
+
+
+# md5 of each encoder output above; the encoders must stay byte-identical
+_GOLDEN_ENCODED = {
+    "png_ct0": "e6e45c3cf73c9d77ad4a46f7059fc43f",
+    "png16_ct0": "399066c4f62723ac81bdb2fa49f22227",
+    "png_adam7_ct0": "e614c292226d6140ed62018600f0caa5",
+    "png16_adam7_ct0": "cd3bd264e4259c560f0f5442d4e83bb3",
+    "png_ct2": "5279c980e88c9926f0245c590881e552",
+    "png16_ct2": "21301622957b11a0e4ed7e62d0f38f91",
+    "png_adam7_ct2": "bd056635cd457c5b70acde1415cad4c3",
+    "png16_adam7_ct2": "abbef5f4b20e9a5584c6e3baf7690f84",
+    "png_ct4": "df45a06bbe87cc404929dadb13bee7c2",
+    "png16_ct4": "9e261acd66901bfb0bd39ac8f8950004",
+    "png_adam7_ct4": "96c32d70c7d2d550212d7c71b161023c",
+    "png16_adam7_ct4": "14cd806049531cc368ff66f332b539fa",
+    "png_ct6": "73e565f0ca2d568fe1ec440a7a4d8e4f",
+    "png16_ct6": "da5159cdc1ade8193c72cb05f34f6c6d",
+    "png_adam7_ct6": "1c359b9a78b532739c6b1dea3c75dcf2",
+    "png16_adam7_ct6": "b90ffdf78725056188c6600c8945b9a4",
+    "png_pal8": "651c6ecdf43671402b14d1028a7acff6",
+    "png_pal8_adam7": "26310f608e48fd25f429118cda46c36c",
+    "png_pal1": "b8706eab71e634c14a480e6c3442e3ed",
+    "png_gray1": "b69145ed515b8d1967a9ef7093a66892",
+    "png_pal2": "7e838534d7a7a7436dfc8859f637737a",
+    "png_gray2": "b964fbff0818dd538c291e9596025b13",
+    "png_pal4": "60df7f6776ddf039a9126a7f6e6672b2",
+    "png_gray4": "871704045c50159ec9484700f36cbbb9",
+    "apng_rects": "3f1597c0c9678aed3605b6afff7b5b2b",
+    "apng16_gray": "bb73766794bf18eabd457a022e9b5fc2",
+    "gif_interlaced_local": "b15d3033753a22d1d663f7499d7ebad1",
+    "gif_lzw_overflow": "7a9ff2177698b8e283f078b88a582358",
+    "bmp24": "1b0c1e914adfec40be041c58288e1c6f",
+    "bmp32_topdown": "dfe20b6bfab889b215a63d86664143a4",
+    "bmp8": "778c2b2d754b1ca6bfb38a3e23f3d17c",
+    "jpeg_gray": "32a206cd29e02dc3f020c475b9142038",
+    "jpeg_420_rst": "bd845634932230a79f21761bea8b3828",
+    "jpeg_444": "28691417621830134373c0c8b27999b6",
+    "jpegp_al0_rst": "16826afcc590def487627a57b7cf31b9",
+    "jpegp_al0_gray": "340e618fd1252991cc029f954adef5f7",
+    "jpegp_al1_rst": "102bd80918497cdc9e6f748973f85902",
+    "jpegp_al1_gray": "a7ebda9997e650494997f32d4090bbb7",
+    "avi_mjpeg": "7c3041471527aaec93c11b64a169fc28",
+}
+
+# md5 of each payload's decoded frames (uint8 RGB, frames concatenated)
+_GOLDEN_DECODED = {
+    "png_ct0": "368a3fbf0c8664343947cf5abb88674b",
+    "png16_ct0": "97157bd072743bbbbc47c394b436b441",
+    "png_adam7_ct0": "368a3fbf0c8664343947cf5abb88674b",
+    "png16_adam7_ct0": "97157bd072743bbbbc47c394b436b441",
+    "png_ct2": "5cb198069772dcbdbb9d16f40448cc3a",
+    "png16_ct2": "4c4db0fe13364ccef8385f9f698d784b",
+    "png_adam7_ct2": "5cb198069772dcbdbb9d16f40448cc3a",
+    "png16_adam7_ct2": "4c4db0fe13364ccef8385f9f698d784b",
+    "png_ct4": "676819720f9e5c0c0683964840d4f9c0",
+    "png16_ct4": "80fd0c0c85e4645cbdf77b58522e08a4",
+    "png_adam7_ct4": "676819720f9e5c0c0683964840d4f9c0",
+    "png16_adam7_ct4": "80fd0c0c85e4645cbdf77b58522e08a4",
+    "png_ct6": "be93765812a4f1d5e9b7805593922619",
+    "png16_ct6": "037588998b9eb9650ab129e9a148359c",
+    "png_adam7_ct6": "be93765812a4f1d5e9b7805593922619",
+    "png16_adam7_ct6": "037588998b9eb9650ab129e9a148359c",
+    "png_pal8": "26377a8134593ff160f6b552649892ca",
+    "png_pal8_adam7": "26377a8134593ff160f6b552649892ca",
+    "png_pal1": "94a134bdb79c578b97fc237ed944e043",
+    "png_gray1": "ff42bfaa03865c22ae0ded20e0488357",
+    "png_pal2": "9792272b90a1907a4bee8897ee159f64",
+    "png_gray2": "06b0f27619ee828bbb8e41a6d7f874aa",
+    "png_pal4": "b78a8eb527be951809411d1f8e75fe73",
+    "png_gray4": "0c4883a90d37174d28167256a007f6c7",
+    "apng_rects": "1aa60d981e7e1dc40654911e0d18ff5f",
+    "apng16_gray": "f785a8516ad601cfc9b4d86f56cbc379",
+    "gif_interlaced_local": "cd2e3828473893ef44182177ec413db0",
+    "gif_lzw_overflow": "b274ec6e059a67e5d368cbb6c2ff31f9",
+    "bmp24": "f3a17f8d34966f0da5dda98a5478a31a",
+    "bmp32_topdown": "f3a17f8d34966f0da5dda98a5478a31a",
+    "bmp8": "afba397697e9d77e81bf2973b871943d",
+    "jpeg_gray": "1a35d0b9a967e035eb5a659195296507",
+    "jpeg_420_rst": "5d4dad46a5aec80d3681f9c00c21b1e5",
+    "jpeg_444": "bcaaacbc43e509ef7ffed3fb21786a85",
+    "jpegp_al0_rst": "5d4dad46a5aec80d3681f9c00c21b1e5",
+    "jpegp_al0_gray": "1a35d0b9a967e035eb5a659195296507",
+    "jpegp_al1_rst": "5d4dad46a5aec80d3681f9c00c21b1e5",
+    "jpegp_al1_gray": "1a35d0b9a967e035eb5a659195296507",
+    "avi_mjpeg": "bb0813305403b9ca1fac037a6876aaa6",
+}
+
+
+def _golden_decode(name, payload):
+    import numpy as np
+
+    from flink_sql_ai_meetingcoach_azure_spark.operators import multimodal as mm
+
+    if name.startswith("apng"):
+        frames = mm.decode_apng_frames(payload)
+    elif name.startswith("png"):
+        frames = [mm.decode_png(payload)]
+    elif name.startswith("gif"):
+        frames = mm.decode_gif_frames(payload)
+    elif name.startswith("bmp"):
+        frames = [mm.decode_bmp(payload)]
+    elif name.startswith("jpeg"):
+        frames = [mm.decode_jpeg(payload)]
+    else:
+        frames = mm.decode_avi_mjpeg_frames(payload)
+    return b"".join(np.ascontiguousarray(f).tobytes() for f in frames)
+
+
+
+def test_fixture_encoders_golden_bytes():
+    """Every fixture encoder's output is pinned byte for byte, so a
+    refactor of the shared PNG/JPEG primitives cannot move a fixture."""
+    import hashlib
+
+    got = {k: hashlib.md5(v).hexdigest() for k, v in _golden_media_cases().items()}
+    assert got == _GOLDEN_ENCODED
+
+
+def test_decoders_golden_pixels():
+    """The real decoders' pixels for the golden payloads are pinned too;
+    each progressive file decodes equal to its baseline twin."""
+    import hashlib
+
+    got = {
+        k: hashlib.md5(_golden_decode(k, v)).hexdigest()
+        for k, v in _golden_media_cases().items()
+    }
+    assert got == _GOLDEN_DECODED
+    for al in (0, 1):
+        assert got[f"jpegp_al{al}_rst"] == got["jpeg_420_rst"]
+        assert got[f"jpegp_al{al}_gray"] == got["jpeg_gray"]
+
+
+def _jpeg_one_scan_per_component(coefs, q, height, width, sampling):
+    """A legal T.81 sequential file with one SOS per component: each
+    component's entropy data comes from a one-component encode_jpeg and
+    is re-wrapped under a single 3-component SOF0."""
+    import struct
+
+    from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (
+        encode_jpeg,
+    )
+
+    full = encode_jpeg(coefs, q, height, width, sampling=sampling)
+    head = full[: full.index(b"\xff\xda")]  # SOI, DQT, DHT, SOF0
+    scans = b""
+    for ci, c in enumerate(coefs):
+        one = encode_jpeg([c], q, c.shape[0] * 8, c.shape[1] * 8)
+        sos = one.index(b"\xff\xda")
+        (ln,) = struct.unpack(">H", one[sos + 2 : sos + 4])
+        entropy = one[sos + 2 + ln : -2]
+        scans += (
+            b"\xff\xda" + struct.pack(">HB", 8, 1)
+            + bytes([ci + 1, 0x00, 0, 63, 0]) + entropy
+        )
+    return head + scans + b"\xff\xd9"
+
+
+def test_jpeg_one_scan_per_component_matches_interleaved():
+    """A baseline JPEG may code each component in its own scan (T.81
+    sequential, non-interleaved); it must decode equal to the
+    interleaved file of the same coefficients, not as grayscale."""
+    import numpy as np
+
+    from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (
+        decode_jpeg,
+        encode_jpeg,
+    )
+
+    rng = np.random.RandomState(21)
+    q = np.full((8, 8), 4, dtype=np.int64)
+    for sampling, grids in (
+        ([(1, 1)] * 3, [(2, 3)] * 3),
+        ([(2, 2), (1, 1), (1, 1)], [(4, 4), (2, 2), (2, 2)]),
+    ):
+        coefs = []
+        for by, bx in grids:
+            c = np.zeros((by, bx, 8, 8), np.int64)
+            c[:, :, :2, :2] = rng.randint(-30, 31, (by, bx, 2, 2))
+            coefs.append(c)
+        h, w = grids[0][0] * 8, grids[0][1] * 8
+        interleaved = decode_jpeg(encode_jpeg(coefs, q, h, w, sampling=sampling))
+        assert not np.array_equal(interleaved[:, :, 0], interleaved[:, :, 1])
+        split = decode_jpeg(_jpeg_one_scan_per_component(coefs, q, h, w, sampling))
+        assert np.array_equal(split, interleaved)

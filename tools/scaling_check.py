@@ -427,7 +427,7 @@ def knob_scaled_video_neardup_seconds(spark, scale: int) -> float:
     within-copy clip near-dup structure is bit-preserved while
     cross-copy clip signatures decorrelate; the fixture keeps the
     registry entry's MIXED containers (APNG / animated GIF / AVI-MJPEG
-    by doc id) and the container='auto' dispatch, so the measured cost
+    by doc id) and the magic-byte dispatch, so the measured cost
     is the real mixed-demux chain. Copy 0 IS the registry fixture."""
     from flink_sql_ai_meetingcoach_azure_spark.operators.multimodal import (
         video_dhash_signatures,
@@ -513,9 +513,7 @@ def knob_scaled_video_neardup_seconds(spark, scale: int) -> float:
         F.col("id").alias("doc_id")
     ).repartition(8 * scale)
     media = docs.mapInPandas(_make, schema="doc_id long, payload binary")
-    sigs = video_dhash_signatures(
-        media, id_col="doc_id", container="auto"
-    ).select("doc_id", "sig0", "sig1").localCheckpoint(eager=False)
+    sigs = video_dhash_signatures(media, id_col="doc_id").select("doc_id", "sig0", "sig1").localCheckpoint(eager=False)
     _sig_band_pairs(sigs, VIDEONEAR_T).write.format("noop").mode(
         "overwrite"
     ).save()
