@@ -372,44 +372,39 @@ def bfs_hops(
     node reachable from any source within ``iters`` hops, the EXACT
     minimum hop count. ``sources`` is a 1-column DataFrame of node ids.
 
-    Frontier-only expansion: each round joins ONLY the nodes first reached
-    last round against the adjacency list (never the whole visited set),
-    anti-joins the visited set to keep true first-touches, and appends.
-    Per-round cost is frontier-edges, total cost is O(edges within the
-    radius) — the textbook distributed BFS; rounds are the radius bound,
-    a deliberate knob (hop-bounded neighborhoods are the product shape:
-    'everything within k links of a flagged doc'). Deterministic: BFS
-    levels are partition- and retry-invariant. Every frontier ends in
-    ``localCheckpoint`` to cut the iterative lineage (the CC seam);
-    the empty-frontier early exit reads an ``observe`` count metric off
-    the checkpoint job itself, and the visited set stays a LAZY union of
-    the (already checkpointed) frontiers — r13: two driver-sequential
-    jobs per round are now one."""
+    Min-relaxation rounds (Bellman-Ford with unit weights, the recurrence
+    of the registry's unrolled SQL oracle): round ``i`` is ``dist_i(n) =
+    min(hops)`` over ``dist_{i-1}`` left-joined to the adjacency list, each
+    row stepping to itself at weight 0 and to its neighbors at weight 1.
+    ``dist_{i-1}`` is referenced once per round, so all ``iters`` rounds
+    form one lazy plan that grows linearly, and the caller's action is its
+    only materialization: no driver round trip per round. The symmetric
+    edge list is checkpointed once up front, so the rounds' concurrent
+    query stages read it instead of each recomputing the pair subtree.
+    Cost: at most ``iters`` x the edges that touch the reached set; a
+    round past the graph's radius repeats its predecessor's work (no early
+    exit, which would need a job per round). ``iters`` is the radius bound
+    (hop-bounded neighborhoods are the product shape: 'everything within
+    k links of a flagged doc').
+    Deterministic: BFS levels are partition- and retry-invariant."""
     edges = _canonical_edges(pairs, id_a, id_b)
     sym = edges.union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     src = sources.select(F.col(sources.columns[0]).alias("node")).distinct()
-    dist = src.withColumn("hops", F.lit(0).cast("bigint")).localCheckpoint()
-    frontier = dist
-    for i in range(1, iters + 1):
-        reached = (
-            frontier.join(sym, frontier["node"] == sym["u"])
-            .select(F.col("v").alias("node"))
-            .distinct()
+    dist = src.withColumn("hops", F.lit(0).cast("bigint"))
+    for _ in range(iters):
+        dist = (
+            dist.join(sym, F.col("node") == F.col("u"), "left")
+            .select(
+                "hops",
+                F.posexplode(F.array("node", "v")).alias("step", "node"),
+            )
+            # a node without edges keeps only its zero-weight self step
+            .filter((F.col("step") == 0) | F.col("node").isNotNull())
+            .groupBy("node")
+            .agg(F.min(F.col("hops") + F.col("step")).alias("hops"))
         )
-        obs = Observation()
-        frontier = (
-            reached.join(dist, "node", "left_anti")
-            .withColumn("hops", F.lit(i).cast("bigint"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        if obs.get["n"] == 0:
-            break
-        # lazy union: every branch is a checkpointed frontier, so the
-        # lineage stays shallow without a per-round materialization job
-        dist = dist.union(frontier)
     return dist
 
 

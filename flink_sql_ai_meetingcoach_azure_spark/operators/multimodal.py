@@ -55,7 +55,7 @@ import hashlib
 import struct
 import zlib
 from functools import reduce
-from typing import Callable
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -1189,9 +1189,43 @@ def encode_bmp(
 
 
 # ---------------------------------------------------------------------------
-# AVI (RIFF) Motion-JPEG demux (r13) — the camera-video container: the WAV
-# chunk-walk machinery applied to RIFF 'AVI ' LISTs, each '..dc'/'..db'
-# movi sub-chunk an entropy-coded JPEG frame through the real decoder.
+# AVI (RIFF) Motion-JPEG demux (r13) — the camera-video container: the
+# RIFF chunk walk shared with WAV, each '..dc'/'..db' movi sub-chunk an
+# entropy-coded JPEG frame through the real decoder.
+
+
+def _riff_chunks(
+    data: bytes, form: bytes, strict: bool
+) -> Iterator[tuple[bytes, bytes, bytes]]:
+    """The one RIFF chunk walk (WAVE and AVI): ``(list type, chunk id,
+    body)`` of every non-LIST chunk of a RIFF payload of form type
+    ``form``, in file order; a top-level chunk's list type is ``form``.
+    LIST chunks carry a 4-byte list type, then sub-chunks, and are
+    descended (with an explicit stack: nesting depth comes from the
+    payload); bodies pad to even sizes. A chunk whose declared size runs
+    past its parent raises under ``strict`` and is cut at the parent's
+    end otherwise (WAV tolerates a truncated data body)."""
+    name = form.decode("latin-1").strip()
+    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != form:
+        raise ValueError(f"not a RIFF/{name} payload")
+    stack = [(12, len(data), form)]  # (next chunk, parent end, list type)
+    while stack:
+        pos, end, ltype = stack.pop()
+        while pos + 8 <= end:
+            cid = data[pos : pos + 4]
+            ln = int.from_bytes(data[pos + 4 : pos + 8], "little")
+            body_end = pos + 8 + ln
+            if body_end > end:
+                if strict:
+                    raise ValueError(f"truncated {name} chunk")
+                body_end = end
+            nxt = pos + 8 + ln + (ln & 1)
+            if cid == b"LIST":
+                stack.append((nxt, end, ltype))
+                pos, end, ltype = pos + 12, body_end, data[pos + 8 : pos + 12]
+                continue
+            yield ltype, cid, data[pos + 8 : body_end]
+            pos = nxt
 
 
 def decode_avi_mjpeg_frames(payload: bytes) -> list[np.ndarray]:
@@ -1205,38 +1239,12 @@ def decode_avi_mjpeg_frames(payload: bytes) -> list[np.ndarray]:
     every frame independently coded, which is exactly why it demuxes
     with a chunk walk and no inter-frame codec. Streams whose frames
     are not JPEG raise through decode_jpeg's loud contract."""
-    data = bytes(payload or b"")
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI payload")
-
-    frames: list[np.ndarray] = []
-
-    def walk(pos: int, end: int) -> None:
-        while pos + 8 <= end:
-            cid = data[pos : pos + 4]
-            ln = int.from_bytes(data[pos + 4 : pos + 8], "little")
-            body_start, body_end = pos + 8, pos + 8 + ln
-            if body_end > end:
-                raise ValueError("truncated AVI chunk")
-            if cid == b"LIST":
-                ltype = data[body_start : body_start + 4]
-                if ltype == b"movi":
-                    sub = body_start + 4
-                    while sub + 8 <= body_end:
-                        scid = data[sub : sub + 4]
-                        sln = int.from_bytes(
-                            data[sub + 4 : sub + 8], "little"
-                        )
-                        if scid[2:4] in (b"dc", b"db") and sln:
-                            frames.append(decode_jpeg(
-                                data[sub + 8 : sub + 8 + sln]
-                            ))
-                        sub += 8 + sln + (sln & 1)
-                else:
-                    walk(body_start + 4, body_end)
-            pos = body_end + (ln & 1)
-
-    walk(12, len(data))
+    chunks = _riff_chunks(bytes(payload or b""), b"AVI ", strict=True)
+    frames = [
+        decode_jpeg(body)
+        for ltype, cid, body in chunks
+        if ltype == b"movi" and cid[2:4] in (b"dc", b"db") and body
+    ]
     if not frames:
         raise ValueError("AVI without MJPEG frames")
     return frames
@@ -1360,24 +1368,20 @@ def nn_resize(img: np.ndarray, height: int, width: int) -> np.ndarray:
 
 
 def _wav_manual_chunks(data: bytes) -> tuple[int, int, int, int, bytes]:
-    """Little-endian RIFF chunk walk (the parse_wav_header logic at the
-    decode layer): returns (fmt_code, channels, rate, bits_per_sample,
-    raw data-chunk bytes). Used for the formats the stdlib `wave`
+    """The top-level ``fmt `` and ``data`` chunks of a WAV payload (the
+    parse_wav_header logic at the decode layer): returns (fmt_code,
+    channels, rate, bits_per_sample, raw data-chunk bytes). Used for the formats the stdlib `wave`
     module refuses — IEEE-float WAV (fmt code 3, r13)."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, fmt, frames = 12, None, None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (ln,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + ln]
+    fmt, frames = None, None
+    for ltype, cid, body in _riff_chunks(data, b"WAVE", strict=False):
+        if ltype != b"WAVE":
+            continue  # LIST INFO and the like
         if cid == b"fmt " and len(body) >= 16:
             code, ch, rate = struct.unpack("<HHI", body[:8])
             bits = struct.unpack("<H", body[14:16])[0]
             fmt = (code, ch, rate, bits)
         elif cid == b"data":
             frames = body
-        pos += 8 + ln + (ln & 1)  # RIFF even padding
     if fmt is None or frames is None:
         raise ValueError("WAV without fmt/data chunk")
     return (*fmt, frames)

@@ -56,14 +56,18 @@ def recover_log(spark: SparkSession, log_path: str) -> None:
             fs.delete(old, True)  # crashed after swap: drop the stale copy
 
 
-def read_log(spark: SparkSession, log_path: str) -> DataFrame | None:
+def read_log(
+    spark: SparkSession, log_path: str, schema: str | None = None
+) -> DataFrame | None:
     """The parquet log at ``log_path`` after self-healing an interrupted
-    compaction, or None before the first batch is committed."""
+    compaction, or None before the first batch is committed. A sink that
+    declares its log's ``schema`` skips the schema-inference job."""
     recover_log(spark, log_path)
     fs, log = _fs_path(spark, log_path.rstrip("/"))
     if not fs.exists(log):
         return None
-    return spark.read.parquet(log_path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(log_path)
 
 
 def replace_log_atomically(

@@ -13,16 +13,24 @@ Scale shape (this is a ``foreachBatch`` sink, not driver state):
   lands in has ``min_id`` smaller than its own id; that single comparison
   is exactly the all-pairs greedy rule, because pairing with ANY smaller
   id drops a doc, and the smallest witness is always the bucket minimum.
-- The state store is an append-only parquet directory read back with a
-  ``groupBy(band, bh).min(min_id)`` merge — an LSM shape: appends are
-  cheap and idempotent (re-appending a replayed batch cannot change a
-  min), and ``compact()`` rewrites the log into one row per bucket when
-  the tail grows.  On a cluster the same sink runs against any Hadoop
-  filesystem path.  The survivor output and the state append of a batch
-  commit together, exactly once, through ``maintenance.commit_batch``.
+- The state store is an append-only parquet directory — an LSM shape:
+  appends are cheap and idempotent (re-appending a replayed batch cannot
+  change a min), any logged row with ``min_id`` below a doc's id is a
+  witness, so the decision needs no merge, and ``compact()`` rewrites
+  the log into one row per bucket when the tail grows.  On a cluster the
+  same sink runs against any Hadoop filesystem path.  The survivor
+  output and the state append of a batch commit together, exactly once,
+  through ``maintenance.commit_batch``.
 - Everything per batch is distributed: signature computation (one
   combinable groupBy), the state join keyed by the uniform (band, bh)
   key, and the anti-join that emits survivors.  The driver moves no rows.
+- Per batch the sink materializes once: the band keys, each carrying its
+  bucket's in-batch minimum id (a window over ``(band, bh)``), go into
+  one ``localCheckpoint`` whose observed row count is the empty-batch
+  test.  The state log is read with its declared schema (no inference
+  job), and the state append is the checkpoint's rows whose id is their
+  bucket's minimum (no shuffle).  The rest of the batch's jobs are the
+  two parquet writes of ``commit_batch`` and their exchanges.
 
 Reference parity note: the reference dedups exact md5 content hashes in a
 consumer loop (app/utils/kafka_utils.py:209-217); continuous NEAR-dup
@@ -31,7 +39,7 @@ dedup is part of this repo's beyond-reference curation layer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (
     lsh_band_keys,
@@ -54,6 +62,9 @@ class StreamingNearDupDedup:
     event-time-ordered ids, the realistic ingest shape).
     """
 
+    #: declared, so a batch reads its state without a schema-inference job
+    STATE_SCHEMA = "band int, bh string, min_id bigint"
+
     def __init__(
         self,
         state_path: str,
@@ -74,7 +85,7 @@ class StreamingNearDupDedup:
 
     # -- state ------------------------------------------------------------
     def _read_state(self, spark) -> DataFrame | None:
-        log = read_log(spark, self.state_path)
+        log = read_log(spark, self.state_path, self.STATE_SCHEMA)
         if log is None:
             return None
         return log.groupBy("band", "bh").agg(F.min("min_id").alias("min_id"))
@@ -91,14 +102,15 @@ class StreamingNearDupDedup:
 
     # -- signature -> band keys (overridden by the image sibling) ----------
     def _band_keys(self, batch_df: DataFrame) -> DataFrame:
-        """(id, band, bh) bucket keys for this batch's rows."""
+        """(id, band, bh, __bmin) bucket keys for this batch's rows;
+        ``__bmin`` is the bucket's minimum id within the batch."""
         sigs = minhash_signatures(
             batch_df, self.id_col, self.text_col,
             self.num_hashes, self.shingle_n,
         )
-        return lsh_band_keys(
-            sigs, self.id_col, self.num_hashes, self.band_size
-        )
+        keys = lsh_band_keys(sigs, self.id_col, self.num_hashes, self.band_size)
+        bucket = Window.partitionBy("band", "bh")
+        return keys.withColumn("__bmin", F.min(self.id_col).over(bucket))
 
     # -- dup decision (overridden by the media siblings) --------------------
     def _decide(self, spark, keys: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -108,35 +120,23 @@ class StreamingNearDupDedup:
         smaller id among everything seen so far INCLUDING this batch —
         the bucket minimum is always a sufficient witness because sharing
         any band bucket IS the drop criterion for MinHash-LSH (the batch
-        ``neardup_survivors`` rule)."""
+        ``neardup_survivors`` rule). Within the batch the witness is
+        ``__bmin``; across batches it is any logged ``min_id`` of the
+        bucket, so the log is probed as it is, without a merge."""
         idc = self.id_col
-        batch_min = keys.groupBy("band", "bh").agg(F.min(idc).alias("__bmin"))
-        state = self._read_state(spark)
-        if state is not None:
-            merged_min = (
-                batch_min.join(state, ["band", "bh"], "left")
-                .select(
-                    "band",
-                    "bh",
-                    F.least(
-                        F.col("__bmin"), F.coalesce("min_id", F.col("__bmin"))
-                    ).alias("__mmin"),
-                )
+        dups = keys.filter(F.col("__bmin") < F.col(idc)).select(idc)
+        log = read_log(spark, self.state_path, self.STATE_SCHEMA)
+        if log is not None:
+            witness = (
+                (keys["band"] == log["band"])
+                & (keys["bh"] == log["bh"])
+                & (log["min_id"] < keys[idc])
             )
-        else:
-            merged_min = batch_min.select(
-                "band", "bh", F.col("__bmin").alias("__mmin")
-            )
-        dups = (
-            keys.join(merged_min, ["band", "bh"])
-            .filter(F.col("__mmin") < F.col(idc))
-            .select(idc)
-            .distinct()
-        )
+            dups = dups.union(keys.join(log, witness, "left_semi").select(idc))
         # appended minima are idempotent under replay: a re-append can
         # only repeat, never raise, a bucket minimum
-        return dups, batch_min.select(
-            "band", "bh", F.col("__bmin").alias("min_id")
+        return dups, keys.filter(F.col(idc) == F.col("__bmin")).select(
+            "band", "bh", F.col("__bmin").cast("bigint").alias("min_id")
         )
 
     # -- per micro-batch ---------------------------------------------------
@@ -146,13 +146,19 @@ class StreamingNearDupDedup:
         # merge), but the SURVIVOR append is not: both commit under one
         # marker, outside the state directory that compaction swaps
         marker = f"{self.state_path.rstrip('/')}_batches/{int(batch_id)}"
-        if batch_df.isEmpty():
+        # the batch's one materialization: the keys feed the dup decision
+        # AND the state append (recomputing them re-runs the signature
+        # subtree), and every batch row has keys, so the observed row
+        # count is the empty-batch test without a job of its own
+        rows = Observation()
+        keys = (
+            self._band_keys(batch_df)
+            .observe(rows, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
+        )
+        if rows.get["n"] == 0:
             commit_batch(spark, marker, [])
             return
-        keys = self._band_keys(batch_df)
-        # one small materialization: keys feed the dup decision AND the
-        # state append; recomputing means re-running the signature subtree
-        keys = keys.localCheckpoint()
 
         dups, state_append = self._decide(spark, keys)
         admitted = batch_df.join(dups, self.id_col, "left_anti").withColumn(

@@ -187,3 +187,61 @@ def test_cached_index_is_deleted_when_the_session_stops(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.split()[0] == "gone", out.stdout
+
+
+def test_table_reads_with_a_cached_schema_equal_plain_reads(spark, sf_dir):
+    """_t infers a table's schema on its first read and declares it on
+    the next: both give the schema and rows of spark.read.parquet for all
+    10 tables, events also through _events."""
+    from flink_sql_ai_meetingcoach_azure_spark.queries import (
+        _SCHEMA_CACHE,
+        _events,
+        _prep,
+        _t,
+    )
+    from flink_sql_ai_meetingcoach_azure_spark.sources.tables import TABLES
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    _prep(spark)
+    saved = dict(_SCHEMA_CACHE)
+    try:
+        _SCHEMA_CACHE.clear()
+        inferred_events = _events(spark, sf_dir)
+        for name in TABLES:
+            plain = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+            first, cached = _t(spark, sf_dir, name), _t(spark, sf_dir, name)
+            assert first.schema == cached.schema == plain.schema, name
+            assert rows(cached) == rows(plain), name
+        assert len(_SCHEMA_CACHE) == len(TABLES)
+        events = _events(spark, sf_dir)
+        assert events.schema == inferred_events.schema
+        assert dict(events.dtypes)["ts"] == "timestamp"
+        assert rows(events) == rows(inferred_events)
+    finally:
+        _SCHEMA_CACHE.clear()
+        _SCHEMA_CACHE.update(saved)
+
+
+def test_table_schema_is_inferred_again_after_a_rewrite(spark, tmp_path):
+    """The cache key holds the file's mtime and size, so a table rewritten
+    with another schema (and size) is read with its new schema."""
+    import time
+
+    from flink_sql_ai_meetingcoach_azure_spark.queries import _SCHEMA_CACHE, _t
+
+    path = tmp_path / "region.parquet"
+    spark.range(3).toPandas().to_parquet(path)
+    saved = dict(_SCHEMA_CACHE)
+    try:
+        assert _t(spark, str(tmp_path), "region").columns == ["id"]
+        assert _t(spark, str(tmp_path), "region").columns == ["id"]
+        time.sleep(0.01)
+        spark.range(3).selectExpr("id", "id * 2 AS twice").toPandas().to_parquet(path)
+        again = _t(spark, str(tmp_path), "region")
+        assert again.columns == ["id", "twice"]
+        assert sorted(r.twice for r in again.collect()) == [0, 2, 4]
+    finally:
+        _SCHEMA_CACHE.clear()
+        _SCHEMA_CACHE.update(saved)

@@ -1134,6 +1134,12 @@ def test_decode_wav_ieee_float():
     x64, rate64 = decode_wav(f64)
     assert rate64 == 16000 and x64.tolist() == x.tolist()
 
+    # the walk skips a LIST chunk's sub-chunks (even one named 'data')
+    # and keeps a data body cut short by the end of the payload
+    info = b"LIST" + struct.pack("<I", 16) + b"INFO"
+    info += b"data" + struct.pack("<I", 4) + b"\0" * 4
+    assert decode_wav(f32[:12] + info + f32[12:-4])[0].tolist() == x.tolist()[:-1]
+
     # out-of-range input clamps before scaling
     loud = wav(3, 1, 8000, 32, struct.pack("<ff", 2.5, -3.0))
     assert decode_wav(loud)[0].tolist() == [32767, -32768]
@@ -1490,6 +1496,8 @@ def test_avi_mjpeg_demux_and_auto_dispatch(spark):
         assert np.array_equal(g, decode_jpeg(j))
     with _pytest.raises(ValueError):
         decode_avi_mjpeg_frames(b"RIFFxxxxWAVE")
+    with _pytest.raises(ValueError, match="truncated AVI chunk"):
+        decode_avi_mjpeg_frames(encode_avi_mjpeg(jf, 16, 16)[:-3])
 
     # same clip content in all three containers -> identical signatures
     gid, m = 3, 0

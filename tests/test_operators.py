@@ -1495,6 +1495,69 @@ def test_bfs_hops_hand_graph(spark):
     assert got4 == {1: 0, 9: 0, 2: 1, 3: 2, 4: 3, 5: 4}
 
 
+def _bfs_reference(edges, sources, iters):
+    """Textbook queue BFS over the undirected ``edges``, radius ``iters``."""
+    from collections import deque
+
+    adj = {}
+    for a, b in edges:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    dist = {s: 0 for s in sources}
+    todo = deque(dist)
+    while todo:
+        n = todo.popleft()
+        if dist[n] < iters:
+            for m in adj.get(n, ()):
+                if m not in dist:
+                    dist[m] = dist[n] + 1
+                    todo.append(m)
+    return dist
+
+
+def test_bfs_hops_matches_reference_bfs(spark):
+    """Seeded random graphs against a queue BFS: duplicate edges in both
+    orientations, self-loops, sources without edges, duplicate sources,
+    empty sources, empty edges, and every radius 0-6, which passes the
+    diameter of the small graphs."""
+    import random
+
+    from flink_sql_ai_meetingcoach_azure_spark.operators.components import bfs_hops
+
+    rng = random.Random(1331)
+    cases = []
+    for iters in range(7):
+        edges = [(rng.randrange(14), rng.randrange(14)) for _ in range(12)]
+        edges += [(b, a) for a, b in edges[:3]] + edges[:2] + [(5, 5), (20, 20)]
+        cases.append((edges, [rng.randrange(14), 20, 30, 30], iters))
+    cases += [([], [1, 2, 2], 3), ([(1, 2), (2, 3)], [], 3), ([], [], 2)]
+    for edges, sources, iters in cases:
+        pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+        src = spark.createDataFrame([(s,) for s in sources], "node bigint")
+        got = bfs_hops(pairs, src, iters=iters).collect()
+        assert len(got) == len({r.node for r in got}), (edges, sources, iters)
+        assert {r.node: r.hops for r in got} == _bfs_reference(
+            edges, sources, iters
+        ), (edges, sources, iters)
+
+
+def test_bfs_hops_job_budget(spark, sf_dir):
+    """All rounds of the registry's bfs_hops run as one plan: the job
+    count of a call is fixed by the plan's exchanges (16-17 at sf0.01), not
+    by a job per round (33 when each round was materialized)."""
+    from flink_sql_ai_meetingcoach_azure_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+    QUERIES["bfs_hops"].fn(spark, sf_dir).collect()  # schema inference
+    sc.setJobGroup("bfs_hops_budget", "bfs_hops job budget")
+    try:
+        QUERIES["bfs_hops"].fn(spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("bfs_hops_budget")) <= 17
+
+
 def test_kcore_hand_graph_and_fixpoint(spark):
     """K4 clique + a pendant chain: 2-core = the clique (chain peels over
     TWO rounds — one round is not enough, which is what the iteration

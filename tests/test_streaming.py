@@ -701,6 +701,41 @@ def test_streaming_neardup_state_replay_and_compaction(spark, tmp_path):
     assert b2_admitted == {5}
 
 
+def test_streaming_neardup_batch_job_budget(spark, tmp_path):
+    """A batch with state materializes its band keys once: at most 9 Spark
+    jobs for this call (15 when the empty test, the state schema and the
+    bucket minima each ran their own), with the same admitted rows."""
+    from flink_sql_ai_meetingcoach_azure_spark.streaming.neardup import (
+        StreamingNearDupDedup,
+    )
+
+    sink = StreamingNearDupDedup(str(tmp_path / "st"), str(tmp_path / "out"))
+    sink(spark.createDataFrame(_DOCS[:3], DOC_SCHEMA), 0)
+    sc = spark.sparkContext
+    sc.setJobGroup("neardup_budget", "near-dup batch job budget")
+    try:
+        sink(spark.createDataFrame(_DOCS[3:], DOC_SCHEMA), 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("neardup_budget")) <= 9
+    out = spark.read.parquet(str(tmp_path / "out"))
+    assert {r["doc_id"] for r in out.filter("batch_id = 1").collect()} == {5}
+
+
+def test_streaming_neardup_empty_batch_writes_only_the_marker(spark, tmp_path):
+    """An empty batch is detected from the band-key checkpoint's observed
+    row count: it marks the batch and writes no output or state."""
+    from flink_sql_ai_meetingcoach_azure_spark.streaming.neardup import (
+        StreamingNearDupDedup,
+    )
+
+    sink = StreamingNearDupDedup(str(tmp_path / "st"), str(tmp_path / "out"))
+    sink(spark.createDataFrame([], DOC_SCHEMA), 0)
+    assert sorted(os.listdir(tmp_path)) == ["st_batches"]
+    marks = [f for f in os.listdir(tmp_path / "st_batches") if not f.startswith(".")]
+    assert marks == ["0"]
+
+
 # ---- continuous vector-store sink: streaming ingest into the IVF index ----
 
 
