@@ -54,6 +54,17 @@ from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash,
 )
+from flink_sql_ai_meetingcoach_azure_spark.operators import sketches as sk
+from flink_sql_ai_meetingcoach_azure_spark.operators.sketches import (
+    CM_D,
+    CM_TOPK,
+    CM_W,
+    HDR_SUB,
+    HLL_ALPHA,
+    HLL_M,
+    HLL_R,
+    KMV_K,
+)
 from flink_sql_ai_meetingcoach_azure_spark.operators.top_n import recent_top_n
 from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import (
     vector_search_topk_flat,
@@ -3511,9 +3522,6 @@ ORDER BY lang, rank
 """
 
 
-CM_D, CM_W, CM_TOPK = 4, 512, 20
-
-
 def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min frequency sketch over corpus terms — the mergeable
     counter sketch behind bounded-memory heavy-hitter tracking: d=4
@@ -3527,9 +3535,6 @@ def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch and the estimates are deterministic and hash-verifiable —
     output compares the exact top-20 terms with their sketch estimates
     (overestimate visible, never under)."""
-    from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (  # noqa: PLC0415
-        md5_bigint_col,
-    )
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents")
@@ -3543,7 +3548,7 @@ def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(r).alias("r"),
-                        (md5_bigint_col("term", salt=f"cm{r}") % CM_W).alias("bucket"),
+                        F.expr(sk.CM_BUCKET.format(s="`term`", r=r)).alias("bucket"),
                     )
                     for r in range(CM_D)
                 ]
@@ -3588,9 +3593,6 @@ ORDER BY exact_n DESC, topk.term ASC
 """
 
 
-KMV_K = 256
-
-
 def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum-values) set-intersection sketch — estimates the
     3-gram-shingle Jaccard between two corpus halves from two
@@ -3604,9 +3606,6 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller than k, making the estimate exact there) — pure BIGINTs.
     Fixed hashes make sketch AND estimate deterministic — output
     compares against the exact Jaccard (both in integer ppm)."""
-    from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (  # noqa: PLC0415
-        md5_bigint_col,
-    )
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import shingles  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents")
@@ -3630,9 +3629,9 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stored relation is one BIGINT per distinct shingle
     a = side(0).localCheckpoint(eager=False)
     b = side(1).localCheckpoint(eager=False)
-    sk_a = a.orderBy("h").limit(KMV_K).localCheckpoint()
-    sk_b = b.orderBy("h").limit(KMV_K).localCheckpoint()
-    u = sk_a.union(sk_b).distinct().orderBy("h").limit(KMV_K).localCheckpoint()
+    sk_a = sk.kmin(a, [], "h").localCheckpoint()
+    sk_b = sk.kmin(b, [], "h").localCheckpoint()
+    u = sk.kmin(sk_a.union(sk_b).distinct(), [], "h").localCheckpoint()
     kmv = (
         u.join(sk_a, "h")
         .join(sk_b, "h")
@@ -3649,18 +3648,18 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "n_a",
             "n_b",
-            # greatest(..., 1) guards the empty-corpus / zero-universe
-            # degenerate cases (0 ppm, not NULL) — ADVICE r5
-            F.expr(
-                "n_inter * 1000000L div greatest(n_a + n_b - n_inter, 1L)"
-            ).alias("exact_jaccard_ppm"),
+            F.expr(_EXACT_JACCARD_PPM).alias("exact_jaccard_ppm"),
             "kmv_inter",
             "u_n",
-            F.expr("kmv_inter * 1000000L div greatest(u_n, 1L)").alias(
-                "kmv_est_ppm"
-            ),
+            F.expr(_KMV_PPM).alias("kmv_est_ppm"),
         )
     )
+
+
+_EXACT_JACCARD_PPM = sk.JACCARD_PPM.format(
+    inter="n_inter", union="n_a + n_b - n_inter"
+)
+_KMV_PPM = sk.JACCARD_PPM.format(inter="kmv_inter", union="u_n")
 
 
 def _sql_kmv_overlap() -> str:
@@ -3763,11 +3762,6 @@ ORDER BY user_id
 """
 
 
-HLL_M = 1024  # 2^10 buckets
-HLL_R = 51  # 60-bit hash // 1024 leaves a 50-bit field; rho in [1, 51]
-HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_M)  # 0.7205407583220416
-
-
 def q_hll_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog per-language vocabulary cardinality with EXACTLY
     verifiable state — the mergeable cardinality sketch (merge = max of
@@ -3781,58 +3775,15 @@ def q_hll_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-range ln correction, 6-dp rounded. Output compares the exact
     COUNT(DISTINCT) with the estimate per language — the sketch IS the
     documented 100 TB swap for the exact expand."""
-    from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (  # noqa: PLC0415
-        md5_bigint_col,
-    )
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents")
     dt = docs.select("lang", F.explode(tokens_col("text")).alias("term")).distinct()
-    b = dt.select(
-        "lang",
-        (md5_bigint_col("term") % HLL_M).alias("bucket"),
-        F.expr(f"{_md5_bigint_spark('term')} div {HLL_M}").alias("w"),
-    )
-    regs = (
-        b.withColumn(
-            "rho",
-            F.when(F.col("w") == 0, F.lit(HLL_R)).otherwise(
-                F.lit(HLL_R) - F.length(F.expr("bin(w)"))
-            ),
-        )
-        .groupBy("lang", "bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
-    per = regs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("nonzero_buckets"),
-        F.sum(F.expr(f"shiftleft(1L, {HLL_R} - rho)")).alias("s_nonzero"),
-    )
+    per = sk.hll_estimate(sk.hll_registers(dt, ["lang"], "term"), ["lang"])
     exact = dt.groupBy("lang").agg(F.count(F.lit(1)).alias("exact_distinct"))
-    j = exact.join(per, "lang")
-    s_scaled = (
-        F.col("s_nonzero")
-        + (F.lit(HLL_M) - F.col("nonzero_buckets")) * F.lit(1 << HLL_R)
-    ).cast("long")
-    v = F.lit(HLL_M) - F.col("nonzero_buckets")
-    est_raw = (
-        F.lit(HLL_ALPHA * HLL_M * HLL_M * float(1 << HLL_R)) / s_scaled.cast("double")
-    )
-    est = F.when(
-        (est_raw <= F.lit(2.5 * HLL_M)) & (v > 0),
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v.cast("double")),
-    ).otherwise(est_raw)
-    return j.select(
-        "lang",
-        "exact_distinct",
-        "nonzero_buckets",
-        s_scaled.alias("s_scaled"),
-        F.round(est, 6).alias("hll_est"),
+    return exact.join(per, "lang").select(
+        "lang", "exact_distinct", "nonzero_buckets", "s_scaled", "hll_est"
     ).orderBy("lang")
-
-
-def _md5_bigint_spark(col: str) -> str:
-    """Spark-SQL rendering of hashing.md5_bigint_col for expr() contexts."""
-    return f"cast(conv(substring(md5({col}), 1, 15), 16, 10) as bigint)"
 
 
 def _sql_hll_vocab() -> str:
@@ -4982,11 +4933,6 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is sketch-sized, 45 pairs × ≤2k rows, however big the corpus).
     At 100 TB you keep only the KMV half; the exact half is the quality
     gauge the gate verifies it against. Integer ppm everywhere."""
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
-    from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (  # noqa: PLC0415
-        md5_bigint_col,
-    )
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import shingles  # noqa: PLC0415
 
     docs = _t(spark, sf_dir, "documents").select("source", "text")
@@ -5024,15 +4970,9 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # KMV sketches: k smallest hashes per source, then per-pair k-min of
     # the union and the |A∩B∩U|·1e6 div |U| estimate (q_kmv_overlap)
-    wsrc = Window.partitionBy("source").orderBy("h")
-    sk = (
-        hs.withColumn("__rk", F.row_number().over(wsrc))
-        .filter(F.col("__rk") <= KMV_K)
-        .select("source", "h")
-        .localCheckpoint(eager=False)
-    )
+    sketch = sk.kmin(hs, ["source"], "h").localCheckpoint(eager=False)
     pair_pool = (
-        sk.alias("s")
+        sketch.alias("s")
         .join(
             allpairs.select("source_a", "source_b").alias("p"),
             (F.col("s.source") == F.col("p.source_a"))
@@ -5040,12 +4980,10 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("source_a", "source_b", "source", "h")
     )
-    wpair = Window.partitionBy("source_a", "source_b").orderBy("h")
-    u = (
-        pair_pool.select("source_a", "source_b", "h")
-        .distinct()
-        .withColumn("__rk", F.row_number().over(wpair))
-        .filter(F.col("__rk") <= KMV_K)
+    u = sk.kmin(
+        pair_pool.select("source_a", "source_b", "h").distinct(),
+        ["source_a", "source_b"],
+        "h",
     )
     both = (
         pair_pool.groupBy("source_a", "source_b", "h")
@@ -5065,12 +5003,8 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source_a",
             "source_b",
-            F.expr(
-                "n_inter * 1000000L div greatest(n_a + n_b - n_inter, 1L)"
-            ).alias("exact_jaccard_ppm"),
-            F.expr("kmv_inter * 1000000L div greatest(u_n, 1L)").alias(
-                "kmv_est_ppm"
-            ),
+            F.expr(_EXACT_JACCARD_PPM).alias("exact_jaccard_ppm"),
+            F.expr(_KMV_PPM).alias("kmv_est_ppm"),
         )
         .orderBy("source_a", "source_b")
     )
@@ -5609,7 +5543,6 @@ ORDER BY user_id
 """
 
 
-HDR_SUB = 32  # sub-buckets per octave: relative error <= 1/32 (~3.1 %)
 HDR_QUANTILES = [(500000, "p50"), (900000, "p90"), (990000, "p99"), (999000, "p999")]
 
 
@@ -5623,45 +5556,12 @@ def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per source + a broadcast quantile list + one combinable
     min-struct pick per (source, quantile). Never a percentile pass
     over the corpus; everything exact BIGINT."""
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
-    docs = _t(spark, sf_dir, "documents")
-    hist = (
-        docs.select("source", F.col("n_chars").cast("bigint").alias("v"))
-        .filter(F.col("v") >= 1)
-        .selectExpr("source", "v", "length(bin(v)) - 1 AS e")
-        .selectExpr(
-            "source",
-            f"e * {HDR_SUB} + v * {HDR_SUB} div shiftleft(1L, e)"
-            f" - {HDR_SUB} AS bucket_id",
-        )
-        .groupBy("source", "bucket_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    hist = sk.hdr_histogram(_t(spark, sf_dir, "documents"), ["source"], "n_chars")
+    return (
+        sk.hdr_quantiles(hist, ["source"], sorted(HDR_QUANTILES))
+        .withColumnRenamed("est", "est_chars")
+        .orderBy("source", "q_ppm")
     )
-    w = Window.partitionBy("source").orderBy("bucket_id")
-    n = hist.groupBy("source").agg(F.sum("cnt").alias("__n"))
-    cum = hist.withColumn("__cum", F.sum("cnt").over(w)).join(n, "source")
-    qs = spark.createDataFrame(
-        sorted(HDR_QUANTILES), "q_ppm bigint, q_label string"
-    )
-    hit = (
-        cum.crossJoin(F.broadcast(qs))
-        .filter(F.col("__cum") * 1_000_000 >= F.col("q_ppm") * F.col("__n"))
-        .groupBy("source", "q_ppm", "q_label", "__n")
-        .agg(F.min(F.struct("bucket_id", "__cum")).alias("__b"))
-    )
-    return hit.select(
-        "source",
-        "q_ppm",
-        "q_label",
-        F.expr(
-            f"({HDR_SUB} + __b.bucket_id % {HDR_SUB})"
-            f" * shiftleft(1L, CAST(__b.bucket_id div {HDR_SUB} AS INT))"
-            f" div {HDR_SUB}"
-        ).alias("est_chars"),
-        F.col("__b.__cum").alias("cum_count"),
-        F.col("__n").alias("n_vals"),
-    ).orderBy("source", "q_ppm")
 
 
 def _sql_group_quantiles() -> str:
@@ -5715,43 +5615,23 @@ def q_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     even a domain-sized one); first bucket with cum*1e6 >= ppm*n, the
     estimate its exact-integer lower bound ((SUB+sub)*2^e div SUB).
     Everything BIGINT ⇒ hash-identical across engines/partitionings."""
-    li = _t(spark, sf_dir, "lineitem")
-    hist = (
-        li.select(
-            F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("v")
-        )
-        .filter(F.col("v") >= 1)
-        .selectExpr("v", "length(bin(v)) - 1 AS e")
-        .selectExpr(
-            "e",
-            f"v * {HDR_SUB} div shiftleft(1L, e) - {HDR_SUB} AS sub",
-        )
-        .selectExpr(f"e * {HDR_SUB} + sub AS bucket_id", "e", "sub")
-        .groupBy("bucket_id", "e", "sub")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    vals = _t(spark, sf_dir, "lineitem").select(
+        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("v")
+    )
+    hist = sk.hdr_histogram(vals, [], "v").select(
+        "__bucket", F.expr(sk.HDR_LO.format(b="__bucket")), "__cnt"
     )
     # bounded-by-construction collect: the sketch IS <= 64*HDR_SUB counters
-    buckets = sorted(
-        (r.bucket_id, r.e, r.sub, r.cnt) for r in hist.collect()
-    )
-    n_rows = sum(b[3] for b in buckets)
+    buckets = sorted(tuple(r) for r in hist.collect())
+    n_rows = sum(b[2] for b in buckets)
     out, cum, bi = [], 0, 0
     for q_ppm, q_label in sorted(HDR_QUANTILES):
         while bi < len(buckets) and cum * 1_000_000 < q_ppm * n_rows:
-            cum += buckets[bi][3]
+            cum += buckets[bi][2]
             bi += 1
         # cum already covers this quantile's rank (quantiles ascend)
-        bucket_id, e, sub, _ = buckets[bi - 1]
-        out.append(
-            (
-                q_label,
-                q_ppm,
-                bucket_id,
-                ((HDR_SUB + sub) << e) // HDR_SUB,
-                cum,
-                n_rows,
-            )
-        )
+        bucket_id, lo, _ = buckets[bi - 1]
+        out.append((q_label, q_ppm, bucket_id, lo, cum, n_rows))
     return spark.createDataFrame(
         out,
         "q_label string, q_ppm bigint, bucket_id bigint, est_cents bigint,"
@@ -9889,14 +9769,10 @@ def q_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     — for dense id spaces that's 64x fewer rows than distinct — and no
     expand/distinct pass over raw events ever happens. The oracle is
     plain COUNT(DISTINCT): the bitmap plan must reproduce it exactly."""
-    ev = _events(spark, sf_dir)
-    word = (F.col("user_id") / F.lit(64)).cast("bigint")
-    bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(user_id % 64 AS INT))")
+    words = sk.bitmap_words(_events(spark, sf_dir), ["event_type"], "user_id")
     return (
-        ev.groupBy("event_type", word.alias("w"))
-        .agg(F.bit_or(bit).alias("word"))
-        .groupBy("event_type")
-        .agg(F.sum(F.bit_count("word")).cast("bigint").alias("n_users"))
+        words.groupBy("event_type")
+        .agg(F.expr(sk.BITMAP_COUNT.format(bits="__bits")).alias("n_users"))
         .orderBy("event_type")
     )
 

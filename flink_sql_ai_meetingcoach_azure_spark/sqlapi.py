@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from flink_sql_ai_meetingcoach_azure_spark.functions.chunking import chunk_text
 from flink_sql_ai_meetingcoach_azure_spark.models.registry import ModelRegistry
+from flink_sql_ai_meetingcoach_azure_spark.operators import sketches as sk
 from flink_sql_ai_meetingcoach_azure_spark.operators.vector_search import vector_search
 
 
@@ -92,62 +93,47 @@ def register_model_sql(spark: SparkSession, registry: ModelRegistry) -> None:
 
 
 def register_sketch_sql(spark: SparkSession) -> None:
-    """SQL surface for the sketch family (VERDICT r5 #8): the Count-Min /
-    HyperLogLog / KMV building blocks as Spark SQL *scalar functions*
+    """SQL surface for the sketch family: the Count-Min / HyperLogLog /
+    KMV / HDR / bitmap building blocks as Spark SQL *scalar functions*
     (``CREATE FUNCTION ... RETURN <expr>`` — pure Catalyst expressions,
-    codegen'd and constant-foldable, never a Python UDF). Constants and
-    hash layout mirror queries.q_countmin_sketch / q_hll_vocab /
-    q_kmv_overlap exactly, so a SQL user composes the same sketches the
-    DataFrame entries build:
+    codegen'd and constant-foldable, never a Python UDF). Each body is
+    the layout's template from ``operators/sketches.py``, the one the
+    registry entries and the rollup sink build with, so a SQL user
+    composes the same sketches:
 
-    - ``sketch_hash60(s)`` — the fixed 60-bit md5 BIGINT hash every
-      sketch derives from (functions/hashing.md5_bigint_col);
-    - ``cm_bucket(s, r)`` — Count-Min bucket for hash row r (w=512);
-    - ``hll_bucket(s)`` / ``hll_rho(s)`` — HLL register coordinates
-      (m=1024, rho in [1, 51]);
+    - ``sketch_hash60(s)`` — the 60-bit md5 BIGINT hash every sketch
+      derives from;
+    - ``cm_bucket(s, r)`` — Count-Min bucket for hash row r;
+    - ``hll_bucket(s)`` / ``hll_rho(s)`` — HLL register coordinates;
     - ``hll_estimate(nonzero, s_nonzero)`` — the estimate from the two
       exact-BIGINT register aggregates (with the small-range correction);
-    - ``kmv_est_ppm(kmv_inter, u_n)`` — KMV Jaccard ppm, zero-guarded.
+    - ``kmv_est_ppm(kmv_inter, u_n)`` — KMV Jaccard ppm, zero-guarded;
+    - ``hdr_bucket(v)`` / ``hdr_lo(bucket)`` — HDR bucket of a positive
+      BIGINT and the bucket's exact-integer lower bound;
+    - ``bitmap_word(id)`` / ``bitmap_bit(id)`` — exact-distinct bitmap
+      coordinates: ``SELECT k, sum(bit_count(w)) FROM (SELECT k,
+      bitmap_word(id) wi, bit_or(bitmap_bit(id)) w ... GROUP BY k, wi)
+      GROUP BY k``.
     """
-    m, r_max = 1024, 51  # queries.HLL_M / HLL_R
-    alpha = 0.7213 / (1 + 1.079 / m)
-    h = "CAST(conv(substring(md5({s}), 1, 15), 16, 10) AS BIGINT)"
-    fns = [
-        f"sketch_hash60(s STRING) RETURNS BIGINT RETURN {h.format(s='s')}",
-        # Count-Min row-r bucket: salted hash % width (queries.CM_W = 512)
-        "cm_bucket(s STRING, r INT) RETURNS BIGINT RETURN "
-        + h.format(s="concat(s, ':cm', CAST(r AS STRING))")
-        + " % 512",
-        f"hll_bucket(s STRING) RETURNS BIGINT RETURN {h.format(s='s')} % {m}",
-        "hll_rho(s STRING) RETURNS BIGINT RETURN "
-        f"CASE WHEN {h.format(s='s')} div {m} = 0 THEN {r_max} "
-        f"ELSE {r_max} - length(bin({h.format(s='s')} div {m})) END",
-        "hll_estimate(nonzero BIGINT, s_nonzero BIGINT) RETURNS DOUBLE RETURN "
-        f"CASE WHEN {alpha!r} * {m} * {m} * CAST(shiftleft(1L, {r_max}) AS DOUBLE)"
-        f" / CAST(s_nonzero + ({m} - nonzero) * shiftleft(1L, {r_max}) AS DOUBLE)"
-        f" <= 2.5 * {m} AND nonzero < {m} "
-        f"THEN round(CAST({m} AS DOUBLE)"
-        f" * ln(CAST({m} AS DOUBLE) / CAST({m} - nonzero AS DOUBLE)), 6) "
-        f"ELSE round({alpha!r} * {m} * {m} * CAST(shiftleft(1L, {r_max}) AS DOUBLE)"
-        f" / CAST(s_nonzero + ({m} - nonzero) * shiftleft(1L, {r_max}) AS DOUBLE),"
-        " 6) END",
-        "kmv_est_ppm(kmv_inter BIGINT, u_n BIGINT) RETURNS BIGINT RETURN "
-        "kmv_inter * 1000000L div greatest(u_n, 1L)",
-        # HDR log-scale quantile sketch (queries.HDR_SUB = 32): bucket id
-        # and exact-integer bucket lower bound for a positive BIGINT value
-        "hdr_bucket(v BIGINT) RETURNS BIGINT RETURN "
-        "(length(bin(v)) - 1) * 32 + v * 32 div shiftleft(1L, length(bin(v)) - 1) - 32",
-        "hdr_lo(bucket BIGINT) RETURNS BIGINT RETURN "
-        "(32 + bucket % 32) * shiftleft(1L, bucket div 32) div 32",
-        # exact-distinct bitmap words (queries.q_bitmap_distinct's layout):
-        # SELECT k, sum(bit_count(w)) FROM (SELECT k, bitmap_word(id) wi,
-        #   bit_or(bitmap_bit(id)) w ... GROUP BY k, wi) GROUP BY k
-        "bitmap_word(id BIGINT) RETURNS BIGINT RETURN id div 64",
-        "bitmap_bit(id BIGINT) RETURNS BIGINT RETURN "
-        "shiftleft(CAST(1 AS BIGINT), CAST(id % 64 AS INT))",
-    ]
-    for f in fns:
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {f}")
+    h = sk.HASH60.format(s="s")
+    fns = {
+        "sketch_hash60(s STRING) RETURNS BIGINT": h,
+        "cm_bucket(s STRING, r INT) RETURNS BIGINT": sk.CM_BUCKET.format(s="s", r="r"),
+        "hll_bucket(s STRING) RETURNS BIGINT": sk.HLL_BUCKET.format(h=h),
+        "hll_rho(s STRING) RETURNS BIGINT": sk.HLL_RHO.format(h=h),
+        "hll_estimate(nonzero BIGINT, s_nonzero BIGINT) RETURNS DOUBLE": (
+            sk.HLL_ESTIMATE.format(nonzero="nonzero", s_nonzero="s_nonzero")
+        ),
+        "kmv_est_ppm(kmv_inter BIGINT, u_n BIGINT) RETURNS BIGINT": (
+            sk.JACCARD_PPM.format(inter="kmv_inter", union="u_n")
+        ),
+        "hdr_bucket(v BIGINT) RETURNS BIGINT": sk.HDR_BUCKET.format(v="v"),
+        "hdr_lo(bucket BIGINT) RETURNS BIGINT": sk.HDR_LO.format(b="bucket"),
+        "bitmap_word(id BIGINT) RETURNS BIGINT": sk.BITMAP_WORD.format(id="id"),
+        "bitmap_bit(id BIGINT) RETURNS BIGINT": sk.BITMAP_BIT.format(id="id"),
+    }
+    for sig, body in fns.items():
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {sig} RETURN {body}")
 
 
 def register_vector_search_view(

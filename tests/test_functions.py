@@ -347,14 +347,8 @@ def test_sketch_shard_merge_equals_global(spark):
         md5_bigint_col,
     )
     from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col
-    from flink_sql_ai_meetingcoach_azure_spark.queries import (
-        CM_D,
-        CM_W,
-        HLL_M,
-        HLL_R,
-        _prep,
-        _t,
-    )
+    from flink_sql_ai_meetingcoach_azure_spark.operators.sketches import CM_D, CM_W, HLL_M, HLL_R
+    from flink_sql_ai_meetingcoach_azure_spark.queries import _prep, _t
 
     _prep(spark)
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
@@ -421,9 +415,9 @@ def test_hdr_sketch_shard_merge_and_error_bound(spark):
     within a 1/HDR_SUB relative band of it."""
     from pyspark.sql import functions as F
 
+    from flink_sql_ai_meetingcoach_azure_spark.operators.sketches import HDR_SUB
     from flink_sql_ai_meetingcoach_azure_spark.queries import (
         HDR_QUANTILES,
-        HDR_SUB,
         QUERIES,
         _prep,
         _t,

@@ -170,11 +170,8 @@ def test_hdr_sketch_functions_through_sql(spark):
     must agree with the DataFrame entry's bucket assignment and bucket
     lower bounds — a SQL user composing the sketch by hand gets the same
     integers."""
-    from flink_sql_ai_meetingcoach_azure_spark.queries import (
-        HDR_SUB,
-        _prep,
-        _t,
-    )
+    from flink_sql_ai_meetingcoach_azure_spark.operators.sketches import HDR_SUB
+    from flink_sql_ai_meetingcoach_azure_spark.queries import _prep, _t
     from flink_sql_ai_meetingcoach_azure_spark.sqlapi import register_sketch_sql
 
     _prep(spark)

@@ -1607,9 +1607,9 @@ def test_streaming_aggregate_sink_quantile_sketch(spark, tmp_path):
 
     import pytest
 
+    from flink_sql_ai_meetingcoach_azure_spark.operators.sketches import HDR_SUB as _HDR_SUB
     from flink_sql_ai_meetingcoach_azure_spark.streaming.aggregate_sink import (
         _HDR_QS,
-        _HDR_SUB,
         StreamingAggregateSink,
     )
 
@@ -1684,7 +1684,7 @@ def test_streaming_countmin_composes_from_aggregate_sink(spark, tmp_path):
     from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (
         md5_bigint_col,
     )
-    from flink_sql_ai_meetingcoach_azure_spark.queries import CM_D, CM_W
+    from flink_sql_ai_meetingcoach_azure_spark.operators.sketches import CM_D, CM_W
     from flink_sql_ai_meetingcoach_azure_spark.streaming.aggregate_sink import (
         StreamingAggregateSink,
     )
@@ -1931,8 +1931,8 @@ def test_streaming_aggregate_sink_kmv(spark, tmp_path):
     from flink_sql_ai_meetingcoach_azure_spark.functions.hashing import (
         md5_bigint_col,
     )
+    from flink_sql_ai_meetingcoach_azure_spark.operators.sketches import KMV_K as _KMV_K
     from flink_sql_ai_meetingcoach_azure_spark.streaming.aggregate_sink import (
-        _KMV_K,
         StreamingAggregateSink,
     )
 
@@ -2102,12 +2102,82 @@ def test_streaming_aggregate_sink_min_max_schema_mismatch(spark, tmp_path):
     with _pytest.raises(ValueError, match="min_cols"):
         added(batch, 1)
 
+    # sum_cols get the same contract: a dropped sum column would lose its
+    # partials at the next compaction, an added one fail at read time
+    dropped_sum = StreamingAggregateSink(
+        state, ["k"], [], spark, min_cols=["v"], max_cols=["v"]
+    )
+    with _pytest.raises(ValueError, match="sum_cols"):
+        dropped_sum(batch, 1)
+    no_sum_state = str(tmp_path / "mm_chk_no_sum")
+    StreamingAggregateSink(no_sum_state, ["k"], [], spark)(batch, 0)
+    added_sum = StreamingAggregateSink(no_sum_state, ["k"], ["v"], spark)
+    with _pytest.raises(ValueError, match="sum_cols"):
+        added_sum.current().collect()
+
+    # compact() runs the check before it rewrites the log: a mismatched
+    # sink raises and leaves the log's columns and rows as they were
+    def log_state():
+        log = spark.read.parquet(f"{state}/log")
+        return log.columns, sorted(repr(r) for r in log.collect())
+
+    before = log_state()
+    with _pytest.raises(ValueError, match="min_cols/max_cols"):
+        dropped.compact()
+    with _pytest.raises(ValueError, match="sum_cols"):
+        dropped_sum.compact()
+    assert log_state() == before
+
     # unchanged config: replay/restart is a no-op, never a false alarm
     again = StreamingAggregateSink(
         state, ["k"], ["v"], spark, min_cols=["v"], max_cols=["v"]
     )
     again(batch, 0)
     assert {r.k for r in again.current().collect()} == {"a", "b"}
+
+
+def test_streaming_aggregate_sink_readouts_equal_batch_sketches(spark, tmp_path):
+    """The rollup and the batch registry entries build one sketch layout:
+    over sf0.001's documents fed in three batches, a (source, n_chars)
+    rollup's current_quantiles() equals q_group_quantiles on the
+    quantiles both report, and a (lang, term) rollup's distinct_est
+    equals q_hll_vocab's hll_est."""
+    from flink_sql_ai_meetingcoach_azure_spark.operators.dedup import tokens_col
+    from flink_sql_ai_meetingcoach_azure_spark.queries import QUERIES, _prep, _t
+    from flink_sql_ai_meetingcoach_azure_spark.streaming.aggregate_sink import (
+        _HDR_QS,
+        StreamingAggregateSink,
+    )
+
+    _prep(spark)
+    sf = "/root/testdata/sf0.001"
+    docs = _t(spark, sf, "documents")
+    terms = docs.select("doc_id", "lang", F.explode(tokens_col("text")).alias("term"))
+    quant = StreamingAggregateSink(
+        str(tmp_path / "hdr"), ["source"], [], spark, quantile_col="n_chars"
+    )
+    hll = StreamingAggregateSink(
+        str(tmp_path / "hll"), ["lang"], [], spark, distinct_col="term"
+    )
+    for i in range(3):
+        quant(docs.filter(F.col("doc_id") % 3 == i), i)
+        hll(terms.filter(F.col("doc_id") % 3 == i), i)
+
+    ppms = {ppm for ppm, _label in _HDR_QS}
+    got = {
+        (r.source, r.q_ppm): (r.est, r.cum_count, r.n_vals)
+        for r in quant.current_quantiles().collect()
+    }
+    want = {
+        (r.source, r.q_ppm): (r.est_chars, r.cum_count, r.n_vals)
+        for r in QUERIES["group_quantiles"].fn(spark, sf).collect()
+        if r.q_ppm in ppms
+    }
+    assert want and got == want
+
+    est = {r.lang: r.distinct_est for r in hll.current().collect()}
+    batch = {r.lang: r.hll_est for r in QUERIES["hll_vocab"].fn(spark, sf).collect()}
+    assert batch and est == batch
 
 
 def test_streaming_aggregate_sink_sumsq_variance(spark, tmp_path):
